@@ -28,16 +28,28 @@ Scale: the stale filter is a pushed-down predicate; expression producers
 stay in codegen; pandas producers move only the stale partition through
 Arrow; the merge is a projection (when/otherwise), not a join — the table
 is scanned once, and nothing shuffles unless the producer itself needs to.
+
+Compile once per capsule generation (A13): the reference builds a capsule's
+policy and producer once (``makeCapsule``) and reuses them on every read
+until ``rereadPolicies``. Here resolving a capsule also compiles it: the
+fresh predicate, the score and the merged attached-column Column are built
+once, against the reserved bigint column ``__as_of__`` instead of a literal
+clock, and are dropped with the capsule. A freshen call only adds
+``__as_of__`` as a literal, joins the KV stores and selects the cached
+Columns; Catalyst's CollapseProject and ConstantFolding put the literal
+back, so the optimized plan is the one a per-call build would give. A
+table with its own ``__as_of__`` column is rejected.
 """
 
 from __future__ import annotations
 
 import threading
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from . import model
 from .policies import FreshnessPolicy
@@ -48,12 +60,18 @@ from .producers import (
     Producer,
     attach_stores,
     merge_stores,
+    store_sides,
 )
 from .registry import FreshenerRegistry, TableLayout, load_class, parse_column
 
 #: reference default: 100 ms per get (FreshKijiTableReaderBuilder.java:66-67).
 #: Batch jobs amortize over many rows, so the default budget is larger.
 DEFAULT_TIMEOUT_MS = 10_000
+
+#: reserved column carrying a freshen call's clock (bigint ms)
+AS_OF_COL = "__as_of__"
+#: a pandas or MLlib producer's score, joined back by key
+SCORE_COL = "__score__"
 
 
 def _drain_job_group(sc, group: str, timeout_s: float = 15.0) -> bool:
@@ -73,6 +91,14 @@ def _drain_job_group(sc, group: str, timeout_s: float = 15.0) -> bool:
     completion has reported, which is what prevents the DAGScheduler
     "attempted to access non-existent accumulator" ERROR spam from
     late completions after the plan has been garbage collected.
+
+    What it leaves open: a task stops counting as active once its kill is
+    reported, but the monitor thread destroys the task's Python worker on
+    its own schedule, so a worker can still be dying after this returns
+    True (at most ``spark.python.task.killTimeout`` later). A Python stage
+    started inside that window can still, rarely, be handed the dying
+    worker. ``test_timeout_storm_then_arrow_stage`` shows the window is
+    narrow in practice; it cannot show it is closed.
 
     Returns True when the group drained, False on deadline (the caller
     keeps its promptness contract either way — a producer stuck in
@@ -99,13 +125,33 @@ def _drain_job_group(sc, group: str, timeout_s: float = 15.0) -> bool:
 
 
 @dataclass
+class CompiledCapsule:
+    """A capsule's Columns, built by ``FreshTableReader._compile`` against
+    the ``__as_of__`` column, so no freshen call rebuilds them."""
+
+    #: the table the Columns were built for
+    table: DataFrame
+    #: KV side-input join sides: (broadcast store, join condition)
+    stores: list
+    #: NOT policy.is_fresh: the rows the producer scores
+    stale: Column
+    #: the table's columns in order, the attached one merged
+    projection: list[Column]
+    #: pandas producers: the columns sent through Arrow
+    request: list[str]
+
+
+@dataclass
 class Freshener:
     """A resolved capsule: policy + producer bound to an attached column
-    (``makeCapsule``, ``impl/InternalFreshKijiTableReader.java:356-386``)."""
+    (``makeCapsule``, ``impl/InternalFreshKijiTableReader.java:356-386``).
+    ``compiled`` is filled when a reader resolves the capsule and goes
+    away with it."""
 
     column: str  # 'family:qualifier' or map-family name
     policy: FreshnessPolicy
     producer: Producer
+    compiled: CompiledCapsule | None = field(default=None, repr=False, compare=False)
 
 
 class FreshTableReader:
@@ -113,8 +159,9 @@ class FreshTableReader:
 
     Mirrors ``FreshKijiTableReader``: ``get``/``bulk_get`` behave like
     plain reads except attached columns are freshened first. Capsules are
-    resolved lazily from the registry and cached; ``reread_policies``
-    invalidates the cache (A13).
+    resolved lazily from the registry, compiled, and cached;
+    ``reread_policies`` invalidates the cache (A13). A capsule dict
+    assigned to ``_capsules`` directly is compiled on first use.
     """
 
     def __init__(
@@ -150,7 +197,9 @@ class FreshTableReader:
     # -- capsule lifecycle (A13) -----------------------------------------
 
     def _resolve_capsules(self) -> dict[str, Freshener]:
-        if self._capsules is None:
+        caps = self._capsules
+        resolved = caps is None
+        if resolved:
             caps = {}
             for column, rec in self.registry.retrieve_all(self.table_name).items():
                 policy_cls = load_class(rec.freshness_policy_class)
@@ -160,8 +209,14 @@ class FreshTableReader:
                 producer_cls = load_class(rec.producer_class)
                 producer = producer_cls() if isinstance(producer_cls, type) else producer_cls
                 caps[column] = Freshener(column=column, policy=policy, producer=producer)
+        for cap in caps.values():
+            if cap.compiled is None or cap.compiled.table is not self.df:
+                cap.compiled = self._compile(cap)
+        if resolved:
+            # store only a new generation: storing the dict read above could
+            # bring back one that a concurrent reread just dropped
             self._capsules = caps
-        return self._capsules
+        return caps
 
     def reread_policies(self, preload: bool = False) -> None:
         """Drop cached capsules; next read re-resolves from the registry
@@ -251,17 +306,27 @@ class FreshTableReader:
             out._kss_sql = f"`{flat}`"
         return out
 
-    def _freshen_column(self, df: DataFrame, cap: Freshener, as_of_ms: int) -> DataFrame:
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
+    def _compile(self, cap: Freshener) -> CompiledCapsule:
+        """Build a capsule's Columns once per capsule generation — the
+        Spark half of ``makeCapsule`` (``InternalFreshKijiTableReader.java:
+        356-386``). Every Column reads the clock from the reserved
+        ``__as_of__`` bigint column, so one build serves every ``as_of``;
+        the policy receives that column as its ``as_of``."""
+        table = self.df
+        if AS_OF_COL in table.columns:
+            raise ValueError(
+                f"table {self.table_name!r} has a column named {AS_OF_COL!r}, "
+                "which the freshen pass reserves for its clock"
+            )
         fam, qual = parse_column(cap.column)
-        layout = TableLayout(df.schema)
+        layout = TableLayout(table.schema)
         flat = layout.flat_name(cap.column)
         is_map = qual is None
-        orig_cols = list(df.columns)
+        target = fam if is_map else flat
         # family-wide producers choose the qualifier they write to
         # (impl/KijiFreshProducerContext.java:115-131)
         map_qual = getattr(cap.producer, "map_qualifier", "score")
+        as_of = F.col(AS_OF_COL)
 
         # A9: KV side-inputs attach BEFORE the freshness predicate is
         # evaluated and on EVERY producer branch — in the reference a policy
@@ -271,11 +336,10 @@ class FreshTableReader:
         # masking producer stores of the same name
         # (InternalFreshKijiTableReader.java:374-379). The joined columns
         # are visible to the predicate, to ExpressionProducer.score, and to
-        # a PandasProducer's data_request; the final select(orig_cols)
-        # drops them.
-        stores = merge_stores(cap.producer.required_stores, cap.policy.required_stores)
-        if stores:
-            df = attach_stores(df, stores)
+        # a PandasProducer's data_request; the projection drops them.
+        stores = store_sides(
+            merge_stores(cap.producer.required_stores, cap.policy.required_stores)
+        )
 
         # A6: a policy with its own data request evaluates freshness over
         # THAT projection, not the attached column (the reference's
@@ -285,14 +349,51 @@ class FreshTableReader:
         # free under Catalyst).
         policy_req = cap.policy.data_request
         if policy_req is None:
-            versions: Column = self._versions_expr(layout, cap.column, map_qual)
-            fresh_pred = cap.policy.is_fresh(versions, as_of_ms)
+            versions = self._versions_expr(layout, cap.column, map_qual)
+            fresh = cap.policy.is_fresh(versions, as_of)
         else:
-            requested = {
-                c: self._versions_expr(layout, c, map_qual) for c in policy_req
-            }
-            fresh_pred = cap.policy.is_fresh_over(requested, as_of_ms)
+            requested = {c: self._versions_expr(layout, c, map_qual) for c in policy_req}
+            fresh = cap.policy.is_fresh_over(requested, as_of)
+        stale = ~fresh
 
+        producer = cap.producer
+        request: list[str] = []
+        if isinstance(producer, (PandasProducer, MLlibProducer)):
+            # scored per call over the stale partition, joined back by key
+            score = F.col(SCORE_COL)
+            if isinstance(producer, PandasProducer):
+                request = list(
+                    dict.fromkeys(
+                        [self.key_col]
+                        + [layout.flat_name(c) for c in producer.data_request]
+                    )
+                )
+        else:
+            # Expression producer: stays fully in codegen; KV store columns
+            # are attached before the projection
+            score = producer.score(attach_stores(table, stores))
+
+        written = (
+            model.map_with_put(F.col(fam), map_qual, as_of, score)
+            if is_map
+            else model.with_put(F.col(flat), as_of, score)
+        )
+        # stale & produced → write; stale & score NULL (producer didn't
+        # reach the row) → keep old (partial-freshening invariant A10)
+        merged = F.when(fresh | score.isNull(), F.col(target)).otherwise(written)
+        projection = [
+            merged.alias(target) if c == target else F.col(c) for c in table.columns
+        ]
+        return CompiledCapsule(table, stores, stale, projection, request)
+
+    def _freshen_column(self, df: DataFrame, cap: Freshener, keep_clock: bool) -> DataFrame:
+        """One capsule's per-call work over a table that carries
+        ``__as_of__``: the store joins, a pandas or MLlib producer's
+        scoring of the stale partition, and one select of the compiled
+        Columns. That select restores the table's columns in order; with
+        ``keep_clock`` it also keeps ``__as_of__`` for the next capsule."""
+        compiled = cap.compiled
+        df = attach_stores(df, compiled.stores)
         producer = cap.producer
         if isinstance(producer, PandasProducer):
             # Python path: score ONLY the stale partition through Arrow,
@@ -301,55 +402,44 @@ class FreshTableReader:
             # forced broadcast of an unbounded side is a driver OOM at
             # scale — AQE picks broadcast at runtime when the scored side
             # really is small.
-            stale = df.filter(~fresh_pred)
-            req_cols = [self.key_col] + [
-                layout.flat_name(c) for c in producer.data_request
-            ]
-            scored_in = stale.select(*dict.fromkeys(req_cols))
+            scored_in = df.filter(compiled.stale).select(*compiled.request)
+            # the schema of THIS call's input: a written-back table reads
+            # its columns as nullable
             out_schema = StructType(
-                list(scored_in.schema.fields) + [StructField("__score__", DoubleType())]
+                list(scored_in.schema.fields) + [StructField(SCORE_COL, DoubleType())]
             )
             scored = scored_in.mapInPandas(
-                producer.make_map_fn("__score__"), schema=out_schema
-            ).select(self.key_col, "__score__")
+                producer.make_map_fn(SCORE_COL), schema=out_schema
+            ).select(self.key_col, SCORE_COL)
             df = df.join(scored, on=self.key_col, how="left")
-            score_col = F.col("__score__")
         elif isinstance(producer, MLlibProducer):
-            stale = df.filter(~fresh_pred)
-            scored = producer.transform(stale).select(
-                self.key_col, F.col(producer.prediction_col).alias("__score__")
+            scored = producer.transform(df.filter(compiled.stale)).select(
+                self.key_col, F.col(producer.prediction_col).alias(SCORE_COL)
             )
             df = df.join(scored, on=self.key_col, how="left")
-            score_col = F.col("__score__")
-        else:
-            # Expression producer: stays fully in codegen; KV store columns
-            # were already attached above
-            score_col = producer.score(df)
+        if keep_clock:
+            return df.select(*compiled.projection, AS_OF_COL)
+        return df.select(*compiled.projection)
 
-        written = (
-            model.map_with_put(F.col(fam), map_qual, as_of_ms, score_col)
-            if is_map
-            else model.with_put(F.col(flat), as_of_ms, score_col)
-        )
-        # stale & produced → write; stale & score NULL (producer didn't
-        # reach the row) → keep old (partial-freshening invariant A10)
-        target = fam if is_map else flat
-        df = df.withColumn(
-            target,
-            F.when(fresh_pred | score_col.isNull(), F.col(target)).otherwise(written),
-        )
-        return df.select(*orig_cols)
+    def _freshen(self, df: DataFrame, caps: list[Freshener], as_of_ms: int) -> DataFrame:
+        """Apply compiled capsules, in order, to ``df`` at ``as_of_ms``."""
+        if not caps:
+            return df
+        df = df.select("*", F.lit(as_of_ms).cast("long").alias(AS_OF_COL))
+        for i, cap in enumerate(caps):
+            df = self._freshen_column(df, cap, keep_clock=i < len(caps) - 1)
+        return df
 
     def freshen(self, as_of_ms: int, columns: list[str] | None = None) -> DataFrame:
         """Apply every attached freshener (or the requested subset) and
         return the freshened table. Purely declarative — callers decide
         whether to materialize (writeback) or query directly."""
-        caps = self._resolve_capsules()
-        df = self.df
-        for column, cap in sorted(caps.items()):
-            if columns is None or column in columns:
-                df = self._freshen_column(df, cap, as_of_ms)
-        return df
+        caps = [
+            cap
+            for column, cap in sorted(self._resolve_capsules().items())
+            if columns is None or column in columns
+        ]
+        return self._freshen(self.df, caps, as_of_ms)
 
     def _materialize(self, df: DataFrame, tag: str) -> tuple[DataFrame, str]:
         """Materialize a freshened table by WRITING it to the scored-table
@@ -436,7 +526,7 @@ class FreshTableReader:
                     # wall-clock bound; pool health by
                     # test_timeout_storm_then_arrow_stage.
                     sc.setJobGroup(group, f"freshen {cap.column}")
-                    out = self._freshen_column(current, cap, as_of_ms)
+                    out = self._freshen(current, [cap], as_of_ms)
                     result["df"], result["path"] = self._materialize(
                         out, f"as_of={as_of_ms}/col={i}"
                     )

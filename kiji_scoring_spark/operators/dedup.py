@@ -59,6 +59,16 @@ def _shingles_of_words(w: Column, n: int) -> Column:
     return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(w, i, n)))
 
 
+def _check_names(*names: str) -> None:
+    """The builders below splice column names into SQL text between
+    backticks, so only plain identifiers are accepted: a backtick would
+    break the parse, and a dotted name would turn from field access into
+    one literal column name."""
+    for name in names:
+        if not name.isidentifier():
+            raise ValueError(f"column name {name!r} is not a plain identifier")
+
+
 def minhash_signature_df(docs: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """Per-doc minhash signature columns m0..m7, computed ENTIRELY
     map-side: shingle array → hash array → array_min over each affine
@@ -69,6 +79,7 @@ def minhash_signature_df(docs: DataFrame, id_col: str, text_col: str, n: int = 3
     own projection so the interpreted HOF lambdas (no CSE) never
     recompute upstream arrays per element. Bounded by one doc's shingle
     array per row — fine for any document that fits in a row."""
+    _check_names(id_col, text_col)
     # r16: every stage is ONE parsed selectExpr string — the Column build
     # cost ~2,200 py4j round-trips (~0.3 s driver time per signature
     # build, profiled); the parsed plans are canonically IDENTICAL
@@ -178,6 +189,7 @@ def bucket_pairs(
 
     Output is NOT distinct — callers dedupe across bands as before.
     """
+    _check_names(ids_col)
     n = F.size(ids_col)
     small = buckets.filter(n <= max_bucket)
     big = buckets.filter(n > max_bucket)
@@ -224,6 +236,7 @@ def cross_bucket_pairs(
     hot-bucket quarantine as :func:`bucket_pairs`: buckets where either
     side exceeds ``max_bucket`` are block-decomposed and shuffled so no
     task expands more than chunk² pairs. Output is NOT distinct."""
+    _check_names(a_col, b_col)
     hot = (F.size(a_col) > max_bucket) | (F.size(b_col) > max_bucket)
     small = buckets.filter(~hot)
     big = buckets.filter(hot)

@@ -9,7 +9,8 @@ down, fold them, and keep the stale-row filter inside codegen at any scale.
 
 Determinism: the reference's ``ShelfLife`` reads the wall clock
 (``lib/ShelfLife.java:96``); here `now` is always an injected ``as_of_ms``
-argument (SURVEY §5.2 determinism rule).
+argument, a bigint Column in the freshen pass (SURVEY §5.2 determinism
+rule).
 """
 
 from __future__ import annotations
@@ -26,6 +27,10 @@ class FreshnessPolicy:
     """Base policy (``KijiFreshnessPolicy.java:55-104``).
 
     - ``is_fresh(versions, as_of_ms)`` → Column predicate (isFresh).
+      In the freshen pass ``as_of_ms`` is a bigint Column: each capsule
+      is compiled once and reads the clock from the reserved
+      ``__as_of__`` column. Wrap it in ``F.lit`` (the identity on a
+      Column), so a direct caller's plain int works too.
     - ``data_request`` → columns the policy itself needs; None means "use
       the client's request" (shouldUseClientDataRequest/getDataRequest,
       ``KijiFreshnessPolicy.java:68-84``).

@@ -146,15 +146,23 @@ def merge_stores(
     return merged
 
 
-def attach_stores(df: DataFrame, stores: dict[str, Any]) -> DataFrame:
-    """Make KV side-inputs available as columns: for each store (a
-    DataFrame with (key, value) plus a join key on ``df``), broadcast
-    left-join it. Store spec: {"df": DataFrame, "on": join expr or column
-    name, "select": {new_col: store_col}}."""
-    for _name, spec in stores.items():
+def store_sides(stores: dict[str, Any]) -> list[tuple[DataFrame, Any]]:
+    """KV side-inputs as join sides: for each store (a DataFrame with
+    (key, value) plus a join key on the table), the renamed store under a
+    broadcast hint, with its join condition. Store spec: {"df": DataFrame,
+    "on": join expr or column name, "select": {new_col: store_col}}."""
+    sides = []
+    for spec in stores.values():
         sdf = spec["df"]
-        renames = spec.get("select", {})
-        for new, old in renames.items():
+        for new, old in spec.get("select", {}).items():
             sdf = sdf.withColumnRenamed(old, new)
-        df = df.join(F.broadcast(sdf), on=spec["on"], how="left")
+        sides.append((F.broadcast(sdf), spec["on"]))
+    return sides
+
+
+def attach_stores(df: DataFrame, sides: list[tuple[DataFrame, Any]]) -> DataFrame:
+    """Make KV side-inputs available as columns: left-join each
+    :func:`store_sides` side onto ``df``."""
+    for sdf, on in sides:
+        df = df.join(sdf, on=on, how="left")
     return df

@@ -1918,17 +1918,20 @@ def streaming_sketch_family_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias(f"{q}_ok")
 
     # MG flags: weights never overestimate; every heavy item recovered
-    # with weight within 2n/(K+1); summary <= K rows. All joins against
-    # the <= K-row state broadcast. no_overestimate and summary_within_k
-    # share one frame (r16): mg LEFT JOIN cnts preserves every mg row
-    # exactly once (cnts items are unique post-groupBy), so count(*) is
-    # the mg row count, and a missing cnt yields NULL for weight<=cnt,
-    # which min() skips — identical to the old inner-join min.
-    no_within = mg_state.join(F.broadcast(cnts), "item", "left").agg(
-        F.coalesce(F.min(F.col("weight") <= F.col("cnt")), F.lit(True)).alias(
-            "no_overestimate"
-        ),
-        (F.count(F.lit(1)) <= K).alias("summary_within_k"),
+    # with weight within 2n/(K+1); summary <= K rows. Every join
+    # broadcasts the <= K-row state and streams the per-item counts,
+    # which grow with the data. A broadcast hint on the preserved side of
+    # an outer join is ignored, so the overestimate check is an inner
+    # join: a missing cnt would only yield a NULL weight<=cnt, which min()
+    # skips. The summary size counts the state itself.
+    no_within = (
+        cnts.join(F.broadcast(mg_state), "item")
+        .agg(
+            F.coalesce(F.min(F.col("weight") <= F.col("cnt")), F.lit(True)).alias(
+                "no_overestimate"
+            )
+        )
+        .crossJoin(mg_state.agg((F.count(F.lit(1)) <= K).alias("summary_within_k")))
     )
     heavy_join = heavy_cnts.join(F.broadcast(mg_state), "item", "left")
     heavy_flags = heavy_join.agg(

@@ -13,6 +13,8 @@ filters/projections declared by queries reach the parquet reader
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -67,22 +69,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     build time), and it is pure metadata over an immutable dataset —
     exactly what a catalog pins at scale. Every call still creates a
     FRESH scan plan (no DataFrame-object sharing: self-joins keep
-    distinct attribute ids), and an in-process dataset rebuild
-    invalidates the cache through the standard purge hook. Results are
-    unchanged: the schema a later call receives is byte-identical to
-    the one it would have re-inferred.
+    distinct attribute ids). A dataset rebuilt in place invalidates the
+    cache through the standard purge hook, and a table rewritten without
+    the purge misses it too: entries are checked against the table
+    path's mtime (one ``stat``). Results are unchanged: the schema a
+    later call receives is byte-identical to the one it would have
+    re-inferred.
     """
     _ensure_nanos_conf(spark)
+    path = f"{sf_dir}/{name}.parquet"
     key = (spark.sparkContext.applicationId, state_tag(sf_dir), name)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(f"{sf_dir}/{name}.parquet")
-            .schema
-        )
-        _SCHEMA_CACHE[key] = schema
-    df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
+    fingerprint = _fingerprint(path)
+    cached = _SCHEMA_CACHE.get(key)
+    if cached is not None and cached[0] == fingerprint:
+        schema = cached[1]
+    else:
+        schema = spark.read.option("mergeSchema", "true").parquet(path).schema
+        _SCHEMA_CACHE[key] = (fingerprint, schema)
+    df = spark.read.schema(schema).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # integer DIV: ts is ~1.7e18 ns and double division would lose the
         # low microseconds (DuckDB truncates nanos -> micros; so do we)
@@ -92,9 +96,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-#: merged-schema cache for load_table, keyed (applicationId, dataset tag,
-#: table) — metadata only, see load_table's docstring
+#: merged-schema cache for load_table: (applicationId, dataset tag, table)
+#: -> (fingerprint, schema) — metadata only, see load_table's docstring
 _SCHEMA_CACHE: dict = {}
+
+
+def _fingerprint(path: str) -> int | None:
+    """The table path's ``st_mtime_ns``: one ``stat``, no listing. A table
+    rewritten in place gets a new mtime, so it misses the schema cache
+    even when nobody called ``purge_derived_state``. None when the path is
+    not on the local file system (the cache then relies on the purge)."""
+    try:
+        return os.stat(path).st_mtime_ns
+    except OSError:
+        return None
 
 
 def _purge_schema_cache(sf_dir: str, tag: str) -> None:

@@ -4,6 +4,7 @@ the signature values are oracle-hash-pinned, so only the driver-side
 build mechanism may change. Each test reconstructs the pre-r16 Column
 build inline and compares canonicalized analyzed plans plus rows."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from kiji_scoring_spark.operators.dedup import (
@@ -182,3 +183,32 @@ def test_cross_bucket_pairs_plan_and_rows_unchanged(spark):
     old = _legacy_cross_bucket_pairs(buckets, "a", "b")
     assert _canon(new) == _canon(old)
     assert sorted(map(tuple, new.collect())) == sorted(map(tuple, old.collect()))
+
+
+# The builders splice names into SQL text between backticks, so a name that
+# is not a plain identifier must fail before any plan is built.
+BAD_NAMES = ["doc`id", "doc.id", "doc id", "doc-id", ""]
+
+
+@pytest.mark.parametrize("bad", BAD_NAMES)
+def test_signature_rejects_bad_names(spark, bad):
+    docs = _docs(spark)
+    with pytest.raises(ValueError, match="not a plain identifier"):
+        minhash_signature_df(docs, bad, "text")
+    with pytest.raises(ValueError, match="not a plain identifier"):
+        minhash_signature_df(docs, "doc_id", bad)
+
+
+@pytest.mark.parametrize("bad", BAD_NAMES)
+def test_bucket_pairs_rejects_bad_names(spark, bad):
+    with pytest.raises(ValueError, match="not a plain identifier"):
+        bucket_pairs(_buckets(spark, 3), bad)
+
+
+@pytest.mark.parametrize("bad", BAD_NAMES)
+def test_cross_bucket_pairs_rejects_bad_names(spark, bad):
+    buckets = _buckets(spark, 3).select(F.col("ids").alias("a"), F.col("ids").alias("b"))
+    with pytest.raises(ValueError, match="not a plain identifier"):
+        cross_bucket_pairs(buckets, bad, "b")
+    with pytest.raises(ValueError, match="not a plain identifier"):
+        cross_bucket_pairs(buckets, "a", bad)

@@ -422,8 +422,13 @@ def test_auto_reread_with_preload_eagerly_reresolves(spark):
     reader.stop_auto_reread()
     now = reader._capsules
     assert now is not None and now is not before
-    # the eagerly re-resolved capsules are equivalent (same attachment)
+    # the eagerly re-resolved capsules are equivalent (same attachment),
+    # compiled anew with the new generation
     assert set(now) == set(before)
+    assert all(
+        cap.compiled is not None and cap.compiled is not before[col].compiled
+        for col, cap in now.items()
+    )
 
 
 def test_auto_reread_start_stop_stress(spark):

@@ -6,6 +6,8 @@ the fact side, and no query ever falls back to row-at-a-time Python
 (BatchEvalPython). A regression here means a 100 TB plan got worse even
 though sf0.001 results stayed right."""
 
+import re
+
 import pytest
 
 from kiji_scoring_spark.queries import QUERIES
@@ -748,6 +750,20 @@ def test_streaming_family_fold_final_plan_is_broadcast_only(spark, sf_dir):
         "the exact top-1 became a full global sort"
     )
     assert "BatchEvalPython" not in plan
+    # the per-item exact counts grow with the data: no hash join may
+    # build on them (the <= K-row MG state is the broadcast side)
+    lines = plan.splitlines()
+    for i, line in enumerate(lines):
+        if "BroadcastExchange HashedRelationBroadcastMode" not in line:
+            continue
+        col = line.index("BroadcastExchange")
+        for below in lines[i + 1:]:
+            node = re.search(r"[A-Za-z*]", below)
+            if node is None or node.start() <= col:
+                break
+            assert not re.search(r"Scan ExistingRDD\[item#\d+L?,cnt#", below), (
+                "the unbounded per-item counts are broadcast"
+            )
 
 
 def test_delta_theta_contamination_is_broadcast_only(spark, sf_dir):

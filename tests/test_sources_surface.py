@@ -3,6 +3,8 @@ register_views) had no executing test: pin that every driver table loads
 with oracle-compatible types and that the registered SQL views answer
 spark.sql queries — the entry point a SQL-only user of the engine takes."""
 
+from pyspark.sql import functions as F
+
 from kiji_scoring_spark.sources import TABLES, load_all, register_views
 
 
@@ -28,3 +30,22 @@ def test_register_views_serves_sql_surface(spark, sf_dir):
         """
     ).collect()
     assert sum(r["n_nations"] for r in rows) == 25 and len(rows) == 5
+
+
+def test_schema_cache_misses_table_rewritten_in_place(spark, tmp_path):
+    """A table rewritten in place without purge_derived_state must not be
+    served its old cached schema: the rewrite's extra column shows up."""
+    from kiji_scoring_spark import sources
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(3).write.parquet(path)
+    assert sources.load_table(spark, str(tmp_path), "t").columns == ["id"]
+    assert any(k[2] == "t" for k in sources._SCHEMA_CACHE)  # cached
+    assert sources.load_table(spark, str(tmp_path), "t").columns == ["id"]
+
+    spark.range(3).withColumn("extra", F.col("id") * 2).write.mode(
+        "overwrite"
+    ).parquet(path)
+    df = sources.load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["id", "extra"]
+    assert sorted(r["extra"] for r in df.collect()) == [0, 2, 4]
