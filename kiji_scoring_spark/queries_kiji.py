@@ -975,23 +975,20 @@ def streaming_drift_rescoring_ingest(spark: SparkSession, sf_dir: str) -> DataFr
     composes with the optimistic retry loop (pinned by
     tests/test_snapshots.py::test_optimistic_txn_replay_noop_composes_with_retry)."""
     import os
-    import shutil
 
     from . import pq_common
-    from . import state as _state_module
     from .operators.snapshots import (
         commit_snapshot,
         last_txn_id,
         read_snapshot,
     )
-    from .queries_ml import _replay_files, _state_partitions
     from .queries_pipeline import (
         _ivfpq_cb,
         _ivfpq_codes_table,
         _ivfpq_quantize,
         _ivfpq_seeds,
     )
-    from .state import state_tag
+    from .streaming.replay import replay_stream, run_available_now, run_scratch
 
     dim = pq_common._EMBED_DIM
     nsub = pq_common._PQ_SUB
@@ -1046,13 +1043,10 @@ def streaming_drift_rescoring_ingest(spark: SparkSession, sf_dir: str) -> DataFr
     parts = tuple(
         cur.filter(F.pmod(F.col("vec_id"), F.lit(3)) == r) for r in range(3)
     )
-    base = _replay_files("kss_driftfresh", sf_dir, parts)
-
-    run_base = os.path.join(
-        _state_module.stream_scratch_root(),
-        f"kss_driftfresh_run_{state_tag(sf_dir)}",
+    stream = replay_stream(
+        spark, "kss_driftfresh", sf_dir, parts, "vec_id long, emb_q array<long>"
     )
-    shutil.rmtree(run_base, ignore_errors=True)
+    run_base = run_scratch("kss_driftfresh", sf_dir)
     rescored_dir = os.path.join(run_base, "rescored")
 
     def freshen(batch_df: DataFrame, batch_id: int) -> None:
@@ -1080,19 +1074,9 @@ def streaming_drift_rescoring_ingest(spark: SparkSession, sf_dir: str) -> DataFr
             retries=2,
         )
 
-    stream = (
-        spark.readStream.schema("vec_id long, emb_q array<long>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(base, "stream"))
+    run_available_now(
+        stream, 2, foreach_batch=freshen, checkpoint=os.path.join(run_base, "cp")
     )
-    with _state_partitions(spark, 2):
-        sq = (
-            stream.writeStream.foreachBatch(freshen)
-            .option("checkpointLocation", os.path.join(run_base, "cp"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination()
 
     rescored = read_snapshot(
         spark, rescored_dir, schema="vec_id long, score_ts long, score double"

@@ -11,45 +11,33 @@ The scoring query here uses deterministic, closed-form MLlib stages
 parameters in SQL — iterative trainers would score fine but could not be
 hash-checked against an independent engine.
 
-The streaming query executes a REAL StreamingQuery (file micro-batch
-source → stateful window aggregation → memory sink, AvailableNow trigger)
-and returns the result as a batch DataFrame, so the §2.F surface gets the
-same oracle gate as everything else instead of a weaker rows-only check.
+The streaming queries execute REAL StreamingQueries (file micro-batch
+source → stateful operator or ``foreachBatch`` step → memory, parquet or
+versioned-state sink, AvailableNow trigger) and return the result as a
+batch DataFrame, so the §2.F surface gets the same oracle gate as
+everything else instead of a weaker rows-only check. Each one only builds
+its streaming DataFrame, its per-batch step and its result projection;
+the replay files, the runner, the per-run scratch dir and the
+versioned-state fold live in ``streaming/replay.py``.
 """
 
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import state as _state_module
 from .queries import query
 from .sources import load_table
 from .streaming import shift_event_time, unshift_event_time
-
-
-@contextmanager
-def _state_partitions(spark: SparkSession, n: int):
-    """Pin the stateful-operator partition count for a streaming query's
-    lifetime. Streaming state partitioning comes from
-    ``spark.sql.shuffle.partitions`` AT FIRST BATCH and is
-    checkpoint-sticky — so it must be sized to STATE volume (open
-    windows / distinct keys), not to data volume like a batch shuffle:
-    here a few hundred open windows across 32 state stores is pure
-    per-batch store open/commit overhead (measured 2.6s → 1.5s at sf0.1
-    with 8; a further ~0.4s/query at 2, r11 — these replays hold ≤50
-    keys, so even 2 stores are mostly empty; size UP with key count on a
-    real stream). Restores the session conf afterwards; batch queries
-    are unaffected (AQE coalesces their shuffles independently)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+from .streaming.replay import (
+    fold_versioned_state,
+    replay_stream,
+    run_available_now,
+    run_scratch,
+    state_member,
+)
 
 
 @query(
@@ -645,15 +633,7 @@ def streaming_hourly_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
     )
     sink = "streaming_hourly_event_stats_sink"
-    with _state_partitions(spark, 2):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_available_now(agg, 2, memory=sink, output_mode="complete")
     return (
         spark.table(sink)
         .select(
@@ -796,15 +776,7 @@ def streaming_sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFra
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
     )
     sink = "streaming_sliding_window_counts_sink"
-    with _state_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_available_now(agg, 8, memory=sink, output_mode="complete")
     return (
         spark.table(sink)
         .select(
@@ -849,15 +821,7 @@ def streaming_static_join_segments(spark: SparkSession, sf_dir: str) -> DataFram
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
     )
     sink = "streaming_static_join_segments_sink"
-    with _state_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_available_now(agg, 8, memory=sink, output_mode="complete")
     return spark.table(sink).orderBy("c_mktsegment")
 
 
@@ -887,113 +851,13 @@ def streaming_dedup_event_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["user_id", "event_type"]
     )
     sink = "streaming_dedup_event_keys_sink"
-    with _state_partitions(spark, 8):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_available_now(deduped, 8, memory=sink)
     return (
         spark.table(sink)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_keys"))
         .orderBy("event_type")
     )
-
-
-#: replay dirs materialized THIS SESSION, keyed (prefix, full-path tag) —
-#: the session-lifetime amortization gate (the bucketed-table pattern,
-#: r10): replay files are a pure deterministic function of the dataset,
-#: so within one session the warm run builds and every later run replays
-#: the same bytes. Deliberately in-memory, NOT an on-disk marker: a fresh
-#: session always rebuilds, so a dataset rebuilt under the same path can
-#: never be served a stale replay.
-_REPLAY_BUILT: set = set()
-
-#: every replay prefix ever passed to _replay_files — kept in sync so the
-#: purge hook below can find the on-disk dirs without scanning /tmp.
-_REPLAY_PREFIXES = (
-    "kss_latedrop",
-    "kss_stateful",
-    "kss_febmerge",
-    "kss_dedupww",
-    "kss_kmvfold",
-    "kss_famfold",
-    "kss_annidx",
-    "kss_driftfresh",
-)
-
-
-def _purge_replay_state(sf_dir: str, tag: str) -> None:
-    """purge_derived_state hook (ADVICE r11): an in-process dataset
-    rebuild must invalidate both the on-disk replay dirs AND the
-    in-memory ``_REPLAY_BUILT`` gate, or the next replay run would serve
-    micro-batches derived from the pre-rebuild data."""
-    import shutil
-
-    for prefix in _REPLAY_PREFIXES:
-        _REPLAY_BUILT.discard((prefix, tag))
-        shutil.rmtree(
-            os.path.join(_state_module.stream_scratch_root(), f"{prefix}_{tag}"),
-            ignore_errors=True,
-        )
-
-
-_state_module.register_purge_hook(_purge_replay_state)
-
-
-def _replay_files(prefix: str, sf_dir: str, parts) -> str:
-    """Materialize DataFrames as a deterministic micro-batch replay dir:
-    one parquet file per part, mtimes strictly increasing in list order.
-    The file stream source sorts by (modification time, path), so with
-    ``maxFilesPerTrigger=1`` the parts become batches 0..n-1 exactly —
-    the watermark sequence and state-function invocation order are fully
-    deterministic, which is what lets real StreamingQueries sit under
-    the exact-value oracle gate.
-
-    Amortized to session lifetime (r11): ~0.9 s of the ~2-4 s per replay
-    run was re-writing identical replay files; repeated executions — the
-    bench's warm+timed runs, a re-submitted job — now pay the write once
-    per session. Tagged by the full dataset path (state_tag), not the
-    basename, so same-named dataset dirs never share replays."""
-    import shutil
-
-    from .state import state_tag
-
-    assert prefix in _REPLAY_PREFIXES, f"unregistered replay prefix {prefix!r}"
-    tag = state_tag(sf_dir)
-    base = os.path.join(_state_module.stream_scratch_root(), f"{prefix}_{tag}")
-    stream_dir = os.path.join(base, "stream")
-    key = (prefix, tag)
-    if key in _REPLAY_BUILT:
-        # Validate EVERY expected batch file, not just the dir (ADVICE
-        # r11): a /tmp cleaner or a concurrent session rmtree-ing the
-        # shared base mid-run can leave a partial dir that would replay
-        # fewer batches and fail the exact-value gate confusingly.
-        if all(
-            os.path.isfile(os.path.join(stream_dir, f"batch{i}.parquet"))
-            for i in range(len(parts))
-        ):
-            return base
-        _REPLAY_BUILT.discard(key)
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(stream_dir)
-    now = 1_600_000_000  # any fixed base; only the ORDER of mtimes matters
-    for i, part in enumerate(parts):
-        staging = os.path.join(base, f"staging{i}")
-        part.coalesce(1).write.parquet(staging)
-        src = next(
-            f for f in os.listdir(staging)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        dst = os.path.join(stream_dir, f"batch{i}.parquet")
-        shutil.copyfile(os.path.join(staging, src), dst)
-        os.utime(dst, (now + i * 100, now + i * 100))
-    _REPLAY_BUILT.add(key)
-    return base
 
 
 @query(
@@ -1018,7 +882,7 @@ def _replay_files(prefix: str, sf_dir: str, parts) -> str:
 def streaming_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark LATE-DROP as a driver-checked query (§2.F row 1 — was
     local-test-only): the events slice is replayed as THREE mtime-ordered
-    micro-batches via maxFilesPerTrigger=1 — newest two days first, then
+    micro-batches, one file per trigger — newest two days first, then
     days 2-4, then everything older as the straggler file.
 
     Spark 4 runs TWO watermarks per batch (SPARK-24588 semantics): late
@@ -1053,27 +917,14 @@ def streaming_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame
     b1 = evm.filter((F.col("ts") >= cut4) & (F.col("ts") < cut2)).select("ts")
     b2 = evm.filter(F.col("ts") < cut4).select("ts")
 
-    base = _replay_files("kss_latedrop", sf_dir, (b0, b1, b2))
-    stream = (
-        spark.readStream.schema("ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(base, "stream"))
-    )
+    stream = replay_stream(spark, "kss_latedrop", sf_dir, (b0, b1, b2), "ts timestamp")
     agg = (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
     sink = "streaming_watermark_late_drop_sink"
-    with _state_partitions(spark, 2):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_available_now(agg, 2, memory=sink)
     return (
         spark.table(sink)
         .select(
@@ -1153,8 +1004,6 @@ def streaming_stateful_running_user_totals(spark: SparkSession, sf_dir: str) -> 
     b0 = evm.filter(F.col("ts") < cut).select("user_id", "cents")
     b1 = evm.filter(F.col("ts") >= cut).select("user_id", "cents")
 
-    base = _replay_files("kss_stateful", sf_dir, (b0, b1))
-
     def running_totals(key, pdfs, state: GroupState):
         n, c = state.get if state.exists else (0, 0)
         for pdf in pdfs:
@@ -1165,10 +1014,8 @@ def streaming_stateful_running_user_totals(spark: SparkSession, sf_dir: str) -> 
             {"user_id": [key[0]], "n_events_so_far": [n], "cents_so_far": [c]}
         )
 
-    stream = (
-        spark.readStream.schema("user_id long, cents long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(base, "stream"))
+    stream = replay_stream(
+        spark, "kss_stateful", sf_dir, (b0, b1), "user_id long, cents long"
     )
     updates = stream.groupBy("user_id").applyInPandasWithState(
         running_totals,
@@ -1178,15 +1025,7 @@ def streaming_stateful_running_user_totals(spark: SparkSession, sf_dir: str) -> 
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     sink = "streaming_stateful_running_user_totals_sink"
-    with _state_partitions(spark, 2):
-        q = (
-            updates.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_available_now(updates, 2, memory=sink, output_mode="update")
     return spark.table(sink).orderBy("user_id", "n_events_so_far")
 
 
@@ -1245,75 +1084,41 @@ def streaming_foreachbatch_merge_upsert(spark: SparkSession, sf_dir: str) -> Dat
     b0 = evm.filter(F.col("ts") < cut).select("user_id", "cents")
     b1 = evm.filter(F.col("ts") >= cut).select("user_id", "cents")
 
-    base = _replay_files("kss_febmerge", sf_dir, (b0, b1))
-    # checkpoint + merge state are per-RUN scratch (a reused checkpoint
-    # would mark every replay file already-committed and run ZERO
-    # batches), so they live OUTSIDE the session-lifetime replay dir and
-    # are cleared on entry
-    import shutil
-
-    from .state import state_tag
-
-    run_base = os.path.join(
-        _state_module.stream_scratch_root(), f"kss_febmerge_run_{state_tag(sf_dir)}"
-    )
-    shutil.rmtree(run_base, ignore_errors=True)
-    state_base = os.path.join(run_base, "state")
-    last_version = {"v": -1}
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def merge_batch(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         agg = batch_df.groupBy("user_id").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum("cents").alias("cents_total"),
             F.lit(1).cast("long").alias("batches_seen"),
         )
-        if last_version["v"] >= 0:
-            prev = batch_df.sparkSession.read.parquet(
-                os.path.join(state_base, f"v{last_version['v']}")
+        if prev is None:
+            return agg
+        return (
+            prev.alias("p")
+            .join(agg.alias("n"), "user_id", "full_outer")
+            .select(
+                "user_id",
+                (
+                    F.coalesce(F.col("p.n_events"), F.lit(0))
+                    + F.coalesce(F.col("n.n_events"), F.lit(0))
+                ).alias("n_events"),
+                (
+                    F.coalesce(F.col("p.cents_total"), F.lit(0))
+                    + F.coalesce(F.col("n.cents_total"), F.lit(0))
+                ).alias("cents_total"),
+                (
+                    F.coalesce(F.col("p.batches_seen"), F.lit(0))
+                    + F.coalesce(F.col("n.batches_seen"), F.lit(0))
+                ).alias("batches_seen"),
             )
-            merged = (
-                prev.alias("p")
-                .join(agg.alias("n"), "user_id", "full_outer")
-                .select(
-                    "user_id",
-                    (
-                        F.coalesce(F.col("p.n_events"), F.lit(0))
-                        + F.coalesce(F.col("n.n_events"), F.lit(0))
-                    ).alias("n_events"),
-                    (
-                        F.coalesce(F.col("p.cents_total"), F.lit(0))
-                        + F.coalesce(F.col("n.cents_total"), F.lit(0))
-                    ).alias("cents_total"),
-                    (
-                        F.coalesce(F.col("p.batches_seen"), F.lit(0))
-                        + F.coalesce(F.col("n.batches_seen"), F.lit(0))
-                    ).alias("batches_seen"),
-                )
-            )
-        else:
-            merged = agg
-        # versioned dir = atomic swap: the new state materializes fully
-        # before last_version advances; a failed batch leaves state intact
-        merged.write.parquet(os.path.join(state_base, f"v{batch_id}"))
-        last_version["v"] = batch_id
-
-    stream = (
-        spark.readStream.schema("user_id long, cents long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(base, "stream"))
-    )
-    with _state_partitions(spark, 2):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", os.path.join(run_base, "cp"))
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
-    return (
-        spark.read.parquet(os.path.join(state_base, f"v{last_version['v']}"))
-        .orderBy("user_id")
+
+    stream = replay_stream(
+        spark, "kss_febmerge", sf_dir, (b0, b1), "user_id long, cents long"
     )
+    state = fold_versioned_state(
+        stream, run_scratch("kss_febmerge", sf_dir), merge_batch
+    )
+    return state.orderBy("user_id")
 
 
 @query(
@@ -1395,10 +1200,6 @@ def streaming_sketch_incremental_merge(spark: SparkSession, sf_dir: str) -> Data
     (KijiFreshnessManager.java:235-239 mMetaTable.putValue — durable
     summaries updated per write, readable at any time) re-expressed as
     mergeable sketch state under Structured Streaming."""
-    import shutil
-
-    from .state import state_tag
-
     K = 64  # matches the batch KMV family (_KMV_K) and the oracle's 64
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
@@ -1417,34 +1218,8 @@ def streaming_sketch_incremental_merge(spark: SparkSession, sf_dir: str) -> Data
     b0 = evm.filter(F.col("ts") >= cut10).select("key")
     b1 = evm.filter((F.col("ts") >= cut20) & (F.col("ts") < cut10)).select("key")
     b2 = evm.filter(F.col("ts") < cut20).select("key")
-    base = _replay_files("kss_kmvfold", sf_dir, (b0, b1, b2))
 
-    # checkpoint + sketch state are per-RUN scratch (a reused checkpoint
-    # would mark every replay file already-committed and run ZERO
-    # batches) — same discipline as the foreachBatch MERGE sink
-    run_base = os.path.join(
-        _state_module.stream_scratch_root(), f"kss_kmvfold_run_{state_tag(sf_dir)}"
-    )
-    shutil.rmtree(run_base, ignore_errors=True)
-    state_base = os.path.join(run_base, "state")
-    last_version = {"v": -1}
-
-    #: both members live in ONE union-schema state file per version — one
-    #: write job per micro-batch instead of two (r16, the family-fold
-    #: pattern: the replay decomposition showed ~0.3 s FIXED cost per
-    #: job, and the members are tiny at any scale)
-    state_cols = ["member", "key", "h", "n_rows", "n_nonempty_batches"]
-
-    def as_member(df: DataFrame, member: str) -> DataFrame:
-        missing = [c for c in state_cols if c not in df.columns and c != "member"]
-        out = df.select(F.lit(member).alias("member"), "*")
-        for c in missing:
-            typ = "string" if c == "h" else "long"
-            out = out.withColumn(c, F.lit(None).cast(typ))
-        return out.select(*state_cols)
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
+    def fold_batch(batch_df: DataFrame, prev: DataFrame | None) -> dict:
         batch_sketch = (
             batch_df.select("key")
             .distinct()
@@ -1456,60 +1231,36 @@ def streaming_sketch_incremental_merge(spark: SparkSession, sf_dir: str) -> Data
             F.count(F.lit(1)).alias("n_rows"),
             (F.count(F.lit(1)) > 0).cast("long").alias("n_nonempty_batches"),
         )
-        if last_version["v"] >= 0:
-            prev_all = sess.read.parquet(
-                os.path.join(state_base, f"v{last_version['v']}")
-            )
-            prev = prev_all.filter(F.col("member") == "sketch").select("key", "h")
-            # a key seen in several batches carries the same hash —
-            # distinct-union, then the fold keeps the global bottom-K
-            folded = (
-                prev.unionByName(batch_sketch)
-                .distinct()
-                .orderBy("h")
-                .limit(K)
-            )
-            prev_meta = prev_all.filter(F.col("member") == "meta").select(
-                "n_rows", "n_nonempty_batches"
-            )
-            meta = (
-                prev_meta.unionByName(batch_meta)
-                .agg(
-                    F.sum("n_rows").alias("n_rows"),
-                    F.sum("n_nonempty_batches").alias("n_nonempty_batches"),
-                )
-            )
-        else:
-            folded, meta = batch_sketch, batch_meta
-        # versioned dir = atomic swap: the whole state materializes fully
-        # before last_version advances; a failed batch leaves state
-        # intact. mode("overwrite") because foreachBatch is
-        # AT-LEAST-ONCE (see the family fold's rationale).
-        state = as_member(folded, "sketch").unionByName(as_member(meta, "meta"))
-        state.write.mode("overwrite").parquet(
-            os.path.join(state_base, f"v{batch_id}")
+        if prev is None:
+            return {"sketch": batch_sketch, "meta": batch_meta}
+        # a key seen in several batches carries the same hash —
+        # distinct-union, then the fold keeps the global bottom-K
+        folded = (
+            state_member(prev, "sketch", "key", "h")
+            .unionByName(batch_sketch)
+            .distinct()
+            .orderBy("h")
+            .limit(K)
         )
-        last_version["v"] = batch_id
-
-    stream = (
-        spark.readStream.schema("key long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(base, "stream"))
-    )
-    with _state_partitions(spark, 2):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", os.path.join(run_base, "cp"))
-            .trigger(availableNow=True)
-            .start()
+        meta = (
+            state_member(prev, "meta", "n_rows", "n_nonempty_batches")
+            .unionByName(batch_meta)
+            .agg(
+                F.sum("n_rows").alias("n_rows"),
+                F.sum("n_nonempty_batches").alias("n_nonempty_batches"),
+            )
         )
-        q.awaitTermination()
+        return {"sketch": folded, "meta": meta}
 
-    final = spark.read.parquet(os.path.join(state_base, f"v{last_version['v']}"))
-    sketch = final.filter(F.col("member") == "sketch").select("key", "h")
-    meta = final.filter(F.col("member") == "meta").select(
-        "n_rows", "n_nonempty_batches"
+    stream = replay_stream(spark, "kss_kmvfold", sf_dir, (b0, b1, b2), "key long")
+    final = fold_versioned_state(
+        stream,
+        run_scratch("kss_kmvfold", sf_dir),
+        fold_batch,
+        {"key": "long", "h": "string", "n_rows": "long", "n_nonempty_batches": "long"},
     )
+    sketch = state_member(final, "sketch", "key", "h")
+    meta = state_member(final, "meta", "n_rows", "n_nonempty_batches")
 
     from pyspark.sql import Window
 
@@ -1642,7 +1393,6 @@ def streaming_sketch_family_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-expressed as a family of mergeable sketch states under Structured
     Streaming."""
     import math
-    import shutil
 
     from pyspark.sql import Window
 
@@ -1652,7 +1402,6 @@ def streaming_sketch_family_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         _MG_K,
         _grouped_top_k,
     )
-    from .state import state_tag
 
     K = _MG_K  # 64 counters, matching the batch MG shards and the oracle
     ln_g = math.log(_DDSKETCH_GAMMA)
@@ -1686,14 +1435,6 @@ def streaming_sketch_family_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     b0 = evm.filter(F.col("ts") >= cut10).select(*cols)
     b1 = evm.filter((F.col("ts") >= cut20) & (F.col("ts") < cut10)).select(*cols)
     b2 = evm.filter(F.col("ts") < cut20).select(*cols)
-    base = _replay_files("kss_famfold", sf_dir, (b0, b1, b2))
-
-    run_base = os.path.join(
-        _state_module.stream_scratch_root(), f"kss_famfold_run_{state_tag(sf_dir)}"
-    )
-    shutil.rmtree(run_base, ignore_errors=True)
-    state_base = os.path.join(run_base, "state")
-    last_version = {"v": -1}
 
     def mg_prune(weights: DataFrame) -> DataFrame:
         """One Misra-Gries prune: top-K weights decremented by the
@@ -1721,32 +1462,7 @@ def streaming_sketch_family_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("weight") > 0)
         )
 
-    #: all four members live in ONE union-schema state file per version —
-    #: one write job per micro-batch instead of four (the replay-floor
-    #: decomposition showed ~0.3 s FIXED cost per job; at 4 members × N
-    #: batches that dominated the fold's wall-clock, and at scale the
-    #: members are tiny anyway)
-    state_cols = [
-        "member",
-        "sk",
-        "bkt",
-        "cnt",
-        "item",
-        "weight",
-        "n_rows",
-        "n_nonempty_batches",
-    ]
-
-    def as_member(df: DataFrame, member: str) -> DataFrame:
-        missing = [c for c in state_cols if c not in df.columns and c != "member"]
-        out = df.select(F.lit(member).alias("member"), "*")
-        for c in missing:
-            typ = "binary" if c == "sk" else "long"
-            out = out.withColumn(c, F.lit(None).cast(typ))
-        return out.select(*state_cols)
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
+    def fold_batch(batch_df: DataFrame, prev: DataFrame | None) -> dict:
         b_hll = batch_df.agg(F.hll_sketch_agg("key").alias("sk"))
         b_dd = (
             batch_df.select(F.ceil(F.log("v") / F.lit(ln_g)).alias("bkt"))
@@ -1760,91 +1476,70 @@ def streaming_sketch_family_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_rows"),
             (F.count(F.lit(1)) > 0).cast("long").alias("n_nonempty_batches"),
         )
-        if last_version["v"] >= 0:
-            prev = sess.read.parquet(
-                os.path.join(state_base, f"v{last_version['v']}")
-            )
-            hll = (
-                prev.filter(F.col("member") == "hll")
-                .select("sk")
-                .unionByName(b_hll)
-                .agg(F.hll_union_agg("sk").alias("sk"))
-            )
-            dd = (
-                prev.filter(F.col("member") == "dd")
-                .select("bkt", "cnt")
-                .unionByName(b_dd)
-                .groupBy("bkt")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-            mg = mg_prune(
-                prev.filter(F.col("member") == "mg")
-                .select("item", F.col("weight").alias("w"))
-                .unionByName(b_mg.select("item", F.col("weight").alias("w")))
-                .groupBy("item")
-                .agg(F.sum("w").alias("w"))
-            )
-            meta = (
-                prev.filter(F.col("member") == "meta")
-                .select("n_rows", "n_nonempty_batches")
-                .unionByName(b_meta)
-                .agg(
-                    F.sum("n_rows").alias("n_rows"),
-                    F.sum("n_nonempty_batches").alias("n_nonempty_batches"),
-                )
-            )
-        else:
-            hll, dd, mg, meta = b_hll, b_dd, b_mg, b_meta
-        # versioned dir, published with mode("overwrite") because
-        # foreachBatch is AT-LEAST-ONCE: a batch that dies mid-write
-        # leaves a partial v{batch_id} dir, and the retry of that same
-        # batch_id must be able to recommit over it (errorifexists would
-        # wedge the stream on its own debris). last_version still only
-        # advances after the write job returns, so a failed batch never
-        # exposes partial state to the next fold — it reads the intact
-        # v{batch_id-1}.
-        state = (
-            as_member(hll, "hll")
-            .unionByName(as_member(dd, "dd"))
-            .unionByName(as_member(mg, "mg"))
-            .unionByName(as_member(meta, "meta"))
+        if prev is None:
+            return {"hll": b_hll, "dd": b_dd, "mg": b_mg, "meta": b_meta}
+        hll = (
+            state_member(prev, "hll", "sk")
+            .unionByName(b_hll)
+            .agg(F.hll_union_agg("sk").alias("sk"))
         )
-        state.write.mode("overwrite").parquet(
-            os.path.join(state_base, f"v{batch_id}")
+        dd = (
+            state_member(prev, "dd", "bkt", "cnt")
+            .unionByName(b_dd)
+            .groupBy("bkt")
+            .agg(F.sum("cnt").alias("cnt"))
         )
-        last_version["v"] = batch_id
+        mg = mg_prune(
+            state_member(prev, "mg", "item", F.col("weight").alias("w"))
+            .unionByName(b_mg.select("item", F.col("weight").alias("w")))
+            .groupBy("item")
+            .agg(F.sum("w").alias("w"))
+        )
+        meta = (
+            state_member(prev, "meta", "n_rows", "n_nonempty_batches")
+            .unionByName(b_meta)
+            .agg(
+                F.sum("n_rows").alias("n_rows"),
+                F.sum("n_nonempty_batches").alias("n_nonempty_batches"),
+            )
+        )
+        return {"hll": hll, "dd": dd, "mg": mg, "meta": meta}
 
-    stream = (
-        spark.readStream.schema("key long, v double, item long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(base, "stream"))
+    stream = replay_stream(
+        spark, "kss_famfold", sf_dir, (b0, b1, b2), "key long, v double, item long"
     )
-    with _state_partitions(spark, 2):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", os.path.join(run_base, "cp"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    final = spark.read.parquet(os.path.join(state_base, f"v{last_version['v']}"))
+    final = fold_versioned_state(
+        stream,
+        run_scratch("kss_famfold", sf_dir),
+        fold_batch,
+        {
+            "sk": "binary",
+            "bkt": "long",
+            "cnt": "long",
+            "item": "long",
+            "weight": "long",
+            "n_rows": "long",
+            "n_nonempty_batches": "long",
+        },
+    )
     # shared subtrees (r16, guide §2.4): the output stage used to rebuild
     # the meta aggregate 4x and the per-item counts 3x (one full src scan
     # each) and launch ~9 one-row broadcast jobs; lazy localCheckpoints
     # execute each shared frame once per run, and compatible one-row
     # aggregates are merged. Every expression below is value-identical to
     # the r13 formulation — only the plan shape changed.
-    meta = final.filter(F.col("member") == "meta").select(
+    meta = state_member(
+        final,
+        "meta",
         "n_rows",
         "n_nonempty_batches",
         F.ceil(F.lit(0.5) * F.col("n_rows")).alias("r50"),
         F.ceil(F.lit(0.9) * F.col("n_rows")).alias("r90"),
         F.ceil(F.lit(0.99) * F.col("n_rows")).alias("r99"),
     ).localCheckpoint(eager=False)
-    hll_state = final.filter(F.col("member") == "hll").select("sk")
-    dd_state = final.filter(F.col("member") == "dd").select("bkt", "cnt")
-    mg_state = final.filter(F.col("member") == "mg").select("item", "weight")
+    hll_state = state_member(final, "hll", "sk")
+    dd_state = state_member(final, "dd", "bkt", "cnt")
+    mg_state = state_member(final, "mg", "item", "weight")
 
     # exact references (the oracle's cost): one pass over the static
     # table; the folded state never touches it
@@ -2119,8 +1814,6 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuously-maintained derived-artifact pattern
     (KijiFreshnessManager.java:235-239, mMetaTable.putValue) applied to
     an ANN index."""
-    import shutil
-
     from .operators.snapshots import (
         commit_snapshot,
         compact_snapshot,
@@ -2136,7 +1829,6 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ivfpq_quantize,
         _ivfpq_seeds,
     )
-    from .state import state_tag
 
     e = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id").isNotNull()
@@ -2160,12 +1852,10 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.filter(F.pmod(F.col("vec_id"), F.lit(3)) == r).select(*qcols)
         for r in range(3)
     )
-    base = _replay_files("kss_annidx", sf_dir, parts)
-
-    run_base = os.path.join(
-        _state_module.stream_scratch_root(), f"kss_annidx_run_{state_tag(sf_dir)}"
+    stream = replay_stream(
+        spark, "kss_annidx", sf_dir, parts, ", ".join(f"{c} long" for c in qcols)
     )
-    shutil.rmtree(run_base, ignore_errors=True)
+    run_base = run_scratch("kss_annidx", sf_dir)
     codes_dir = os.path.join(run_base, "codes")
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
@@ -2195,19 +1885,9 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             reclaim_crashed=True,
         )
 
-    stream = (
-        spark.readStream.schema(", ".join(f"{c} long" for c in qcols))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(base, "stream"))
+    run_available_now(
+        stream, 2, foreach_batch=ingest, checkpoint=os.path.join(run_base, "cp")
     )
-    with _state_partitions(spark, 2):
-        sq = (
-            stream.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", os.path.join(run_base, "cp"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination()
 
     # post-ingest maintenance, the OPTIMIZE a streaming-built table owes
     # its readers: compact the N per-batch commits into ONE
@@ -2236,6 +1916,58 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ivfpq_query_phase(q, _ivfpq_cb(q), _ivfpq_seeds(q), codes)
         .crossJoin(F.broadcast(meta))
         .orderBy("rn")
+    )
+
+
+def _view_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """The view→purchase stream-stream interval join shared by the
+    inner, left-outer and full-outer queries: views and purchases of
+    users below 40 as two watermarked (1 minute) event streams, joined
+    on user where the purchase falls in the view's next 2 hours.
+    Columns: v_user, view_id, view_ts, p_user, purchase_id, purchase_ts,
+    event times still shifted by :func:`streaming.shift_event_time`."""
+    load_table(spark, sf_dir, "events")  # sets the nanos-parquet conf
+
+    def side(alias_type: str):
+        s = _stream_events(spark, sf_dir)
+        if dict(s.dtypes).get("ts") == "bigint":
+            s = s.withColumn(
+                "ts", F.expr("CAST(timestamp_micros(ts DIV 1000) AS timestamp)")
+            )
+        else:
+            s = s.withColumn("ts", F.col("ts").cast("timestamp"))
+        # pre-epoch shim (r7): shift event time by a constant BEFORE the
+        # watermark so rows at/before epoch 0 — which Spark's initial
+        # watermark of 0 would drop as first-batch late data — survive;
+        # exactly reversed on the emitted columns. Relative semantics
+        # (watermark delay, join time-range, eviction bounds) shift with
+        # the data, so normal-corpus results are bit-identical.
+        return (
+            shift_event_time(
+                s.filter(
+                    (F.col("event_type") == alias_type) & (F.col("user_id") < 40)
+                ).select("user_id", "event_id", "ts"),
+                "ts",
+            )
+            .withWatermark("ts", "1 minute")
+        )
+
+    v = side("view").select(
+        F.col("user_id").alias("v_user"),
+        F.col("event_id").alias("view_id"),
+        F.col("ts").alias("view_ts"),
+    )
+    p = side("purchase").select(
+        F.col("user_id").alias("p_user"),
+        F.col("event_id").alias("purchase_id"),
+        F.col("ts").alias("purchase_ts"),
+    )
+    return v.join(
+        p,
+        (F.col("v_user") == F.col("p_user"))
+        & (F.col("purchase_ts") >= F.col("view_ts"))
+        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 2 HOURS")),
+        how,
     )
 
 
@@ -2279,47 +2011,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     range, eviction bound) shifts with the data, so normal-corpus output
     is bit-identical while pre-epoch rows survive. Verified on the
     tsedge regime (tests/test_regimes.py::test_tsedge_stream_stream)."""
-    load_table(spark, sf_dir, "events")  # sets the nanos-parquet conf
-    def side(alias_type: str):
-        s = _stream_events(spark, sf_dir)
-        if dict(s.dtypes).get("ts") == "bigint":
-            s = s.withColumn(
-                "ts", F.expr("CAST(timestamp_micros(ts DIV 1000) AS timestamp)")
-            )
-        else:
-            s = s.withColumn("ts", F.col("ts").cast("timestamp"))
-        # pre-epoch shim (r7): shift event time by a constant BEFORE the
-        # watermark so rows at/before epoch 0 — which Spark's initial
-        # watermark of 0 would drop as first-batch late data — survive;
-        # exactly reversed on the emitted columns. Relative semantics
-        # (watermark delay, join time-range, eviction bounds) shift with
-        # the data, so normal-corpus results are bit-identical.
-        return (
-            shift_event_time(
-                s.filter(
-                    (F.col("event_type") == alias_type) & (F.col("user_id") < 40)
-                ).select("user_id", "event_id", "ts"),
-                "ts",
-            )
-            .withWatermark("ts", "1 minute")
-        )
-
-    v = side("view").select(
-        F.col("user_id").alias("v_user"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    p = side("purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    joined = v.join(
-        p,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 2 HOURS")),
-    )
+    joined = _view_purchase_join(spark, sf_dir, "inner")
     sink = "streaming_stream_stream_join_sink"
     # 2, not 8: a stream-stream join runs FOUR state stores per
     # partition (left/right × keyToNumValues/keyWithIndexToValue), so
@@ -2327,15 +2019,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # watermark-bounded state this small, fewer partitions win
     # (measured 8→7.3s, 2→3.4s warm at sf0.1). Size up with state
     # volume on a real cluster.
-    with _state_partitions(spark, 2):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_available_now(joined, 2, memory=sink)
     ts_type = load_table(spark, sf_dir, "events").schema["ts"].dataType
     return (
         unshift_event_time(spark.table(sink), ["view_ts", "purchase_ts"])
@@ -2381,8 +2065,6 @@ def streaming_parquet_sink_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     window); the file sink writes one atomic manifest per micro-batch,
     so downstream readers never see partial output. Sink/checkpoint
     dirs are cleared per call — repeated runs are deterministic."""
-    import shutil
-
     ev_schema = load_table(spark, sf_dir, "events").schema
     stream = _stream_events(spark, sf_dir)
     if dict(stream.dtypes).get("ts") == "bigint":
@@ -2401,26 +2083,11 @@ def streaming_parquet_sink_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sum_value"),
         )
     )
-    from .state import state_tag
-
-    # full-path tag like every per-dataset scratch dir (r11); this one is
     # a SINK, so it is rebuilt every run by design — reusing a checkpoint
     # would skip the processing under test
-    base = os.path.join(
-        _state_module.stream_scratch_root(), f"kss_stream_sink_{state_tag(sf_dir)}"
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    out, cp = os.path.join(base, "out"), os.path.join(base, "cp")
-    with _state_partitions(spark, 2):
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", cp)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    base = run_scratch("kss_stream_sink", sf_dir)
+    out = os.path.join(base, "out")
+    run_available_now(agg, 2, parquet=out, checkpoint=os.path.join(base, "cp"))
     return (
         spark.read.parquet(out)
         .select(
@@ -2477,58 +2144,9 @@ def streaming_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> Data
     per side regardless of stream length; the outer semantics add no
     state, only eviction-time emission. The availableNow drain plus the
     no-data final batch is what flushes the last evictions."""
-    load_table(spark, sf_dir, "events")  # sets the nanos-parquet conf
-    def side(alias_type: str):
-        s = _stream_events(spark, sf_dir)
-        if dict(s.dtypes).get("ts") == "bigint":
-            s = s.withColumn(
-                "ts", F.expr("CAST(timestamp_micros(ts DIV 1000) AS timestamp)")
-            )
-        else:
-            s = s.withColumn("ts", F.col("ts").cast("timestamp"))
-        # pre-epoch shim (r7): shift event time by a constant BEFORE the
-        # watermark so rows at/before epoch 0 — which Spark's initial
-        # watermark of 0 would drop as first-batch late data — survive;
-        # exactly reversed on the emitted columns. Relative semantics
-        # (watermark delay, join time-range, eviction bounds) shift with
-        # the data, so normal-corpus results are bit-identical.
-        return (
-            shift_event_time(
-                s.filter(
-                    (F.col("event_type") == alias_type) & (F.col("user_id") < 40)
-                ).select("user_id", "event_id", "ts"),
-                "ts",
-            )
-            .withWatermark("ts", "1 minute")
-        )
-
-    v = side("view").select(
-        F.col("user_id").alias("v_user"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    p = side("purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    joined = v.join(
-        p,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 2 HOURS")),
-        "left_outer",
-    )
+    joined = _view_purchase_join(spark, sf_dir, "left_outer")
     sink = "streaming_stream_stream_left_outer_sink"
-    with _state_partitions(spark, 2):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_available_now(joined, 2, memory=sink)
     return (
         unshift_event_time(spark.table(sink), ["view_ts", "purchase_ts"])
         .select(
@@ -2583,7 +2201,7 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
       the oracle states it: n_emitted = 1 + (key % 5 == 0), each
       advancer once.
 
-    Determinism: mtime-ordered replay files + maxFilesPerTrigger=1 pin
+    Determinism: mtime-ordered replay files, one per trigger, pin
     the batch/watermark sequence; counts per key are arrival-order-free.
     """
     ev = load_table(spark, sf_dir, "events")
@@ -2609,25 +2227,14 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
         (base_ts + key_off + F.expr("INTERVAL 30 DAYS 1 HOUR")).alias("ts"),
     )
 
-    base = _replay_files("kss_dedupww", sf_dir, (b0, b1, b2, b3))
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(base, "stream"))
+    stream = replay_stream(
+        spark, "kss_dedupww", sf_dir, (b0, b1, b2, b3), "user_id long, ts timestamp"
     )
     deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["user_id"]
     )
     sink = "streaming_dedup_within_watermark_sink"
-    with _state_partitions(spark, 2):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_available_now(deduped, 2, memory=sink)
     return (
         spark.table(sink)
         .groupBy("user_id")
@@ -2768,58 +2375,9 @@ def streaming_stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> Data
     two-sided time range keeps ~2h of state per side regardless of
     stream length; full-outer adds only eviction-time emission on both
     sides, no extra state."""
-    load_table(spark, sf_dir, "events")  # sets the nanos-parquet conf
-    def side(alias_type: str):
-        s = _stream_events(spark, sf_dir)
-        if dict(s.dtypes).get("ts") == "bigint":
-            s = s.withColumn(
-                "ts", F.expr("CAST(timestamp_micros(ts DIV 1000) AS timestamp)")
-            )
-        else:
-            s = s.withColumn("ts", F.col("ts").cast("timestamp"))
-        # pre-epoch shim (r7): shift event time by a constant BEFORE the
-        # watermark so rows at/before epoch 0 — which Spark's initial
-        # watermark of 0 would drop as first-batch late data — survive;
-        # exactly reversed on the emitted columns. Relative semantics
-        # (watermark delay, join time-range, eviction bounds) shift with
-        # the data, so normal-corpus results are bit-identical.
-        return (
-            shift_event_time(
-                s.filter(
-                    (F.col("event_type") == alias_type) & (F.col("user_id") < 40)
-                ).select("user_id", "event_id", "ts"),
-                "ts",
-            )
-            .withWatermark("ts", "1 minute")
-        )
-
-    v = side("view").select(
-        F.col("user_id").alias("v_user"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    p = side("purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    joined = v.join(
-        p,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 2 HOURS")),
-        "full_outer",
-    )
+    joined = _view_purchase_join(spark, sf_dir, "full_outer")
     sink = "streaming_stream_stream_full_outer_sink"
-    with _state_partitions(spark, 2):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_available_now(joined, 2, memory=sink)
     return (
         unshift_event_time(spark.table(sink), ["view_ts", "purchase_ts"])
         .select(

@@ -59,8 +59,8 @@ def stream_scratch_root() -> str:
 
 
 #: Extra per-dataset purge hooks, registered by modules that own derived
-#: state this module cannot see (e.g. queries_ml's replay dirs and its
-#: in-memory ``_REPLAY_BUILT`` gate — ADVICE r11: an in-process rebuild
+#: state this module cannot see (e.g. streaming.replay's replay dirs and
+#: its in-memory ``_REPLAY_BUILT`` gate — ADVICE r11: an in-process rebuild
 #: would otherwise serve stale replays). Each hook takes (sf_dir, tag).
 #: Only modules actually imported in-process register — which is exactly
 #: the set whose in-memory caches can be stale.

@@ -9,6 +9,14 @@ Mapping from the reference's concepts:
   (``applyInPandasWithState``)
 - KV side inputs (A9) → stream-static broadcast joins
 
+Every registry streaming query runs through :mod:`.replay`: the replay
+source (``replay_stream``, deterministic one-file-per-batch replays read
+by :func:`read_events_stream`), the runner (``run_available_now``: pinned
+state partitions, ``availableNow`` trigger, waits, returns the finished
+query), the per-run scratch dir (``run_scratch``) and the versioned-state
+fold (``fold_versioned_state``). Query modules build the streaming
+DataFrame and the per-batch step; they never start a query themselves.
+
 Scale notes: state per key is (ts, score) only — never buffered raw
 events (SURVEY §7 hard parts); watermarks bound state growth; windowed
 aggregations use Spark's incremental state store.
@@ -73,15 +81,14 @@ def unshift_event_time(
     return out
 
 
-def read_events_stream(
-    spark, events_parquet_dir: str, schema, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """File-based micro-batch source over an events directory (the test
-    harness feeds parquet files; production would use Kafka/Kinesis —
-    same DataFrame downstream)."""
+def read_events_stream(spark, events_parquet_dir: str, schema) -> DataFrame:
+    """File-based micro-batch source over a parquet directory, one file
+    per trigger, in (modification time, path) order — the replay format
+    (the test harness feeds parquet files; production would use
+    Kafka/Kinesis — same DataFrame downstream)."""
     return (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(events_parquet_dir)
     )
 

@@ -18,7 +18,7 @@ A replay whose cost is flat in data shows F ≈ t01 and data@sf0.1 ≈ 0;
 a replay that secretly scales with input shows the opposite. Timing
 follows bench.py's protocol exactly: warm once, median of 3, count() to
 force execution. As of r11 replay-file materialization is amortized to
-session lifetime (queries_ml._REPLAY_BUILT), matching bench.py's
+session lifetime (streaming.replay._REPLAY_BUILT), matching bench.py's
 protocol: the warm run pays the one-time write, the timed medians
 measure pure replay machinery — exactly what the bench medians see.
 

@@ -70,24 +70,25 @@ def test_purge_runs_registered_hooks(tmp_path):
 
 
 def test_purge_clears_replay_gate_and_dirs(tmp_path):
-    """queries_ml registers a purge hook that clears both the on-disk
-    replay dirs and the in-memory _REPLAY_BUILT gate (ADVICE r11): an
-    in-process dataset rebuild must not serve pre-rebuild replays."""
-    from kiji_scoring_spark import queries_ml
+    """streaming.replay registers a purge hook that clears both the
+    on-disk replay dirs and the in-memory _REPLAY_BUILT gate (ADVICE
+    r11): an in-process dataset rebuild must not serve pre-rebuild
+    replays."""
+    from kiji_scoring_spark.streaming import replay
 
     ds = str(tmp_path / "ds")
     os.makedirs(ds)
     tag = state_tag(ds)
-    prefix = queries_ml._REPLAY_PREFIXES[0]
+    prefix = replay._REPLAY_PREFIXES[0]
     # via stream_scratch_root(), NOT tempfile.gettempdir() (r12 ADVICE):
     # the purge hook removes dirs under the scratch root, so with
     # KSS_STREAM_SCRATCH exported (e.g. after a bench run) a literal
     # tempdir spelling would assert against the wrong location
     replay_dir = os.path.join(state.stream_scratch_root(), f"{prefix}_{tag}", "stream")
     os.makedirs(replay_dir, exist_ok=True)
-    queries_ml._REPLAY_BUILT.add((prefix, tag))
+    replay._REPLAY_BUILT.add((prefix, tag))
     purge_derived_state(ds)
-    assert (prefix, tag) not in queries_ml._REPLAY_BUILT
+    assert (prefix, tag) not in replay._REPLAY_BUILT
     assert not os.path.isdir(replay_dir)
 
 

@@ -439,23 +439,23 @@ def test_replay_files_rebuilds_partial_dir(spark, tmp_path):
     concurrent rmtree) must be rebuilt, not served (ADVICE r11)."""
     import os
 
-    from kiji_scoring_spark import queries_ml
     from kiji_scoring_spark.state import state_tag
+    from kiji_scoring_spark.streaming import replay
 
     ds = str(tmp_path / "replaydata")
     os.makedirs(ds)
-    prefix = queries_ml._REPLAY_PREFIXES[0]
+    prefix = replay._REPLAY_PREFIXES[0]
     parts = [spark.range(3).toDF("v"), spark.range(3, 6).toDF("v")]
-    base = queries_ml._replay_files(prefix, ds, parts)
+    base = replay._replay_files(prefix, ds, parts)
     stream_dir = os.path.join(base, "stream")
     files = sorted(os.listdir(stream_dir))
     assert files == ["batch0.parquet", "batch1.parquet"]
     # intact cache: reused (same mtimes, no rewrite)
     mtime0 = os.path.getmtime(os.path.join(stream_dir, "batch0.parquet"))
-    assert queries_ml._replay_files(prefix, ds, parts) == base
+    assert replay._replay_files(prefix, ds, parts) == base
     assert os.path.getmtime(os.path.join(stream_dir, "batch0.parquet")) == mtime0
     # partial cache: one batch file vanished -> full rebuild
     os.remove(os.path.join(stream_dir, "batch1.parquet"))
-    assert queries_ml._replay_files(prefix, ds, parts) == base
+    assert replay._replay_files(prefix, ds, parts) == base
     assert sorted(os.listdir(stream_dir)) == ["batch0.parquet", "batch1.parquet"]
-    queries_ml._purge_replay_state(ds, state_tag(ds))
+    replay._purge_replay_state(ds, state_tag(ds))
