@@ -10,9 +10,13 @@ relational surface is in place —
   tombstones (the ingest half of a continuously-scored table,
   generalizing the reference's producer write-back at explicit
   timestamps, impl/KijiFreshProducerContext.java:90-131),
-- mergeable HLL sketch shards persisted as binary and unioned later
-  (distinct-counting whose state, like the partial aggs, survives
-  across ingest batches).
+- mergeable sketch shard stores (HLL, exact bitmaps, DDSketch,
+  Misra-Gries, bottom-K, theta) persisted once and merged later, so
+  their state, like the partial aggs, survives across ingest batches.
+  Each sketch's build, merge and read is defined once in
+  operators/sketches.py, shared with the streaming folds in
+  queries_ml.py; this module owns the source derivations, the shard
+  stores, the exact references and the oracles.
 
 Parity conventions follow the registry rules (queries.py header): exact
 DECIMAL sums cast to DOUBLE at the end, identical aliases both sides,
@@ -22,80 +26,16 @@ deterministic ORDER BY.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators import sketches as sk
 from .operators.graph import bfs_hops, triangle_count
 from .operators.maintenance import apply_changes, checksum_diff
 from .queries import query
 from .sources import load_table
-
-#: persisted-state scratch root, one subdir per sf_dir so sf0.001 pytest
-#: runs and the sf0.01 driver never share state files.
-_STATE_CACHE = os.path.join(tempfile.gettempdir(), "kiji_scoring_spark_state")
-
-
-def _state_path(sf_dir: str, name: str) -> str:
-    # state_tag (not a local spelling) so alias paths of one dataset dir
-    # share a tag and purge_derived_state always finds this state (r11
-    # ADVICE); byte-identical for canonical absolute paths.
-    from .state import state_tag
-
-    return os.path.join(_STATE_CACHE, state_tag(sf_dir), name)
-
-
-def _grouped_top_k(df, group_cols, order_cols, k: int, rn_col: str):
-    """Scale-safe per-group top-K rank: never sorts a full population in
-    one task.
-
-    A single ``row_number().over(Window.partitionBy(<low-card key>))``
-    ranks each group in ONE window task — at a 100 TB key space that is
-    a single-task sort of n/groups rows (the r12 verdict's one scale
-    flaw). This helper applies the mergeability lemma the sketch tests
-    already prove (top-K of per-slice top-Ks == global top-K, because a
-    row in the global top-K is necessarily in its own slice's top-K):
-
-    - stage 1 ranks within every (group, ``spark_partition_id()``)
-      slice — as many parallel window tasks as there are Spark
-      partitions, each sorting only its own partition's rows — and
-      keeps K per slice;
-    - stage 2 ranks the <= partitions*K survivors per group.
-
-    HARD PRECONDITION: ``order_cols`` must be a TIE-FREE total order
-    within every group (md5 hashes; (count, item) pairs unique
-    post-groupBy). Only then is the per-group top-K SET unique and the
-    output byte-identical to the single-window rank no matter how the
-    rows were physically partitioned — with ties, which duplicate ranks
-    K-th is partitioning-dependent and the equivalence lemma does not
-    hold. Callers own this guarantee (it is not checkable without a
-    second full pass); every in-repo call site appends a unique column
-    to the ordering. Catalyst additionally inserts
-    ``WindowGroupLimit(Partial)`` below both exchanges (Spark 3.5+
-    InferWindowGroupLimit), so neither shuffle ever carries more than K
-    rows per group per upstream partition; tests/test_plans.py pins both
-    the parallel stage-1 keys and the partial limits on the executed
-    plan."""
-    from pyspark.sql import Window
-
-    # collision-safe internals: a user column named `_slice`/`_srn` must
-    # not be silently clobbered by the helper's scratch columns
-    slice_col, srn_col = "__gtk_slice", "__gtk_srn"
-    for c in (slice_col, srn_col):
-        if c in df.columns:
-            raise ValueError(f"_grouped_top_k scratch column {c!r} collides")
-    w1 = Window.partitionBy(*group_cols, slice_col).orderBy(*order_cols)
-    survivors = (
-        df.withColumn(slice_col, F.spark_partition_id())
-        .withColumn(srn_col, F.row_number().over(w1))
-        .filter(F.col(srn_col) <= k)
-        .drop(slice_col, srn_col)
-    )
-    w2 = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    return survivors.withColumn(rn_col, F.row_number().over(w2)).filter(
-        F.col(rn_col) <= k
-    )
+from .state import state_path
 
 
 @query(
@@ -222,7 +162,7 @@ def incremental_agg_partial_merge(spark: SparkSession, sf_dir: str) -> DataFrame
             F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("total_dec"),
         )
 
-    path = _state_path(sf_dir, "orders_agg_state.parquet")
+    path = state_path(sf_dir, "orders_agg_state.parquet")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         partials(o.filter(F.col("o_orderkey") % 10 < 8)).write.mode(
             "overwrite"
@@ -337,25 +277,18 @@ def sketch_hll_shard_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by tests/test_graph.py.
     """
     ev = load_table(spark, sf_dir, "events")
-    path = _state_path(sf_dir, "hll_user_shards.parquet")
+    path = state_path(sf_dir, "hll_user_shards.parquet")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        ev.groupBy("event_type").agg(
-            F.hll_sketch_agg("user_id").alias("sk")
-        ).write.mode("overwrite").parquet(path)
+        sk.hll_build(ev.select("event_type", "user_id"), "user_id").write.mode(
+            "overwrite"
+        ).parquet(path)
     shards = spark.read.parquet(path)
 
-    est = shards.agg(
-        F.count(F.lit(1)).alias("n_shards"),
-        F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est"),
-    )
+    n_shards = shards.agg(F.count(F.lit(1)).alias("n_shards"))
     exact = ev.agg(F.countDistinct("user_id").alias("exact_users"))
-    return est.crossJoin(exact).select(
-        "n_shards",
-        "exact_users",
-        (
-            F.abs(F.col("est") - F.col("exact_users"))
-            <= 0.05 * F.col("exact_users")
-        ).alias("estimate_ok"),
+    out = n_shards.crossJoin(F.broadcast(sk.hll_merge(shards))).crossJoin(exact)
+    return out.select(
+        "n_shards", "exact_users", sk.hll_ok("exact_users").alias("estimate_ok")
     )
 
 
@@ -440,7 +373,7 @@ def bitmap_exact_distinct_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     the raw events again after the one build pass.
     """
     ev = load_table(spark, sf_dir, "events")
-    path = _state_path(sf_dir, "bitmap_user_shards.parquet")
+    path = state_path(sf_dir, "bitmap_user_shards.parquet")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         ev.select(
             "event_type",
@@ -464,14 +397,6 @@ def bitmap_exact_distinct_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit("ALL").alias("event_type"), "n_users")
     )
     return per_type.unionByName(global_row).orderBy("event_type")
-
-
-#: DDSketch parameters: relative-error target ALPHA and the derived log
-#: base GAMMA = (1+a)/(1-a), so a value in bucket b = ceil(log_g v) is
-#: within ALPHA of the bucket's representative 2*g^b/(g+1) (DDSketch,
-#: Masson/Rim/Lee, VLDB 2019).
-_DDSKETCH_ALPHA = 0.01
-_DDSKETCH_GAMMA = (1 + _DDSKETCH_ALPHA) / (1 - _DDSKETCH_ALPHA)
 
 
 @query(
@@ -544,71 +469,28 @@ def sketch_quantile_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     a bucket edge). Determinism and merge-associativity are pinned by
     tests/test_sketch_quantile.py.
     """
-    import math
-
     from pyspark.sql import Window
 
-    ln_g = math.log(_DDSKETCH_GAMMA)
     # non-null values only, BEFORE the sketch build — the quantile's
     # domain (NULL has no bucket) and the oracle's `vals` predicate
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_totalprice").isNotNull()
     )
-    path = _state_path(sf_dir, "ddsketch_totalprice_shards.parquet")
+    path = state_path(sf_dir, "ddsketch_totalprice_shards.parquet")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        orders.select(
-            "o_orderpriority",
-            F.ceil(F.log("o_totalprice") / F.lit(ln_g)).alias("bkt"),
-        ).groupBy("o_orderpriority", "bkt").agg(
-            F.count(F.lit(1)).alias("cnt")
+        sk.dd_build(
+            orders.select("o_orderpriority", "o_totalprice"), "o_totalprice"
         ).write.mode("overwrite").parquet(path)
     shards = spark.read.parquet(path)
 
-    # one-row totals: ranks are ceil(q*n) — same IEEE double product and
-    # ceil both engines, so the rank integers agree bit-for-bit
     totals = shards.agg(
         F.count_distinct("o_orderpriority").alias("n_shards"),
         # coalesce: over an EMPTY shard store the global agg still emits
         # one row, and it must say 0 rows, not NULL (same contract as
         # bitmap_exact_distinct_shards' empty-store row)
         F.coalesce(F.sum("cnt"), F.lit(0).cast("long")).alias("n_rows"),
-    ).select(
-        "n_shards",
-        "n_rows",
-        F.ceil(F.lit(0.5) * F.col("n_rows")).alias("r50"),
-        F.ceil(F.lit(0.9) * F.col("n_rows")).alias("r90"),
-        F.ceil(F.lit(0.99) * F.col("n_rows")).alias("r99"),
-    )
-
-    # merge shards (groupBy-sum — the mergeable core), walk the cumulative
-    # counts to the bucket holding each rank, emit the representatives.
-    # The merged histogram is O(buckets) rows, so the single-partition
-    # cumulative window is a few hundred rows regardless of corpus size.
-    merged = shards.groupBy("bkt").agg(F.sum("cnt").alias("cnt"))
-    cum = merged.withColumn(
-        "cum",
-        F.sum("cnt").over(
-            Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    )
-
-    def rep(bucket_col: str):
-        g = _DDSKETCH_GAMMA
-        return F.pow(F.lit(g), F.col(bucket_col)) * (2.0 / (g + 1.0))
-
-    est = (
-        cum.crossJoin(F.broadcast(totals))
-        .agg(
-            F.min(F.when(F.col("cum") >= F.col("r50"), F.col("bkt"))).alias("b50"),
-            F.min(F.when(F.col("cum") >= F.col("r90"), F.col("bkt"))).alias("b90"),
-            F.min(F.when(F.col("cum") >= F.col("r99"), F.col("bkt"))).alias("b99"),
-        )
-        .select(
-            rep("b50").alias("p50_est"),
-            rep("b90").alias("p90_est"),
-            rep("b99").alias("p99_est"),
-        )
-    )
+    ).select("n_shards", "n_rows", *sk.quantile_ranks())
+    est = sk.dd_quantiles(sk.dd_merge(shards), totals)
 
     # exact reference: the element at global rank ceil(q*n) ascending — a
     # stored double picked by position, no arithmetic, so it is the same
@@ -624,17 +506,6 @@ def sketch_quantile_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("rn") == F.col("r99"), F.col("v"))).alias("p99_exact"),
     )
 
-    band = 2.5 * _DDSKETCH_ALPHA
-
-    def ok(q: str):
-        # coalesce TRUE: over an empty corpus the contract holds trivially
-        # (no rank element to approximate) — the oracle's constant TRUE
-        return F.coalesce(
-            F.abs(F.col(f"{q}_est") - F.col(f"{q}_exact"))
-            <= band * F.col(f"{q}_exact"),
-            F.lit(True),
-        ).alias(f"{q}_ok")
-
     out = totals.select("n_shards", "n_rows").crossJoin(exact).crossJoin(est)
     return out.select(
         "n_shards",
@@ -642,19 +513,11 @@ def sketch_quantile_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p50_exact",
         "p90_exact",
         "p99_exact",
-        ok("p50"),
-        ok("p90"),
-        ok("p99"),
+        *sk.dd_ok(),
     )
 
 
-#: Misra-Gries frequent-items parameters: K counters per shard ⇒ every
-#: reported weight underestimates the true count by at most n/(K+1) after
-#: the per-shard build plus at most n/(K+1) more after the merge re-prune
-#: (Misra/Gries 1982; mergeability per Agarwal et al., "Mergeable
-#: Summaries", PODS 2012) — the contract band below is the safe sum,
-#: 2n/(K+1).
-_MG_K = 64
+#: ingest shards of the Misra-Gries item stream
 _MG_SHARDS = 8
 
 
@@ -689,41 +552,6 @@ def _mg_item(li: DataFrame) -> DataFrame:
     return li.select(
         item.cast("long").alias("item"),
         F.pmod(F.col("l_orderkey"), F.lit(_MG_SHARDS)).alias("shard"),
-    )
-
-
-def _mg_shard_build(src):
-    """The persisted Misra-Gries shard store: per shard, the top-K=64
-    items by exact in-shard count minus the (K+1)-th count (the MG
-    decrement), as (shard, item, weight) rows. The per-shard rank runs
-    over the shard's DISTINCT-ITEM space — which scales with the corpus
-    (the synthetic item map's tail is keyed by partkey) — so the old
-    single-window rank had the same single-task-sort flaw as the KMV
-    builds (r12 verdict found two of the three; this is the third
-    instance of the shape). ``_grouped_top_k`` at K+1 yields the exact
-    same ranked prefix: (cnt, item) is unique per shard post-groupBy, so
-    the per-group top-(K+1) set is unique."""
-    counts = src.groupBy("shard", "item").agg(F.count(F.lit(1)).alias("cnt"))
-    ranked = _grouped_top_k(
-        counts,
-        ["shard"],
-        [F.col("cnt").desc(), F.col("item").asc()],
-        _MG_K + 1,
-        "rn",
-    )
-    # the (K+1)-th largest count per shard — the Misra-Gries decrement
-    ck1 = ranked.filter(F.col("rn") == _MG_K + 1).select(
-        "shard", F.col("cnt").alias("ck1")
-    )
-    return (
-        ranked.filter(F.col("rn") <= _MG_K)
-        .join(F.broadcast(ck1), "shard", "left")
-        .select(
-            "shard",
-            "item",
-            (F.col("cnt") - F.coalesce(F.col("ck1"), F.lit(0))).alias("weight"),
-        )
-        .filter(F.col("weight") > 0)
     )
 
 
@@ -828,31 +656,13 @@ def sketch_topk_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _mg_item(load_table(spark, sf_dir, "lineitem"))
 
-    path = _state_path(sf_dir, "mg_topk_lineitem_shards.parquet")
+    path = state_path(sf_dir, "mg_topk_lineitem_shards.parquet")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _mg_shard_build(src).write.mode("overwrite").parquet(path)
-    shards = spark.read.parquet(path)
-
-    # merge: groupBy-SUM of weights (the mergeable core), then one
-    # re-prune with the same decrement rule — ≤ shards*K rows in, ≤ K out,
-    # so the single-partition window is a few hundred rows at any scale
-    merged = shards.groupBy("item").agg(F.sum("weight").alias("w"))
-    mw = Window.orderBy(F.col("w").desc(), F.col("item").asc())
-    mranked = merged.withColumn("rn", F.row_number().over(mw))
-    wk1 = mranked.agg(
-        F.coalesce(
-            F.max(F.when(F.col("rn") == _MG_K + 1, F.col("w"))), F.lit(0)
-        ).alias("wk1")
-    )
-    summary = (
-        mranked.filter(F.col("rn") <= _MG_K)
-        .crossJoin(F.broadcast(wk1))
-        .select("item", (F.col("w") - F.col("wk1")).alias("est"))
-        .filter(F.col("est") > 0)
-    )
+        sk.mg_build(src).write.mode("overwrite").parquet(path)
+    summary = sk.mg_merge(spark.read.parquet(path))
 
     # exact reference side: global counts (one groupBy), totals, top-3 by
-    # TakeOrdered (never a full global sort), heavy set by threshold
+    # TakeOrdered (never a full global sort)
     exact = src.groupBy("item").agg(F.count(F.lit(1)).alias("cnt"))
     totals = src.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -877,47 +687,12 @@ def sketch_topk_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(F.when(F.col("rn") == 3, F.col("cnt"))).alias("top3_cnt"),
         )
     )
-
-    # contract flags — identical IEEE threshold arithmetic to the oracle
-    thr = 2.0 * F.col("n_rows") / 65.0
-    heavy = exact.crossJoin(F.broadcast(totals)).filter(F.col("cnt") > thr)
-    heavy_flags = heavy.join(F.broadcast(summary), "item", "left").agg(
-        # coalesce TRUE: with no heavy items the contract holds
-        # trivially — the oracle's constant TRUE
-        F.coalesce(F.bool_and(F.col("est").isNotNull()), F.lit(True)).alias(
-            "recovered_all_heavy"
-        ),
-        F.coalesce(
-            F.bool_and(
-                F.col("cnt") - F.coalesce(F.col("est"), F.lit(0))
-                <= 2.0 * F.col("n_rows") / 65.0
-            ),
-            F.lit(True),
-        ).alias("heavy_within_band"),
-    )
-    # broadcast the ≤K-row summary against the full exact counts — the
-    # exact side may be arbitrarily wide at scale, the summary never is
-    over_flag = (
-        exact.withColumnRenamed("cnt", "exact_cnt")
-        .join(F.broadcast(summary), "item")
-        .agg(
-            F.coalesce(
-                F.bool_and(F.col("est") <= F.col("exact_cnt")), F.lit(True)
-            ).alias("no_overestimate")
-        )
-    )
-    size_flag = summary.agg(
-        (F.count(F.lit(1)) <= _MG_K).alias("summary_within_k")
-    )
-    n_heavy_row = heavy.agg(F.count(F.lit(1)).alias("n_heavy"))
+    flags = sk.mg_contract(exact, summary, totals)
 
     return (
         totals.crossJoin(distinct_row)
-        .crossJoin(n_heavy_row)
         .crossJoin(top3)
-        .crossJoin(over_flag)
-        .crossJoin(heavy_flags)
-        .crossJoin(size_flag)
+        .crossJoin(flags)
         .select(
             "n_rows",
             "n_shards",
@@ -934,26 +709,6 @@ def sketch_topk_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             "heavy_within_band",
             "summary_within_k",
         )
-    )
-
-
-#: bottom-k (KMV) sample size: the merged sample keeps the K smallest
-#: md5 hashes over distinct keys; distinct-count estimate (K-1)/h_K
-#: (Bar-Yossef et al. 2002; mergeable per Cohen/Kaplan bottom-k theory).
-_KMV_K = 64
-
-
-def _kmv_bottomk_build(src):
-    """The persisted KMV shard store: bottom-K=64 of md5(key) per shard,
-    as (shard, key, h) rows. Extracted (r13) so the plan gate can assert
-    the build itself — the verdict's one scale flaw was this build's
-    single-task per-shard sort; ``_grouped_top_k`` replaces it with
-    per-Spark-partition bottom-K + a rank over the survivors, identical
-    output by the mergeability lemma ``tests/test_sketch_bottomk.py``
-    proves."""
-    hashed = src.distinct().withColumn("h", F.md5(F.col("key").cast("string")))
-    return _grouped_top_k(hashed, ["shard"], [F.col("h")], _KMV_K, "rn").select(
-        "shard", "key", "h"
     )
 
 
@@ -1028,8 +783,6 @@ def sketch_bottomk_sample_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     KijiFreshnessManager.java:235-239, mMetaTable.putValue); the
     mergeable-summary set now covers cardinality (HLL ~2%, bitmap exact,
     KMV sampled-exact), quantiles, and frequent items."""
-    from pyspark.sql import Window
-
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_partkey").isNotNull() & F.col("l_orderkey").isNotNull()
     )
@@ -1038,21 +791,10 @@ def sketch_bottomk_sample_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.col("l_orderkey"), F.lit(8)).alias("shard"),
     )
 
-    path = _state_path(sf_dir, "kmv_partkey_shards.parquet")
+    path = state_path(sf_dir, "kmv_partkey_shards.parquet")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _kmv_bottomk_build(src).write.mode("overwrite").parquet(path)
-    shards = spark.read.parquet(path)
-
-    # merge: a key may sit in several shards' bottom-K with the same hash
-    # — dedupe, then the global bottom-K is a TakeOrdered over ≤ shards*K
-    # rows (hex order = numeric order; md5 makes the order total)
-    merged = (
-        shards.select("key", "h")
-        .distinct()
-        .orderBy("h")
-        .limit(_KMV_K)
-        .withColumn("rn", F.row_number().over(Window.orderBy("h")))
-    )
+        sk.kmv_build(src).write.mode("overwrite").parquet(path)
+    sample = sk.kmv_summary(sk.kmv_merge(spark.read.parquet(path)))
 
     totals = src.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -1062,23 +804,7 @@ def sketch_bottomk_sample_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     # space; the sketch path above never touches it after the state build
     exact = src.agg(F.count_distinct("key").alias("n_distinct_exact"))
 
-    sample = merged.agg(
-        F.count(F.lit(1)).alias("sample_size"),
-        F.min("h").alias("min_hash"),
-        F.max(F.when(F.col("rn") == 1, F.col("key"))).alias("min_key"),
-        F.max(F.when(F.col("rn") == _KMV_K, F.col("h"))).alias("kth_hash"),
-    )
-
     out = totals.crossJoin(F.broadcast(exact)).crossJoin(F.broadcast(sample))
-    est = F.when(
-        F.col("sample_size") < _KMV_K,
-        F.col("n_distinct_exact").cast("double"),
-    ).otherwise(
-        F.lit(63.0 * float(16**15))
-        / F.conv(F.substring(F.col("kth_hash"), 1, 15), 16, 10)
-        .cast("long")
-        .cast("double")
-    )
     return out.select(
         "n_rows",
         "n_shards",
@@ -1087,30 +813,7 @@ def sketch_bottomk_sample_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         "min_hash",
         "min_key",
         "kth_hash",
-        est.alias("est_distinct"),
-    )
-
-
-def _theta_sample_build(src):
-    """The persisted theta store: bottom-K=64 of md5(key) per population,
-    as (pop, key, h) rows. The population key has exactly TWO values, so
-    the old single-window rank sorted each full population in one task
-    (the r12 verdict's scale flaw); ``_grouped_top_k`` replaces it with
-    per-Spark-partition bottom-K + a rank over the survivors, identical
-    output by the mergeability lemma."""
-    pops = src.groupBy("key").agg(
-        F.max("in_a").alias("in_a"), F.max("in_b").alias("in_b")
-    )
-    hashed = pops.withColumn("h", F.md5(F.col("key").cast("string")))
-    both = hashed.filter(F.col("in_a") == 1).select(
-        F.lit("a").alias("pop"), "key", "h"
-    ).unionByName(
-        hashed.filter(F.col("in_b") == 1).select(
-            F.lit("b").alias("pop"), "key", "h"
-        )
-    )
-    return _grouped_top_k(both, ["pop"], [F.col("h")], _KMV_K, "rn").select(
-        "pop", "key", "h"
+        "est_distinct",
     )
 
 
@@ -1233,9 +936,9 @@ def sketch_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("o_orderpriority") == "5-LOW", 1).otherwise(0).alias("in_b"),
     )
 
-    path = _state_path(sf_dir, "theta_custkey_samples.parquet")
+    path = state_path(sf_dir, "theta_custkey_samples.parquet")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _theta_sample_build(src).write.mode("overwrite").parquet(path)
+        sk.theta_build(src).write.mode("overwrite").parquet(path)
     samples = spark.read.parquet(path)
     sampa = samples.filter(F.col("pop") == "a").select("key", "h")
     sampb = samples.filter(F.col("pop") == "b").select("key", "h")
@@ -1268,55 +971,13 @@ def sketch_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long").alias("n_union_exact"),
     )
 
-    stats = (
-        sampa.agg(
-            F.count(F.lit(1)).alias("sample_a"), F.max("h").alias("kth_a")
-        )
-        .crossJoin(
-            F.broadcast(
-                sampb.agg(
-                    F.count(F.lit(1)).alias("sample_b"),
-                    F.max("h").alias("kth_b"),
-                )
-            )
-        )
+    theta = sk.theta_stats(sampa, sampb)
+    interb = sk.theta_below(
+        sampa.join(F.broadcast(sampb.select("key")), "key"), theta
+    ).agg(F.count(F.lit(1)).alias("n_inter_below"))
+    unionb = sk.theta_below(sampa.unionByName(sampb), theta).agg(
+        F.count_distinct("key").alias("n_union_below")
     )
-    theta = stats.select(
-        "*",
-        F.when(
-            (F.col("sample_a") >= _KMV_K) & (F.col("sample_b") >= _KMV_K),
-            F.least("kth_a", "kth_b"),
-        )
-        .when(F.col("sample_a") >= _KMV_K, F.col("kth_a"))
-        .when(F.col("sample_b") >= _KMV_K, F.col("kth_b"))
-        .alias("theta_hex"),
-    )
-
-    below_pred = F.col("theta_hex").isNull() | (F.col("h") < F.col("theta_hex"))
-    interb = (
-        sampa.join(F.broadcast(sampb.select("key")), "key")
-        .crossJoin(F.broadcast(theta.select("theta_hex")))
-        .filter(below_pred)
-        .agg(F.count(F.lit(1)).alias("n_inter_below"))
-    )
-    unionb = (
-        sampa.unionByName(sampb)
-        .crossJoin(F.broadcast(theta.select("theta_hex")))
-        .filter(below_pred)
-        .agg(F.count_distinct("key").alias("n_union_below"))
-    )
-
-    def est(n_col: str):
-        prefix = (
-            F.conv(F.substring(F.col("theta_hex"), 1, 15), 16, 10)
-            .cast("long")
-            .cast("double")
-        )
-        return F.when(
-            F.col("theta_hex").isNull(), F.col(n_col).cast("double")
-        ).otherwise(
-            F.col(n_col).cast("double") * F.lit(float(16**15)) / prefix
-        )
 
     out = (
         exact.crossJoin(F.broadcast(theta))
@@ -1333,8 +994,8 @@ def sketch_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         "theta_hex",
         "n_inter_below",
         "n_union_below",
-        est("n_inter_below").alias("est_intersection"),
-        est("n_union_below").alias("est_union"),
+        sk.theta_estimate("n_inter_below").alias("est_intersection"),
+        sk.theta_estimate("n_union_below").alias("est_union"),
     )
 
 
@@ -1436,7 +1097,7 @@ def snapshot_time_travel_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.snapshots import commit_snapshot, latest_version, read_snapshot
 
     o = load_table(spark, sf_dir, "orders")
-    path = _state_path(sf_dir, "orders_snapshots")
+    path = state_path(sf_dir, "orders_snapshots")
     if latest_version(path) is None:
         commit_snapshot(o.filter(F.col("o_orderkey") % 10 < 8), path, mode="overwrite")
         commit_snapshot(o.filter(F.col("o_orderkey") % 10 >= 8), path, mode="append")
@@ -1485,7 +1146,7 @@ def snapshot_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp_ntz")
     )
-    path = _state_path(sf_dir, "lineitem_snapshots")
+    path = state_path(sf_dir, "lineitem_snapshots")
     if latest_version(path) is None:
         commit_snapshot(
             li.select("l_returnflag", "l_extendedprice").repartition(16),
@@ -1572,7 +1233,7 @@ def snapshot_cdc_upsert_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_type") == "error").alias("is_del"),
         "value",
     )
-    path = _state_path(sf_dir, "cdc_state_snapshots")
+    path = state_path(sf_dir, "cdc_state_snapshots")
     if latest_version(path) is None:
         v1_state = apply_changes(
             ch.filter(F.col("seq") % 3 != 0),
@@ -1720,7 +1381,7 @@ def snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.snapshots import commit_snapshot, latest_version, read_snapshot
 
     o = load_table(spark, sf_dir, "orders")
-    path = _state_path(sf_dir, "orders_evolving_snapshots")
+    path = state_path(sf_dir, "orders_evolving_snapshots")
     if latest_version(path) is None:
         commit_snapshot(
             o.filter(F.col("o_orderkey") % 10 < 8).select("o_orderkey", "o_totalprice"),
@@ -1891,7 +1552,7 @@ def snapshot_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    path = _state_path(sf_dir, "events_parted_snapshots")
+    path = state_path(sf_dir, "events_parted_snapshots")
     if latest_version(path) is None:
         commit_snapshot(
             ev.filter(F.col("event_id") % 10 < 8),

@@ -463,7 +463,7 @@ def fresh_scoring_snapshot_pipeline(spark: SparkSession, sf_dir: str) -> DataFra
     window SQL and diffs them directly."""
     from .operators.maintenance import checksum_diff
     from .operators.snapshots import commit_snapshot, latest_version, read_snapshot
-    from .queries_graph import _state_path
+    from .state import state_path
 
     vt = versioned_events(spark, sf_dir)
     reg = FreshenerRegistry()
@@ -477,7 +477,7 @@ def fresh_scoring_snapshot_pipeline(spark: SparkSession, sf_dir: str) -> DataFra
     )
     reader = FreshTableReader(spark, "events_versioned", vt, reg, key_col="user_id")
 
-    path = _state_path(sf_dir, "fresh_score_snapshots")
+    path = state_path(sf_dir, "fresh_score_snapshots")
     if latest_version(path) is None:
         for as_of in (AS_OF_MS, AS_OF2_MS):
             scored = reader.scan(as_of).select(

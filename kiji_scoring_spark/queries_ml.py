@@ -18,7 +18,9 @@ batch DataFrame, so the §2.F surface gets the same oracle gate as
 everything else instead of a weaker rows-only check. Each one only builds
 its streaming DataFrame, its per-batch step and its result projection;
 the replay files, the runner, the per-run scratch dir and the
-versioned-state fold live in ``streaming/replay.py``.
+versioned-state fold live in ``streaming/replay.py``, and the two sketch
+folds take every build, merge and contract check from
+``operators/sketches.py``, the definitions the batch shard stores use.
 """
 
 from __future__ import annotations
@@ -28,10 +30,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators import sketches as sk
 from .queries import query
 from .sources import load_table
 from .streaming import shift_event_time, unshift_event_time
 from .streaming.replay import (
+    fold_members,
     fold_versioned_state,
     replay_stream,
     run_available_now,
@@ -1191,17 +1195,18 @@ def streaming_sketch_incremental_merge(spark: SparkSession, sf_dir: str) -> Data
     tiers take this arm); past K the (K-1)/h_K estimator applies (the
     sf0.01 driver gate takes this one, 150 distinct users > 64).
 
-    Scale: per-batch work is one distinct + TakeOrdered(K) over the
-    micro-batch plus a ≤2K-row union against state — state is ≤K
-    (hash, key) pairs forever, independent of stream length; the
+    The build, the merge and the sample summary are the batch shard
+    store's (operators/sketches.py ``kmv_*``), so the fold and the shard
+    merge are one definition. Scale: per-batch work is one distinct +
+    the bottom-K build over the micro-batch plus a ≤2K-row merge against
+    state — state is ≤K (hash, key) pairs forever, independent of
+    stream length; the
     versioned dirs give the same atomic-swap discipline as the
     foreachBatch MERGE sink. Reference parity: this is the reference's
     continuously-maintained freshness metadata pattern
     (KijiFreshnessManager.java:235-239 mMetaTable.putValue — durable
     summaries updated per write, readable at any time) re-expressed as
     mergeable sketch state under Structured Streaming."""
-    K = 64  # matches the batch KMV family (_KMV_K) and the oracle's 64
-
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     src = ev.select(
         F.col("user_id").alias("key"),
@@ -1220,37 +1225,13 @@ def streaming_sketch_incremental_merge(spark: SparkSession, sf_dir: str) -> Data
     b2 = evm.filter(F.col("ts") < cut20).select("key")
 
     def fold_batch(batch_df: DataFrame, prev: DataFrame | None) -> dict:
-        batch_sketch = (
-            batch_df.select("key")
-            .distinct()
-            .withColumn("h", F.md5(F.col("key").cast("string")))
-            .orderBy("h")
-            .limit(K)
+        batch = {
+            "sketch": sk.kmv_build(batch_df.select("key")),
+            "meta": sk.meta_build(batch_df),
+        }
+        return fold_members(
+            prev, batch, {"sketch": sk.kmv_merge, "meta": sk.meta_merge}
         )
-        batch_meta = batch_df.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            (F.count(F.lit(1)) > 0).cast("long").alias("n_nonempty_batches"),
-        )
-        if prev is None:
-            return {"sketch": batch_sketch, "meta": batch_meta}
-        # a key seen in several batches carries the same hash —
-        # distinct-union, then the fold keeps the global bottom-K
-        folded = (
-            state_member(prev, "sketch", "key", "h")
-            .unionByName(batch_sketch)
-            .distinct()
-            .orderBy("h")
-            .limit(K)
-        )
-        meta = (
-            state_member(prev, "meta", "n_rows", "n_nonempty_batches")
-            .unionByName(batch_meta)
-            .agg(
-                F.sum("n_rows").alias("n_rows"),
-                F.sum("n_nonempty_batches").alias("n_nonempty_batches"),
-            )
-        )
-        return {"sketch": folded, "meta": meta}
 
     stream = replay_stream(spark, "kss_kmvfold", sf_dir, (b0, b1, b2), "key long")
     final = fold_versioned_state(
@@ -1259,29 +1240,9 @@ def streaming_sketch_incremental_merge(spark: SparkSession, sf_dir: str) -> Data
         fold_batch,
         {"key": "long", "h": "string", "n_rows": "long", "n_nonempty_batches": "long"},
     )
-    sketch = state_member(final, "sketch", "key", "h")
+    sample = sk.kmv_summary(state_member(final, "sketch", "key", "h"))
     meta = state_member(final, "meta", "n_rows", "n_nonempty_batches")
-
-    from pyspark.sql import Window
-
-    ranked = sketch.withColumn("rn", F.row_number().over(Window.orderBy("h")))
-    sample = ranked.agg(
-        F.count(F.lit(1)).alias("sample_size"),
-        F.min("h").alias("min_hash"),
-        F.max(F.when(F.col("rn") == 1, F.col("key"))).alias("min_key"),
-        F.max(F.when(F.col("rn") == K, F.col("h"))).alias("kth_hash"),
-    )
     out = meta.crossJoin(F.broadcast(sample))
-    # under K distinct the state IS the distinct key set — the exact
-    # count comes from state alone, no raw-data second pass
-    est = F.when(
-        F.col("sample_size") < K, F.col("sample_size").cast("double")
-    ).otherwise(
-        F.lit(63.0 * float(16**15))
-        / F.conv(F.substring(F.col("kth_hash"), 1, 15), 16, 10)
-        .cast("long")
-        .cast("double")
-    )
     return out.select(
         "n_rows",
         "n_nonempty_batches",
@@ -1289,7 +1250,7 @@ def streaming_sketch_incremental_merge(spark: SparkSession, sf_dir: str) -> Data
         "min_hash",
         "min_key",
         "kth_hash",
-        est.alias("est_distinct"),
+        "est_distinct",
     )
 
 
@@ -1368,22 +1329,26 @@ def streaming_sketch_family_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sketch_hll_shard_union, sketch_quantile_shard_merge,
     sketch_topk_shard_merge) argue continuous-ingest viability FROM
     mergeability; here the same merges run under a real StreamingQuery.
+    "The same" literally: each member's build, merge and contract check
+    is the shard store's (operators/sketches.py), and a fold step is
+    ``merge(prev ∪ build(batch))`` (``fold_members``).
 
     Fold laws, per member: HLL unions register-wise max and DDSketch
     sums integer bucket counts — both folds are EXACTLY equal to the
     one-shot sketch of the unioned stream (associative, commutative,
-    verified by tests/test_sketch_incremental.py alongside the r12 KMV
-    fold); Misra-Gries folds by weight-sum + one re-prune, which is NOT
-    one-shot-equal but keeps the summary <= K rows with every weight an
-    underestimate by <= n/(K+1) — so the answer contract (heavy items
-    all recovered, weights within 2n/(K+1), never overestimating) holds
-    at any batch count, and THOSE are the gated outputs.
+    verified over hypothesis-drawn splits by
+    tests/test_sketch_family_fold.py); Misra-Gries folds by weight-sum +
+    one re-prune, which is NOT one-shot-equal but keeps the summary <= K
+    rows with every weight an underestimate by <= n/(K+1) — so the
+    answer contract (heavy items all recovered, weights within
+    2n/(K+1), never overestimating) holds at any batch count, and THOSE
+    are the gated outputs.
 
     State size forever: 1 binary HLL row (~2.5 KB) + O(log-buckets)
     integer rows + <= K weight rows — independent of stream length.
     Per-batch work: three narrow aggregates of the micro-batch plus
     O(state)-row unions; the in-batch MG prune ranks with the scale-safe
-    ``_grouped_top_k`` (never a single-task sort of the batch's item
+    ``grouped_top_k`` (never a single-task sort of the batch's item
     space). Exact references (distinct users, pinned-rank percentiles,
     heavy set, top-1) are the ORACLE's cost, computed once from the
     static table — the serving path reads state alone.
@@ -1392,19 +1357,7 @@ def streaming_sketch_family_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata (KijiFreshnessManager.java:235-239, mMetaTable.putValue)
     re-expressed as a family of mergeable sketch states under Structured
     Streaming."""
-    import math
-
     from pyspark.sql import Window
-
-    from .queries_graph import (
-        _DDSKETCH_ALPHA,
-        _DDSKETCH_GAMMA,
-        _MG_K,
-        _grouped_top_k,
-    )
-
-    K = _MG_K  # 64 counters, matching the batch MG shards and the oracle
-    ln_g = math.log(_DDSKETCH_GAMMA)
 
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull()
@@ -1436,74 +1389,20 @@ def streaming_sketch_family_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     b1 = evm.filter((F.col("ts") >= cut20) & (F.col("ts") < cut10)).select(*cols)
     b2 = evm.filter(F.col("ts") < cut20).select(*cols)
 
-    def mg_prune(weights: DataFrame) -> DataFrame:
-        """One Misra-Gries prune: top-K weights decremented by the
-        (K+1)-th. Runs over a micro-batch's FULL item space, so the rank
-        is the scale-safe per-partition one. The (K+1)-th weight comes
-        from an unpartitioned window over the <= K+1 ranked survivors
-        (r16): the old one-row-aggregate + broadcast crossJoin evaluated
-        the whole _grouped_top_k subtree TWICE (once under the broadcast,
-        once in the main plan) and launched a broadcast job per prune —
-        five prunes per replay run. Same values: coalesce(max(w where
-        rn=K+1), 0) over the identical row set."""
-        ranked = _grouped_top_k(
-            weights, [], [F.col("w").desc(), F.col("item").asc()], K + 1, "rn"
-        )
-        wk1 = F.coalesce(
-            F.max(F.when(F.col("rn") == K + 1, F.col("w"))).over(
-                Window.partitionBy()
-            ),
-            F.lit(0),
-        )
-        return (
-            ranked.withColumn("wk1", wk1)
-            .filter(F.col("rn") <= K)
-            .select("item", (F.col("w") - F.col("wk1")).alias("weight"))
-            .filter(F.col("weight") > 0)
-        )
-
     def fold_batch(batch_df: DataFrame, prev: DataFrame | None) -> dict:
-        b_hll = batch_df.agg(F.hll_sketch_agg("key").alias("sk"))
-        b_dd = (
-            batch_df.select(F.ceil(F.log("v") / F.lit(ln_g)).alias("bkt"))
-            .groupBy("bkt")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        b_mg = mg_prune(
-            batch_df.groupBy("item").agg(F.count(F.lit(1)).alias("w"))
-        )
-        b_meta = batch_df.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            (F.count(F.lit(1)) > 0).cast("long").alias("n_nonempty_batches"),
-        )
-        if prev is None:
-            return {"hll": b_hll, "dd": b_dd, "mg": b_mg, "meta": b_meta}
-        hll = (
-            state_member(prev, "hll", "sk")
-            .unionByName(b_hll)
-            .agg(F.hll_union_agg("sk").alias("sk"))
-        )
-        dd = (
-            state_member(prev, "dd", "bkt", "cnt")
-            .unionByName(b_dd)
-            .groupBy("bkt")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        mg = mg_prune(
-            state_member(prev, "mg", "item", F.col("weight").alias("w"))
-            .unionByName(b_mg.select("item", F.col("weight").alias("w")))
-            .groupBy("item")
-            .agg(F.sum("w").alias("w"))
-        )
-        meta = (
-            state_member(prev, "meta", "n_rows", "n_nonempty_batches")
-            .unionByName(b_meta)
-            .agg(
-                F.sum("n_rows").alias("n_rows"),
-                F.sum("n_nonempty_batches").alias("n_nonempty_batches"),
-            )
-        )
-        return {"hll": hll, "dd": dd, "mg": mg, "meta": meta}
+        batch = {
+            "hll": sk.hll_build(batch_df.select("key"), "key"),
+            "dd": sk.dd_build(batch_df.select("v"), "v"),
+            "mg": sk.mg_build(batch_df.select("item")),
+            "meta": sk.meta_build(batch_df),
+        }
+        merges = {
+            "hll": sk.hll_merge,
+            "dd": sk.dd_merge,
+            "mg": sk.mg_merge,
+            "meta": sk.meta_merge,
+        }
+        return fold_members(prev, batch, merges)
 
     stream = replay_stream(
         spark, "kss_famfold", sf_dir, (b0, b1, b2), "key long, v double, item long"
@@ -1533,9 +1432,7 @@ def streaming_sketch_family_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         "meta",
         "n_rows",
         "n_nonempty_batches",
-        F.ceil(F.lit(0.5) * F.col("n_rows")).alias("r50"),
-        F.ceil(F.lit(0.9) * F.col("n_rows")).alias("r90"),
-        F.ceil(F.lit(0.99) * F.col("n_rows")).alias("r99"),
+        *sk.quantile_ranks(),
     ).localCheckpoint(eager=False)
     hll_state = state_member(final, "hll", "sk")
     dd_state = state_member(final, "dd", "bkt", "cnt")
@@ -1557,9 +1454,6 @@ def streaming_sketch_family_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint(eager=False)
     )
-    heavy_cnts = cnts.crossJoin(F.broadcast(meta.select("n_rows"))).filter(
-        F.col("cnt") > 2.0 * F.col("n_rows") / (K + 1.0)
-    )
     t1 = (
         cnts.orderBy(F.col("cnt").desc(), F.col("item").asc())
         .limit(1)
@@ -1568,90 +1462,19 @@ def streaming_sketch_family_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # contract flags from the REAL folded state; exact_users rides the
     # same one-row frame as hll_ok so the src distinct pass runs once
-    hll_flag = (
-        hll_state.crossJoin(F.broadcast(exact_users))
-        .select(
-            "exact_users",
-            F.coalesce(
-                F.abs(F.hll_sketch_estimate("sk") - F.col("exact_users"))
-                <= 0.05 * F.col("exact_users"),
-                F.lit(True),
-            ).alias("hll_ok"),
-        )
+    hll_flag = hll_state.crossJoin(F.broadcast(exact_users)).select(
+        "exact_users", sk.hll_ok("exact_users").alias("hll_ok")
     )
-    cum = dd_state.withColumn(
-        "cum",
-        F.sum("cnt").over(
-            Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    )
-    g = _DDSKETCH_GAMMA
-
-    def rep(bucket_col: str):
-        return F.pow(F.lit(g), F.col(bucket_col)) * (2.0 / (g + 1.0))
-
-    dd_est = (
-        cum.crossJoin(F.broadcast(meta))
-        .agg(
-            F.min(F.when(F.col("cum") >= F.col("r50"), F.col("bkt"))).alias("b50"),
-            F.min(F.when(F.col("cum") >= F.col("r90"), F.col("bkt"))).alias("b90"),
-            F.min(F.when(F.col("cum") >= F.col("r99"), F.col("bkt"))).alias("b99"),
-        )
-        .select(
-            rep("b50").alias("p50_est"),
-            rep("b90").alias("p90_est"),
-            rep("b99").alias("p99_est"),
-        )
-    )
-    band = 2.5 * _DDSKETCH_ALPHA
-
-    def dd_ok(q: str):
-        return F.coalesce(
-            F.abs(F.col(f"{q}_est") - F.col(f"{q}_exact"))
-            <= band * F.col(f"{q}_exact"),
-            F.lit(True),
-        ).alias(f"{q}_ok")
-
-    # MG flags: weights never overestimate; every heavy item recovered
-    # with weight within 2n/(K+1); summary <= K rows. Every join
-    # broadcasts the <= K-row state and streams the per-item counts,
-    # which grow with the data. A broadcast hint on the preserved side of
-    # an outer join is ignored, so the overestimate check is an inner
-    # join: a missing cnt would only yield a NULL weight<=cnt, which min()
-    # skips. The summary size counts the state itself.
-    no_within = (
-        cnts.join(F.broadcast(mg_state), "item")
-        .agg(
-            F.coalesce(F.min(F.col("weight") <= F.col("cnt")), F.lit(True)).alias(
-                "no_overestimate"
-            )
-        )
-        .crossJoin(mg_state.agg((F.count(F.lit(1)) <= K).alias("summary_within_k")))
-    )
-    heavy_join = heavy_cnts.join(F.broadcast(mg_state), "item", "left")
-    heavy_flags = heavy_join.agg(
-        F.count(F.lit(1)).alias("n_heavy"),
-        F.coalesce(F.min(F.col("weight").isNotNull()), F.lit(True)).alias(
-            "recovered_all_heavy"
-        ),
-        F.coalesce(
-            F.min(
-                (F.col("cnt") - F.coalesce(F.col("weight"), F.lit(0)))
-                * F.lit(K + 1)
-                <= 2 * F.col("n_rows")
-            ),
-            F.lit(True),
-        ).alias("heavy_within_band"),
-    )
+    dd_est = sk.dd_quantiles(dd_state, meta)
+    mg_flags = sk.mg_contract(cnts, mg_state, meta)
 
     out = (
         meta.select("n_rows", "n_nonempty_batches")
         .crossJoin(F.broadcast(hll_flag))
         .crossJoin(F.broadcast(pex))
         .crossJoin(F.broadcast(dd_est))
-        .crossJoin(F.broadcast(heavy_flags))
+        .crossJoin(F.broadcast(mg_flags))
         .crossJoin(F.broadcast(t1))
-        .crossJoin(F.broadcast(no_within))
     )
     return out.select(
         "n_rows",
@@ -1661,9 +1484,7 @@ def streaming_sketch_family_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p50_exact",
         "p90_exact",
         "p99_exact",
-        dd_ok("p50"),
-        dd_ok("p90"),
-        dd_ok("p99"),
+        *sk.dd_ok(),
         "n_heavy",
         "top1_item",
         "top1_cnt",

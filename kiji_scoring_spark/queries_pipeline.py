@@ -13,6 +13,7 @@ from .operators import dedup as dd
 from .operators import multimodal as mm
 from .queries import query
 from .sources import load_table
+from .state import state_path
 
 # ---------------------------------------------------------------------------
 # Deduplication
@@ -1642,8 +1643,6 @@ def similarity_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern for embeddings."""
     import os
 
-    from .queries_graph import _state_path
-
     e = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id").isNotNull()
         & F.col("embedding").isNotNull()
@@ -1670,7 +1669,7 @@ def similarity_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             l_tpl, r_tpl, ss * _PQ_SUBDIM, (ss + 1) * _PQ_SUBDIM
         )
 
-    path = _state_path(sf_dir, "pq_codes_embeddings.parquet")
+    path = state_path(sf_dir, "pq_codes_embeddings.parquet")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         enc = q.crossJoin(F.broadcast(cb))
         (
@@ -2153,9 +2152,7 @@ def _ivfpq_codes_table(
     embedding-drift freshness policy (r13 verdict #4)."""
     import os
 
-    from .queries_graph import _state_path
-
-    path = _state_path(sf_dir, "ivfpq_codes_embeddings.parquet")
+    path = state_path(sf_dir, "ivfpq_codes_embeddings.parquet")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         _ivfpq_encode(q, cb, seeds).write.mode("overwrite").partitionBy(
             "cell"
@@ -2344,7 +2341,6 @@ def ann_index_time_travel_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     table-format semantics."""
     import os
     from .operators.snapshots import latest_version
-    from .queries_graph import _state_path
 
     e = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id").isNotNull()
@@ -2355,7 +2351,7 @@ def ann_index_time_travel_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = _ivfpq_cb(q)
     seeds = _ivfpq_seeds(q)
 
-    path = _state_path(sf_dir, "ivfpq_codes_snap")
+    path = state_path(sf_dir, "ivfpq_codes_snap")
     if (latest_version(path) or 0) < 4:
         # a complete lineage is v1..v3 appends + v4 compact; anything
         # less is a crashed prior build — rebuild deterministically
@@ -2456,7 +2452,6 @@ def ann_index_delete_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         latest_version,
         replace_partitions,
     )
-    from .queries_graph import _state_path
 
     e = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id").isNotNull()
@@ -2467,7 +2462,7 @@ def ann_index_delete_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = _ivfpq_cb(q)
     seeds = _ivfpq_seeds(q)
 
-    path = _state_path(sf_dir, "ivfpq_codes_snap_del")
+    path = state_path(sf_dir, "ivfpq_codes_snap_del")
 
     def codes_at(version: int) -> DataFrame:
         return _ivfpq_snap_codes_at(spark, path, version)
@@ -2602,14 +2597,14 @@ def _ivf_rebalance_hot_cells(
     reads ONLY the hot cells' directories (partition-pruned), joins them
     to the corpus vectors on vec_id (O(hot rows) shuffle), picks
     representatives with one (cell, vector) groupBy and ranks them via
-    the two-stage _grouped_top_k (never a full-cell single-task sort),
+    the two-stage grouped_top_k (never a full-cell single-task sort),
     and the commit is O(hot partitions) — the other lists' files are
     never opened. The hot cell ids cross the driver once (<= NCELLS
     rows, the delete query's O(1)-collect precedent) because they
     parameterize the commit itself. Returns the replaced (hot) cell
     ids, empty if the index is balanced."""
     from .operators.snapshots import read_snapshot, replace_partitions
-    from .queries_graph import _grouped_top_k
+    from .operators.sketches import grouped_top_k
 
     codes = read_snapshot(spark, path, schema=_IVFPQ_CODES_SCHEMA)
     hot = [
@@ -2649,7 +2644,7 @@ def _ivf_rebalance_hot_cells(
             F.min("__is_seed").alias("__rep_seed"),
         )
     )
-    subs = _grouped_top_k(
+    subs = grouped_top_k(
         reps.withColumn("__sh", F.md5(F.col("sub_id").cast("string"))),
         ["cell"],
         [
@@ -2865,9 +2860,8 @@ def ann_ivf_cell_rebalance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from .operators.snapshots import commit_snapshot, latest_version
-    from .queries_graph import _state_path
 
-    path = _state_path(sf_dir, "ivfpq_codes_rebalance")
+    path = state_path(sf_dir, "ivfpq_codes_rebalance")
     if (latest_version(path) or 0) < 3:
         # the whole encode preamble (quantize, codebook, seeds, the skew
         # clones, their checkpoint analysis — ~1.2 s of driver build,

@@ -18,11 +18,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .operators import dedup as dd
+from .operators import sketches as sk
 from .operators.dedup import _shingles_of_words
 from .queries import query
 from .queries_pipeline import _minhash_oracle_sql
 from .sources import load_table
-from .state import state_tag
+from .state import state_path, state_tag
 
 #: DuckDB mirror of operators.dedup shingling (3-word shingles)
 _SHINGLE_SQL = (
@@ -1374,20 +1375,20 @@ def contamination_delta_theta_overlap(spark: SparkSession, sf_dir: str) -> DataF
     the estimate's quality witness; the md5-deterministic sketch
     artifacts (samples, theta, below-theta count, IEEE estimate) are
     stated exactly by both engines — the sketch_theta_set_ops contract
-    composed with the snapshot format. The delta sample build ranks
-    with the scale-safe per-partition ``_grouped_top_k``.
+    composed with the snapshot format. Both samples, θ and the estimate
+    are the theta sketch of operators/sketches.py; the delta sample
+    build ranks with its scale-safe per-partition ``grouped_top_k``.
 
     Reference parity: composes the persisted-metatable pattern
     (KijiFreshnessManager.java:235-239, mMetaTable.putValue) with the
     snapshot machinery; per-ingest decontamination is the capability
     HBase-era kiji delegated to offline MapReduce joins."""
     from .operators.snapshots import commit_snapshot, latest_version, read_delta
-    from .queries_graph import _KMV_K, _grouped_top_k, _state_path
 
     d = load_table(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") >= 25).select("doc_id", "text")
 
-    snap = _state_path(sf_dir, "documents_corpus_snapshots")
+    snap = state_path(sf_dir, "documents_corpus_snapshots")
     if latest_version(snap) is None:
         # v1 = the standing corpus; v2 = the new ingest batch (append)
         commit_snapshot(
@@ -1409,57 +1410,25 @@ def contamination_delta_theta_overlap(spark: SparkSession, sf_dir: str) -> DataF
                 ).alias("s")
             )
             .distinct()
-            .withColumn("h", F.md5(F.col("s")))
         )
-
-    # eval sample: persisted ONCE per dataset, before/independent of any
-    # ingest — the serving path never rebuilds it
-    epath = _state_path(sf_dir, "eval_shingle_theta.parquet")
-    if not os.path.exists(os.path.join(epath, "_SUCCESS")):
-        _grouped_top_k(
-            shingle_set(d.filter(F.col("doc_id") < 25)),
-            [],
-            [F.col("h")],
-            _KMV_K,
-            "rn",
-        ).select("s", "h").write.mode("overwrite").parquet(epath)
-    sampb = spark.read.parquet(epath)
 
     a_set = shingle_set(delta)
-    sampa = _grouped_top_k(a_set, [], [F.col("h")], _KMV_K, "rn").select("s", "h")
+    b_set = shingle_set(d.filter(F.col("doc_id") < 25))
+    # eval sample: persisted ONCE per dataset, before/independent of any
+    # ingest — the serving path never rebuilds it
+    epath = state_path(sf_dir, "eval_shingle_theta.parquet")
+    if not os.path.exists(os.path.join(epath, "_SUCCESS")):
+        sk.kmv_build(b_set, "s").write.mode("overwrite").parquet(epath)
+    sampb = spark.read.parquet(epath)
+    sampa = sk.kmv_build(a_set, "s")
 
-    stats = (
-        sampa.agg(F.count(F.lit(1)).alias("sample_a"), F.max("h").alias("kth_a"))
-        .crossJoin(
-            F.broadcast(
-                sampb.agg(
-                    F.count(F.lit(1)).alias("sample_b"),
-                    F.max("h").alias("kth_b"),
-                )
-            )
-        )
-    )
-    theta = stats.select(
-        "sample_a",
-        "sample_b",
-        F.when(
-            (F.col("sample_a") >= _KMV_K) & (F.col("sample_b") >= _KMV_K),
-            F.least("kth_a", "kth_b"),
-        )
-        .when(F.col("sample_a") >= _KMV_K, F.col("kth_a"))
-        .when(F.col("sample_b") >= _KMV_K, F.col("kth_b"))
-        .alias("theta_hex"),
-    )
-    interb = (
-        sampa.join(F.broadcast(sampb.select("s")), "s")
-        .crossJoin(F.broadcast(theta.select("theta_hex")))
-        .filter(F.col("theta_hex").isNull() | (F.col("h") < F.col("theta_hex")))
-        .agg(F.count(F.lit(1)).alias("n_inter_below"))
-    )
+    theta = sk.theta_stats(sampa, sampb)
+    interb = sk.theta_below(
+        sampa.join(F.broadcast(sampb.select("s")), "s"), theta
+    ).agg(F.count(F.lit(1)).alias("n_inter_below"))
 
     # exact references (the oracle's cost): the eval side is
     # benchmark-sized, so its distinct-shingle set broadcasts
-    b_set = shingle_set(d.filter(F.col("doc_id") < 25))
     ex = (
         delta.agg(F.count(F.lit(1)).alias("n_delta_docs"))
         .crossJoin(F.broadcast(a_set.agg(F.count(F.lit(1)).alias("n_a_exact"))))
@@ -1473,15 +1442,6 @@ def contamination_delta_theta_overlap(spark: SparkSession, sf_dir: str) -> DataF
         )
     )
 
-    est = F.when(
-        F.col("theta_hex").isNull(), F.col("n_inter_below").cast("double")
-    ).otherwise(
-        F.col("n_inter_below").cast("double")
-        * F.lit(float(16**15))
-        / F.conv(F.substring(F.col("theta_hex"), 1, 15), 16, 10)
-        .cast("long")
-        .cast("double")
-    )
     out = ex.crossJoin(F.broadcast(theta)).crossJoin(F.broadcast(interb))
     return out.select(
         "n_delta_docs",
@@ -1493,5 +1453,5 @@ def contamination_delta_theta_overlap(spark: SparkSession, sf_dir: str) -> DataF
         "sample_b",
         "theta_hex",
         "n_inter_below",
-        est.alias("est_intersection"),
+        sk.theta_estimate("n_inter_below").alias("est_intersection"),
     )

@@ -33,13 +33,24 @@ def state_tag(sf_dir: str) -> str:
     ``realpath``: symlink resolution would silently retag every dataset
     reached through a symlinked mount. For the already-canonical
     absolute paths every caller passes today, the tag is byte-identical
-    to the historical ``_state_path`` tagging, so existing scratch dirs
+    to the pre-canonical tagging, so existing scratch dirs
     stay valid (no cache-tag migration). Never tag by basename — two
     tier dirs named alike (e.g. ``/tmp/a/sf10`` and ``/tmp/b/sf10``)
     must not share derived state (ADVICE r10, queries_sources.py
     bucketed tables).
     """
     return os.path.normpath(os.path.abspath(sf_dir)).strip("/").replace("/", "_")
+
+
+#: persisted-state scratch root, one subdir per dataset dir so sf0.001
+#: pytest runs and the sf0.01 driver never share state files.
+_STATE_CACHE = os.path.join(tempfile.gettempdir(), "kiji_scoring_spark_state")
+
+
+def state_path(sf_dir: str, name: str) -> str:
+    """Where a registry query persists its derived state ``name`` for
+    the dataset at ``sf_dir``; ``purge_derived_state`` removes it."""
+    return os.path.join(_STATE_CACHE, state_tag(sf_dir), name)
 
 
 def stream_scratch_root() -> str:

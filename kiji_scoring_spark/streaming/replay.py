@@ -12,7 +12,9 @@ registry replay query.
   the finished ``StreamingQuery``.
 - :func:`fold_versioned_state` — a ``foreachBatch`` fold whose state is
   one parquet version dir per batch id; the query supplies only its
-  per-batch step.
+  per-batch step. A union-schema state holds several members (read one
+  with :func:`state_member`); :func:`fold_members` is the per-batch step
+  of a state whose members are mergeable sketches.
 """
 
 from __future__ import annotations
@@ -187,6 +189,23 @@ def run_available_now(
 def state_member(state: DataFrame, member: str, *cols) -> DataFrame:
     """One member's rows of a union-schema fold state."""
     return state.filter(F.col("member") == member).select(*cols)
+
+
+def fold_members(
+    prev: DataFrame | None,
+    batch: dict[str, DataFrame],
+    merges: dict[str, Callable[[DataFrame], DataFrame]],
+) -> dict[str, DataFrame]:
+    """One fold step of a union-schema state: each member's batch state,
+    merged with that member's rows of ``prev`` (the batch states
+    themselves before the first batch). ``merges`` maps a member to its
+    sketch's merge, which turns the rows of several states into one."""
+    if prev is None:
+        return batch
+    return {
+        name: merges[name](state_member(prev, name, *df.columns).unionByName(df))
+        for name, df in batch.items()
+    }
 
 
 def _as_member(df: DataFrame, member: str, members: dict[str, str]) -> DataFrame:

@@ -68,9 +68,9 @@ def main() -> int:
     ), "latest block not ADC-ordered"
 
     from kiji_scoring_spark.operators.snapshots import data_file_count
-    from kiji_scoring_spark.queries_graph import _state_path
+    from kiji_scoring_spark.state import state_path
 
-    snap = _state_path(sf_dir, "ivfpq_codes_snap")
+    snap = state_path(sf_dir, "ivfpq_codes_snap")
     files_v3 = data_file_count(snap, 3)
     files_v4 = data_file_count(snap, 4)
     out["files_pre_compact"] = files_v3

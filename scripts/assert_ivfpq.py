@@ -130,9 +130,9 @@ def main() -> int:
     )
 
     # pruning mass: how much of the corpus do the 2 probed lists hold?
-    from kiji_scoring_spark.queries_graph import _state_path
+    from kiji_scoring_spark.state import state_path
 
-    codes_path = _state_path(sf_dir, "ivfpq_codes_embeddings.parquet")
+    codes_path = state_path(sf_dir, "ivfpq_codes_embeddings.parquet")
     codes = spark.read.parquet(codes_path)
     probed_rows = codes.filter(F.col("cell").isin(list(pcells))).count()
     probed_frac = probed_rows / max(n_vectors, 1)

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kiji_scoring_spark.queries import QUERIES
-from kiji_scoring_spark.queries_graph import _state_path
+from kiji_scoring_spark.state import state_path
 from kiji_scoring_spark.sources import load_table
 
 
@@ -124,7 +124,7 @@ def test_hll_union_estimate_deterministic_and_tight(spark, sf_dir):
     max-merge is order-independent) and within 2% of exact — tighter
     than the 5% the oracle contract gates on."""
     fn = QUERIES["sketch_hll_shard_union"].fn
-    shutil.rmtree(_state_path(sf_dir, "hll_user_shards.parquet"), ignore_errors=True)
+    shutil.rmtree(state_path(sf_dir, "hll_user_shards.parquet"), ignore_errors=True)
     ev = load_table(spark, sf_dir, "events")
     exact = ev.agg(F.countDistinct("user_id")).first()[0]
     ests = []
@@ -133,13 +133,13 @@ def test_hll_union_estimate_deterministic_and_tight(spark, sf_dir):
         assert first.estimate_ok
         assert first.exact_users == exact
         # recompute raw estimate from the persisted shards directly
-        shards = spark.read.parquet(_state_path(sf_dir, "hll_user_shards.parquet"))
+        shards = spark.read.parquet(state_path(sf_dir, "hll_user_shards.parquet"))
         est = shards.agg(
             F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("e")
         ).first().e
         ests.append(est)
         shutil.rmtree(
-            _state_path(sf_dir, "hll_user_shards.parquet"), ignore_errors=True
+            state_path(sf_dir, "hll_user_shards.parquet"), ignore_errors=True
         )
     assert ests[0] == ests[1], "HLL union estimate not deterministic"
     assert abs(ests[0] - exact) <= 0.02 * max(exact, 1)
@@ -179,7 +179,7 @@ def test_bitmap_shards_exact_and_idempotent_remerge(spark, sf_dir):
     nothing — the exactly-once-without-dedup property."""
     import shutil as _sh
 
-    _sh.rmtree(_state_path(sf_dir, "bitmap_user_shards.parquet"), ignore_errors=True)
+    _sh.rmtree(state_path(sf_dir, "bitmap_user_shards.parquet"), ignore_errors=True)
     out = {
         r.event_type: r.n_users
         for r in QUERIES["bitmap_exact_distinct_shards"].fn(spark, sf_dir).collect()
@@ -192,7 +192,7 @@ def test_bitmap_shards_exact_and_idempotent_remerge(spark, sf_dir):
     exact["ALL"] = ev.agg(F.countDistinct("user_id")).first()[0]
     assert out == exact
 
-    shards = spark.read.parquet(_state_path(sf_dir, "bitmap_user_shards.parquet"))
+    shards = spark.read.parquet(state_path(sf_dir, "bitmap_user_shards.parquet"))
     doubled = (
         shards.unionByName(shards)
         .groupBy("bkt")

@@ -1,5 +1,6 @@
-"""_grouped_top_k — the r13 scale-safe per-group top-K rank that replaced
-the single-window sketch state builds (theta / bottom-k / Misra-Gries).
+"""grouped_top_k (operators/sketches.py) — the r13 scale-safe per-group
+top-K rank that replaced the single-window sketch state builds (theta /
+bottom-k / Misra-Gries).
 
 The helper must be byte-identical to the naive
 ``row_number().over(Window.partitionBy(group).orderBy(order))`` rank it
@@ -12,7 +13,12 @@ single-task full-population sort) is pinned in tests/test_plans.py.
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from kiji_scoring_spark.queries_graph import _grouped_top_k
+from kiji_scoring_spark.operators.sketches import (
+    K,
+    grouped_top_k,
+    kmv_build,
+    theta_build,
+)
 
 
 def _naive(df, group_cols, order_cols, k, rn_col):
@@ -39,7 +45,7 @@ def _skewed(spark):
 def test_identical_to_single_window_rank(spark):
     df = _skewed(spark)
     want = _rows(_naive(df, ["grp"], [F.col("v")], 64, "rn"))
-    got = _rows(_grouped_top_k(df, ["grp"], [F.col("v")], 64, "rn"))
+    got = _rows(grouped_top_k(df, ["grp"], [F.col("v")], 64, "rn"))
     assert got == want
     # groups smaller than K survive whole (the exact-mode arm)
     assert len([r for r in got if r[0] == "c"]) == 5
@@ -52,7 +58,7 @@ def test_partitioning_invariance(spark):
     baseline = None
     for n in (1, 3, 17):
         got = _rows(
-            _grouped_top_k(df.repartition(n), ["grp"], [F.col("v")], 64, "rn")
+            grouped_top_k(df.repartition(n), ["grp"], [F.col("v")], 64, "rn")
         )
         baseline = baseline or got
         assert got == baseline
@@ -64,19 +70,13 @@ def test_descending_compound_order(spark):
     df = _skewed(spark)
     order = [F.col("v").desc(), F.col("grp").asc()]
     want = _rows(_naive(df, ["grp"], order, 65, "rn"))
-    got = _rows(_grouped_top_k(df, ["grp"], order, 65, "rn"))
+    got = _rows(grouped_top_k(df, ["grp"], order, 65, "rn"))
     assert got == want
 
 
 def test_build_fragments_match_naive(spark):
     # the three production builds, checked against their pre-r13 naive
     # single-window formulations on a synthetic corpus
-    from kiji_scoring_spark.queries_graph import (
-        _KMV_K,
-        _kmv_bottomk_build,
-        _theta_sample_build,
-    )
-
     src = spark.createDataFrame(
         [(i * 31 % 997, i % 8) for i in range(6000)], "key long, shard long"
     )
@@ -84,10 +84,10 @@ def test_build_fragments_match_naive(spark):
         src.distinct().withColumn("h", F.md5(F.col("key").cast("string"))),
         ["shard"],
         [F.col("h")],
-        _KMV_K,
+        K,
         "rn",
     ).select("shard", "key", "h")
-    assert _rows(_kmv_bottomk_build(src)) == _rows(naive)
+    assert _rows(kmv_build(src)) == _rows(naive)
 
     tsrc = spark.createDataFrame(
         [(i * 17 % 1499, int(i % 3 < 2), int(i % 3 > 0)) for i in range(5000)],
@@ -104,7 +104,7 @@ def test_build_fragments_match_naive(spark):
             F.lit("b").alias("pop"), "key", "h"
         )
     )
-    naive_theta = _naive(both, ["pop"], [F.col("h")], _KMV_K, "rn").select(
+    naive_theta = _naive(both, ["pop"], [F.col("h")], K, "rn").select(
         "pop", "key", "h"
     )
-    assert _rows(_theta_sample_build(tsrc)) == _rows(naive_theta)
+    assert _rows(theta_build(tsrc)) == _rows(naive_theta)

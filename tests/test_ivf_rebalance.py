@@ -193,12 +193,12 @@ def test_rebalance_member_scan_prunes_to_hot_cells(spark, sf_dir):
     registry query's persisted lineage (v2 = the skewed state the
     rebalance read)."""
     from kiji_scoring_spark.queries import QUERIES
-    from kiji_scoring_spark.queries_graph import _state_path
+    from kiji_scoring_spark.state import state_path
     from kiji_scoring_spark.queries_pipeline import _ivf_cell_stats
 
     # ensure the lineage exists (idempotent: the version guard re-serves)
     QUERIES["ann_ivf_cell_rebalance_stats"].fn(spark, sf_dir).count()
-    path = _state_path(sf_dir, "ivfpq_codes_rebalance")
+    path = state_path(sf_dir, "ivfpq_codes_rebalance")
     codes = read_snapshot(spark, path, 2, schema=_IVFPQ_CODES_SCHEMA)
     hot = [
         int(r.cell)

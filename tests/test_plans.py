@@ -645,12 +645,12 @@ def _sketch_build_frames(spark, sf_dir):
     """The three persisted-sketch state builds, as written to parquet."""
     from pyspark.sql import functions as F
 
-    from kiji_scoring_spark.queries_graph import (
-        _kmv_bottomk_build,
-        _mg_item,
-        _mg_shard_build,
-        _theta_sample_build,
+    from kiji_scoring_spark.operators.sketches import (
+        kmv_build as _kmv_bottomk_build,
+        mg_build as _mg_shard_build,
+        theta_build as _theta_sample_build,
     )
+    from kiji_scoring_spark.queries_graph import _mg_item
     from kiji_scoring_spark.sources import load_table
 
     li = load_table(spark, sf_dir, "lineitem").filter(

@@ -11,7 +11,7 @@ import shutil
 from pyspark.sql import functions as F
 
 from kiji_scoring_spark.queries import QUERIES
-from kiji_scoring_spark.queries_graph import _state_path
+from kiji_scoring_spark.state import state_path
 
 DIM, SUB, SUBDIM = 64, 8, 8
 
@@ -100,7 +100,7 @@ def test_pq_codebook_member_reconstructs_exactly(spark, sf_dir):
     the persisted codes table the query builds."""
     # ensure the state exists for this dataset
     QUERIES["similarity_pq_adc_topk"].fn(spark, sf_dir).count()
-    path = _state_path(sf_dir, "pq_codes_embeddings.parquet")
+    path = state_path(sf_dir, "pq_codes_embeddings.parquet")
     codes = {r.vec_id: [r[f"c{s}"] for s in range(SUB)]
              for r in spark.read.parquet(path).collect()}
     emb = {
@@ -134,7 +134,7 @@ def test_pq_state_reuse_is_deterministic(spark, sf_dir):
     second = [tuple(r) for r in fn(spark, sf_dir).collect()]  # cached codes
     assert first == second
     # force a rebuild: drop the persisted codes and re-run
-    path = _state_path(sf_dir, "pq_codes_embeddings.parquet")
+    path = state_path(sf_dir, "pq_codes_embeddings.parquet")
     shutil.rmtree(path, ignore_errors=True)
     third = [tuple(r) for r in fn(spark, sf_dir).collect()]
     assert third == first

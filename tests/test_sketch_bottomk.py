@@ -9,11 +9,10 @@ the one registry dataset doesn't produce.
 import hashlib
 import os
 
-from pyspark.sql import Window
-from pyspark.sql import functions as F
-
+from kiji_scoring_spark.operators.sketches import K as _KMV_K
+from kiji_scoring_spark.operators.sketches import kmv_build, kmv_merge
 from kiji_scoring_spark.queries import QUERIES
-from kiji_scoring_spark.queries_graph import _KMV_K, _state_path
+from kiji_scoring_spark.state import state_path
 
 
 def _py_bottomk(keys, k):
@@ -21,25 +20,17 @@ def _py_bottomk(keys, k):
     return hashed[:k]
 
 
-def _spark_shard_samples(spark, keys, n_shards, k):
+def _shard_samples(spark, keys, n_shards):
+    """Per-shard samples from the shipped build, keys dealt round-robin."""
     df = spark.createDataFrame(
         [(int(x), int(i % n_shards)) for i, x in enumerate(keys)],
         "key long, shard long",
     )
-    w = Window.partitionBy("shard").orderBy("h")
-    return (
-        df.distinct()
-        .withColumn("h", F.md5(F.col("key").cast("string")))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("shard", "key", "h")
-    )
+    return kmv_build(df)
 
 
-def _merge(samples, k):
-    return (
-        samples.select("key", "h").distinct().orderBy("h").limit(k).collect()
-    )
+def _merge(samples):
+    return kmv_merge(samples).collect()
 
 
 def test_merged_bottomk_equals_global_bottomk(spark):
@@ -48,7 +39,7 @@ def test_merged_bottomk_equals_global_bottomk(spark):
     # nothing — the merged sample must equal the single-pass bottom-K
     keys = [x * 7919 % 5000 for x in range(20000)]  # dupes + spread
     want = _py_bottomk(keys, _KMV_K)
-    got = _merge(_spark_shard_samples(spark, keys, 8, _KMV_K), _KMV_K)
+    got = _merge(_shard_samples(spark, keys, 8))
     assert [(r.h, r.key) for r in sorted(got, key=lambda r: r.h)] == want
 
 
@@ -58,7 +49,7 @@ def test_merge_is_shard_count_invariant(spark):
     keys = list(range(1, 3000))
     merged = []
     for n in (1, 3, 8):
-        got = _merge(_spark_shard_samples(spark, keys, n, _KMV_K), _KMV_K)
+        got = _merge(_shard_samples(spark, keys, n))
         merged.append(sorted((r.h, r.key) for r in got))
     assert merged[0] == merged[1] == merged[2]
     assert len(merged[0]) == _KMV_K
@@ -68,14 +59,14 @@ def test_small_domain_sample_is_exhaustive(spark):
     # fewer distinct keys than K: the sample IS the key space and the
     # estimate degenerates to the exact count (the query's CASE arm)
     keys = [1, 2, 3, 2, 1]
-    got = _merge(_spark_shard_samples(spark, keys, 4, _KMV_K), _KMV_K)
+    got = _merge(_shard_samples(spark, keys, 4))
     assert sorted(r.key for r in got) == [1, 2, 3]
 
 
 def test_query_deterministic_and_state_reused(spark, sf_dir):
     fn = QUERIES["sketch_bottomk_sample_shards"].fn
     r1 = fn(spark, sf_dir).collect()
-    state = _state_path(sf_dir, "kmv_partkey_shards.parquet")
+    state = state_path(sf_dir, "kmv_partkey_shards.parquet")
     assert os.path.exists(os.path.join(state, "_SUCCESS"))
     mtime = os.path.getmtime(os.path.join(state, "_SUCCESS"))
     r2 = fn(spark, sf_dir).collect()

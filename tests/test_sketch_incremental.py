@@ -3,18 +3,19 @@
 bottomK(batch)) applied batch-by-batch must equal the one-shot bottom-K
 over the union of all batches — fold(fold(s,b1),b2) == sketch(b1∪b2),
 the PODS-2012 mergeability property the registry query proves under the
-driver's exact hash gate. These tests pin the fold algebra on splits
-the one registry dataset doesn't produce: random split points, skewed
-batch sizes, duplicate keys recurring across batches, empty batches,
-and fold-order permutations.
+driver's exact hash gate. These tests pin the fold algebra, through
+the shipped sketch (operators/sketches.py), on splits the one registry
+dataset doesn't produce: hypothesis-drawn split points (the fixed
+splits kept as examples), skewed batch sizes, duplicate keys recurring
+across batches, empty batches, and fold-order permutations.
 """
 
 import hashlib
 import random
 
-from pyspark.sql import functions as F
+from hypothesis import example, given, settings, strategies as st
 
-K = 64  # matches the registry query and _KMV_K
+from kiji_scoring_spark.operators.sketches import K, kmv_build, kmv_merge
 
 
 def _py_bottomk(keys, k=K):
@@ -22,43 +23,42 @@ def _py_bottomk(keys, k=K):
     return hashed[:k]
 
 
-def _batch_sketch(spark, keys, k=K):
-    df = spark.createDataFrame([(int(x),) for x in keys], "key long")
-    return (
-        df.distinct()
-        .withColumn("h", F.md5(F.col("key").cast("string")))
-        .orderBy("h")
-        .limit(k)
-    )
+def _batch_sketch(spark, keys):
+    return kmv_build(spark.createDataFrame([(int(x),) for x in keys], "key long"))
 
 
-def _fold(spark, batches, k=K):
-    """The registry query's exact fold, driven directly: state starts
-    empty; each batch contributes its own bottom-K; the union is cut
-    back to K."""
+def _fold(spark, batches):
+    """The registry query's fold, through the shipped build and merge:
+    state starts empty; each batch contributes its own bottom-K; the
+    union is cut back to K."""
     state = None
     for keys in batches:
         if not keys:
             # an empty micro-batch folds an empty sketch — state unchanged
             continue
-        bs = _batch_sketch(spark, keys, k)
-        state = bs if state is None else (
-            state.unionByName(bs).distinct().orderBy("h").limit(k)
-        )
+        bs = _batch_sketch(spark, keys)
+        state = bs if state is None else kmv_merge(state.unionByName(bs))
     if state is None:
         return []
     return sorted(((r.h, r.key) for r in state.collect()))
 
 
-def test_fold_equals_one_shot_random_splits(spark):
-    rng = random.Random(42)
-    keys = [rng.randrange(0, 4000) for _ in range(12000)]  # dupes + spread
+_RNG = random.Random(42)
+_KEYS = [_RNG.randrange(0, 4000) for _ in range(12000)]  # dupes + spread
+
+
+@settings(max_examples=10, deadline=None)
+@given(splits=st.lists(st.integers(0, len(_KEYS)), max_size=3))
+# fixed split shapes, including a tiny first batch
+@example(splits=[4000, 8000])
+@example(splits=[10, 11000])
+@example(splits=[1, 2, 3])
+def test_fold_equals_one_shot_random_splits(spark, splits):
+    keys = _KEYS
     want = _py_bottomk(keys)
-    # three different random split shapes, including a tiny first batch
-    for splits in ([4000, 8000], [10, 11000], [1, 2, 3]):
-        cuts = [0] + sorted(splits) + [len(keys)]
-        batches = [keys[cuts[i] : cuts[i + 1]] for i in range(len(cuts) - 1)]
-        assert _fold(spark, batches) == want, f"splits {splits}"
+    cuts = [0] + sorted(splits) + [len(keys)]
+    batches = [keys[cuts[i] : cuts[i + 1]] for i in range(len(cuts) - 1)]
+    assert _fold(spark, batches) == want, f"splits {splits}"
 
 
 def test_fold_is_order_invariant(spark):

@@ -7,35 +7,25 @@ exact side; these tests pin the sketch side the oracle cannot state.
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
+from kiji_scoring_spark.operators.sketches import ALPHA as _DDSKETCH_ALPHA
+from kiji_scoring_spark.operators.sketches import GAMMA as _DDSKETCH_GAMMA
+from kiji_scoring_spark.operators.sketches import dd_build, dd_merge
 from kiji_scoring_spark.queries import QUERIES
-from kiji_scoring_spark.queries_graph import (
-    _DDSKETCH_ALPHA,
-    _DDSKETCH_GAMMA,
-    _state_path,
-)
+from kiji_scoring_spark.state import state_path
 
 
 def _bucket_counts(spark, values, shard_of=None):
-    """Build (shard, bkt, cnt) rows the way the query does."""
-    ln_g = math.log(_DDSKETCH_GAMMA)
+    """(shard, bkt, cnt) rows from the shipped build."""
     rows = [(shard_of(v) if shard_of else "s", float(v)) for v in values]
-    df = spark.createDataFrame(rows, "shard string, v double")
-    return (
-        df.select("shard", F.ceil(F.log("v") / F.lit(ln_g)).alias("bkt"))
-        .groupBy("shard", "bkt")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    return dd_build(spark.createDataFrame(rows, "shard string, v double"), "v")
 
 
 def test_estimate_within_alpha_on_known_distribution(spark):
     # uniform 1..5000: every decile's sketch answer must sit within the
     # DDSketch guarantee of the true rank element
     values = list(range(1, 5001))
-    sk = _bucket_counts(spark, values).groupBy("bkt").agg(
-        F.sum("cnt").alias("cnt")
-    )
+    sk = dd_merge(_bucket_counts(spark, values))
     hist = sorted((r.bkt, r.cnt) for r in sk.collect())
     n = sum(c for _, c in hist)
     assert n == len(values)
@@ -56,14 +46,10 @@ def test_merge_is_shard_invariant(spark):
     # the merged histogram must not depend on HOW the data was sharded:
     # per-mod-7 shards and one global shard reduce to identical buckets
     values = [v * 1.37 + 3.0 for v in range(1, 4001)]
-    a = (
+    a = dd_merge(
         _bucket_counts(spark, values, shard_of=lambda v: f"s{int(v) % 7}")
-        .groupBy("bkt")
-        .agg(F.sum("cnt").alias("cnt"))
     )
-    b = _bucket_counts(spark, values).groupBy("bkt").agg(
-        F.sum("cnt").alias("cnt")
-    )
+    b = dd_merge(_bucket_counts(spark, values))
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
@@ -72,7 +58,7 @@ def test_query_deterministic_and_state_reused(spark, sf_dir):
 
     fn = QUERIES["sketch_quantile_shard_merge"].fn
     r1 = fn(spark, sf_dir).collect()
-    state = _state_path(sf_dir, "ddsketch_totalprice_shards.parquet")
+    state = state_path(sf_dir, "ddsketch_totalprice_shards.parquet")
     assert os.path.exists(os.path.join(state, "_SUCCESS"))
     mtime = os.path.getmtime(os.path.join(state, "_SUCCESS"))
     r2 = fn(spark, sf_dir).collect()

@@ -7,11 +7,9 @@ sketch side the oracle cannot state.
 
 import os
 
-from pyspark.sql import Window
-from pyspark.sql import functions as F
-
+from kiji_scoring_spark.operators.sketches import K, mg_build, mg_merge
 from kiji_scoring_spark.queries import QUERIES
-from kiji_scoring_spark.queries_graph import _MG_K, _state_path
+from kiji_scoring_spark.state import state_path
 
 
 def _py_mg_summary(counts: dict, k: int) -> dict:
@@ -71,41 +69,10 @@ def test_mg_guarantee_on_known_distribution():
         _assert_contract(exact, final, n, k)
 
 
-def _spark_mg_build(df, k: int):
-    """Build per-shard summaries and the merged summary the way the
-    query does (same window + decrement construction), from an
-    (item, shard) DataFrame; returns {item: est}."""
-    counts = df.groupBy("shard", "item").agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.partitionBy("shard").orderBy(F.col("cnt").desc(), F.col("item").asc())
-    ranked = counts.withColumn("rn", F.row_number().over(w))
-    ck1 = ranked.filter(F.col("rn") == k + 1).select(
-        "shard", F.col("cnt").alias("ck1")
-    )
-    per_shard = (
-        ranked.filter(F.col("rn") <= k)
-        .join(F.broadcast(ck1), "shard", "left")
-        .select(
-            "item",
-            (F.col("cnt") - F.coalesce(F.col("ck1"), F.lit(0))).alias("weight"),
-        )
-        .filter(F.col("weight") > 0)
-    )
-    merged = per_shard.groupBy("item").agg(F.sum("weight").alias("w"))
-    mw = Window.orderBy(F.col("w").desc(), F.col("item").asc())
-    mranked = merged.withColumn("rn", F.row_number().over(mw))
-    wk1 = mranked.agg(
-        F.coalesce(
-            F.max(F.when(F.col("rn") == k + 1, F.col("w"))), F.lit(0)
-        ).alias("wk1")
-    )
-    rows = (
-        mranked.filter(F.col("rn") <= k)
-        .crossJoin(F.broadcast(wk1))
-        .select("item", (F.col("w") - F.col("wk1")).alias("est"))
-        .filter(F.col("est") > 0)
-        .collect()
-    )
-    return {r.item: r.est for r in rows}
+def _shipped_mg(df):
+    """Per-shard summaries from an (item, shard) DataFrame, merged — the
+    shipped build and merge; returns {item: weight}."""
+    return {r.item: r.weight for r in mg_merge(mg_build(df)).collect()}
 
 
 def test_contract_is_shard_invariant(spark):
@@ -115,7 +82,7 @@ def test_contract_is_shard_invariant(spark):
     items = _zipfish_items(8000)
     exact = _exact_counts(items)
     n = len(items)
-    k = 16
+    k = K
     band = 2.0 * n / (k + 1)
     heavy = {i for i, c in exact.items() if c > band}
     assert heavy  # the fixture must actually exercise the heavy path
@@ -125,7 +92,7 @@ def test_contract_is_shard_invariant(spark):
             [(int(it), int(idx % mod)) for idx, it in enumerate(items)],
             "item long, shard long",
         )
-        s = _spark_mg_build(df, k)
+        s = _shipped_mg(df)
         _assert_contract(exact, s, n, k)
         summaries.append(s)
     for s in summaries:
@@ -135,7 +102,7 @@ def test_contract_is_shard_invariant(spark):
 def test_query_deterministic_and_state_reused(spark, sf_dir):
     fn = QUERIES["sketch_topk_shard_merge"].fn
     r1 = fn(spark, sf_dir).collect()
-    state = _state_path(sf_dir, "mg_topk_lineitem_shards.parquet")
+    state = state_path(sf_dir, "mg_topk_lineitem_shards.parquet")
     assert os.path.exists(os.path.join(state, "_SUCCESS"))
     mtime = os.path.getmtime(os.path.join(state, "_SUCCESS"))
     r2 = fn(spark, sf_dir).collect()
