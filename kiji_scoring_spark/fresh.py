@@ -62,7 +62,13 @@ from .producers import (
     merge_stores,
     store_sides,
 )
-from .registry import FreshenerRegistry, TableLayout, load_class, parse_column
+from .registry import (
+    FreshenerRegistry,
+    TableLayout,
+    flat_name,
+    load_class,
+    parse_column,
+)
 
 #: reference default: 100 ms per get (FreshKijiTableReaderBuilder.java:66-67).
 #: Batch jobs amortize over many rows, so the default budget is larger.
@@ -296,15 +302,7 @@ class FreshTableReader:
                 f"column {column!r} is a group-type family; request a "
                 f"qualified column 'family:qualifier'"
             )
-        flat = layout.flat_name(column)
-        out = F.col(flat)
-        # tag with SQL text (see model._col) so wide policy expressions
-        # over group-type columns build as one parsed string; bare
-        # identifiers ONLY, backtick-quoted (ADVICE r15 — F.expr would
-        # misparse hyphens, dots, spaces that F.col accepts)
-        if flat.isidentifier():
-            out._kss_sql = f"`{flat}`"
-        return out
+        return F.col(flat_name(column))
 
     def _compile(self, cap: Freshener) -> CompiledCapsule:
         """Build a capsule's Columns once per capsule generation — the
@@ -320,7 +318,7 @@ class FreshTableReader:
             )
         fam, qual = parse_column(cap.column)
         layout = TableLayout(table.schema)
-        flat = layout.flat_name(cap.column)
+        flat = flat_name(cap.column)
         is_map = qual is None
         target = fam if is_map else flat
         # family-wide producers choose the qualifier they write to
@@ -365,7 +363,7 @@ class FreshTableReader:
                 request = list(
                     dict.fromkeys(
                         [self.key_col]
-                        + [layout.flat_name(c) for c in producer.data_request]
+                        + [flat_name(c) for c in producer.data_request]
                     )
                 )
         else:

@@ -6,7 +6,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from . import model
+from .operators import pq
 from .producers import ExpressionProducer
+from .registry import flat_name
 
 
 class DoubleLatestValueProducer(ExpressionProducer):
@@ -52,10 +54,14 @@ class DriftRescoreProducer(ExpressionProducer):
     IS the measured drift (the PQ reconstruction distance between the
     entity's current embedding and its stored codes), cast to double —
     the A7 freshen pass the drift policy drives. An entity whose drift
-    is NULL (no stored codes reachable by the expression) produces
-    NULL, so the A10 partial-freshening invariant keeps its old cell.
+    is NULL (no stored codes) produces NULL, so the A10
+    partial-freshening invariant keeps its old cell.
 
-    Column parameters mirror ``EmbeddingDrift``'s (same defaults), so a
+    Column contract: the same as ``EmbeddingDrift``'s — three qualified
+    group-family columns read by their flat names (an array<long>(64)
+    embedding, a versioned cell of array<long>(8) codes, a
+    map<long, array<long>(64)> codebook LUT); a map-family request fails
+    at analysis. The parameters and defaults mirror the policy's, so a
     non-default attachment configures BOTH sides identically instead of
     the producer silently scoring different cells than the policy
     measured drift on."""
@@ -66,18 +72,12 @@ class DriftRescoreProducer(ExpressionProducer):
         embedding_column: str = "emb:q",
         codebook_column: str = "cb:map",
     ):
-        from .pq_common import pq_drift_expr
-        from .registry import parse_column
-
-        def flat(col: str) -> str:
-            fam, qual = parse_column(col)
-            return fam if qual is None else f"{fam}_{qual}"
-
         super().__init__(
-            lambda df: pq_drift_expr(
-                flat(embedding_column),
-                model.most_recent_value(flat(codes_column)),
-                flat(codebook_column),
+            lambda df: pq.drift(
+                flat_name(embedding_column),
+                flat_name(codes_column),
+                flat_name(codebook_column),
+                versioned=True,
             ).cast("double"),
             data_request=[embedding_column, codes_column, codebook_column],
             output_column="score:versions",

@@ -44,24 +44,7 @@ def versions_type(value_type: DataType) -> ArrayType:
 
 
 def _col(c: Column | str) -> Column:
-    if isinstance(c, str):
-        out = F.col(c)
-        # tag the Column with its SQL text so downstream wide-expression
-        # builders (pq_common.pq_drift_expr) can compose one parsed
-        # string instead of a py4j-call-per-node tree; plain attribute —
-        # Column.__getattr__ only fabricates field access on GETS of
-        # unknown names, sets land in the instance dict.
-        # ONLY bare identifiers are tagged, and BACKTICK-QUOTED
-        # (ADVICE r15): F.col accepts names F.expr would misparse —
-        # 'fam_my-col' parses as subtraction, 'a b' as a syntax error,
-        # and reserved words depend on parser mode; quoting makes the
-        # identifier unambiguous, and non-identifiers (which F.col
-        # resolves with its own semantics, e.g. dots as field access)
-        # keep the always-correct Column tree path.
-        if c.isidentifier():
-            out._kss_sql = f"`{c}`"
-        return out
-    return c
+    return F.col(c) if isinstance(c, str) else c
 
 
 def empty_versions(value_type_ddl: str) -> Column:
@@ -75,14 +58,7 @@ def empty_versions(value_type_ddl: str) -> Column:
 
 def most_recent_value(versions: Column | str) -> Column:
     """``getMostRecentValue`` — value of the newest version, NULL if none."""
-    v = _col(versions)
-    out = F.try_element_at(v, F.lit(1))["value"]
-    vsql = vars(v).get("_kss_sql")
-    if vsql is not None:
-        # propagate the SQL text (same tree the Column build produces);
-        # vsql is already backtick-quoted by _col when it is a bare name
-        out._kss_sql = f"try_element_at({vsql}, 1).value"
-    return out
+    return F.try_element_at(_col(versions), F.lit(1))["value"]
 
 
 def most_recent_ts(versions: Column | str) -> Column:

@@ -21,6 +21,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from . import model
+from .operators import pq
+from .registry import flat_name
 
 
 class FreshnessPolicy:
@@ -181,22 +183,32 @@ class NewerThan(FreshnessPolicy):
 
 
 class EmbeddingDrift(FreshnessPolicy):
-    """§2.G composed into the reference's core operator (r13 verdict #4):
-    an A5-style policy whose staleness predicate is SEMANTIC, not
-    temporal — the entity's score is fresh iff its CURRENT embedding is
-    still within ``tau`` (squared quantized distance) of the embedding
-    it was scored against, measured as the PQ reconstruction distance
-    between the current embedding and the entity's PERSISTED PQ codes
-    via a broadcast codebook LUT. No timestamps consulted: an entity
-    whose meaning drifted yesterday is stale even if it was rescored
-    this morning against the old embedding.
+    """A policy whose staleness predicate is SEMANTIC, not temporal: the
+    entity's score is fresh iff its CURRENT embedding is still within
+    ``tau`` (squared quantized distance) of the embedding it was scored
+    against, measured as the PQ reconstruction distance
+    (``operators.pq.drift``) between the current embedding and the
+    entity's PERSISTED PQ codes through a codebook LUT. No timestamps
+    are consulted: an entity whose meaning drifted yesterday is stale
+    even if it was rescored this morning against the old embedding.
 
-    ``data_request`` (A6 own-request machinery,
-    ``KijiFreshnessPolicy.java:68-84``) names the codes cell, the
-    current-embedding column, and the LUT column; the predicate is a
-    pure Column expression (integer-exact, codegen-resident, no UDF).
-    An entity with NO stored codes is stale by definition (NULL drift →
-    coalesce false), the same no-version rule ShelfLife applies."""
+    Column contract. ``data_request`` (A6 own-request machinery,
+    ``KijiFreshnessPolicy.java:68-84``) names three qualified
+    group-family columns, read by their flat names
+    (``registry.flat_name``, e.g. 'emb:q' → ``emb_q``):
+
+    - ``embedding_column``: array<long>(64), the current quantized
+      embedding;
+    - ``codes_column``: a versioned cell whose newest value is the
+      array<long>(8) of stored code ids;
+    - ``codebook_column``: map<long, array<long>(64)>, code id → that
+      codebook entry's quantized vector.
+
+    Any name is allowed (it is quoted into the expression). A map-type
+    family has no such flat column, so a map-family request fails at
+    analysis. The predicate is one parsed, integer-exact expression (no
+    UDF). An entity with NO stored codes is stale by definition (NULL
+    drift → coalesce false), the same no-version rule ShelfLife applies."""
 
     def __init__(
         self,
@@ -217,12 +229,13 @@ class EmbeddingDrift(FreshnessPolicy):
         )
 
     def is_fresh_over(self, requested: dict[str, Column], as_of_ms: int) -> Column:
-        from . import pq_common
-
-        drift = pq_common.pq_drift_expr(
-            requested[self.embedding_column],
-            model.most_recent_value(requested[self.codes_column]),
-            requested[self.codebook_column],
+        # reads the requested columns by flat name (the column contract
+        # above), so the 64-term sum builds as one parsed expression
+        drift = pq.drift(
+            flat_name(self.embedding_column),
+            flat_name(self.codes_column),
+            flat_name(self.codebook_column),
+            versioned=True,
         )
         return F.coalesce(drift <= F.lit(self.tau), F.lit(False))
 

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from . import model
 from .fresh import FreshTableReader
+from .operators import pq
 from .policies import FresherThanColumn, NewerThan, ShelfLife
 from .registry import FreshenerRegistry, TableLayout
 from .queries import query
@@ -779,9 +780,24 @@ DRIFT_TAU = 1_000_000_000
 DRIFT_T0 = AS_OF_MS - 10 * DAY_MS
 
 
-def _drift_oracle() -> str:
-    from .pq_common import _PQ_Q_SQL, _pq_subdist_sql
+def _current_embeddings(q: DataFrame) -> DataFrame:
+    """(vec_id, emb_q): each entity's CURRENT quantized embedding, with
+    deterministic drift injected — entities with pmod(vec_id, 5) = 0 have
+    every dim shifted +10000, everyone else carries pure quantization
+    error. The batch and streaming drift queries read the same frame."""
+    qarr = pq.vector("q")
+    return q.select(
+        "vec_id",
+        F.when(
+            F.pmod(F.col("vec_id"), F.lit(5)) == 0,
+            F.transform(qarr, lambda x: x + 10000),
+        )
+        .otherwise(qarr)
+        .alias("emb_q"),
+    )
 
+
+def _drift_oracle() -> str:
     return f"""
     -- The drift policy, stated one-shot: re-derive each entity's stored
     -- PQ codes (argmin per subspace over the deterministic 16-entry
@@ -791,7 +807,7 @@ def _drift_oracle() -> str:
     -- CASE on tau: fresh keeps the seed score cell, stale is rescored
     -- to the drift at the freshen clock.
     WITH src AS (
-      SELECT vec_id, {_PQ_Q_SQL} AS q
+      SELECT vec_id, {pq.Q_SQL} AS q
       FROM embeddings
       WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
         AND len(embedding) = 64
@@ -805,7 +821,7 @@ def _drift_oracle() -> str:
       SELECT vec_id, ss, cb_id FROM (
         SELECT s.vec_id, sub.ss, c.cb_id,
           ROW_NUMBER() OVER (PARTITION BY s.vec_id, sub.ss
-            ORDER BY {_pq_subdist_sql("s.q", "c.q")}, c.cb_id) AS rn
+            ORDER BY {pq.subdist_sql("s.q", "c.q")}, c.cb_id) AS rn
         FROM src s CROSS JOIN cb c CROSS JOIN sub
       ) t WHERE rn = 1
     ),
@@ -817,7 +833,7 @@ def _drift_oracle() -> str:
     ),
     drift AS (
       SELECT codes.vec_id,
-        CAST(SUM({_pq_subdist_sql("u.cq", "c.q")}) AS BIGINT) AS d
+        CAST(SUM({pq.subdist_sql("u.cq", "c.q")}) AS BIGINT) AS d
       FROM codes
       JOIN cb c ON c.cb_id = codes.cb_id
       JOIN cur u ON u.vec_id = codes.vec_id
@@ -863,60 +879,22 @@ def fresh_embedding_drift_rescoring(spark: SparkSession, sf_dir: str) -> DataFra
     any score-store read pays); the LUT is 16 rows broadcast once;
     the codes table is read partition-pruned exactly as the ANN probe
     reads it."""
-    from . import pq_common
     from .lib import DriftRescoreProducer  # noqa: F401 — registry loads by name
     from .policies import EmbeddingDrift
-    from .queries_pipeline import (
-        _ivfpq_cb,
-        _ivfpq_codes_table,
-        _ivfpq_quantize,
-        _ivfpq_seeds,
-    )
 
-    dim = pq_common._EMBED_DIM
-    nsub = pq_common._PQ_SUB
-
-    e = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id").isNotNull()
-        & F.col("embedding").isNotNull()
-        & (F.size("embedding") == dim)
-    )
-    q = _ivfpq_quantize(e)
-    cb = _ivfpq_cb(q)
-    seeds = _ivfpq_seeds(q)
-    codes = _ivfpq_codes_table(spark, sf_dir, q, cb, seeds)
-
-    # parsed-string array build (r15 — one py4j call instead of ~130)
-    qarr = F.expr("array(" + ",".join(f"q{i}" for i in range(dim)) + ")")
-    cur = q.select(
-        "vec_id",
-        F.when(
-            F.pmod(F.col("vec_id"), F.lit(5)) == 0,
-            F.transform(qarr, lambda x: x + 10000),
-        )
-        .otherwise(qarr)
-        .alias("emb_q"),
-    )
+    q = pq.corpus(load_table(spark, sf_dir, "embeddings"))
+    cb = pq.codebook(q)
+    codes = pq.codes_table(spark, sf_dir, q, cb, pq.cell_seeds(q))
     codes_cell = F.struct(
-        F.lit(DRIFT_T0).alias("ts"),
-        F.array(*[F.col(f"c{s}") for s in range(nsub)]).alias("value"),
+        F.lit(DRIFT_T0).alias("ts"), pq.vector("c", pq.SUB).alias("value")
     )
     codes_v = codes.select("vec_id", F.array(codes_cell).alias("codes_versions"))
     seed_cell = F.struct(F.lit(DRIFT_T0).alias("ts"), F.lit(-1.0).alias("value"))
-    cb_map_row = cb.groupBy().agg(
-        F.map_from_entries(
-            F.collect_list(
-                F.struct(
-                    F.col("cb_id"),
-                    F.expr("array(" + ",".join(f"cq{i}" for i in range(dim)) + ")"),
-                )
-            )
-        ).alias("cb_map")
-    )
     vt = (
-        cur.join(codes_v, "vec_id")
+        _current_embeddings(q)
+        .join(codes_v, "vec_id")
         .withColumn("score_versions", F.array(seed_cell))
-        .crossJoin(F.broadcast(cb_map_row))
+        .crossJoin(F.broadcast(pq.codebook_lut(cb)))
     )
     reg = FreshenerRegistry()
     reg.store(
@@ -947,7 +925,7 @@ def streaming_drift_rescoring_ingest(spark: SparkSession, sf_dir: str) -> DataFr
     arrive in micro-batches, each batch is drift-checked against the
     entities' PERSISTED PQ codes (the same cell-partitioned codes table
     the ANN probes serve from, reconstructed through the broadcast
-    codebook LUT via pq_common.pq_drift_expr), and ONLY the drifted
+    codebook LUT via operators.pq.drift), and ONLY the drifted
     entities are rescored and committed — each micro-batch an atomic
     snapshot commit with a txn watermark, through the OPTIMISTIC
     (retries) commit path so a scheduled compaction could legitimately
@@ -976,70 +954,25 @@ def streaming_drift_rescoring_ingest(spark: SparkSession, sf_dir: str) -> DataFr
     tests/test_snapshots.py::test_optimistic_txn_replay_noop_composes_with_retry)."""
     import os
 
-    from . import pq_common
     from .operators.snapshots import (
         commit_snapshot,
         last_txn_id,
         read_snapshot,
     )
-    from .queries_pipeline import (
-        _ivfpq_cb,
-        _ivfpq_codes_table,
-        _ivfpq_quantize,
-        _ivfpq_seeds,
-    )
     from .streaming.replay import replay_stream, run_available_now, run_scratch
 
-    dim = pq_common._EMBED_DIM
-    nsub = pq_common._PQ_SUB
-
-    e = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id").isNotNull()
-        & F.col("embedding").isNotNull()
-        & (F.size("embedding") == dim)
-    )
-    q = _ivfpq_quantize(e)
-    cb = _ivfpq_cb(q)
-    seeds = _ivfpq_seeds(q)
+    q = pq.corpus(load_table(spark, sf_dir, "embeddings"))
+    cb = pq.codebook(q)
     # what each entity was SCORED AGAINST: the persisted codes index
-    codes = _ivfpq_codes_table(spark, sf_dir, q, cb, seeds)
-    codes_arr = codes.select(
-        "vec_id",
-        F.array(*[F.col(f"c{s}") for s in range(nsub)]).alias("codes"),
-    )
-    # one-row broadcast LUT: code id -> that codebook entry's quantized
-    # vector; localCheckpoint so the 16-row derivation runs once, not
-    # once per micro-batch
-    cb_map_row = (
-        cb.groupBy()
-        .agg(
-            F.map_from_entries(
-                F.collect_list(
-                    F.struct(
-                        F.col("cb_id"),
-                        F.expr("array(" + ",".join(f"cq{i}" for i in range(dim)) + ")"),
-                    )
-                )
-            ).alias("cb_map")
-        )
-        .localCheckpoint(eager=False)
-    )
+    codes = pq.codes_table(spark, sf_dir, q, cb, pq.cell_seeds(q))
+    codes_arr = codes.select("vec_id", pq.vector("c", pq.SUB).alias("codes"))
+    # localCheckpoint so the 16-row LUT derivation runs once, not once
+    # per micro-batch
+    cb_map_row = pq.codebook_lut(cb).localCheckpoint(eager=False)
 
-    # the updated CURRENT embeddings, arriving in three deterministic
-    # micro-batches by key residue: entities with pmod(vec_id,5)=0 have
-    # drifted (every quantized dim shifted +10000), everyone else
-    # carries pure quantization error — same injection as the batch pass
-    # parsed-string array build (r15 — one py4j call instead of ~130)
-    qarr = F.expr("array(" + ",".join(f"q{i}" for i in range(dim)) + ")")
-    cur = q.select(
-        "vec_id",
-        F.when(
-            F.pmod(F.col("vec_id"), F.lit(5)) == 0,
-            F.transform(qarr, lambda x: x + 10000),
-        )
-        .otherwise(qarr)
-        .alias("emb_q"),
-    )
+    # the updated CURRENT embeddings arrive in three deterministic
+    # micro-batches by key residue
+    cur = _current_embeddings(q)
     parts = tuple(
         cur.filter(F.pmod(F.col("vec_id"), F.lit(3)) == r) for r in range(3)
     )
@@ -1056,9 +989,7 @@ def streaming_drift_rescoring_ingest(spark: SparkSession, sf_dir: str) -> DataFr
         drifted = (
             codes_arr.join(F.broadcast(batch_df), "vec_id")
             .crossJoin(F.broadcast(cb_map_row))
-            .withColumn(
-                "d", pq_common.pq_drift_expr("emb_q", "codes", "cb_map")
-            )
+            .withColumn("d", pq.drift("emb_q", "codes", "cb_map"))
             .filter(F.col("d") > F.lit(DRIFT_TAU))
             .select(
                 "vec_id",

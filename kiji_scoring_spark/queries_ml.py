@@ -30,6 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators import pq
 from .operators import sketches as sk
 from .queries import query
 from .sources import load_table
@@ -1496,15 +1497,6 @@ def streaming_sketch_family_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_ingest_oracle() -> str:
-    # pq_common is a LEAF module: safe at decoration time whatever the
-    # package's import order (queries_pipeline itself would be circular)
-    from .pq_common import (
-        _IVFPQ_NCELLS,
-        _PQ_FULLDIST_SQL,
-        _PQ_Q_SQL,
-        _pq_subdist_sql,
-    )
-
     return f"""
     -- Streaming ANN-index maintenance: the oracle encodes the WHOLE
     -- corpus one-shot (the union of every ingest batch) and answers the
@@ -1515,7 +1507,7 @@ def _ann_ingest_oracle() -> str:
     -- folds' mergeability gate. Meta (rows ingested, non-empty batches)
     -- is derivable from the index itself.
     WITH src AS (
-      SELECT vec_id, {_PQ_Q_SQL} AS q
+      SELECT vec_id, {pq.Q_SQL} AS q
       FROM embeddings
       WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
         AND len(embedding) = 64
@@ -1527,7 +1519,7 @@ def _ann_ingest_oracle() -> str:
     seeds AS (
       SELECT vec_id AS seed_id, q AS sq FROM (
         SELECT vec_id, q FROM src
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {_IVFPQ_NCELLS}
+        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {pq.NCELLS}
       )
     ),
     probe AS (
@@ -1540,7 +1532,7 @@ def _ann_ingest_oracle() -> str:
       SELECT vec_id, cell FROM (
         SELECT s.vec_id, d.seed_id AS cell,
           ROW_NUMBER() OVER (PARTITION BY s.vec_id
-            ORDER BY {_PQ_FULLDIST_SQL.format(l="s.q", r="d.sq")}, d.seed_id
+            ORDER BY {pq.FULLDIST_SQL.format(l="s.q", r="d.sq")}, d.seed_id
           ) AS rn
         FROM src s CROSS JOIN seeds d
       ) t WHERE rn = 1
@@ -1549,7 +1541,7 @@ def _ann_ingest_oracle() -> str:
       SELECT cell FROM (
         SELECT d.seed_id AS cell,
           ROW_NUMBER() OVER (
-            ORDER BY {_PQ_FULLDIST_SQL.format(l="p.pq", r="d.sq")}, d.seed_id
+            ORDER BY {pq.FULLDIST_SQL.format(l="p.pq", r="d.sq")}, d.seed_id
           ) AS rn
         FROM seeds d CROSS JOIN probe p
       ) t WHERE rn <= 2
@@ -1558,13 +1550,13 @@ def _ann_ingest_oracle() -> str:
       SELECT vec_id, ss, cb_id FROM (
         SELECT s.vec_id, sub.ss, c.cb_id,
           ROW_NUMBER() OVER (PARTITION BY s.vec_id, sub.ss
-            ORDER BY {_pq_subdist_sql("s.q", "c.q")}, c.cb_id) AS rn
+            ORDER BY {pq.subdist_sql("s.q", "c.q")}, c.cb_id) AS rn
         FROM src s CROSS JOIN cb c CROSS JOIN sub
       ) t WHERE rn = 1
     ),
     lut AS (
       SELECT c.cb_id, sub.ss,
-        {_pq_subdist_sql("c.q", "p.pq")} AS pd
+        {pq.subdist_sql("c.q", "p.pq")} AS pd
       FROM cb c CROSS JOIN probe p CROSS JOIN sub
     ),
     adc AS (
@@ -1641,34 +1633,20 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         last_txn_id,
         read_snapshot,
     )
-    from .queries_pipeline import (
-        _EMBED_DIM,
-        _IVFPQ_CODES_SCHEMA,
-        _ivfpq_cb,
-        _ivfpq_encode,
-        _ivfpq_query_phase,
-        _ivfpq_quantize,
-        _ivfpq_seeds,
-    )
 
-    e = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id").isNotNull()
-        & F.col("embedding").isNotNull()
-        & (F.size("embedding") == _EMBED_DIM)
-    )
-    q = _ivfpq_quantize(e)
+    q = pq.corpus(load_table(spark, sf_dir, "embeddings"))
     # the index CONFIGURATION (codebook + seeds) is fixed before ingest
     # begins, the way a real pipeline pins its trained quantizers; lazy
     # localCheckpoint executes each derivation ONCE — every micro-batch
     # and the final probe then encode/route against the same 16+32
     # materialized rows instead of re-scanning the corpus per batch
-    cb = _ivfpq_cb(q).localCheckpoint(eager=False)
-    seeds = _ivfpq_seeds(q).localCheckpoint(eager=False)
+    cb = pq.codebook(q).localCheckpoint(eager=False)
+    seeds = pq.cell_seeds(q).localCheckpoint(eager=False)
 
     # three deterministic ingest batches by key residue (embeddings
     # carry no timestamp); quantization is row-local so the replay
     # streams the quantized columns directly
-    qcols = ["vec_id"] + [f"q{i}" for i in range(_EMBED_DIM)]
+    qcols = ["vec_id"] + [f"q{i}" for i in range(pq.EMBED_DIM)]
     parts = tuple(
         q.filter(F.pmod(F.col("vec_id"), F.lit(3)) == r).select(*qcols)
         for r in range(3)
@@ -1682,7 +1660,7 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         # foreachBatch runs on the driver: the checkpointed config frames
         # are same-session and usable directly — no per-batch re-read.
-        # Each batch is an ATOMIC snapshot commit (r13 verdict #3): a
+        # Each batch is an ATOMIC snapshot commit: a
         # probe never observes a half-written list (the manifest lands
         # after the data job), and the manifest's txn watermark makes
         # at-least-once replay EXACTLY-ONCE — a retried batch_id finds
@@ -1698,7 +1676,7 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         if done is not None and batch_id <= done:
             return
         commit_snapshot(
-            _ivfpq_encode(batch_df, cb, seeds),
+            pq.encode(batch_df, cb, seeds),
             codes_dir,
             mode="append",
             partition_by=["cell"],
@@ -1721,7 +1699,7 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (path inference would make it INT and the reconciling cast costs
     # the routing join its DPP), and an empty-corpus version stays
     # readable
-    codes = read_snapshot(spark, codes_dir, schema=_IVFPQ_CODES_SCHEMA)
+    codes = read_snapshot(spark, codes_dir, schema=pq.CODES_SCHEMA)
     meta = codes.agg(
         F.count(F.lit(1)).alias("n_ingested"),
         F.count_distinct(F.pmod(F.col("vec_id"), F.lit(3))).alias("n_batches"),
@@ -1729,12 +1707,12 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the SERVING plan derives cb/seeds fresh (not the checkpointed
     # ingest config): dynamic partition pruning needs to clone the
     # routing join's build side into a pruning subquery, and an
-    # RDD-backed (localCheckpoint) build side blocks that — probed r13:
-    # the checkpointed seeds silently cost the codes scan its DPP.
+    # RDD-backed (localCheckpoint) build side blocks that: checkpointed
+    # seeds silently cost the codes scan its DPP.
     # Re-impose the rank order: the meta crossJoin does not preserve the
     # query phase's ORDER BY rn.
     return (
-        _ivfpq_query_phase(q, _ivfpq_cb(q), _ivfpq_seeds(q), codes)
+        pq.search(q, pq.codebook(q), codes, pq.cell_seeds(q))
         .crossJoin(F.broadcast(meta))
         .orderBy("rn")
     )

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from .operators import audit
 from .operators import dedup as dd
 from .operators import multimodal as mm
+from .operators import pq
 from .queries import query
 from .sources import load_table
 from .state import state_path
@@ -346,13 +347,13 @@ def similarity_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     flat = e.withColumn("nrm", F.sqrt(nrm2)).selectExpr(
         "vec_id",
         "nrm",
-        *[f"CAST(embedding[{i}] AS DOUBLE) AS e{i}" for i in range(_EMBED_DIM)],
+        *[f"CAST(embedding[{i}] AS DOUBLE) AS e{i}" for i in range(pq.EMBED_DIM)],
     )
     a = flat.alias("a").filter(F.col("vec_id") < 10)
     b = flat.alias("b")
     # parsed-string dot product: one py4j call instead of ~190 (the
     # r14 PQ driver-cost find; canonicalized plans identical)
-    dot = F.expr(" + ".join(f"a.e{i} * b.e{i}" for i in range(_EMBED_DIM)))
+    dot = F.expr(" + ".join(f"a.e{i} * b.e{i}" for i in range(pq.EMBED_DIM)))
     sim = F.round(dot / (F.col("a.nrm") * F.col("b.nrm")), 9)
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
@@ -568,14 +569,6 @@ def multimodal_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-#: fixed embedding dimensionality of the corpus (64 across every SF of the
-#: testdata). Training-data embedding columns are fixed-dim in practice;
-#: knowing the width statically lets the pair-dedup query unpack vectors
-#: into primitive columns so the dot product runs in whole-stage codegen.
-#: (constant lives in pq_common — a leaf module — so queries_ml's
-#: decoration-time oracle strings can import it without a cycle)
-from .pq_common import _EMBED_DIM  # noqa: E402
-
 #: unit-normalized embedding (shared Spark/DuckDB formula: double-cast
 #: elements divided by the left-fold L2 norm, so both engines produce
 #: bit-identical normalized values and the downstream dot products agree)
@@ -659,13 +652,13 @@ def dedup_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket",
             *[
                 f"CAST(embedding[{i}] AS DOUBLE) / norm AS n{i}"
-                for i in range(_EMBED_DIM)
+                for i in range(pq.EMBED_DIM)
             ],
         )
     )
     a, b = be.alias("a"), be.alias("b")
     # parsed-string dot product (r14 PQ driver-cost find)
-    dot = F.expr(" + ".join(f"a.n{i} * b.n{i}" for i in range(_EMBED_DIM)))
+    dot = F.expr(" + ".join(f"a.n{i} * b.n{i}" for i in range(pq.EMBED_DIM)))
     return (
         a.join(
             b,
@@ -1482,17 +1475,17 @@ def similarity_ivf_deterministic_seeds(spark: SparkSession, sf_dir: str) -> Data
     flat = e.withColumn("nrm", F.sqrt(nrm2)).selectExpr(
         "vec_id",
         "nrm",
-        *[f"CAST(embedding[{i}] AS DOUBLE) AS e{i}" for i in range(_EMBED_DIM)],
+        *[f"CAST(embedding[{i}] AS DOUBLE) AS e{i}" for i in range(pq.EMBED_DIM)],
     )
     seeds = flat.filter(F.col("vec_id") % 100 == 0).selectExpr(
         "vec_id AS seed_id",
         "nrm AS snrm",
-        *[f"e{i} AS s{i}" for i in range(_EMBED_DIM)],
+        *[f"e{i} AS s{i}" for i in range(pq.EMBED_DIM)],
     )
 
     def seed_cos():
         # parsed-string dot product (r14 PQ driver-cost find)
-        dot = F.expr(" + ".join(f"e{i} * s{i}" for i in range(_EMBED_DIM)))
+        dot = F.expr(" + ".join(f"e{i} * s{i}" for i in range(pq.EMBED_DIM)))
         return F.round(dot / (F.col("nrm") * F.col("snrm")), 9)
 
     scored = (
@@ -1519,7 +1512,7 @@ def similarity_ivf_deterministic_seeds(spark: SparkSession, sf_dir: str) -> Data
     a = flat.alias("a")
     b = flat.alias("b")
     # parsed-string dot product (r14 PQ driver-cost find)
-    dot = F.expr(" + ".join(f"a.e{i} * b.e{i}" for i in range(_EMBED_DIM)))
+    dot = F.expr(" + ".join(f"a.e{i} * b.e{i}" for i in range(pq.EMBED_DIM)))
     sim = F.round(dot / (F.col("a.nrm") * F.col("b.nrm")), 9)
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
@@ -1536,15 +1529,6 @@ def similarity_ivf_deterministic_seeds(spark: SparkSession, sf_dir: str) -> Data
     )
 
 
-# PQ constants + DuckDB oracle fragments live in pq_common (leaf module)
-from .pq_common import (  # noqa: E402
-    _PQ_SUB,
-    _PQ_SUBDIM,
-    _PQ_Q_SQL,
-    _pq_subdist_sql,
-)
-
-
 @query(
     "similarity_pq_adc_topk",
     f"""
@@ -1553,7 +1537,7 @@ from .pq_common import (  # noqa: E402
     -- 16-entry codebook (vec_id % 31 = 0, < 496 -- the IVF-seeds trick),
     -- codes = per-subspace argmin, ADC top-10 from codes + LUT only.
     WITH src AS (
-      SELECT vec_id, {_PQ_Q_SQL} AS q
+      SELECT vec_id, {pq.Q_SQL} AS q
       FROM embeddings
       WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
         AND len(embedding) = 64
@@ -1572,13 +1556,13 @@ from .pq_common import (  # noqa: E402
       SELECT vec_id, ss, cb_id FROM (
         SELECT s.vec_id, sub.ss, c.cb_id,
           ROW_NUMBER() OVER (PARTITION BY s.vec_id, sub.ss
-            ORDER BY {_pq_subdist_sql("s.q", "c.q")}, c.cb_id) AS rn
+            ORDER BY {pq.subdist_sql("s.q", "c.q")}, c.cb_id) AS rn
         FROM src s CROSS JOIN cb c CROSS JOIN sub
       ) t WHERE rn = 1
     ),
     lut AS (
       SELECT c.cb_id, sub.ss,
-        {_pq_subdist_sql("c.q", "p.pq")} AS pd
+        {pq.subdist_sql("c.q", "p.pq")} AS pd
       FROM cb c CROSS JOIN probe p CROSS JOIN sub
     ),
     adc AS (
@@ -1641,369 +1625,9 @@ def similarity_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived per-entity artifacts to the metatable
     (KijiFreshnessManager.java:235-239) — the codes table is that
     pattern for embeddings."""
-    import os
-
-    e = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id").isNotNull()
-        & F.col("embedding").isNotNull()
-        & (F.size("embedding") == _EMBED_DIM)
-    )
-    q = e.selectExpr(
-        "vec_id",
-        *[
-            f"CAST(ROUND(CAST(embedding[{i}] AS DOUBLE) * 100) AS BIGINT)"
-            f" AS q{i}"
-            for i in range(_EMBED_DIM)
-        ],
-    )
-    is_cb = (F.col("vec_id") % 31 == 0) & (F.col("vec_id") < 496)
-    # one parsed projection (r15 — see similarity_cosine_topk)
-    cb = q.filter(is_cb).selectExpr(
-        "vec_id AS cb_id",
-        *[f"q{i} AS cq{i}" for i in range(_EMBED_DIM)],
-    )
-
-    def subdist(l_tpl: str, r_tpl: str, ss: int):
-        # parsed-string build (one py4j call) — see _sqdiff_sum_expr
-        return _sqdiff_sum_expr(
-            l_tpl, r_tpl, ss * _PQ_SUBDIM, (ss + 1) * _PQ_SUBDIM
-        )
-
-    path = state_path(sf_dir, "pq_codes_embeddings.parquet")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        enc = q.crossJoin(F.broadcast(cb))
-        (
-            enc.groupBy("vec_id")
-            .agg(
-                *[
-                    F.min_by(
-                        "cb_id", F.struct(subdist("q{}", "cq{}", s), F.col("cb_id"))
-                    ).alias(f"c{s}")
-                    for s in range(_PQ_SUB)
-                ]
-            )
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    codes = spark.read.parquet(path)
-
-    probe = (
-        q.filter(~is_cb)
-        .orderBy("vec_id")
-        .limit(1)
-        .selectExpr(
-            "vec_id AS probe_id",
-            *[f"q{i} AS pq{i}" for i in range(_EMBED_DIM)],
-        )
-    )
-    # The probe subtree (scan → sort → limit(1)) feeds both the LUT and
-    # the final exact join-back; lazy localCheckpoint shares one
-    # execution across consumers (the triangle_count pattern — persist/
-    # unpersist around a lazy plan is a no-op cache; see verify notes).
-    probe = probe.localCheckpoint(eager=False)
-    lut = cb.crossJoin(F.broadcast(probe)).select(
-        "cb_id",
-        "probe_id",
-        *[subdist("cq{}", "pq{}", s).alias(f"pd{s}") for s in range(_PQ_SUB)],
-    )
-    # Textbook ADC: the per-subspace LUT collapses into ONE broadcast row
-    # of maps (cb_id → partial distance) and the scan does pure map
-    # lookups — zero joins over the corpus, which is both the local win
-    # (one broadcast instead of eight join stages) and the real ADC
-    # implementation shape (a register-resident table indexed by code).
-    # try_element_at per the engine's ANSI convention; every code was
-    # produced from this codebook, so the lookup never actually misses.
-    lut_row = lut.groupBy().agg(
-        F.first("probe_id").alias("probe_id"),
-        *[
-            F.map_from_entries(
-                F.collect_list(F.struct("cb_id", f"pd{s}"))
-            ).alias(f"m{s}")
-            for s in range(_PQ_SUB)
-        ],
-    )
-    adc_dist = F.expr(
-        " + ".join(f"try_element_at(m{s}, c{s})" for s in range(_PQ_SUB))
-    )
-    top = (
-        codes.crossJoin(F.broadcast(lut_row))
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            adc_dist.alias("adc_dist"),
-        )
-        .orderBy("adc_dist", "neighbor_id")
-        .limit(10)
-        .withColumn(
-            "rn", F.row_number().over(Window.orderBy("adc_dist", "neighbor_id"))
-        )
-    )
-    exact = _sqdiff_sum_expr("q{}", "pq{}", 0, _EMBED_DIM)
-    return (
-        F.broadcast(top)
-        .join(q, F.col("vec_id") == F.col("neighbor_id"))
-        .crossJoin(F.broadcast(probe.drop("probe_id")))
-        .select("neighbor_id", "adc_dist", exact.alias("exact_dist"), "rn")
-        .orderBy("rn")
-    )
-
-
-# IVF-PQ cell count + full-vector distance fragment live in pq_common
-# (leaf module; see its docstrings for the seed-spread rationale)
-from .pq_common import _IVFPQ_NCELLS, _PQ_FULLDIST_SQL  # noqa: E402
-
-
-def _sqdiff_sum_expr(l_tpl: str, r_tpl: str, lo: int, hi: int):
-    """Exact BIGINT Σ (l_i - r_i)² over simple column names [lo, hi), as
-    ONE parsed SQL string. Column-object trees cost a py4j round-trip
-    per arithmetic node — ~200 calls for a 64-dim distance, measured
-    ~0.7 s of DRIVER time per expression at r14 — while F.expr parses
-    the identical AST (canonicalized analyzed plans equal, checked) in
-    one call. Templates must expand to plain identifiers."""
-    return F.expr(
-        " + ".join(
-            f"({l_tpl.format(i)} - {r_tpl.format(i)})"
-            f" * ({l_tpl.format(i)} - {r_tpl.format(i)})"
-            for i in range(lo, hi)
-        )
-    )
-
-
-def _ivfpq_subdist(l_tpl: str, r_tpl: str, ss: int):
-    """Exact BIGINT squared distance over one PQ subspace's columns."""
-    return _sqdiff_sum_expr(
-        l_tpl, r_tpl, ss * _PQ_SUBDIM, (ss + 1) * _PQ_SUBDIM
-    )
-
-
-def _ivfpq_fulldist(l_tpl: str, r_tpl: str):
-    """Exact BIGINT squared distance over all 64 quantized columns."""
-    return _sqdiff_sum_expr(l_tpl, r_tpl, 0, _EMBED_DIM)
-
-
-def _ivfpq_quantize(e: DataFrame) -> DataFrame:
-    """(vec_id, q0..q63): the int8-style round(x*100) BIGINT quantization.
-    selectExpr (SQL bracket indexing is 0-based, same as getItem) keeps
-    the 64-column projection a single parse instead of ~260 py4j
-    Column-op round-trips — identical analyzed plan."""
-    return e.selectExpr(
-        "vec_id",
-        *[
-            f"CAST(ROUND(CAST(embedding[{i}] AS DOUBLE) * 100) AS BIGINT)"
-            f" AS q{i}"
-            for i in range(_EMBED_DIM)
-        ],
-    )
-
-
-def _ivfpq_is_cb():
-    # a function, not a module constant: Column construction needs an
-    # active SparkContext, which import time does not guarantee
-    return (F.col("vec_id") % 31 == 0) & (F.col("vec_id") < 496)
-
-
-def _ivfpq_cb(q: DataFrame) -> DataFrame:
-    """The deterministic 16-entry PQ codebook (similarity_pq_adc_topk's).
-    One parsed projection — 64 aliased Column objects cost ~0.3 s of
-    driver py4j per build (profiled r15), selectExpr parses the
-    identical plan in one call."""
-    return q.filter(_ivfpq_is_cb()).selectExpr(
-        "vec_id AS cb_id",
-        *[f"q{i} AS cq{i}" for i in range(_EMBED_DIM)],
-    )
-
-
-def _ivfpq_seeds(q: DataFrame) -> DataFrame:
-    """The <=32 coarse-cell seeds: smallest md5(vec_id) — id-space-uniform
-    (replicated-tier id remaps can't collapse the set), TakeOrdered."""
-    return (
-        q.withColumn("sh", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("sh", "vec_id")
-        .limit(_IVFPQ_NCELLS)
-        .selectExpr(
-            "vec_id AS seed_id",
-            *[f"q{i} AS sq{i}" for i in range(_EMBED_DIM)],
-        )
-    )
-
-
-def _ivfpq_encode(q: DataFrame, cb: DataFrame, seeds: DataFrame) -> DataFrame:
-    """(vec_id, c0..c7, cell): per-subspace argmin codes against the 16-row
-    codebook + full-vector argmin cell against the <=32 seeds, in ONE
-    broadcast crossJoin + ONE map-side-partial aggregation. The codebook
-    and seed rows ride the same <=48-row broadcast, tagged; each argmin's
-    ordering key sends the other tag's rows to +inf, so codebook rows can
-    never win the cell and seed rows can never win a code — identical
-    output to the two-pass formulation, one shuffle and no join fewer
-    (the r13 profile put ~1.2 s of a micro-batch's encode in that extra
-    job machinery)."""
-    big = F.lit(1 << 62).cast("long")
-    # parsed projections (r15 — see _ivfpq_cb)
-    both = cb.selectExpr(
-        "TRUE AS is_cb",
-        "cb_id AS rid",
-        *[f"cq{i} AS r{i}" for i in range(_EMBED_DIM)],
-    ).unionByName(
-        seeds.selectExpr(
-            "FALSE AS is_cb",
-            "seed_id AS rid",
-            *[f"sq{i} AS r{i}" for i in range(_EMBED_DIM)],
-        )
-    )
-
-    def only(tag_is_cb: bool, expr):
-        cond = F.col("is_cb") if tag_is_cb else ~F.col("is_cb")
-        return F.when(cond, expr).otherwise(big)
-
-    return (
-        q.crossJoin(F.broadcast(both))
-        .groupBy("vec_id")
-        .agg(
-            *[
-                F.min_by(
-                    "rid",
-                    F.struct(
-                        only(True, _ivfpq_subdist("q{}", "r{}", s)),
-                        only(True, F.col("rid")),
-                    ),
-                ).alias(f"c{s}")
-                for s in range(_PQ_SUB)
-            ],
-            F.min_by(
-                "rid",
-                F.struct(
-                    only(False, _ivfpq_fulldist("q{}", "r{}")),
-                    only(False, F.col("rid")),
-                ),
-            ).alias("cell"),
-        )
-    )
-
-
-_IVFPQ_CODES_SCHEMA = (
-    "vec_id long, "
-    + ", ".join(f"c{s} long" for s in range(_PQ_SUB))
-    + ", cell long"
-)
-
-
-def _ivfpq_probe_of(q: DataFrame) -> DataFrame:
-    """The deterministic probe row (first non-codebook vec_id), lazily
-    checkpointed so every consumer of one probe frame shares a single
-    corpus TakeOrdered execution."""
-    return (
-        q.filter(~_ivfpq_is_cb())
-        .orderBy("vec_id")
-        .limit(1)
-        .selectExpr(
-            "vec_id AS probe_id",
-            *[f"q{i} AS pq{i}" for i in range(_EMBED_DIM)],
-        )
-    ).localCheckpoint(eager=False)
-
-
-def _ivfpq_rank_phase(
-    q: DataFrame,
-    cb: DataFrame,
-    seeds: DataFrame,
-    codes: DataFrame,
-    probe: DataFrame,
-) -> DataFrame:
-    """The DPP-pruned ADC top-10 over a (vec_id, c0..c7, cell) codes table
-    WITHOUT the exact join-back: route the probe to its 2 nearest cells
-    (the routing join keys on the partition column, so dynamic partition
-    pruning reads only those cells' directories), ADC-rank via ONE
-    broadcast LUT row of maps, TakeOrdered(10). Returns (neighbor_id,
-    cell, adc_dist, rn). Split from the join-back (r16) so multi-version
-    callers can union several versions' tops and attach exact distances
-    with ONE corpus scan instead of one per version."""
-    pcells = (
-        seeds.crossJoin(F.broadcast(probe))
-        .select(
-            F.col("seed_id").alias("cell"),
-            _ivfpq_fulldist("sq{}", "pq{}").alias("sd"),
-        )
-        .orderBy("sd", "cell")
-        .limit(2)
-        .select("cell")
-    )
-    cand = codes.join(F.broadcast(pcells), "cell")
-    lut = cb.crossJoin(F.broadcast(probe)).select(
-        "cb_id",
-        "probe_id",
-        *[_ivfpq_subdist("cq{}", "pq{}", s).alias(f"pd{s}") for s in range(_PQ_SUB)],
-    )
-    lut_row = lut.groupBy().agg(
-        F.first("probe_id").alias("probe_id"),
-        *[
-            F.map_from_entries(
-                F.collect_list(F.struct("cb_id", f"pd{s}"))
-            ).alias(f"m{s}")
-            for s in range(_PQ_SUB)
-        ],
-    )
-    adc_dist = F.expr(
-        " + ".join(f"try_element_at(m{s}, c{s})" for s in range(_PQ_SUB))
-    )
-    return (
-        cand.crossJoin(F.broadcast(lut_row))
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            "cell",
-            adc_dist.alias("adc_dist"),
-        )
-        .orderBy("adc_dist", "neighbor_id")
-        .limit(10)
-        .withColumn(
-            "rn", F.row_number().over(Window.orderBy("adc_dist", "neighbor_id"))
-        )
-    )
-
-
-def _ivfpq_attach_exact(
-    q: DataFrame, probe: DataFrame, tops: DataFrame, lead_cols: list[str] = ()
-) -> DataFrame:
-    """Attach the winners' exact quantized distances by a broadcast
-    join-back against the corpus — ONE scan of ``q`` however many ranked
-    phases were unioned into ``tops``. ``lead_cols`` are pass-through
-    tag columns (e.g. probe_version) emitted ahead of the ranking."""
-    exact = _sqdiff_sum_expr("q{}", "pq{}", 0, _EMBED_DIM)
-    return (
-        F.broadcast(tops)
-        .join(q, F.col("vec_id") == F.col("neighbor_id"))
-        .crossJoin(F.broadcast(probe.drop("probe_id")))
-        .select(
-            *lead_cols,
-            "neighbor_id",
-            "cell",
-            "adc_dist",
-            exact.alias("exact_dist"),
-            "rn",
-        )
-        .orderBy("rn")
-    )
-
-
-def _ivfpq_query_phase(
-    q: DataFrame,
-    cb: DataFrame,
-    seeds: DataFrame,
-    codes: DataFrame,
-    probe: DataFrame | None = None,
-) -> DataFrame:
-    """Rank one codes version and attach exact distances (see
-    _ivfpq_rank_phase / _ivfpq_attach_exact).
-
-    ``probe`` may be passed in by callers that rank more than one codes
-    version (time travel, delete rewrite, rebalance): the probe row is
-    version-independent, so sharing one lazily-checkpointed frame across
-    phases computes its corpus TakeOrdered once instead of per phase."""
-    if probe is None:
-        probe = _ivfpq_probe_of(q)
-    return _ivfpq_attach_exact(
-        q, probe, _ivfpq_rank_phase(q, cb, seeds, codes, probe)
-    )
+    q = pq.corpus(load_table(spark, sf_dir, "embeddings"))
+    cb = pq.codebook(q)
+    return pq.search(q, cb, pq.codes_table(spark, sf_dir, q, cb))
 
 
 @query(
@@ -2017,7 +1641,7 @@ def _ivfpq_query_phase(
     -- and per-subspace codes as similarity_pq_adc_topk; the query
     -- probes its 2 nearest cells and ADC-ranks ONLY their codes.
     WITH src AS (
-      SELECT vec_id, {_PQ_Q_SQL} AS q
+      SELECT vec_id, {pq.Q_SQL} AS q
       FROM embeddings
       WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
         AND len(embedding) = 64
@@ -2029,7 +1653,7 @@ def _ivfpq_query_phase(
     seeds AS (
       SELECT vec_id AS seed_id, q AS sq FROM (
         SELECT vec_id, q FROM src
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {_IVFPQ_NCELLS}
+        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {pq.NCELLS}
       )
     ),
     probe AS (
@@ -2042,7 +1666,7 @@ def _ivfpq_query_phase(
       SELECT vec_id, cell FROM (
         SELECT s.vec_id, d.seed_id AS cell,
           ROW_NUMBER() OVER (PARTITION BY s.vec_id
-            ORDER BY {_PQ_FULLDIST_SQL.format(l="s.q", r="d.sq")}, d.seed_id
+            ORDER BY {pq.FULLDIST_SQL.format(l="s.q", r="d.sq")}, d.seed_id
           ) AS rn
         FROM src s CROSS JOIN seeds d
       ) t WHERE rn = 1
@@ -2051,7 +1675,7 @@ def _ivfpq_query_phase(
       SELECT cell FROM (
         SELECT d.seed_id AS cell,
           ROW_NUMBER() OVER (
-            ORDER BY {_PQ_FULLDIST_SQL.format(l="p.pq", r="d.sq")}, d.seed_id
+            ORDER BY {pq.FULLDIST_SQL.format(l="p.pq", r="d.sq")}, d.seed_id
           ) AS rn
         FROM seeds d CROSS JOIN probe p
       ) t WHERE rn <= 2
@@ -2060,13 +1684,13 @@ def _ivfpq_query_phase(
       SELECT vec_id, ss, cb_id FROM (
         SELECT s.vec_id, sub.ss, c.cb_id,
           ROW_NUMBER() OVER (PARTITION BY s.vec_id, sub.ss
-            ORDER BY {_pq_subdist_sql("s.q", "c.q")}, c.cb_id) AS rn
+            ORDER BY {pq.subdist_sql("s.q", "c.q")}, c.cb_id) AS rn
         FROM src s CROSS JOIN cb c CROSS JOIN sub
       ) t WHERE rn = 1
     ),
     lut AS (
       SELECT c.cb_id, sub.ss,
-        {_pq_subdist_sql("c.q", "p.pq")} AS pd
+        {pq.subdist_sql("c.q", "p.pq")} AS pd
       FROM cb c CROSS JOIN probe p CROSS JOIN sub
     ),
     adc AS (
@@ -2131,40 +1755,12 @@ def similarity_ivfpq_pruned_adc_topk(spark: SparkSession, sf_dir: str) -> DataFr
     the codes-with-cell table extends the persisted-metatable pattern
     (KijiFreshnessManager.java:235-239, mMetaTable.putValue) exactly as
     the PQ and sketch-shard stores do."""
-    e = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id").isNotNull()
-        & F.col("embedding").isNotNull()
-        & (F.size("embedding") == _EMBED_DIM)
-    )
-    q = _ivfpq_quantize(e)
-    cb = _ivfpq_cb(q)
-    seeds = _ivfpq_seeds(q)
-    codes = _ivfpq_codes_table(spark, sf_dir, q, cb, seeds)
-    return _ivfpq_query_phase(q, cb, seeds, codes)
+    q = pq.corpus(load_table(spark, sf_dir, "embeddings"))
+    cb, seeds = pq.codebook(q), pq.cell_seeds(q)
+    return pq.search(q, cb, pq.codes_table(spark, sf_dir, q, cb, seeds), seeds)
 
 
-def _ivfpq_codes_table(
-    spark: SparkSession, sf_dir: str, q: DataFrame, cb: DataFrame, seeds: DataFrame
-) -> DataFrame:
-    """The persisted cell-partitioned IVF-PQ codes table, built once per
-    dataset (encode is deterministic, so every caller sees the same
-    table whichever built it). Shared by the pruned-ADC probe and the
-    embedding-drift freshness policy (r13 verdict #4)."""
-    import os
-
-    path = state_path(sf_dir, "ivfpq_codes_embeddings.parquet")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _ivfpq_encode(q, cb, seeds).write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(path)
-    # explicit schema: (a) the hive partition column must read back as
-    # LONG, not the inferred INT of its path strings; (b) an EMPTY corpus
-    # writes a partitioned dir with no data files, which schema inference
-    # cannot read but an explicit schema can (empty scan)
-    return spark.read.schema(_IVFPQ_CODES_SCHEMA).parquet(path)
-
-
-def _ivfpq_snap_adc_cte_sql() -> str:
+def _ann_snap_adc_cte_sql() -> str:
     """The shared IVF-PQ oracle prelude (quantize → config → probe →
     assignment → routing → codes → LUT → per-candidate ADC distance),
     used by the snapshot-versioned index probes below. Identical math to
@@ -2173,7 +1769,7 @@ def _ivfpq_snap_adc_cte_sql() -> str:
     over the same `adc` relation."""
     return f"""
     WITH src AS (
-      SELECT vec_id, {_PQ_Q_SQL} AS q
+      SELECT vec_id, {pq.Q_SQL} AS q
       FROM embeddings
       WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
         AND len(embedding) = 64
@@ -2185,7 +1781,7 @@ def _ivfpq_snap_adc_cte_sql() -> str:
     seeds AS (
       SELECT vec_id AS seed_id, q AS sq FROM (
         SELECT vec_id, q FROM src
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {_IVFPQ_NCELLS}
+        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {pq.NCELLS}
       )
     ),
     probe AS (
@@ -2198,7 +1794,7 @@ def _ivfpq_snap_adc_cte_sql() -> str:
       SELECT vec_id, cell FROM (
         SELECT s.vec_id, d.seed_id AS cell,
           ROW_NUMBER() OVER (PARTITION BY s.vec_id
-            ORDER BY {_PQ_FULLDIST_SQL.format(l="s.q", r="d.sq")}, d.seed_id
+            ORDER BY {pq.FULLDIST_SQL.format(l="s.q", r="d.sq")}, d.seed_id
           ) AS rn
         FROM src s CROSS JOIN seeds d
       ) t WHERE rn = 1
@@ -2207,7 +1803,7 @@ def _ivfpq_snap_adc_cte_sql() -> str:
       SELECT cell FROM (
         SELECT d.seed_id AS cell,
           ROW_NUMBER() OVER (
-            ORDER BY {_PQ_FULLDIST_SQL.format(l="p.pq", r="d.sq")}, d.seed_id
+            ORDER BY {pq.FULLDIST_SQL.format(l="p.pq", r="d.sq")}, d.seed_id
           ) AS rn
         FROM seeds d CROSS JOIN probe p
       ) t WHERE rn <= 2
@@ -2216,13 +1812,13 @@ def _ivfpq_snap_adc_cte_sql() -> str:
       SELECT vec_id, ss, cb_id FROM (
         SELECT s.vec_id, sub.ss, c.cb_id,
           ROW_NUMBER() OVER (PARTITION BY s.vec_id, sub.ss
-            ORDER BY {_pq_subdist_sql("s.q", "c.q")}, c.cb_id) AS rn
+            ORDER BY {pq.subdist_sql("s.q", "c.q")}, c.cb_id) AS rn
         FROM src s CROSS JOIN cb c CROSS JOIN sub
       ) t WHERE rn = 1
     ),
     lut AS (
       SELECT c.cb_id, sub.ss,
-        {_pq_subdist_sql("c.q", "p.pq")} AS pd
+        {pq.subdist_sql("c.q", "p.pq")} AS pd
       FROM cb c CROSS JOIN probe p CROSS JOIN sub
     ),
     adc AS (
@@ -2238,13 +1834,10 @@ def _ivfpq_snap_adc_cte_sql() -> str:
     )"""
 
 
-_IVFPQ_SNAP_EXACT_SQL = (
-    "CAST(list_sum(list_transform(range(1, 65), i -> "
-    "(s.q[i] - p.pq[i]) * (s.q[i] - p.pq[i]))) AS BIGINT)"
-)
+_ANN_SNAP_EXACT_SQL = pq.FULLDIST_SQL.format(l="s.q", r="p.pq")
 
 
-def _ivfpq_snap_build_base(spark, path, q, cb, seeds) -> None:
+def _ann_snap_build_base(spark, path, q, cb, seeds) -> None:
     """Build the snapshot-versioned IVF-PQ lineage FROM SCRATCH: v1..v3
     append the three pmod(vec_id,3) ingest tranches' codes (encode runs
     once; the tranche filters slice one lazily-checkpointed frame), v4
@@ -2257,7 +1850,7 @@ def _ivfpq_snap_build_base(spark, path, q, cb, seeds) -> None:
     from .operators.snapshots import commit_snapshot, compact_snapshot
 
     shutil.rmtree(path, ignore_errors=True)
-    enc = _ivfpq_encode(q, cb, seeds).localCheckpoint(eager=False)
+    enc = pq.encode(q, cb, seeds).localCheckpoint(eager=False)
     for r in range(3):
         commit_snapshot(
             enc.filter(F.pmod(F.col("vec_id"), F.lit(3)) == r),
@@ -2268,18 +1861,18 @@ def _ivfpq_snap_build_base(spark, path, q, cb, seeds) -> None:
     compact_snapshot(spark, path, 8, partition_by=["cell"])
 
 
-def _ivfpq_snap_codes_at(spark, path, version: int) -> DataFrame:
+def _ann_snap_codes_at(spark, path, version: int) -> DataFrame:
     """Explicit-schema snapshot read of a codes version: `cell` keeps
     its declared LONG type (no path-inference cast), no footer-merge
     reads, and the single-dir post-compaction version stays DPP-able."""
     from .operators.snapshots import read_snapshot
 
-    return read_snapshot(spark, path, version, schema=_IVFPQ_CODES_SCHEMA)
+    return read_snapshot(spark, path, version, schema=pq.CODES_SCHEMA)
 
 
 @query(
     "ann_index_time_travel_probe",
-    _ivfpq_snap_adc_cte_sql()
+    _ann_snap_adc_cte_sql()
     + f""",
     top_v2 AS (
       SELECT neighbor_id, cell, adc_dist,
@@ -2296,12 +1889,12 @@ def _ivfpq_snap_codes_at(spark, path, version: int) -> DataFrame:
     -- the compaction-zero-effect proof: the oracle ranks the one-shot
     -- FULL corpus, so any row compaction lost or changed hash-fails.
     SELECT 'v2' AS probe_version, t.neighbor_id, t.cell, t.adc_dist,
-      {_IVFPQ_SNAP_EXACT_SQL} AS exact_dist, t.rn
+      {_ANN_SNAP_EXACT_SQL} AS exact_dist, t.rn
     FROM top_v2 t JOIN src s ON s.vec_id = t.neighbor_id CROSS JOIN probe p
     WHERE t.rn <= 10
     UNION ALL
     SELECT 'latest' AS probe_version, t.neighbor_id, t.cell, t.adc_dist,
-      {_IVFPQ_SNAP_EXACT_SQL} AS exact_dist, t.rn
+      {_ANN_SNAP_EXACT_SQL} AS exact_dist, t.rn
     FROM top_latest t JOIN src s ON s.vec_id = t.neighbor_id CROSS JOIN probe p
     WHERE t.rn <= 10
     ORDER BY probe_version DESC, rn
@@ -2342,53 +1935,46 @@ def ann_index_time_travel_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     from .operators.snapshots import latest_version
 
-    e = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id").isNotNull()
-        & F.col("embedding").isNotNull()
-        & (F.size("embedding") == _EMBED_DIM)
-    )
-    q = _ivfpq_quantize(e)
-    cb = _ivfpq_cb(q)
-    seeds = _ivfpq_seeds(q)
+    q = pq.corpus(load_table(spark, sf_dir, "embeddings"))
+    cb = pq.codebook(q)
+    seeds = pq.cell_seeds(q)
 
     path = state_path(sf_dir, "ivfpq_codes_snap")
     if (latest_version(path) or 0) < 4:
         # a complete lineage is v1..v3 appends + v4 compact; anything
         # less is a crashed prior build — rebuild deterministically
-        _ivfpq_snap_build_base(spark, path, q, cb, seeds)
+        _ann_snap_build_base(spark, path, q, cb, seeds)
 
     def codes_at(version: int) -> DataFrame:
-        return _ivfpq_snap_codes_at(spark, path, version)
+        return _ann_snap_codes_at(spark, path, version)
 
     # compaction's zero-logical-effect needs no third probe: the
     # oracle's latest block ranks the one-shot FULL corpus, so the
     # hash gate on the post-compaction (v4) probe IS the proof that the
     # rewrite lost/changed nothing (content equality across the rewrite
     # is additionally pinned by tests/test_snapshots.py's partitioned-
-    # compaction case). The ADC plan's ~4 s driver-side construction
-    # cost per probe (profiled r14) makes a redundant probe expensive.
-    # r15: the version-independent probe/codebook/seed frames are shared
-    # (lazy localCheckpoint) so the two phases execute their corpus
-    # TakeOrdered/filters once, not per version probed.
-    # r16: the phases rank WITHOUT the exact join-back, the tagged tops
-    # union, and ONE broadcast join-back attaches exact distances — one
-    # corpus scan per invocation instead of one per version probed.
+    # compaction case), so a third probe would only add its plan build
+    # and scan.
+    # The version-independent probe/codebook/seed frames are shared
+    # (lazy localCheckpoint) so the corpus TakeOrdered/filters run once;
+    # both versions rank WITHOUT the exact join-back, and one join-back
+    # over the tagged union attaches exact distances with one corpus scan.
     cb = cb.localCheckpoint(eager=False)
     seeds = seeds.localCheckpoint(eager=False)
-    probe = _ivfpq_probe_of(q)
-    t2 = _ivfpq_rank_phase(q, cb, seeds, codes_at(2), probe)
-    t4 = _ivfpq_rank_phase(q, cb, seeds, codes_at(4), probe)
+    probe = pq.probe_row(q)
+    t2 = pq.rank(codes_at(2), cb, probe, seeds)
+    t4 = pq.rank(codes_at(4), cb, probe, seeds)
     tops = t2.select(F.lit("v2").alias("probe_version"), "*").unionByName(
         t4.select(F.lit("latest").alias("probe_version"), "*")
     )
-    return _ivfpq_attach_exact(
-        q, probe, tops, lead_cols=["probe_version"]
-    ).orderBy(F.col("probe_version").desc(), "rn")
+    return pq.attach_exact(q, probe, tops).orderBy(
+        F.col("probe_version").desc(), "rn"
+    )
 
 
 @query(
     "ann_index_delete_rewrite",
-    _ivfpq_snap_adc_cte_sql()
+    _ann_snap_adc_cte_sql()
     + f""",
     top_full AS (
       SELECT neighbor_id, cell, adc_dist,
@@ -2404,13 +1990,13 @@ def ann_index_time_travel_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM adc WHERE neighbor_id NOT IN (SELECT neighbor_id FROM kill)
     )
     SELECT 'pre' AS phase, t.neighbor_id, t.cell, t.adc_dist,
-      {_IVFPQ_SNAP_EXACT_SQL} AS exact_dist, t.rn,
+      {_ANN_SNAP_EXACT_SQL} AS exact_dist, t.rn,
       TRUE AS deleted_absent
     FROM top_full t JOIN src s ON s.vec_id = t.neighbor_id CROSS JOIN probe p
     WHERE t.rn <= 10
     UNION ALL
     SELECT 'post' AS phase, t.neighbor_id, t.cell, t.adc_dist,
-      {_IVFPQ_SNAP_EXACT_SQL} AS exact_dist, t.rn,
+      {_ANN_SNAP_EXACT_SQL} AS exact_dist, t.rn,
       TRUE AS deleted_absent
     FROM top_post t JOIN src s ON s.vec_id = t.neighbor_id CROSS JOIN probe p
     WHERE t.rn <= 10
@@ -2453,27 +2039,22 @@ def ann_index_delete_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         replace_partitions,
     )
 
-    e = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id").isNotNull()
-        & F.col("embedding").isNotNull()
-        & (F.size("embedding") == _EMBED_DIM)
-    )
-    q = _ivfpq_quantize(e)
-    cb = _ivfpq_cb(q)
-    seeds = _ivfpq_seeds(q)
+    q = pq.corpus(load_table(spark, sf_dir, "embeddings"))
+    cb = pq.codebook(q)
+    seeds = pq.cell_seeds(q)
 
     path = state_path(sf_dir, "ivfpq_codes_snap_del")
 
     def codes_at(version: int) -> DataFrame:
-        return _ivfpq_snap_codes_at(spark, path, version)
+        return _ann_snap_codes_at(spark, path, version)
 
     if (latest_version(path) or 0) < 5:
         # complete lineage: v1..v3 tranche appends + v4 compact (the
         # shared base), then v5 delete
-        _ivfpq_snap_build_base(spark, path, q, cb, seeds)
+        _ann_snap_build_base(spark, path, q, cb, seeds)
         # kill = the live index's top-3: 3 rows cross the driver, once
         kills = (
-            _ivfpq_query_phase(q, cb, seeds, codes_at(4))
+            pq.search(q, cb, codes_at(4), seeds)
             .filter(F.col("rn") <= 3)
             .select("neighbor_id", "cell")
             .collect()
@@ -2498,23 +2079,16 @@ def ann_index_delete_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 partition_by=["cell"],
             )
 
-    # both probe results are consumed twice (output union; kill/absence
-    # checks) — lazy localCheckpoint executes each ONCE; the probe/cb/
-    # seed frames are shared across the two phases (r15 — see
-    # ann_index_time_travel_probe)
+    # the probe/cb/seed frames are shared across the two phases, as in
+    # ann_index_time_travel_probe. Each RANKED top is consumed twice
+    # (the output union and the kill/absence check), so lazy
+    # localCheckpoint runs each once; one join-back over the tagged
+    # union attaches exact distances.
     cb = cb.localCheckpoint(eager=False)
     seeds = seeds.localCheckpoint(eager=False)
-    probe = _ivfpq_probe_of(q)
-    # r16 (the time-travel probe's restructure): checkpoint the RANKED
-    # tops (each consumed twice — output union AND the kill/absence
-    # check), union them tagged, and attach exact distances with ONE
-    # corpus join-back instead of one per phase.
-    pre = _ivfpq_rank_phase(q, cb, seeds, codes_at(4), probe).localCheckpoint(
-        eager=False
-    )
-    post = _ivfpq_rank_phase(q, cb, seeds, codes_at(5), probe).localCheckpoint(
-        eager=False
-    )
+    probe = pq.probe_row(q)
+    pre = pq.rank(codes_at(4), cb, probe, seeds).localCheckpoint(eager=False)
+    post = pq.rank(codes_at(5), cb, probe, seeds).localCheckpoint(eager=False)
     killed = pre.filter(F.col("rn") <= 3).select(
         F.col("neighbor_id").alias("killed_id")
     )
@@ -2530,7 +2104,7 @@ def ann_index_delete_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         post.select(F.lit("post").alias("phase"), "*")
     )
     return (
-        _ivfpq_attach_exact(q, probe, tops, lead_cols=["phase"])
+        pq.attach_exact(q, probe, tops)
         .crossJoin(F.broadcast(absent))
         .orderBy(F.col("phase").desc(), "rn")
     )
@@ -2606,7 +2180,7 @@ def _ivf_rebalance_hot_cells(
     from .operators.snapshots import read_snapshot, replace_partitions
     from .operators.sketches import grouped_top_k
 
-    codes = read_snapshot(spark, path, schema=_IVFPQ_CODES_SCHEMA)
+    codes = read_snapshot(spark, path, schema=pq.CODES_SCHEMA)
     hot = [
         int(r.cell)
         for r in _ivf_cell_stats(codes).filter("is_hot").select("cell").collect()
@@ -2633,10 +2207,7 @@ def _ivf_rebalance_hot_cells(
         F.md5(F.col("vec_id").cast("string")),
     )
     reps = (
-        members.withColumn(
-            "__qarr",
-            F.expr("array(" + ",".join(f"q{i}" for i in range(_EMBED_DIM)) + ")"),
-        )
+        members.withColumn("__qarr", pq.vector("q"))
         .groupBy("cell", "__qarr")
         .agg(
             F.min_by("vec_id", rep_key).alias("sub_id"),
@@ -2658,25 +2229,25 @@ def _ivf_rebalance_hot_cells(
     ).selectExpr(
         "cell",
         "sub_id",
-        *[f"element_at(__qarr, {i + 1}) AS ssq{i}" for i in range(_EMBED_DIM)],
+        *[f"element_at(__qarr, {i + 1}) AS ssq{i}" for i in range(pq.EMBED_DIM)],
     )
-    dist = _ivfpq_fulldist("q{}", "ssq{}")
+    dist = pq.sqdist("q{}", "ssq{}")
     new_rows = (
         members.join(F.broadcast(subs), "cell")
         .groupBy("vec_id")
         .agg(
-            *[F.first(f"c{s}").alias(f"c{s}") for s in range(_PQ_SUB)],
+            *[F.first(f"c{s}").alias(f"c{s}") for s in range(pq.SUB)],
             F.min_by("sub_id", F.struct(dist, F.col("sub_id"))).alias("cell"),
         )
-        .select("vec_id", *[f"c{s}" for s in range(_PQ_SUB)], "cell")
+        .select("vec_id", *[f"c{s}" for s in range(pq.SUB)], "cell")
     )
     replace_partitions(new_rows, path, "cell", hot)
     return hot
 
 
 def _ivf_rebalance_oracle() -> str:
-    fulldist_seed = _PQ_FULLDIST_SQL.format(l="a.q", r="d.sq")
-    fulldist_sub = _PQ_FULLDIST_SQL.format(l="m.q", r="s2.ssq")
+    fulldist_seed = pq.FULLDIST_SQL.format(l="a.q", r="d.sq")
+    fulldist_sub = pq.FULLDIST_SQL.format(l="m.q", r="s2.ssq")
     return f"""
     -- IVF cell HEALTH, stated one-shot: assign the corpus plus a skew
     -- tranche (clones of the rank-1 seed's vector, jittered on dim 1)
@@ -2689,7 +2260,7 @@ def _ivf_rebalance_oracle() -> str:
     -- claim: every row false means no list exceeds the trigger after
     -- the split.
     WITH src AS (
-      SELECT vec_id, {_PQ_Q_SQL} AS q
+      SELECT vec_id, {pq.Q_SQL} AS q
       FROM embeddings
       WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
         AND len(embedding) = 64
@@ -2697,7 +2268,7 @@ def _ivf_rebalance_oracle() -> str:
     seeds AS (
       SELECT vec_id AS seed_id, q AS sq FROM (
         SELECT vec_id, q FROM src
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {_IVFPQ_NCELLS}
+        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {pq.NCELLS}
       )
     ),
     seed0 AS (
@@ -2864,18 +2435,13 @@ def ann_ivf_cell_rebalance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = state_path(sf_dir, "ivfpq_codes_rebalance")
     if (latest_version(path) or 0) < 3:
         # the whole encode preamble (quantize, codebook, seeds, the skew
-        # clones, their checkpoint analysis — ~1.2 s of driver build,
-        # profiled r16) is only needed when the lineage must be BUILT;
+        # clones, their checkpoint analysis — about a second of driver
+        # build) is only needed when the lineage must be BUILT;
         # the steady-state probe reads versions 2 and 3 from the
         # snapshot table alone
-        e = load_table(spark, sf_dir, "embeddings").filter(
-            F.col("vec_id").isNotNull()
-            & F.col("embedding").isNotNull()
-            & (F.size("embedding") == _EMBED_DIM)
-        )
-        q = _ivfpq_quantize(e)
-        cb = _ivfpq_cb(q)
-        seeds = _ivfpq_seeds(q)
+        q = pq.corpus(load_table(spark, sf_dir, "embeddings"))
+        cb = pq.codebook(q)
+        seeds = pq.cell_seeds(q)
         seed0 = (
             seeds.withColumn("__sh", F.md5(F.col("seed_id").cast("string")))
             .orderBy("__sh", "seed_id")
@@ -2889,12 +2455,12 @@ def ann_ivf_cell_rebalance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .selectExpr(
                 f"vec_id + {_IVF_CLONE_OFFSET}L AS vec_id",
                 "sq0 + pmod(vec_id, 5) AS q0",
-                *[f"sq{i} AS q{i}" for i in range(1, _EMBED_DIM)],
+                *[f"sq{i} AS q{i}" for i in range(1, pq.EMBED_DIM)],
             )
         )
         allv = q.unionByName(clone_q).localCheckpoint(eager=False)
         shutil.rmtree(path, ignore_errors=True)
-        enc = _ivfpq_encode(allv, cb, seeds).localCheckpoint(eager=False)
+        enc = pq.encode(allv, cb, seeds).localCheckpoint(eager=False)
         commit_snapshot(
             enc.filter(F.col("vec_id") < _IVF_CLONE_OFFSET),
             path,
@@ -2911,14 +2477,14 @@ def ann_ivf_cell_rebalance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             # degenerate corpus (empty regime): nothing hot — v3 is an
             # explicit empty append so the lineage shape is invariant
             commit_snapshot(
-                _ivfpq_snap_codes_at(spark, path, 2).limit(0),
+                _ann_snap_codes_at(spark, path, 2).limit(0),
                 path,
                 mode="append",
                 partition_by=["cell"],
             )
 
-    pre = _ivf_cell_stats(_ivfpq_snap_codes_at(spark, path, 2))
-    post = _ivf_cell_stats(_ivfpq_snap_codes_at(spark, path, 3))
+    pre = _ivf_cell_stats(_ann_snap_codes_at(spark, path, 2))
+    post = _ivf_cell_stats(_ann_snap_codes_at(spark, path, 3))
     return (
         pre.select(F.lit("pre").alias("phase"), "*")
         .unionByName(post.select(F.lit("post").alias("phase"), "*"))

@@ -79,6 +79,14 @@ def parse_column(column: str) -> tuple[str, str | None]:
     return column, None
 
 
+def flat_name(column: str) -> str:
+    """The table column a request name is stored in: 'family:qualifier'
+    is the flattened group-family column ``family_qualifier``; a bare
+    'family' (a map-type family) is its own column."""
+    fam, qual = parse_column(column)
+    return fam if qual is None else f"{fam}_{qual}"
+
+
 def _is_valid_class_name(name: str) -> bool:
     """Dotted-path identifier check (``KijiFreshnessManager.java:171-196``
     translated to Python identifier rules)."""
@@ -122,10 +130,6 @@ class TableLayout:
             f.name == f"{family}_{qualifier}" and not isinstance(f.dataType, MapType)
             for f in self.schema.fields
         )
-
-    def flat_name(self, column: str) -> str:
-        fam, qual = parse_column(column)
-        return fam if qual is None else f"{fam}_{qual}"
 
 
 class FreshenerRegistry:

@@ -43,9 +43,9 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 from pyspark.sql import functions as F  # noqa: E402
 
 from kiji_scoring_spark.queries import QUERIES  # noqa: E402
-from kiji_scoring_spark.queries_pipeline import (  # noqa: E402
-    _EMBED_DIM,
-    _IVFPQ_NCELLS,
+from kiji_scoring_spark.operators.pq import (  # noqa: E402
+    EMBED_DIM as _EMBED_DIM,
+    NCELLS as _IVFPQ_NCELLS,
 )
 from kiji_scoring_spark.session import get_spark  # noqa: E402
 from kiji_scoring_spark.sources import load_table  # noqa: E402

@@ -40,7 +40,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 from pyspark.sql import functions as F  # noqa: E402
 
 from kiji_scoring_spark.queries import QUERIES  # noqa: E402
-from kiji_scoring_spark.queries_pipeline import _EMBED_DIM  # noqa: E402
+from kiji_scoring_spark.operators.pq import EMBED_DIM as _EMBED_DIM  # noqa: E402
 from kiji_scoring_spark.session import get_spark  # noqa: E402
 from kiji_scoring_spark.sources import load_table  # noqa: E402
 

@@ -174,9 +174,22 @@ class SlowPandasProducer(PandasProducer):
         )
 
 
-def test_timeout_returns_stale(spark):
+def test_timeout_returns_stale(spark, monkeypatch):
     """A10 batch redefinition: budget expires → original (stale) table
     comes back, like InternalFreshKijiTableReader.java:686-724."""
+    from kiji_scoring_spark import fresh as fresh_mod
+
+    drains = []
+    drain = fresh_mod._drain_job_group
+
+    def timed_drain(*args, **kwargs):
+        start = time.monotonic()
+        try:
+            return drain(*args, **kwargs)
+        finally:
+            drains.append(time.monotonic() - start)
+
+    monkeypatch.setattr(fresh_mod, "_drain_job_group", timed_drain)
     df = user_counter_df(spark)
     reader = make_reader(
         spark, df, "info:visits", AlwaysFreshen(), "",
@@ -184,11 +197,14 @@ def test_timeout_returns_stale(spark):
     )
     t0 = time.monotonic()
     out, fresh = reader.freshen_with_timeout(NOW_MS, timeout_ms=3000)
-    # budget 3 s + monitor-kill latency (spark.python.task.killTimeout 2 s)
-    # + the r16 drain barrier; 15 s bounds a near-worst-case regression in
-    # cancellation promptness (ADVICE r15 — the old 25 s bound was loose
-    # enough for a regression to pass unseen)
-    assert time.monotonic() - t0 < 15
+    elapsed = time.monotonic() - t0
+    # the cancelled group is drained once, within the drain's own 15 s
+    # deadline (plus one status poll)
+    assert len(drains) == 1
+    assert drains[0] < 16
+    # promptness outside the drain: budget 3 s + at most 5 s joining the
+    # cancelled thread, with 4 s for capsule compile and the cancel call
+    assert elapsed - drains[0] < 12
     assert fresh is False
     assert visits(out) == {"foo": 10, "bar": 100, "felix": None}  # stale values
 

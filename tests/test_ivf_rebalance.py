@@ -10,22 +10,24 @@ import pytest
 from pyspark.sql import functions as F
 
 import kiji_scoring_spark.queries  # noqa: F401 — loads the registry chain first
+from kiji_scoring_spark.operators.pq import (
+    CODES_SCHEMA as _IVFPQ_CODES_SCHEMA,
+    EMBED_DIM as _EMBED_DIM,
+    cell_seeds as _ivfpq_seeds,
+    codebook as _ivfpq_cb,
+    corpus as _ivfpq_quantize,
+    encode as _ivfpq_encode,
+    sqdist as _ivfpq_fulldist,
+)
 from kiji_scoring_spark.operators.snapshots import (
     commit_snapshot,
     latest_version,
     read_snapshot,
 )
 from kiji_scoring_spark.queries_pipeline import (
-    _EMBED_DIM,
     _IVF_CLONE_OFFSET,
-    _IVFPQ_CODES_SCHEMA,
     _ivf_cell_stats,
     _ivf_rebalance_hot_cells,
-    _ivfpq_cb,
-    _ivfpq_encode,
-    _ivfpq_fulldist,
-    _ivfpq_quantize,
-    _ivfpq_seeds,
 )
 from kiji_scoring_spark.sources import load_table
 

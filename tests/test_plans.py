@@ -699,10 +699,10 @@ def test_sketch_state_builds_have_no_single_task_population_sort(spark, sf_dir):
         win_idx = [
             i for i, l in enumerate(lines) if re.search(r"\bWindow \[row_number", l)
         ]
-        # a build consumed twice (Misra-Gries' ck1 + kept branches)
-        # duplicates the whole subtree: windows come in (outer, inner)
-        # pairs, outer (final, group-only) printed above its inner
-        # (sliced, full-population) one
+        # each grouped_top_k rank is an (outer, inner) pair of windows:
+        # the final, group-only one printed above its sliced,
+        # full-population stage 1. A plan holding the ranked subtree
+        # more than once shows one pair per copy.
         group_wins = [i for i in win_idx if "_slice" not in lines[i]]
         slice_wins = [i for i in win_idx if "_slice" in lines[i]]
         assert group_wins and len(group_wins) == len(slice_wins), (
