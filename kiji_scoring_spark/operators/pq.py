@@ -55,15 +55,10 @@ CODES_SCHEMA = (
 _PQ_CODES_SCHEMA = "vec_id long, " + ", ".join(f"c{s} long" for s in range(SUB))
 
 # ---------------------------------------------------------------------------
-# DuckDB oracle fragments. All arithmetic is BIGINT, so both engines agree
-# at any magnitude.
+# DuckDB oracle fragments: the same algorithm as the Spark builders below,
+# stated in SQL. All arithmetic is BIGINT, so both engines agree at any
+# magnitude. An oracle composes ``with_sql`` and adds its own tail.
 # ---------------------------------------------------------------------------
-
-#: the quantized vector q = round(x * 100) of a row's ``embedding``
-Q_SQL = (
-    "list_transform(range(1, 65), i -> "
-    "CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 100) AS BIGINT))"
-)
 
 #: squared distance between two quantized lists ``{l}`` and ``{r}``
 FULLDIST_SQL = (
@@ -80,6 +75,113 @@ def subdist_sql(left: str, right: str) -> str:
         f"({left}[sub.ss*8 + i] - {right}[sub.ss*8 + i]) * "
         f"({left}[sub.ss*8 + i] - {right}[sub.ss*8 + i]))) AS BIGINT)"
     )
+
+
+#: the oracle CTE bodies, one per stage of the Spark build: ``src`` is
+#: ``corpus`` (q = round(x * 100) of each ``embedding``), ``cb``
+#: ``codebook``, ``seeds`` ``cell_seeds``, ``probe`` ``probe_row``,
+#: ``sub`` the subspace ids, ``asg`` the IVF cell of every vector,
+#: ``pcells`` the probe's 2 routed cells, ``codes`` the PQ encode (one
+#: row per vector and subspace), ``lut`` the probe's per-subspace partial
+#: distances. ``adc`` (built in ``with_sql``) is ``rank`` before its
+#: top-10.
+_CTE_SQL = {
+    "src": """
+      SELECT vec_id, list_transform(range(1, 65), i ->
+        CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 100) AS BIGINT)) AS q
+      FROM embeddings
+      WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
+        AND len(embedding) = 64
+    """,
+    "cb": """
+      SELECT vec_id AS cb_id, q FROM src
+      WHERE vec_id % 31 = 0 AND vec_id < 496
+    """,
+    "seeds": f"""
+      SELECT vec_id AS seed_id, q AS sq FROM (
+        SELECT vec_id, q FROM src
+        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {NCELLS}
+      )
+    """,
+    "probe": """
+      SELECT vec_id AS probe_id, q AS pq FROM src
+      WHERE NOT (vec_id % 31 = 0 AND vec_id < 496)
+      ORDER BY vec_id LIMIT 1
+    """,
+    "sub": "SELECT unnest(range(0, 8)) AS ss",
+    "asg": f"""
+      SELECT vec_id, cell FROM (
+        SELECT s.vec_id, d.seed_id AS cell,
+          ROW_NUMBER() OVER (PARTITION BY s.vec_id
+            ORDER BY {FULLDIST_SQL.format(l="s.q", r="d.sq")}, d.seed_id
+          ) AS rn
+        FROM src s CROSS JOIN seeds d
+      ) t WHERE rn = 1
+    """,
+    "pcells": f"""
+      SELECT cell FROM (
+        SELECT d.seed_id AS cell,
+          ROW_NUMBER() OVER (
+            ORDER BY {FULLDIST_SQL.format(l="p.pq", r="d.sq")}, d.seed_id
+          ) AS rn
+        FROM seeds d CROSS JOIN probe p
+      ) t WHERE rn <= 2
+    """,
+    "codes": f"""
+      SELECT vec_id, ss, cb_id FROM (
+        SELECT s.vec_id, sub.ss, c.cb_id,
+          ROW_NUMBER() OVER (PARTITION BY s.vec_id, sub.ss
+            ORDER BY {subdist_sql("s.q", "c.q")}, c.cb_id) AS rn
+        FROM src s CROSS JOIN cb c CROSS JOIN sub
+      ) t WHERE rn = 1
+    """,
+    "lut": f"""
+      SELECT c.cb_id, sub.ss,
+        {subdist_sql("c.q", "p.pq")} AS pd
+      FROM cb c CROSS JOIN probe p CROSS JOIN sub
+    """,
+}
+
+#: every CTE the cell-routed (``ivf``) ``adc`` reads, in dependency order
+IVFPQ_CTES = (
+    "src", "cb", "seeds", "probe", "sub", "asg", "pcells", "codes", "lut", "adc"
+)
+
+
+def with_sql(*ctes: str, ivf: bool = False) -> str:
+    """The ``WITH`` clause defining the named oracle CTEs, in the order
+    given; a caller appends its own CTEs after a comma.
+
+    ``adc`` is (neighbor_id, adc_dist): every vector but the probe with
+    its ADC distance, the sum of its codes' ``lut`` entries. With ``ivf``
+    it is the IVF-PQ form: it ranges only over the vectors whose ``asg``
+    cell is in ``pcells``, and carries that ``cell``."""
+    cell = ", a.cell" if ivf else ""
+    route = (
+        "JOIN asg a ON a.vec_id = codes.vec_id\n"
+        "      JOIN pcells pc ON pc.cell = a.cell\n      "
+        if ivf
+        else ""
+    )
+    adc = f"""
+      SELECT codes.vec_id AS neighbor_id{cell},
+        CAST(SUM(lut.pd) AS BIGINT) AS adc_dist
+      FROM codes
+      {route}JOIN lut ON codes.ss = lut.ss AND codes.cb_id = lut.cb_id
+      CROSS JOIN probe
+      WHERE codes.vec_id <> probe.probe_id
+      GROUP BY codes.vec_id{cell}
+    """
+    bodies = {**_CTE_SQL, "adc": adc}
+    return "WITH " + ",\n    ".join(f"{name} AS ({bodies[name]})" for name in ctes)
+
+
+#: the exact join-back, ``attach_exact``: a ranked winner ``t`` (with its
+#: ``neighbor_id``) bound to its corpus row ``s`` and to the probe ``p``
+JOIN_BACK_SQL = "JOIN src s ON s.vec_id = t.neighbor_id CROSS JOIN probe p"
+
+#: the winner's exact quantized distance to the probe, over JOIN_BACK_SQL
+EXACT_DIST_SQL = FULLDIST_SQL.format(l="s.q", r="p.pq") + " AS exact_dist"
 
 
 # ---------------------------------------------------------------------------

@@ -33,6 +33,13 @@ DAY_MS = 86_400_000
 
 _EPOCH_MS = "CAST(epoch_ms(ts) AS BIGINT)"
 
+#: oracle fragment: each group's newest ``value`` (ts order, ties to the
+#: larger event_id). The engine's newest-cell read returns the newest
+#: cell even when its payload is NULL (a put of a null value is still
+#: the newest version), but max_by skips NULL values; wrapping the value
+#: in a struct makes max_by null-preserving.
+_NEWEST_VALUE = f"max_by({{'v': value}}, {_EPOCH_MS} * 1000000 + event_id).v"
+
 
 def versioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events → versioned-cell table: (user_id, value_versions) with the
@@ -179,12 +186,6 @@ def freshness_newer_than_partition(spark: SparkSession, sf_dir: str) -> DataFram
 
 @query(
     "fresh_batch_scoring",
-    # ORACLE NULL CONVENTION: max_by skips NULL values, but the engine's
-    # newest-cell read returns the newest cell even when its payload is
-    # NULL (a put of a null value is still the newest version). Wrapping
-    # in a struct -- max_by(struct(value), ord).v -- makes max_by
-    # null-preserving, aligning the oracles with versioned-cell reads.
-    # (Braces doubled below: the oracle is an f-string.)
     f"""
     SELECT user_id, score_ts, score FROM (
       SELECT user_id,
@@ -192,8 +193,8 @@ def freshness_newer_than_partition(spark: SparkSession, sf_dir: str) -> DataFram
              THEN max({_EPOCH_MS})
              ELSE {AS_OF_MS} END AS score_ts,
         CASE WHEN {AS_OF_MS} - max({_EPOCH_MS}) <= {5 * DAY_MS}
-             THEN max_by({{'v': value}}, CAST(epoch_ms(ts) AS BIGINT) * 1000000 + event_id).v
-             ELSE max_by({{'v': value}}, CAST(epoch_ms(ts) AS BIGINT) * 1000000 + event_id).v * 2 END AS score
+             THEN {_NEWEST_VALUE}
+             ELSE {_NEWEST_VALUE} * 2 END AS score
       FROM events GROUP BY user_id
     ) t ORDER BY user_id
     """,
@@ -246,7 +247,7 @@ A6_AS_OF_MS = 1_706_745_600_000
              ELSE newest_value * 2 END AS score
       FROM (
         SELECT user_id, max({_EPOCH_MS}) AS newest_ts,
-               max_by({{'v': value}}, CAST(epoch_ms(ts) AS BIGINT) * 1000000 + event_id).v AS newest_value
+               {_NEWEST_VALUE} AS newest_value
         FROM events GROUP BY user_id) t
     ) ORDER BY user_id
     """,
@@ -295,8 +296,8 @@ def fresh_a6_policy_own_request(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT user_id, score FROM (
       SELECT user_id,
         CASE WHEN {AS_OF_MS} - max({_EPOCH_MS}) <= {5 * DAY_MS}
-             THEN max_by({{'v': value}}, CAST(epoch_ms(ts) AS BIGINT) * 1000000 + event_id).v
-             ELSE max_by({{'v': value}}, CAST(epoch_ms(ts) AS BIGINT) * 1000000 + event_id).v
+             THEN {_NEWEST_VALUE}
+             ELSE {_NEWEST_VALUE}
                   * (2 + user_id % 5) END AS score
       FROM events GROUP BY user_id
     ) t ORDER BY user_id
@@ -375,8 +376,8 @@ def fresh_a9_kv_masked_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT user_id, score FROM (
       SELECT user_id,
         CASE WHEN {AS_OF_MS} - max({_EPOCH_MS}) <= {5 * DAY_MS}
-             THEN max_by({{'v': value}}, CAST(epoch_ms(ts) AS BIGINT) * 1000000 + event_id).v
-             ELSE max_by({{'v': value}}, CAST(epoch_ms(ts) AS BIGINT) * 1000000 + event_id).v * 2 END AS score
+             THEN {_NEWEST_VALUE}
+             ELSE {_NEWEST_VALUE} * 2 END AS score
       FROM events GROUP BY user_id
     ) t WHERE user_id IN (1, 2, 3, 5, 8, 13, 21, 34)
     ORDER BY user_id
@@ -414,7 +415,7 @@ AS_OF2_MS = AS_OF_MS + DAY_MS
     f"""
     WITH s AS (
       SELECT user_id, max({_EPOCH_MS}) AS newest_ts,
-        max_by({{'v': value}}, CAST(epoch_ms(ts) AS BIGINT) * 1000000 + event_id).v
+        {_NEWEST_VALUE}
           AS newest_value
       FROM events GROUP BY user_id
     ), v1 AS (
@@ -806,25 +807,7 @@ def _drift_oracle() -> str:
     -- with pmod(vec_id,5)=0 drifted: every dim shifted +10000), and
     -- CASE on tau: fresh keeps the seed score cell, stale is rescored
     -- to the drift at the freshen clock.
-    WITH src AS (
-      SELECT vec_id, {pq.Q_SQL} AS q
-      FROM embeddings
-      WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-        AND len(embedding) = 64
-    ),
-    cb AS (
-      SELECT vec_id AS cb_id, q FROM src
-      WHERE vec_id % 31 = 0 AND vec_id < 496
-    ),
-    sub AS (SELECT unnest(range(0, 8)) AS ss),
-    codes AS (
-      SELECT vec_id, ss, cb_id FROM (
-        SELECT s.vec_id, sub.ss, c.cb_id,
-          ROW_NUMBER() OVER (PARTITION BY s.vec_id, sub.ss
-            ORDER BY {pq.subdist_sql("s.q", "c.q")}, c.cb_id) AS rn
-        FROM src s CROSS JOIN cb c CROSS JOIN sub
-      ) t WHERE rn = 1
-    ),
+    {pq.with_sql("src", "cb", "sub", "codes")},
     cur AS (
       SELECT vec_id,
         CASE WHEN ((vec_id % 5) + 5) % 5 = 0
@@ -853,7 +836,7 @@ def _drift_oracle() -> str:
     "kiji", "freshness", "scoring", "similarity",
 )
 def fresh_embedding_drift_rescoring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.G composed into A5+A7 (r13 verdict #4): the freshness policy's
+    """§2.G composed into A5+A7: the freshness policy's
     staleness predicate is EMBEDDING DRIFT, not time — an entity's score
     is stale iff its current embedding sits more than tau (squared
     quantized distance) from the embedding it was scored against, where
@@ -920,7 +903,7 @@ def fresh_embedding_drift_rescoring(spark: SparkSession, sf_dir: str) -> DataFra
     "streaming", "kiji", "freshness", "similarity", "incremental",
 )
 def streaming_drift_rescoring_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING embedding-drift freshening (r14 verdict #4) — the §2.F
+    """STREAMING embedding-drift freshening — the §2.F
     composition of fresh_embedding_drift_rescoring: updated embeddings
     arrive in micro-batches, each batch is drift-checked against the
     entities' PERSISTED PQ codes (the same cell-partitioned codes table
@@ -986,10 +969,18 @@ def streaming_drift_rescoring_ingest(spark: SparkSession, sf_dir: str) -> DataFr
         done = last_txn_id(rescored_dir, "drift_freshen")
         if done is not None and batch_id <= done:
             return  # at-least-once replay of a committed batch: no-op
+        # d comes out of a one-element explode: Catalyst never pushes a
+        # filter on a generator's output below the Generate. A filter on
+        # a projected d is pushed into the LUT cross join's condition,
+        # where the 64-term sum is codegen'd without subexpression
+        # elimination and outgrows the JVM's 64 KB method limit.
         drifted = (
             codes_arr.join(F.broadcast(batch_df), "vec_id")
             .crossJoin(F.broadcast(cb_map_row))
-            .withColumn("d", pq.drift("emb_q", "codes", "cb_map"))
+            .select(
+                "vec_id",
+                F.explode(F.array(pq.drift("emb_q", "codes", "cb_map"))).alias("d"),
+            )
             .filter(F.col("d") > F.lit(DRIFT_TAU))
             .select(
                 "vec_id",

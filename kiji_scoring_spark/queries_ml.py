@@ -1506,70 +1506,7 @@ def _ann_ingest_oracle() -> str:
     -- ingest-fold == one-shot EXACTLY — the index analog of the sketch
     -- folds' mergeability gate. Meta (rows ingested, non-empty batches)
     -- is derivable from the index itself.
-    WITH src AS (
-      SELECT vec_id, {pq.Q_SQL} AS q
-      FROM embeddings
-      WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-        AND len(embedding) = 64
-    ),
-    cb AS (
-      SELECT vec_id AS cb_id, q FROM src
-      WHERE vec_id % 31 = 0 AND vec_id < 496
-    ),
-    seeds AS (
-      SELECT vec_id AS seed_id, q AS sq FROM (
-        SELECT vec_id, q FROM src
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {pq.NCELLS}
-      )
-    ),
-    probe AS (
-      SELECT vec_id AS probe_id, q AS pq FROM src
-      WHERE NOT (vec_id % 31 = 0 AND vec_id < 496)
-      ORDER BY vec_id LIMIT 1
-    ),
-    sub AS (SELECT unnest(range(0, 8)) AS ss),
-    asg AS (
-      SELECT vec_id, cell FROM (
-        SELECT s.vec_id, d.seed_id AS cell,
-          ROW_NUMBER() OVER (PARTITION BY s.vec_id
-            ORDER BY {pq.FULLDIST_SQL.format(l="s.q", r="d.sq")}, d.seed_id
-          ) AS rn
-        FROM src s CROSS JOIN seeds d
-      ) t WHERE rn = 1
-    ),
-    pcells AS (
-      SELECT cell FROM (
-        SELECT d.seed_id AS cell,
-          ROW_NUMBER() OVER (
-            ORDER BY {pq.FULLDIST_SQL.format(l="p.pq", r="d.sq")}, d.seed_id
-          ) AS rn
-        FROM seeds d CROSS JOIN probe p
-      ) t WHERE rn <= 2
-    ),
-    codes AS (
-      SELECT vec_id, ss, cb_id FROM (
-        SELECT s.vec_id, sub.ss, c.cb_id,
-          ROW_NUMBER() OVER (PARTITION BY s.vec_id, sub.ss
-            ORDER BY {pq.subdist_sql("s.q", "c.q")}, c.cb_id) AS rn
-        FROM src s CROSS JOIN cb c CROSS JOIN sub
-      ) t WHERE rn = 1
-    ),
-    lut AS (
-      SELECT c.cb_id, sub.ss,
-        {pq.subdist_sql("c.q", "p.pq")} AS pd
-      FROM cb c CROSS JOIN probe p CROSS JOIN sub
-    ),
-    adc AS (
-      SELECT codes.vec_id AS neighbor_id, a.cell,
-        CAST(SUM(lut.pd) AS BIGINT) AS adc_dist
-      FROM codes
-      JOIN asg a ON a.vec_id = codes.vec_id
-      JOIN pcells pc ON pc.cell = a.cell
-      JOIN lut ON codes.ss = lut.ss AND codes.cb_id = lut.cb_id
-      CROSS JOIN probe
-      WHERE codes.vec_id <> probe.probe_id
-      GROUP BY codes.vec_id, a.cell
-    ),
+    {pq.with_sql(*pq.IVFPQ_CTES, ivf=True)},
     top AS (
       SELECT neighbor_id, cell, adc_dist,
         ROW_NUMBER() OVER (ORDER BY adc_dist, neighbor_id) AS rn
@@ -1580,13 +1517,9 @@ def _ann_ingest_oracle() -> str:
         COUNT(DISTINCT ((vec_id % 3) + 3) % 3) AS n_batches
       FROM src
     )
-    SELECT t.neighbor_id, t.cell, t.adc_dist,
-      CAST(list_sum(list_transform(range(1, 65), i ->
-        (s.q[i] - p.pq[i]) * (s.q[i] - p.pq[i]))) AS BIGINT) AS exact_dist,
+    SELECT t.neighbor_id, t.cell, t.adc_dist, {pq.EXACT_DIST_SQL},
       t.rn, m.n_ingested, m.n_batches
-    FROM top t
-    JOIN src s ON s.vec_id = t.neighbor_id
-    CROSS JOIN probe p
+    FROM top t {pq.JOIN_BACK_SQL}
     CROSS JOIN meta m
     WHERE t.rn <= 10
     ORDER BY t.rn
@@ -1602,7 +1535,8 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ANN-INDEX maintenance (§2.F × §2.G): embedding vectors
     arrive in micro-batches, and each batch is ENCODED (PQ codes +
     IVF cell) against the fixed broadcast codebook/seeds and COMMITTED
-    to the snapshot-format inverted-list table (r13 verdict #3) — the
+    to the snapshot-format inverted-list table (the format
+    ann_index_time_travel_probe reads) — the
     index a 100 TB pipeline keeps warm as new embeddings land, absorbed
     per arrival with no rebuild and no touch of the existing lists.
     Each micro-batch is an atomic manifest commit carrying a txn

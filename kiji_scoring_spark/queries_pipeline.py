@@ -1532,60 +1532,16 @@ def similarity_ivf_deterministic_seeds(spark: SparkSession, sf_dir: str) -> Data
 @query(
     "similarity_pq_adc_topk",
     f"""
-    -- Product quantization with integer-exact arithmetic: quantize to
-    -- q = round(x*100) BIGINT, 8 subspaces x 8 dims, a deterministic
-    -- 16-entry codebook (vec_id % 31 = 0, < 496 -- the IVF-seeds trick),
-    -- codes = per-subspace argmin, ADC top-10 from codes + LUT only.
-    WITH src AS (
-      SELECT vec_id, {pq.Q_SQL} AS q
-      FROM embeddings
-      WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-        AND len(embedding) = 64
-    ),
-    cb AS (
-      SELECT vec_id AS cb_id, q FROM src
-      WHERE vec_id % 31 = 0 AND vec_id < 496
-    ),
-    probe AS (
-      SELECT vec_id AS probe_id, q AS pq FROM src
-      WHERE NOT (vec_id % 31 = 0 AND vec_id < 496)
-      ORDER BY vec_id LIMIT 1
-    ),
-    sub AS (SELECT unnest(range(0, 8)) AS ss),
-    codes AS (
-      SELECT vec_id, ss, cb_id FROM (
-        SELECT s.vec_id, sub.ss, c.cb_id,
-          ROW_NUMBER() OVER (PARTITION BY s.vec_id, sub.ss
-            ORDER BY {pq.subdist_sql("s.q", "c.q")}, c.cb_id) AS rn
-        FROM src s CROSS JOIN cb c CROSS JOIN sub
-      ) t WHERE rn = 1
-    ),
-    lut AS (
-      SELECT c.cb_id, sub.ss,
-        {pq.subdist_sql("c.q", "p.pq")} AS pd
-      FROM cb c CROSS JOIN probe p CROSS JOIN sub
-    ),
-    adc AS (
-      SELECT codes.vec_id AS neighbor_id,
-        CAST(SUM(lut.pd) AS BIGINT) AS adc_dist
-      FROM codes
-      JOIN lut ON codes.ss = lut.ss AND codes.cb_id = lut.cb_id
-      CROSS JOIN probe
-      WHERE codes.vec_id <> probe.probe_id
-      GROUP BY codes.vec_id
-    ),
+    -- Product quantization: ADC top-10 from the codes and the probe's
+    -- LUT only, then the winners' exact distances.
+    {pq.with_sql("src", "cb", "probe", "sub", "codes", "lut", "adc")},
     top AS (
       SELECT neighbor_id, adc_dist,
         ROW_NUMBER() OVER (ORDER BY adc_dist, neighbor_id) AS rn
       FROM adc
     )
-    SELECT t.neighbor_id, t.adc_dist,
-      CAST(list_sum(list_transform(range(1, 65), i ->
-        (s.q[i] - p.pq[i]) * (s.q[i] - p.pq[i]))) AS BIGINT) AS exact_dist,
-      t.rn
-    FROM top t
-    JOIN src s ON s.vec_id = t.neighbor_id
-    CROSS JOIN probe p
+    SELECT t.neighbor_id, t.adc_dist, {pq.EXACT_DIST_SQL}, t.rn
+    FROM top t {pq.JOIN_BACK_SQL}
     WHERE t.rn <= 10
     ORDER BY t.rn
     """,
@@ -1596,14 +1552,10 @@ def similarity_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path a 100 TB vector corpus actually ships (Jégou et al., TPAMI 2011:
     store 8 one-byte codes per vector instead of 64 floats; answer
     queries from codes + a per-probe lookup table, touching the raw
-    vectors only to rescore the winners). Every stage is integer-exact so
-    the oracle states every value: vectors quantize to q = round(x·100)
-    BIGINT (the int8-style quantization step itself part of the
-    technique); the codebook is DETERMINISTIC — the 16 corpus vectors
-    with vec_id % 31 = 0 (< 496), the same seeds-not-kmeans trick that
-    put IVF under the hash gate (similarity_ivf_deterministic_seeds);
-    codes are per-subspace argmin of exact BIGINT squared distances with
-    cb_id tie-break; the ADC top-10 ranks on exact BIGINT sums.
+    vectors only to rescore the winners). Every stage is integer-exact
+    and the codebook is chosen by rule, not trained (operators/pq.py,
+    which also holds the oracle's CTEs), so the oracle states every
+    value.
 
     The PQ INDEX (vec_id, c0..c7) is persisted once per corpus — the
     same build-once-query-forever state discipline as the sketch shard
@@ -1633,89 +1585,16 @@ def similarity_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "similarity_ivfpq_pruned_adc_topk",
     f"""
-    -- IVF x PQ, both integer-exact: <=32 deterministic seed cells (the
-    -- corpus vectors with smallest md5(vec_id) — id-space-uniform, so
-    -- replicated-tier id remaps can't collapse the seed set onto copies
-    -- of one base vector), full-vector BIGINT assignment with
-    -- seed_id tie-break; the SAME deterministic 16-entry PQ codebook
-    -- and per-subspace codes as similarity_pq_adc_topk; the query
-    -- probes its 2 nearest cells and ADC-ranks ONLY their codes.
-    WITH src AS (
-      SELECT vec_id, {pq.Q_SQL} AS q
-      FROM embeddings
-      WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-        AND len(embedding) = 64
-    ),
-    cb AS (
-      SELECT vec_id AS cb_id, q FROM src
-      WHERE vec_id % 31 = 0 AND vec_id < 496
-    ),
-    seeds AS (
-      SELECT vec_id AS seed_id, q AS sq FROM (
-        SELECT vec_id, q FROM src
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {pq.NCELLS}
-      )
-    ),
-    probe AS (
-      SELECT vec_id AS probe_id, q AS pq FROM src
-      WHERE NOT (vec_id % 31 = 0 AND vec_id < 496)
-      ORDER BY vec_id LIMIT 1
-    ),
-    sub AS (SELECT unnest(range(0, 8)) AS ss),
-    asg AS (
-      SELECT vec_id, cell FROM (
-        SELECT s.vec_id, d.seed_id AS cell,
-          ROW_NUMBER() OVER (PARTITION BY s.vec_id
-            ORDER BY {pq.FULLDIST_SQL.format(l="s.q", r="d.sq")}, d.seed_id
-          ) AS rn
-        FROM src s CROSS JOIN seeds d
-      ) t WHERE rn = 1
-    ),
-    pcells AS (
-      SELECT cell FROM (
-        SELECT d.seed_id AS cell,
-          ROW_NUMBER() OVER (
-            ORDER BY {pq.FULLDIST_SQL.format(l="p.pq", r="d.sq")}, d.seed_id
-          ) AS rn
-        FROM seeds d CROSS JOIN probe p
-      ) t WHERE rn <= 2
-    ),
-    codes AS (
-      SELECT vec_id, ss, cb_id FROM (
-        SELECT s.vec_id, sub.ss, c.cb_id,
-          ROW_NUMBER() OVER (PARTITION BY s.vec_id, sub.ss
-            ORDER BY {pq.subdist_sql("s.q", "c.q")}, c.cb_id) AS rn
-        FROM src s CROSS JOIN cb c CROSS JOIN sub
-      ) t WHERE rn = 1
-    ),
-    lut AS (
-      SELECT c.cb_id, sub.ss,
-        {pq.subdist_sql("c.q", "p.pq")} AS pd
-      FROM cb c CROSS JOIN probe p CROSS JOIN sub
-    ),
-    adc AS (
-      SELECT codes.vec_id AS neighbor_id, a.cell,
-        CAST(SUM(lut.pd) AS BIGINT) AS adc_dist
-      FROM codes
-      JOIN asg a ON a.vec_id = codes.vec_id
-      JOIN pcells pc ON pc.cell = a.cell
-      JOIN lut ON codes.ss = lut.ss AND codes.cb_id = lut.cb_id
-      CROSS JOIN probe
-      WHERE codes.vec_id <> probe.probe_id
-      GROUP BY codes.vec_id, a.cell
-    ),
+    -- IVF x PQ: the probe's 2 nearest cells, and an ADC top-10 over
+    -- ONLY their vectors' codes.
+    {pq.with_sql(*pq.IVFPQ_CTES, ivf=True)},
     top AS (
       SELECT neighbor_id, cell, adc_dist,
         ROW_NUMBER() OVER (ORDER BY adc_dist, neighbor_id) AS rn
       FROM adc
     )
-    SELECT t.neighbor_id, t.cell, t.adc_dist,
-      CAST(list_sum(list_transform(range(1, 65), i ->
-        (s.q[i] - p.pq[i]) * (s.q[i] - p.pq[i]))) AS BIGINT) AS exact_dist,
-      t.rn
-    FROM top t
-    JOIN src s ON s.vec_id = t.neighbor_id
-    CROSS JOIN probe p
+    SELECT t.neighbor_id, t.cell, t.adc_dist, {pq.EXACT_DIST_SQL}, t.rn
+    FROM top t {pq.JOIN_BACK_SQL}
     WHERE t.rn <= 10
     ORDER BY t.rn
     """,
@@ -1729,8 +1608,8 @@ def similarity_ivfpq_pruned_adc_topk(spark: SparkSession, sf_dir: str) -> DataFr
     hash-gate tricks: cells are <=32 DETERMINISTIC seed vectors — the
     corpus vectors with the smallest md5(vec_id), id-space-uniform so a
     replicated tier's id remap cannot collapse the seeds onto copies of
-    one base embedding (probed r13: a lowest-ids rule put HALF the 2 M
-    corpus in one cell) — with exact BIGINT full-vector assignment (the
+    one base embedding (a lowest-ids rule puts HALF of the 2 M-vector
+    tier in one cell) — with exact BIGINT full-vector assignment (the
     similarity_ivf_deterministic_seeds trick, integer-exact here), codes
     are the same deterministic 16-entry codebook + per-subspace argmin
     as similarity_pq_adc_topk — so assignment, routing, encoding, ADC
@@ -1758,83 +1637,6 @@ def similarity_ivfpq_pruned_adc_topk(spark: SparkSession, sf_dir: str) -> DataFr
     q = pq.corpus(load_table(spark, sf_dir, "embeddings"))
     cb, seeds = pq.codebook(q), pq.cell_seeds(q)
     return pq.search(q, cb, pq.codes_table(spark, sf_dir, q, cb, seeds), seeds)
-
-
-def _ann_snap_adc_cte_sql() -> str:
-    """The shared IVF-PQ oracle prelude (quantize → config → probe →
-    assignment → routing → codes → LUT → per-candidate ADC distance),
-    used by the snapshot-versioned index probes below. Identical math to
-    similarity_ivfpq_pruned_adc_topk's oracle; kept as one fragment so
-    the two version probes state their restriction as a one-line WHERE
-    over the same `adc` relation."""
-    return f"""
-    WITH src AS (
-      SELECT vec_id, {pq.Q_SQL} AS q
-      FROM embeddings
-      WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-        AND len(embedding) = 64
-    ),
-    cb AS (
-      SELECT vec_id AS cb_id, q FROM src
-      WHERE vec_id % 31 = 0 AND vec_id < 496
-    ),
-    seeds AS (
-      SELECT vec_id AS seed_id, q AS sq FROM (
-        SELECT vec_id, q FROM src
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {pq.NCELLS}
-      )
-    ),
-    probe AS (
-      SELECT vec_id AS probe_id, q AS pq FROM src
-      WHERE NOT (vec_id % 31 = 0 AND vec_id < 496)
-      ORDER BY vec_id LIMIT 1
-    ),
-    sub AS (SELECT unnest(range(0, 8)) AS ss),
-    asg AS (
-      SELECT vec_id, cell FROM (
-        SELECT s.vec_id, d.seed_id AS cell,
-          ROW_NUMBER() OVER (PARTITION BY s.vec_id
-            ORDER BY {pq.FULLDIST_SQL.format(l="s.q", r="d.sq")}, d.seed_id
-          ) AS rn
-        FROM src s CROSS JOIN seeds d
-      ) t WHERE rn = 1
-    ),
-    pcells AS (
-      SELECT cell FROM (
-        SELECT d.seed_id AS cell,
-          ROW_NUMBER() OVER (
-            ORDER BY {pq.FULLDIST_SQL.format(l="p.pq", r="d.sq")}, d.seed_id
-          ) AS rn
-        FROM seeds d CROSS JOIN probe p
-      ) t WHERE rn <= 2
-    ),
-    codes AS (
-      SELECT vec_id, ss, cb_id FROM (
-        SELECT s.vec_id, sub.ss, c.cb_id,
-          ROW_NUMBER() OVER (PARTITION BY s.vec_id, sub.ss
-            ORDER BY {pq.subdist_sql("s.q", "c.q")}, c.cb_id) AS rn
-        FROM src s CROSS JOIN cb c CROSS JOIN sub
-      ) t WHERE rn = 1
-    ),
-    lut AS (
-      SELECT c.cb_id, sub.ss,
-        {pq.subdist_sql("c.q", "p.pq")} AS pd
-      FROM cb c CROSS JOIN probe p CROSS JOIN sub
-    ),
-    adc AS (
-      SELECT codes.vec_id AS neighbor_id, a.cell,
-        CAST(SUM(lut.pd) AS BIGINT) AS adc_dist
-      FROM codes
-      JOIN asg a ON a.vec_id = codes.vec_id
-      JOIN pcells pc ON pc.cell = a.cell
-      JOIN lut ON codes.ss = lut.ss AND codes.cb_id = lut.cb_id
-      CROSS JOIN probe
-      WHERE codes.vec_id <> probe.probe_id
-      GROUP BY codes.vec_id, a.cell
-    )"""
-
-
-_ANN_SNAP_EXACT_SQL = pq.FULLDIST_SQL.format(l="s.q", r="p.pq")
 
 
 def _ann_snap_build_base(spark, path, q, cb, seeds) -> None:
@@ -1872,8 +1674,8 @@ def _ann_snap_codes_at(spark, path, version: int) -> DataFrame:
 
 @query(
     "ann_index_time_travel_probe",
-    _ann_snap_adc_cte_sql()
-    + f""",
+    f"""
+    {pq.with_sql(*pq.IVFPQ_CTES, ivf=True)},
     top_v2 AS (
       SELECT neighbor_id, cell, adc_dist,
         ROW_NUMBER() OVER (ORDER BY adc_dist, neighbor_id) AS rn
@@ -1889,20 +1691,20 @@ def _ann_snap_codes_at(spark, path, version: int) -> DataFrame:
     -- the compaction-zero-effect proof: the oracle ranks the one-shot
     -- FULL corpus, so any row compaction lost or changed hash-fails.
     SELECT 'v2' AS probe_version, t.neighbor_id, t.cell, t.adc_dist,
-      {_ANN_SNAP_EXACT_SQL} AS exact_dist, t.rn
-    FROM top_v2 t JOIN src s ON s.vec_id = t.neighbor_id CROSS JOIN probe p
+      {pq.EXACT_DIST_SQL}, t.rn
+    FROM top_v2 t {pq.JOIN_BACK_SQL}
     WHERE t.rn <= 10
     UNION ALL
     SELECT 'latest' AS probe_version, t.neighbor_id, t.cell, t.adc_dist,
-      {_ANN_SNAP_EXACT_SQL} AS exact_dist, t.rn
-    FROM top_latest t JOIN src s ON s.vec_id = t.neighbor_id CROSS JOIN probe p
+      {pq.EXACT_DIST_SQL}, t.rn
+    FROM top_latest t {pq.JOIN_BACK_SQL}
     WHERE t.rn <= 10
     ORDER BY probe_version DESC, rn
     """,
     "similarity", "pipeline", "snapshot", "incremental",
 )
 def ann_index_time_travel_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot-VERSIONED ANN index (r13 verdict #3): the IVF-PQ inverted
+    """Snapshot-VERSIONED ANN index: the IVF-PQ inverted
     lists live in the manifest table format (operators/snapshots.py)
     instead of a bare partitioned dir, so index ingest inherits the same
     guarantees as data tables — ATOMIC commit per ingest batch (a probe
@@ -1974,8 +1776,8 @@ def ann_index_time_travel_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_index_delete_rewrite",
-    _ann_snap_adc_cte_sql()
-    + f""",
+    f"""
+    {pq.with_sql(*pq.IVFPQ_CTES, ivf=True)},
     top_full AS (
       SELECT neighbor_id, cell, adc_dist,
         ROW_NUMBER() OVER (ORDER BY adc_dist, neighbor_id) AS rn
@@ -1990,22 +1792,22 @@ def ann_index_time_travel_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM adc WHERE neighbor_id NOT IN (SELECT neighbor_id FROM kill)
     )
     SELECT 'pre' AS phase, t.neighbor_id, t.cell, t.adc_dist,
-      {_ANN_SNAP_EXACT_SQL} AS exact_dist, t.rn,
+      {pq.EXACT_DIST_SQL}, t.rn,
       TRUE AS deleted_absent
-    FROM top_full t JOIN src s ON s.vec_id = t.neighbor_id CROSS JOIN probe p
+    FROM top_full t {pq.JOIN_BACK_SQL}
     WHERE t.rn <= 10
     UNION ALL
     SELECT 'post' AS phase, t.neighbor_id, t.cell, t.adc_dist,
-      {_ANN_SNAP_EXACT_SQL} AS exact_dist, t.rn,
+      {pq.EXACT_DIST_SQL}, t.rn,
       TRUE AS deleted_absent
-    FROM top_post t JOIN src s ON s.vec_id = t.neighbor_id CROSS JOIN probe p
+    FROM top_post t {pq.JOIN_BACK_SQL}
     WHERE t.rn <= 10
     ORDER BY phase DESC, rn
     """,
     "similarity", "pipeline", "snapshot", "incremental",
 )
 def ann_index_delete_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN-index DELETES (r13 verdict #8): a real 100 TB pipeline also
+    """ANN-index DELETES: a real 100 TB pipeline also
     RETIRES vectors — dedup kills, takedowns — and this expresses the
     retirement as a snapshot commit that rewrites ONLY the affected
     cell partitions (operators/snapshots.py replace_partitions): the
@@ -2259,18 +2061,7 @@ def _ivf_rebalance_oracle() -> str:
     -- counts. The post phase's is_hot column IS the restored-balance
     -- claim: every row false means no list exceeds the trigger after
     -- the split.
-    WITH src AS (
-      SELECT vec_id, {pq.Q_SQL} AS q
-      FROM embeddings
-      WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-        AND len(embedding) = 64
-    ),
-    seeds AS (
-      SELECT vec_id AS seed_id, q AS sq FROM (
-        SELECT vec_id, q FROM src
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {pq.NCELLS}
-      )
-    ),
+    {pq.with_sql("src", "seeds")},
     seed0 AS (
       SELECT seed_id, sq FROM (
         SELECT seed_id, sq,
@@ -2395,7 +2186,7 @@ def _ivf_rebalance_oracle() -> str:
     "similarity", "pipeline", "snapshot", "maintenance",
 )
 def ann_ivf_cell_rebalance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF cell HEALTH after skewed ingest (r14 verdict #6): streaming
+    """IVF cell HEALTH after skewed ingest: streaming
     ingest and partition deletes can skew the inverted lists over time —
     a hot cell grows until the probed-fraction guarantee degrades (every
     probe routed near it reads the bloated list). This query runs the

@@ -144,6 +144,44 @@ FRESHEN_OUTPUT_SCHEMA = StructType(
 )
 
 
+def _freshen_key(
+    user_id,
+    pdfs,
+    prior,
+    update: Callable,
+    shelf_life_ms: int,
+    score_fn: Callable[[float], float],
+):
+    """One key's freshen step, shared by both state APIs: the newest row
+    of the key's pandas batches ``pdfs`` against the cached ``prior``
+    (last_ts, last_score) or None. Stale (no cache, or a cached score
+    older than ``shelf_life_ms`` relative to the newest event) rescores
+    the newest value and ``update``s the state; fresh serves the cache.
+    Returns the one-row output frame, or None when the batches held no
+    row."""
+    import pandas as pd
+
+    newest_ts, newest_val = None, None
+    for pdf in pdfs:
+        if len(pdf) == 0:
+            continue
+        idx = pdf["ts_ms"].idxmax()
+        if newest_ts is None or pdf["ts_ms"][idx] > newest_ts:
+            newest_ts = int(pdf["ts_ms"][idx])
+            newest_val = float(pdf["value"][idx])
+    if newest_ts is None:
+        return None
+    last_ts, last_score = prior if prior is not None else (None, None)
+    if last_ts is None or (newest_ts - last_ts) > shelf_life_ms:
+        ts, score, rescored = newest_ts, score_fn(newest_val), 1
+        update((ts, score))
+    else:
+        ts, score, rescored = last_ts, last_score, 0
+    return pd.DataFrame(
+        {"user_id": [user_id], "score_ts": [ts], "score": [score], "rescored": [rescored]}
+    )
+
+
 def make_stateful_freshener(
     shelf_life_ms: int, score_fn: Callable[[float], float]
 ) -> Callable:
@@ -158,33 +196,12 @@ def make_stateful_freshener(
     """
 
     def freshen(key, pdf_iter, state: GroupState):
-        import pandas as pd
-
-        user_id = key[0]
-        last_ts, last_score = (None, None)
-        if state.exists:
-            last_ts, last_score = state.get
-        newest_ts, newest_val = None, None
-        for pdf in pdf_iter:
-            if len(pdf) == 0:
-                continue
-            idx = pdf["ts_ms"].idxmax()
-            if newest_ts is None or pdf["ts_ms"][idx] > newest_ts:
-                newest_ts = int(pdf["ts_ms"][idx])
-                newest_val = float(pdf["value"][idx])
-        if newest_ts is None:
-            return
-        stale = last_ts is None or (newest_ts - last_ts) > shelf_life_ms
-        if stale:
-            score = score_fn(newest_val)
-            state.update((newest_ts, score))
-            yield pd.DataFrame(
-                {"user_id": [user_id], "score_ts": [newest_ts], "score": [score], "rescored": [1]}
-            )
-        else:
-            yield pd.DataFrame(
-                {"user_id": [user_id], "score_ts": [last_ts], "score": [last_score], "rescored": [0]}
-            )
+        prior = state.get if state.exists else None
+        out = _freshen_key(
+            key[0], pdf_iter, prior, state.update, shelf_life_ms, score_fn
+        )
+        if out is not None:
+            yield out
 
     return freshen
 
@@ -221,35 +238,12 @@ def make_tws_freshener(shelf_life_ms: int, score_fn: Callable[[float], float]):
             self._state = handle.getValueState("fresh", FRESHEN_STATE_SCHEMA)
 
         def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            user_id = key[0]
-            newest_ts, newest_val = None, None
-            for pdf in rows:
-                if len(pdf) == 0:
-                    continue
-                idx = pdf["ts_ms"].idxmax()
-                if newest_ts is None or pdf["ts_ms"][idx] > newest_ts:
-                    newest_ts = int(pdf["ts_ms"][idx])
-                    newest_val = float(pdf["value"][idx])
-            if newest_ts is None:
-                return
             prior = self._state.get() if self._state.exists() else None
-            last_ts = prior[0] if prior is not None else None
-            last_score = prior[1] if prior is not None else None
-            stale = last_ts is None or (newest_ts - last_ts) > shelf_life_ms
-            if stale:
-                score = score_fn(newest_val)
-                self._state.update((newest_ts, score))
-                yield pd.DataFrame(
-                    {"user_id": [user_id], "score_ts": [newest_ts],
-                     "score": [score], "rescored": [1]}
-                )
-            else:
-                yield pd.DataFrame(
-                    {"user_id": [user_id], "score_ts": [last_ts],
-                     "score": [last_score], "rescored": [0]}
-                )
+            out = _freshen_key(
+                key[0], rows, prior, self._state.update, shelf_life_ms, score_fn
+            )
+            if out is not None:
+                yield out
 
         def close(self) -> None:
             pass

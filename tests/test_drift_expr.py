@@ -132,3 +132,26 @@ def test_map_family_codes_request_raises(spark):
     reader = FreshTableReader(spark, "emb_map_t", vt, reg, key_col="vec_id")
     with pytest.raises(AnalysisException, match="codes_versions"):
         reader.scan(1_000_000_000).collect()
+
+
+def test_streaming_drift_batches_compile_without_fallback(spark, sf_dir):
+    """Every micro-batch of streaming_drift_rescoring_ingest runs under
+    whole-stage codegen. With the interpreted fallback off, a generated
+    method past the JVM's 64 KB limit fails the query instead of only
+    logging an ERROR; the query still rescores exactly the drifted
+    entities (pmod(vec_id, 5) = 0)."""
+    from kiji_scoring_spark.queries_kiji import (
+        AS_OF_MS,
+        streaming_drift_rescoring_ingest,
+    )
+
+    key = "spark.sql.codegen.fallback"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        rows = streaming_drift_rescoring_ingest(spark, sf_dir).collect()
+    finally:
+        spark.conf.set(key, prior)
+    rescored = {r.vec_id for r in rows if r.score_ts == AS_OF_MS}
+    assert rescored
+    assert rescored == {r.vec_id for r in rows if r.vec_id % 5 == 0}
