@@ -34,11 +34,15 @@ policy and producer once (``makeCapsule``) and reuses them on every read
 until ``rereadPolicies``. Here resolving a capsule also compiles it: the
 fresh predicate, the score and the merged attached-column Column are built
 once, against the reserved bigint column ``__as_of__`` instead of a literal
-clock, and are dropped with the capsule. A freshen call only adds
-``__as_of__`` as a literal, joins the KV stores and selects the cached
-Columns; Catalyst's CollapseProject and ConstantFolding put the literal
-back, so the optimized plan is the one a per-call build would give. A
-table with its own ``__as_of__`` column is rejected.
+clock, and are dropped with the capsule. The capsule's first freshen reads
+its merged KV stores once and folds them into literal maps. A freshen call
+only adds ``__as_of__`` as a literal, looks the stores up in their maps and
+selects the cached Columns; Catalyst's CollapseProject and ConstantFolding
+put the literal back, so a point read plans to one scan: no join, no
+exchange. A table with its own ``__as_of__`` column is rejected. A reread
+keeps every capsule whose registry record is unchanged, Columns and folded
+stores included, and rebuilds only the added or changed ones
+(``rereadPolicies``, ``InternalFreshKijiTableReader.java:271-309``).
 """
 
 from __future__ import annotations
@@ -59,10 +63,13 @@ from .producers import (
     PandasProducer,
     Producer,
     attach_stores,
+    fold_store,
     merge_stores,
+    placeholders,
     store_sides,
 )
 from .registry import (
+    FreshenerRecord,
     FreshenerRegistry,
     TableLayout,
     flat_name,
@@ -137,7 +144,7 @@ class CompiledCapsule:
 
     #: the table the Columns were built for
     table: DataFrame
-    #: KV side-input join sides: (broadcast store, join condition)
+    #: the merged KV stores (policy stores mask producer stores)
     stores: list
     #: NOT policy.is_fresh: the rows the producer scores
     stale: Column
@@ -145,6 +152,10 @@ class CompiledCapsule:
     projection: list[Column]
     #: pandas producers: the columns sent through Arrow
     request: list[str]
+    #: the stores' lookups into their literal maps, folded by the first
+    #: freshen (``_freshen_column``); None until then. Two first freshens
+    #: that race both fold, and either result serves
+    lookups: list[Column] | None = None
 
 
 @dataclass
@@ -166,8 +177,10 @@ class FreshTableReader:
     Mirrors ``FreshKijiTableReader``: ``get``/``bulk_get`` behave like
     plain reads except attached columns are freshened first. Capsules are
     resolved lazily from the registry, compiled, and cached;
-    ``reread_policies`` invalidates the cache (A13). A capsule dict
-    assigned to ``_capsules`` directly is compiled on first use.
+    ``reread_policies`` invalidates the cache, and the next resolve keeps
+    the capsules whose records did not change (A13). A capsule dict
+    assigned to ``_capsules`` directly is compiled on first use, and no
+    registry resolve reuses its capsules.
     """
 
     def __init__(
@@ -192,6 +205,9 @@ class FreshTableReader:
         #: target); a temp dir is created lazily if not given
         self.scored_path = scored_path
         self._capsules: dict[str, Freshener] | None = None
+        #: the registry-resolved capsules, each with the record it was
+        #: built from: a resolve reuses those whose record is unchanged
+        self._built: dict[str, tuple[FreshenerRecord, Freshener]] = {}
         self._reread_timer: threading.Timer | None = None
         #: serializes timer re-arm vs stop so a stop can never race a tick
         #: into leaving an orphan timer armed
@@ -206,27 +222,37 @@ class FreshTableReader:
         caps = self._capsules
         resolved = caps is None
         if resolved:
-            caps = {}
+            kept = self._built
+            built = {}
             for column, rec in self.registry.retrieve_all(self.table_name).items():
+                prev = kept.get(column)
+                if prev is not None and prev[0] == rec:
+                    built[column] = prev
+                    continue
                 policy_cls = load_class(rec.freshness_policy_class)
                 policy = policy_cls()
                 if rec.freshness_policy_state:
                     policy.deserialize(rec.freshness_policy_state)
                 producer_cls = load_class(rec.producer_class)
                 producer = producer_cls() if isinstance(producer_cls, type) else producer_cls
-                caps[column] = Freshener(column=column, policy=policy, producer=producer)
+                built[column] = (
+                    rec, Freshener(column=column, policy=policy, producer=producer)
+                )
+            caps = {column: cap for column, (_, cap) in built.items()}
         for cap in caps.values():
             if cap.compiled is None or cap.compiled.table is not self.df:
                 cap.compiled = self._compile(cap)
         if resolved:
             # store only a new generation: storing the dict read above could
             # bring back one that a concurrent reread just dropped
+            self._built = built
             self._capsules = caps
         return caps
 
     def reread_policies(self, preload: bool = False) -> None:
-        """Drop cached capsules; next read re-resolves from the registry
-        (``rereadPolicies(boolean)``,
+        """Drop cached capsules; the next read re-resolves from the
+        registry, keeping each capsule whose record equals the one it was
+        built from and building the rest (``rereadPolicies(boolean)``,
         ``InternalFreshKijiTableReader.java:271-309``). With ``preload``
         the re-resolution happens EAGERLY, before any read needs it —
         the reference's ``withPreload`` flag, which immediately preloads
@@ -332,9 +358,11 @@ class FreshTableReader:
         # regardless of producer type (KijiFreshnessPolicy.java:86-88,
         # exercised by TestKVStores.java:126-131), with policy stores
         # masking producer stores of the same name
-        # (InternalFreshKijiTableReader.java:374-379). The joined columns
-        # are visible to the predicate, to ExpressionProducer.score, and to
-        # a PandasProducer's data_request; the projection drops them.
+        # (InternalFreshKijiTableReader.java:374-379). The looked-up
+        # columns are visible to the predicate, to ExpressionProducer.score,
+        # and to a PandasProducer's data_request; the projection drops them.
+        # Only the stores' schemas are read here: the first freshen folds
+        # them, so building a capsule runs no Spark job.
         stores = store_sides(
             merge_stores(cap.producer.required_stores, cap.policy.required_stores)
         )
@@ -367,9 +395,9 @@ class FreshTableReader:
                     )
                 )
         else:
-            # Expression producer: stays fully in codegen; KV store columns
-            # are attached before the projection
-            score = producer.score(attach_stores(table, stores))
+            # Expression producer: stays fully in codegen; the score is
+            # built over typed NULLs named like the store lookups
+            score = producer.score(attach_stores(table, placeholders(stores)))
 
         written = (
             model.map_with_put(F.col(fam), map_qual, as_of, score)
@@ -386,12 +414,16 @@ class FreshTableReader:
 
     def _freshen_column(self, df: DataFrame, cap: Freshener, keep_clock: bool) -> DataFrame:
         """One capsule's per-call work over a table that carries
-        ``__as_of__``: the store joins, a pandas or MLlib producer's
+        ``__as_of__``: the store lookups, a pandas or MLlib producer's
         scoring of the stale partition, and one select of the compiled
         Columns. That select restores the table's columns in order; with
-        ``keep_clock`` it also keeps ``__as_of__`` for the next capsule."""
+        ``keep_clock`` it also keeps ``__as_of__`` for the next capsule.
+        The capsule's first call folds its stores; a call cancelled while
+        folding leaves them unfolded for the next."""
         compiled = cap.compiled
-        df = attach_stores(df, compiled.stores)
+        if compiled.lookups is None:
+            compiled.lookups = [c for side in compiled.stores for c in fold_store(side)]
+        df = attach_stores(df, compiled.lookups)
         producer = cap.producer
         if isinstance(producer, PandasProducer):
             # Python path: score ONLY the stale partition through Arrow,

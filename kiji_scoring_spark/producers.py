@@ -17,20 +17,31 @@ computes a value, and writes it to the column the freshener is ATTACHED to
 - ``MLlibProducer``      — an MLlib ``Transformer``/``PipelineModel``
   (BASELINE.json's "MLlib batch scoring" approach).
 
-KV side-inputs (A9): small key→value stores exposed to the producer. In
-batch Spark these are broadcast left joins declared in ``kv_requests``;
-policy stores mask producer stores with the same name
-(``impl/InternalFreshKijiTableReader.java:374-379``).
+KV side-inputs (A9): small key→value stores exposed to the producer and
+the policy; policy stores mask producer stores with the same name
+(``impl/InternalFreshKijiTableReader.java:374-379``). A store is a key
+lookup (``context.getStore(name).get(key)``), not a join: the first freshen
+of a capsule reads each merged store once, checks that it holds at most
+``MAX_STORE_ROWS`` rows and unique keys, and folds each value column into a
+literal map that every later read looks up per row.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
+from dataclasses import dataclass
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, StructField
+
+#: most rows a KV store may hold. A store is folded into literal maps on
+#: the driver, with py4j calls per entry, and a map lookup scans its keys: on
+#: a 4-core host a 10,000-row store took 6.8 s to fold and 3.4 s to look up
+#: 2 M rows, a 1,000-row store 0.8 s and 0.7 s.
+MAX_STORE_ROWS = 1_000
 
 
 class Producer:
@@ -42,7 +53,7 @@ class Producer:
     #: declared output column; only used for attachment validation —
     #: actual writes go to the attached column (package-info.java:73-79)
     output_column: str | None = None
-    #: name → KV store spec (dict or DataFrame); see kv.py
+    #: name → KV store spec; see :func:`store_sides`
     required_stores: dict[str, Any] = {}
 
     def score(self, df: DataFrame) -> Column:
@@ -146,23 +157,80 @@ def merge_stores(
     return merged
 
 
-def store_sides(stores: dict[str, Any]) -> list[tuple[DataFrame, Any]]:
-    """KV side-inputs as join sides: for each store (a DataFrame with
-    (key, value) plus a join key on the table), the renamed store under a
-    broadcast hint, with its join condition. Store spec: {"df": DataFrame,
-    "on": join expr or column name, "select": {new_col: store_col}}."""
+@dataclass(frozen=True)
+class KVStore:
+    """One merged KV store: its rows (value columns renamed per the spec),
+    its key column, its value columns (every other column) and the
+    table-side Column looked up in it."""
+
+    name: str
+    df: DataFrame
+    key: StructField
+    values: tuple[StructField, ...]
+    lookup: Column
+
+
+def store_sides(stores: dict[str, Any]) -> list[KVStore]:
+    """The KV stores of a merged store dict, read from their schemas only.
+    Store spec: {"df": DataFrame, "on": lookup, "select": {new_col:
+    store_col}}, where ``on`` is a column name present in both the table
+    and the store, or a pair (lookup, key): a table-side Column or column
+    name, and the store's key column."""
     sides = []
-    for spec in stores.values():
+    for name, spec in stores.items():
         sdf = spec["df"]
         for new, old in spec.get("select", {}).items():
             sdf = sdf.withColumnRenamed(old, new)
-        sides.append((F.broadcast(sdf), spec["on"]))
+        on = spec["on"]
+        lookup, key = (on, on) if isinstance(on, str) else on
+        if isinstance(lookup, str):
+            lookup = F.col(lookup)
+        schema = sdf.schema
+        values = tuple(f for f in schema.fields if f.name != key)
+        sides.append(KVStore(name, sdf, schema[key], values, lookup))
     return sides
 
 
-def attach_stores(df: DataFrame, sides: list[tuple[DataFrame, Any]]) -> DataFrame:
-    """Make KV side-inputs available as columns: left-join each
-    :func:`store_sides` side onto ``df``."""
-    for sdf, on in sides:
-        df = df.join(sdf, on=on, how="left")
-    return df
+def placeholders(sides: list[KVStore]) -> list[Column]:
+    """A typed NULL per store value column: stands in for the lookups
+    while a capsule's Columns are built, without reading any store."""
+    return [
+        F.lit(None).cast(f.dataType).alias(f.name) for side in sides for f in side.values
+    ]
+
+
+def fold_store(side: KVStore) -> list[Column]:
+    """Read a store once and fold each value column into a literal map:
+    one ``try_element_at(map, lookup)`` Column per value column. Raises
+    ``ValueError`` when the store holds more than ``MAX_STORE_ROWS`` rows
+    or a key twice; NULL keys are dropped, as a join never matched them."""
+    rows = (
+        side.df.select(side.key.name, *[f.name for f in side.values])
+        .limit(MAX_STORE_ROWS + 1)
+        .collect()
+    )
+    if len(rows) > MAX_STORE_ROWS:
+        raise ValueError(
+            f"KV store {side.name!r} holds more than MAX_STORE_ROWS = {MAX_STORE_ROWS} rows"
+        )
+    rows = [r for r in rows if r[0] is not None]
+    seen = set()
+    for r in rows:
+        if r[0] in seen:
+            raise ValueError(f"KV store {side.name!r} holds key {r[0]!r} more than once")
+        seen.add(r[0])
+
+    def array(i: int, dtype: DataType) -> Column:
+        return F.array(*[F.lit(r[i]) for r in rows]).cast(ArrayType(dtype))
+
+    keys = array(0, side.key.dataType)
+    return [
+        F.try_element_at(F.map_from_arrays(keys, array(i, f.dataType)), side.lookup).alias(f.name)
+        for i, f in enumerate(side.values, start=1)
+    ]
+
+
+def attach_stores(df: DataFrame, lookups: list[Column]) -> DataFrame:
+    """Make KV side-inputs available as columns: one select of the
+    :func:`fold_store` lookups (or :func:`placeholders`) over ``df``."""
+    return df.select("*", *lookups) if lookups else df

@@ -316,10 +316,11 @@ def fresh_a9_kv_masked_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     masking ever regressed the scores would be 100× and the hash check
     fails — masking is verified by VALUES, not by inspection.
 
-    Scale: stores attach as broadcast left joins before the freshness
-    predicate (every producer branch sees them); the store is 5 rows —
-    the classic dimension-broadcast shape. The freshen pass itself adds
-    no shuffle beyond the versioned compaction."""
+    Scale: the capsule's first freshen reads the store that survives
+    masking once (5 rows, under the row bound, keys unique) and folds it
+    into a literal map; every row looks its segment up in that map before
+    the freshness predicate (every producer branch sees it), so the pass
+    joins nothing and adds no shuffle beyond the versioned compaction."""
     from .fresh import Freshener
     from .producers import ExpressionProducer
 

@@ -413,11 +413,12 @@ def test_auto_reread_with_preload_eagerly_reresolves(spark):
     """withPreloadOnAutomaticReread (FreshKijiTableReaderBuilder.java:
     171-179, applied in rereadPolicies(boolean) at
     InternalFreshKijiTableReader.java:301-308): each scheduled reread
-    immediately re-instantiates capsules instead of leaving the first
+    immediately re-resolves capsules instead of leaving the first
     post-tick read to resolve lazily. Observable contract: after a tick,
     the cache is POPULATED (not None, unlike the plain auto-reread above)
-    but with a FRESH capsule dict — proof the tick both dropped and
-    eagerly re-resolved."""
+    with a FRESH capsule dict — proof the tick both dropped and eagerly
+    re-resolved. Like rereadPolicies (:271-309), a tick keeps a capsule
+    whose record is unchanged and rebuilds one whose record changed."""
     df = user_counter_df(spark)
     reader = make_reader(
         spark, df, "info:visits", ShelfLife(DAY_MS), "",
@@ -426,25 +427,45 @@ def test_auto_reread_with_preload_eagerly_reresolves(spark):
     reader.preload()
     before = reader._capsules
     assert before is not None
-    reader.start_auto_reread(100, preload=True)
-    deadline = time.monotonic() + 5.0
-    # a tick transiently leaves the cache None between drop and eager
-    # re-resolve, so poll for the re-resolved state, not the gap
-    while time.monotonic() < deadline:
+
+    def tick_until(done):
+        reader.start_auto_reread(100, preload=True)
+        deadline = time.monotonic() + 5.0
+        # a tick transiently leaves the cache None between drop and eager
+        # re-resolve, so poll for the re-resolved state, not the gap
+        while time.monotonic() < deadline:
+            now = reader._capsules
+            if now is not None and done(now):
+                break
+            time.sleep(0.02)
+        reader.stop_auto_reread()
         now = reader._capsules
-        if now is not None and now is not before:
-            break
-        time.sleep(0.02)
-    reader.stop_auto_reread()
-    now = reader._capsules
-    assert now is not None and now is not before
-    # the eagerly re-resolved capsules are equivalent (same attachment),
-    # compiled anew with the new generation
+        assert now is not None and done(now)
+        return now
+
+    now = tick_until(lambda now: now is not before)
+    # the record did not change: the tick kept the capsule, its compiled
+    # Columns included
     assert set(now) == set(before)
     assert all(
-        cap.compiled is not None and cap.compiled is not before[col].compiled
+        cap.compiled is not None
+        and cap is before[col]
+        and cap.compiled is before[col].compiled
         for col, cap in now.items()
     )
+
+    # a new policy state in the registry: the next tick rebuilds the capsule
+    reader.registry.remove("user_counter", "info:visits")
+    reader.registry.store(
+        TableLayout(df.schema), "user_counter", "info:visits",
+        f"{__name__}.IncrementVisitsProducer",
+        "kiji_scoring_spark.policies.ShelfLife", ShelfLife(10).serialize(),
+    )
+    now = tick_until(lambda now: now["info:visits"] is not before["info:visits"])
+    rebuilt = now["info:visits"]
+    assert rebuilt.policy.shelf_life_ms == 10
+    assert rebuilt.compiled is not None
+    assert rebuilt.compiled is not before["info:visits"].compiled
 
 
 def test_auto_reread_start_stop_stress(spark):
@@ -498,7 +519,7 @@ class CatLookupProducer(ExpressionProducer):
 
 
 def test_kv_store_lookup_and_masking(spark):
-    """A9: producer reads a broadcast KV store; a policy store with the
+    """A9: producer reads a KV store; a policy store with the
     same name masks the producer's (package-info.java:62-64)."""
     schema = StructType(
         [
@@ -519,7 +540,7 @@ def test_kv_store_lookup_and_masking(spark):
         data_request=["info:name"],
         output_column="info:name",
         required_stores={
-            "cats": {"df": cats, "on": model.most_recent_value("info_name") == F.col("key")}
+            "cats": {"df": cats, "on": (model.most_recent_value("info_name"), "key")}
         },
     )
     from kiji_scoring_spark.fresh import Freshener
@@ -536,7 +557,7 @@ def test_kv_store_lookup_and_masking(spark):
 
     # masking: policy-level store with same name wins
     policy = AF()
-    policy_store = {"cats": {"df": masked, "on": model.most_recent_value("info_name") == F.col("key")}}
+    policy_store = {"cats": {"df": masked, "on": (model.most_recent_value("info_name"), "key")}}
     merged = merge_stores(producer.required_stores, policy_store)
     assert merged["cats"]["df"] is masked
 
@@ -583,7 +604,7 @@ def test_policy_store_drives_pandas_producer_with_masking(spark):
             return {
                 "flags": {
                     "df": self._store_df,
-                    "on": F.col("entity_id") == F.col("key"),
+                    "on": ("entity_id", "key"),
                 }
             }
 
@@ -595,7 +616,7 @@ def test_policy_store_drives_pandas_producer_with_masking(spark):
         data_request=["info:visits"],
         output_column="info:visits",
         required_stores={
-            "flags": {"df": decoy, "on": F.col("entity_id") == F.col("key")}
+            "flags": {"df": decoy, "on": ("entity_id", "key")}
         },
     )
     reader = FreshTableReader(spark, "t", df, FreshenerRegistry())
@@ -619,6 +640,88 @@ def test_policy_store_drives_pandas_producer_with_masking(spark):
     assert out["bar"] == (7.0, 1)
     # store columns (__flag__, key) never leak into the result schema
     assert set(reader.scan(NOW_MS).columns) == {"entity_id", "info_visits"}
+
+
+def _segment_reader(spark, store_df):
+    """Two rows in segments 0 and 1, rescored on every read to newest
+    visits x the ``mult`` store's ``m`` for the row's segment."""
+    from kiji_scoring_spark.fresh import Freshener
+
+    schema = StructType(
+        [
+            StructField("entity_id", LongType(), False),
+            StructField("seg", LongType(), False),
+            StructField("info_visits", model.versions_type(LongType())),
+        ]
+    )
+    df = spark.createDataFrame([(1, 0, [(1, 10)]), (2, 1, [(1, 20)])], schema)
+    producer = ExpressionProducer(
+        lambda df_: model.most_recent_value("info_visits") * F.col("m"),
+        data_request=["info:visits"],
+        required_stores={"mult": {"df": store_df, "on": "seg"}},
+    )
+    reader = FreshTableReader(spark, "t", df, FreshenerRegistry())
+    reader._capsules = {"info:visits": Freshener("info:visits", AlwaysFreshen(), producer)}
+    return reader
+
+
+def test_kv_store_key_must_be_unique(spark):
+    """A store is a key lookup, so a key held twice is an error, not a
+    fan-out of table rows; NULL keys never match and may repeat."""
+    ok = spark.sql(
+        "SELECT * FROM VALUES (0, 1.5D), (1, 3.0D), (NULL, 4.0D), (NULL, 5.0D) AS t(seg, m)"
+    )
+    reader = _segment_reader(spark, ok)
+    assert visits(reader.scan(NOW_MS)) == {1: 15.0, 2: 60.0}
+    assert visits(reader.get(1, NOW_MS)) == {1: 15.0}
+
+    dup = spark.sql("SELECT * FROM VALUES (0, 1.0D), (0, 2.0D), (1, 3.0D) AS t(seg, m)")
+    reader = _segment_reader(spark, dup)
+    with pytest.raises(ValueError, match="'mult' holds key 0 more than once"):
+        reader.get(1, NOW_MS).collect()
+    with pytest.raises(ValueError, match="'mult' holds key 0 more than once"):
+        reader.scan(NOW_MS).collect()
+
+
+def test_kv_store_over_the_row_bound_raises(spark, monkeypatch):
+    """A store past ``MAX_STORE_ROWS`` rows fails loudly: it is never
+    folded, and no join stands in for the lookup."""
+    from kiji_scoring_spark import producers
+
+    monkeypatch.setattr(producers, "MAX_STORE_ROWS", 2)
+    at_bound = spark.sql("SELECT * FROM VALUES (0, 1.0D), (1, 2.0D) AS t(seg, m)")
+    assert visits(_segment_reader(spark, at_bound).scan(NOW_MS)) == {1: 10.0, 2: 40.0}
+    over = spark.sql("SELECT * FROM VALUES (0, 1.0D), (1, 2.0D), (2, 3.0D) AS t(seg, m)")
+    with pytest.raises(ValueError, match="'mult' holds more than MAX_STORE_ROWS = 2 rows"):
+        _segment_reader(spark, over).scan(NOW_MS)
+
+
+def test_cancelled_store_read_is_read_again(spark, tmp_path):
+    """A freshen timeout that cancels a capsule's first store read leaves
+    the capsule unfolded: the stale table comes back, and the next call
+    reads the store again."""
+    gate = tmp_path / "slow"
+    gate.touch()
+    gate_path = str(gate)
+
+    def slow_store(batches):
+        import os
+        import time as _time
+
+        for pdf in batches:
+            if os.path.exists(gate_path):
+                _time.sleep(30)
+            yield pdf.assign(m=pdf["seg"] + 2.0)
+
+    store = spark.range(2).toDF("seg").mapInPandas(slow_store, "seg long, m double")
+    reader = _segment_reader(spark, store)
+    out, fresh = reader.freshen_with_timeout(NOW_MS, timeout_ms=1000)
+    assert fresh is False and out is reader.df
+    assert reader._capsules["info:visits"].compiled.lookups is None
+    gate.unlink()
+    out, fresh = reader.freshen_with_timeout(NOW_MS, timeout_ms=120_000)
+    assert fresh is True
+    assert visits(out) == {1: 20.0, 2: 60.0}
 
 
 class MapScoreFromRawProducer(ExpressionProducer):

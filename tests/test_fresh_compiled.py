@@ -6,6 +6,10 @@ the capsule they were built for.
   their ``as_of``;
 - a reread (or a direct ``_capsules`` reassignment) serves the new
   policy on the next read;
+- a reread keeps each capsule whose registry record is unchanged and
+  rebuilds only added or changed ones (``rereadPolicies``,
+  ``InternalFreshKijiTableReader.java:271-309``); a directly assigned
+  capsule is never reused by a registry resolve;
 - the clock column folds away: the optimized plan has no ``__as_of__``,
   the shelf-life bound is a constant, and the key filter still reaches
   the scan;
@@ -100,16 +104,61 @@ def test_policy_and_producer_run_once_per_generation(spark, tmp_path):
     assert fully is True
     assert newest(out.collect(), "info_visits")["bar"] == (later, 101)
     assert CALLS == once
+    first = dict(reader._capsules)
 
+    def kept(column):
+        cap = reader._capsules[column]
+        return cap is first[column] and cap.compiled is first[column].compiled
+
+    # unchanged records keep their capsules, compiled Columns included
     reader.reread_policies()
     reader.get("foo", NOW_MS).collect()
     reader.bulk_get(["foo"], later).collect()
-    assert CALLS == {k: 2 * v for k, v in once.items()}
+    assert CALLS == once
+    assert kept("info:visits") and kept("info:name")
 
     reader.reread_policies(preload=True)
-    assert CALLS == {k: 3 * v for k, v in once.items()}
+    assert CALLS == once
+    assert kept("info:visits") and kept("info:name")
     reader.freshen(later).collect()
-    assert CALLS == {k: 3 * v for k, v in once.items()}
+    assert CALLS == once
+
+    # a changed policy state rebuilds that capsule only: 10 ms makes bar stale
+    reg.remove("uc", "info:visits")
+    reg.store(
+        layout, "uc", "info:visits", f"{__name__}.CountingIncrement",
+        f"{__name__}.CountingShelfLife", ShelfLife(10).serialize(),
+    )
+    reader.reread_policies()
+    assert newest(reader.get("bar", NOW_MS).collect(), "info_visits") == {
+        "bar": (NOW_MS, 101)
+    }
+    assert CALLS == {**once, "is_fresh": 2, "score_visits": 2}
+    assert not kept("info:visits") and kept("info:name")
+    visits = reader._capsules["info:visits"]
+
+    # a removed record drops its capsule; an added one is built anew
+    reg.remove("uc", "info:name")
+    reader.reread_policies(preload=True)
+    assert set(reader._capsules) == {"info:visits"}
+    assert reader._capsules["info:visits"] is visits
+    reg.store(
+        layout, "uc", "info:name", f"{__name__}.CountingNameTag",
+        f"{__name__}.CountingFresherThan",
+        FresherThanColumn("info:name", "info:visits").serialize(),
+    )
+    reader.reread_policies(preload=True)
+    assert set(reader._capsules) == {"info:visits", "info:name"}
+    assert not kept("info:name")
+    assert CALLS == {k: 2 * v for k, v in once.items()}
+
+    # a capsule dict assigned directly is never reused by a registry resolve
+    direct = Freshener("info:visits", NeverFreshen(), IncrementVisitsProducer())
+    reader._capsules = {"info:visits": direct}
+    assert newest(reader.get("foo", NOW_MS).collect(), "info_visits") == {"foo": (1, 10)}
+    reader.reread_policies(preload=True)
+    assert reader._capsules["info:visits"] is visits
+    assert CALLS == {k: 2 * v for k, v in once.items()}
 
 
 def test_reread_and_reassignment_never_serve_stale_capsules(spark):

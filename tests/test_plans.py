@@ -135,6 +135,94 @@ def test_pandas_freshen_no_forced_broadcast(spark):
     )
 
 
+def _jobs_in_group(sc, group: str, fn):
+    """Run ``fn`` in its own thread under job group ``group``; return its
+    result and the number of jobs the group launched."""
+    import threading
+
+    out = []
+
+    def run():
+        sc.setJobGroup(group, group)
+        out.append(fn())
+
+    t = threading.Thread(target=run)
+    t.start()
+    t.join()
+    return out[0], len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_kv_point_read_is_one_scan_job(spark, tmp_path):
+    """A point read through a capsule with a policy-masked KV store (the
+    ``fresh_a9_kv_masked_scoring`` shape) plans to one scan: the stores are
+    folded into literal maps by the capsule's first freshen, so no read
+    joins, broadcasts or re-plans adaptively, and the key still reaches the
+    parquet reader. Building the capsule reads no store; the first get
+    reads the surviving store once, and later gets read none."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    from kiji_scoring_spark import model
+    from kiji_scoring_spark.fresh import Freshener, FreshTableReader
+    from kiji_scoring_spark.policies import ShelfLife
+    from kiji_scoring_spark.producers import ExpressionProducer
+    from kiji_scoring_spark.registry import FreshenerRegistry
+
+    class ShelfLifeWithStore(ShelfLife):
+        def __init__(self, stores):
+            super().__init__(10)
+            self._stores = stores
+
+        @property
+        def required_stores(self):
+            return self._stores
+
+    schema = StructType([
+        StructField("entity_id", LongType(), False),
+        StructField("seg", LongType(), False),
+        StructField("value_versions", model.versions_type(DoubleType())),
+    ])
+    path = str(tmp_path / "kv.parquet")
+    spark.createDataFrame(
+        [(k, k % 5, [(1, float(k))]) for k in range(20)], schema
+    ).write.parquet(path)
+    df = spark.read.parquet(path)
+    seg = spark.range(5).select(F.col("id").alias("seg"))
+
+    def store(mult):
+        return {"mult": {"df": seg.withColumn("m", mult), "on": "seg",
+                         "select": {"mult": "m"}}}
+
+    producer = ExpressionProducer(
+        lambda df_: model.most_recent_value("value_versions") * F.col("mult"),
+        data_request=["value:versions"],
+        required_stores=store(F.lit(100.0)),
+    )
+    policy = ShelfLifeWithStore(store((F.col("seg") + 2).cast("double")))
+    reader = FreshTableReader(spark, "kv", df, FreshenerRegistry())
+    reader._capsules = {"value:versions": Freshener("value:versions", policy, producer)}
+    sc = spark.sparkContext
+
+    _, jobs = _jobs_in_group(sc, "kv-preload", reader.preload)
+    assert jobs == 0, "building the capsule read a store"
+    got, jobs = _jobs_in_group(sc, "kv-get-build", lambda: reader.get(7, 1_000))
+    assert jobs >= 1, "the first get did not read the store"
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    for op in ("Join", "BroadcastExchange", "AdaptiveSparkPlan"):
+        assert op not in plan, f"point read plans a {op}:\n{plan}"
+    assert "EqualTo(entity_id,7)" in plan.split("PushedFilters: [")[1]
+    rows, jobs = _jobs_in_group(sc, "kv-get-read", got.collect)
+    assert jobs == 1
+    # the policy's store (2 + seg) masks the producer's poison 100
+    assert [r["value_versions"][0]["value"] for r in rows] == [7.0 * 4]
+
+    again, jobs = _jobs_in_group(sc, "kv-get2-build", lambda: reader.get(3, 1_000))
+    assert jobs == 0, "a second get read a store again"
+    rows, jobs = _jobs_in_group(sc, "kv-get2-read", again.collect)
+    assert jobs == 1
+    assert rows[0]["value_versions"][0]["value"] == 3.0 * 5
+
+
 def test_bucketed_join_is_colocated_no_shuffle(spark, sf_dir):
     """The 100 TB co-located join recipe: write both join sides bucketed
     by the join key (same bucket count), and the join plans with ZERO
