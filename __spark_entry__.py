@@ -83,6 +83,13 @@ _FORCE_RECHECK: frozenset[str] = frozenset(
         "text_bpe_merge_mining",
         "text_bpe_tokenize_corpus",
         "graph_pagerank_fixed_point",
+        #
+        # Every snapshot commit now writes a collision-free data dir and
+        # publishes its manifest with link(2) (operators/snapshots.py
+        # _commit); the committing queries not already listed above:
+        "fresh_scoring_snapshot_pipeline",
+        "streaming_drift_rescoring_ingest",
+        "ann_ivf_cell_rebalance_stats",
     }
 )
 

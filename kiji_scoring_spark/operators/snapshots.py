@@ -1,53 +1,56 @@
 """Minimal versioned-table format: manifest-based snapshots with
-time travel and compaction (SURVEY §2.B round-5 deepening).
+time travel and compaction (SURVEY §2.B).
 
 The table-level analog of the reference's versioned cells (§1.1:
 every (row, family, qualifier) keeps timestamped versions; reads pick
 a version by time range) — here every COMMIT keeps the table state,
 and reads pick a version by number. This is the core mechanic of a
 lakehouse table format (Delta/Iceberg), reduced to what plain parquet
-plus an atomic manifest rename can provide:
+plus an atomic manifest link can provide:
 
 - each commit writes its own immutable data directory
-  `<table>/data/v<N>/` (parquet, written by Spark, any parallelism);
+  `<table>/data/c<pid>-<ns>-<n>/` (parquet, written by Spark, any
+  parallelism), named so that no two writers can ever collide;
 - a manifest `<table>/_manifests/v<N>.json` lists the data dirs that
   COMPOSE that version (append = parent's dirs + the new dir;
   overwrite/compact = just the new dir) plus parent/op metadata;
 - the manifest is published atomically (fsync'd temp file + link(2))
-  — a reader never observes a half-written version. (On an object
-  store this is exactly the commit problem Delta's log and Iceberg's
-  catalog solve; by default single-writer is assumed here, and a
-  violation is LOUD: each version is claimed with an exclusive mkdir
-  before any data is written, so of two racing committers exactly one
-  wins and the other raises SnapshotConflictError — never
-  last-writer-wins.)
+  — a reader never observes a half-written version, and link(2) fails
+  if the version already exists, so of two writers racing to one
+  version exactly one publishes: never last-writer-wins.
 
-Two LEGITIMATE writers (the production pair: streaming ingest +
-scheduled compaction) use the OPTIMISTIC path instead (`retries > 0`,
-r14 verdict #3): data is written ONCE into a uniquely-named dir that
-can never collide, and only the metadata publish retries — on losing
-the atomic link(2) race the writer re-reads the latest version,
-re-validates its op's precondition against the commits that landed in
-between (append: none; replace_partitions: the replaced partitions
-must be untouched; compaction: only appends are mergeable), rebuilds
-the manifest at the next version, and re-publishes. That is exactly
+All three writers (commit_snapshot, replace_partitions,
+compact_snapshot) commit one way, `_commit`: note the latest version on
+entry, write the data ONCE into the unique dir, then build the manifest
+on the CURRENT latest version and publish it. Building checks the
+commits that landed since entry against the op's own rule — append:
+none; overwrite: no commit may have landed; compaction: only appends;
+replace_partitions: the replaced partitions must be untouched — and a
+broken rule raises SnapshotConflictError. A lost link(2) race re-reads
+the latest version and rebuilds, up to `retries` times. That is
 Delta/Iceberg's optimistic concurrency (write data files once, retry
 the log commit with conflict validation) reduced to what a manifest
-directory can provide.
+directory can provide. A writer that stops without publishing deletes
+its own dir before it raises; a writer that crashes leaves a dir no
+manifest references, which blocks no version and which
+vacuum_snapshots reclaims.
 
 Readers never list data directories — they read the closed file-set
 named by the manifest, so a crashed half-written commit dir is
-invisible until its manifest lands. Compaction rewrites the CURRENT
-file-set into fewer, larger files as a new version: old versions stay
-readable (time travel), and the small-file problem — the operational
-tax of every streaming/incremental 100 TB pipeline — is paid down
-without blocking readers.
+invisible. Compaction rewrites the CURRENT file-set into fewer, larger
+files as a new version: old versions stay readable (time travel), and
+the small-file problem — the operational tax of every
+streaming/incremental 100 TB pipeline — is paid down without blocking
+readers.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
+import shutil
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -74,50 +77,18 @@ def latest_version(path: str) -> int | None:
 
 
 class SnapshotConflictError(RuntimeError):
-    """A second writer raced this commit to the same version number.
-
-    The format is single-writer by design (the rename-based commit has no
-    distributed arbiter — that is exactly the commit problem Delta's log
-    and Iceberg's catalog exist to solve). This error makes a violation
-    LOUD instead of silently last-writer-wins: the loser of the race gets
-    this exception and its data dir never becomes referenced. Recovery
-    for a crashed winner (claimed dir, never published): the orphan dir
-    is unreferenced by every manifest, so `vacuum_snapshots` reclaims it,
-    after which the version number is claimable again."""
-
-
-def _claim_version(path: str, version: int) -> str:
-    """Atomically claim `version` by creating its data dir with an
-    exclusive mkdir (the POSIX-atomic O_EXCL analog for directories).
-    Exactly one of any set of racing writers succeeds; the rest raise
-    SnapshotConflictError BEFORE writing any data, so the winner's
-    files can never be clobbered by a loser writing the same path."""
-    rel = os.path.join("data", f"v{version}")
-    d = os.path.join(path, rel)
-    os.makedirs(os.path.dirname(d), exist_ok=True)
-    try:
-        os.mkdir(d)
-    except FileExistsError:
-        raise SnapshotConflictError(
-            f"version {version} at {path} is already claimed: a concurrent "
-            "(or crashed) writer owns its data dir. If no writer is live, "
-            "vacuum_snapshots() reclaims unreferenced claim dirs."
-        ) from None
-    return rel
+    """A commit could not publish: a commit that landed after it started
+    breaks its op's rule (an overwrite, compaction or replace whose
+    input changed under it), or it lost the link(2) race to its version
+    more than `retries` times. The loser's data dir is deleted before
+    this is raised, so the table holds only the published commits."""
 
 
 def _claim_unique_dir(path: str) -> str:
-    """Claim a data dir whose name can never collide with another
-    writer's — the optimistic path's replacement for the version-number
-    claim. The token is pid + monotonic ns + an in-process counter, and
-    the exclusive mkdir still backstops the (practically impossible)
-    collision by bumping the counter. Because no manifest references
-    the dir until its commit publishes, a crashed optimistic writer
-    leaves only an UNREFERENCED dir that vacuum_snapshots reclaims —
-    same recovery story as a crashed pessimistic claim."""
-    import itertools
-    import time
-
+    """Create a data dir whose name can never collide with another
+    writer's: pid + monotonic ns + an in-process counter, with the
+    exclusive mkdir backstopping the (practically impossible) collision
+    by bumping the counter."""
     os.makedirs(os.path.join(path, "data"), exist_ok=True)
     for n in itertools.count():
         rel = os.path.join("data", f"c{os.getpid()}-{time.monotonic_ns()}-{n}")
@@ -128,43 +99,12 @@ def _claim_unique_dir(path: str) -> str:
         return rel
 
 
-def _publish_with_retry(path: str, build_manifest, retries: int) -> int:
-    """The optimistic commit loop: `build_manifest(parent)` constructs
-    the manifest to publish on top of the CURRENT latest version (it
-    re-validates the op's precondition and raises SnapshotConflictError
-    itself if the new parent makes the op unresolvable, or returns an
-    int to short-circuit — the txn-already-committed no-op). Each lost
-    link(2) race consumes one retry; conflicts past the budget
-    re-raise, so a pathological writer storm degrades loudly, never
-    into a livelock."""
-    attempts = retries + 1
-    last_err: SnapshotConflictError | None = None
-    for _ in range(attempts):
-        parent = latest_version(path)
-        built = build_manifest(parent)
-        if isinstance(built, int):
-            return built  # txn watermark says this commit already landed
-        try:
-            _publish(path, built)
-        except SnapshotConflictError as e:
-            last_err = e
-            continue
-        return built["version"]
-    raise SnapshotConflictError(
-        f"commit at {path} lost the publish race {attempts} times "
-        f"(retries={retries}); last conflict: {last_err}"
-    )
-
-
 def _publish(path: str, manifest: dict) -> None:
     """Atomic manifest publish: write to a temp name, fsync, then
     hard-link to the final name. link(2) fails atomically if the final
-    name exists, so even a writer that somehow bypassed the version
-    claim cannot overwrite a published manifest — a reader observes
-    either nothing or the complete winning manifest, never a torn or
-    replaced one."""
-    import time
-
+    name exists, so a published manifest is never replaced — a reader
+    observes either nothing or the complete winning manifest, never a
+    torn or replaced one."""
     mdir = _manifest_dir(path)
     os.makedirs(mdir, exist_ok=True)
     final = os.path.join(mdir, f"v{manifest['version']}.json")
@@ -188,6 +128,74 @@ def _publish(path: str, manifest: dict) -> None:
         os.remove(tmp)
 
 
+def _txn_done(path: str, txn: tuple[str, int] | None) -> bool:
+    if txn is None:
+        return False
+    done = last_txn_id(path, txn[0])
+    return done is not None and int(txn[1]) <= done
+
+
+def _commit(
+    path: str,
+    op: str,
+    write,
+    build,
+    schema: str,
+    retries: int,
+    txn: tuple[str, int] | None = None,
+    extra: dict | None = None,
+) -> int:
+    """The one commit protocol of every writer. `write(dir)` writes the
+    commit's data once into a fresh unique dir (which already exists,
+    so Spark must write in 'append' mode); `build(parent, rel)`
+    returns the manifest's dirs on top of the CURRENT latest version
+    `parent`, raising SnapshotConflictError if the commits that landed
+    since the writer started break its op's rule. Each lost link(2)
+    race consumes one retry; past the budget the conflict re-raises,
+    so a writer storm degrades loudly, never into a livelock. A `txn`
+    whose watermark is already reached no-ops, checked before the
+    write and again before every publish. Unless the manifest
+    publishes, the dir is deleted before returning or raising."""
+    if _txn_done(path, txn):
+        return latest_version(path)  # a replay of a committed batch
+    rel = _claim_unique_dir(path)
+    published = False
+    try:
+        write(os.path.join(path, rel))
+        lost = None
+        for _ in range(retries + 1):
+            parent = latest_version(path)
+            if _txn_done(path, txn):
+                return parent  # a concurrent delivery of this batch landed
+            manifest = {
+                "version": 1 if parent is None else parent + 1,
+                "parent": parent,
+                "op": op,
+                "dirs": build(parent, rel),
+                **(extra or {}),
+                # an EMPTY commit writes no parquet files (a partitioned
+                # empty write leaves only _SUCCESS), so the schema must
+                # survive in metadata for readers
+                "schema": schema,
+            }
+            if txn is not None:
+                manifest["txn"] = {"app": txn[0], "id": int(txn[1])}
+            try:
+                _publish(path, manifest)
+            except SnapshotConflictError as e:
+                lost = e
+                continue
+            published = True
+            return manifest["version"]
+        raise SnapshotConflictError(
+            f"commit at {path} lost the publish race {retries + 1} times "
+            f"(retries={retries}); last conflict: {lost}"
+        )
+    finally:
+        if not published:
+            shutil.rmtree(os.path.join(path, rel), ignore_errors=True)
+
+
 def commit_snapshot(
     df: DataFrame,
     path: str,
@@ -195,142 +203,61 @@ def commit_snapshot(
     target_files: int | None = None,
     partition_by: list[str] | None = None,
     txn: tuple[str, int] | None = None,
-    reclaim_crashed: bool = False,
     retries: int = 0,
 ) -> int:
     """Commit `df` as the next version of the table at `path`.
 
     mode='overwrite' starts the file-set fresh; mode='append' adds the
     new data dir to the parent version's file-set. `target_files`
-    optionally coalesces the write (used by compaction). `partition_by`
-    lays the commit's data dir out hive-partitioned on those columns —
-    readers get partition pruning through every version that commit
-    participates in (Spark discovers the partition columns per data
-    dir, so differently-partitioned commits can coexist in one
-    version's file-set as long as the COLUMN SET is consistent — the
+    optionally coalesces the write. `partition_by` lays the commit's
+    data dir out hive-partitioned on those columns — readers get
+    partition pruning through every version that commit participates
+    in (Spark discovers the partition columns per data dir, so
+    differently-partitioned commits can coexist in one version's
+    file-set as long as the COLUMN SET is consistent — the
     additive-evolution rule applies to partition columns too). Returns
     the committed version number.
+
+    An append has no rule on its parent (its rows are
+    parent-independent): it lands on whatever version is latest when
+    it publishes, so appends that overlap in time all land — which is
+    what lets streaming ingest and scheduled compaction share one
+    table. An overwrite raises SnapshotConflictError if any commit
+    landed after it started: it must never silently discard rows it
+    did not see. `retries` is how many lost link(2) races are retried.
 
     `txn=(app_id, txn_id)` records an idempotent-writer watermark in the
     manifest (Delta's txn/appId pattern): an AT-LEAST-ONCE writer (a
     streaming foreachBatch) tags each commit with its monotonically
-    increasing batch id, and on retry consults `last_txn_id` — a replay
-    of an already-committed batch becomes a no-op instead of a
-    duplicate append.
-
-    `reclaim_crashed=True` is the SINGLE-WRITER crash-recovery switch:
-    if the next version's data dir is already claimed but has NO
-    published manifest, it is treated as this writer's own crashed
-    prior attempt (the only possibility under a single writer — a
-    manifest publishes atomically after the data job), deleted, and
-    re-claimed, so a retried commit makes progress instead of wedging
-    on SnapshotConflictError. It MUST stay False anywhere two writers
-    could genuinely race: a loser that reclaimed would clobber the
-    winner's in-flight data dir.
-
-    `retries>0` is the MULTI-WRITER path (optimistic concurrency, r14
-    verdict #3): the data is written once into a collision-free unique
-    dir and only the manifest publish retries, re-reading the latest
-    version each attempt. An append has NO precondition on the parent
-    (its rows are parent-independent), so a lost race always resolves:
-    the retried manifest is the new parent's dirs + this commit's dir —
-    both racing writers make progress, which is what lets streaming
-    ingest and scheduled compaction share one table. With `txn`, each
-    attempt re-checks the watermark, so a duplicate replay that loses
-    its race to ITS OWN earlier delivery no-ops instead of
-    double-appending (exactly-once composes with retry). Mutually
-    exclusive with reclaim_crashed: reclaim assumes a claimed-dir
-    conflict can only be one's own crash, which two live writers
-    violate."""
-    assert mode in ("append", "overwrite")
-    if retries and reclaim_crashed:
+    increasing batch id, and a replay of an already-committed batch
+    no-ops, returning the latest version, instead of appending a
+    duplicate. The watermark is checked before the write and before
+    every publish, so a duplicate that loses its race to ITS OWN
+    earlier delivery also no-ops."""
+    if mode not in ("append", "overwrite"):
         raise ValueError(
-            "retries (multi-writer) and reclaim_crashed (single-writer) "
-            "are mutually exclusive: reclaiming a claimed dir under a "
-            "second live writer would clobber its in-flight commit"
+            f"commit_snapshot mode must be 'append' or 'overwrite', got {mode!r}"
         )
-    if retries:
-        if txn is not None:
-            done = last_txn_id(path, txn[0])
-            if done is not None and int(txn[1]) <= done:
-                return latest_version(path)  # already committed: no-op
-        if target_files:
-            df = df.coalesce(target_files)
-        rel = _claim_unique_dir(path)
-        writer = df.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(os.path.join(path, rel))
-        schema_json = df.schema.json()
-
-        def build(parent: int | None):
-            if txn is not None:
-                done = last_txn_id(path, txn[0])
-                if done is not None and int(txn[1]) <= done:
-                    # a concurrent delivery of this same batch won the
-                    # race: drop our now-orphaned (unreferenced) dir and
-                    # report the version that carries the txn
-                    import shutil
-
-                    shutil.rmtree(os.path.join(path, rel), ignore_errors=True)
-                    return parent
-            version = 1 if parent is None else parent + 1
-            dirs = [rel]
-            if mode == "append" and parent is not None:
-                dirs = _read_manifest(path, parent)["dirs"] + dirs
-            manifest = {
-                "version": version,
-                "parent": parent,
-                "op": mode,
-                "dirs": dirs,
-                "schema": schema_json,
-            }
-            if txn is not None:
-                manifest["txn"] = {"app": txn[0], "id": int(txn[1])}
-            return manifest
-
-        return _publish_with_retry(path, build, retries)
-    parent = latest_version(path)
-    version = 1 if parent is None else parent + 1
-    if reclaim_crashed:
-        mdir = os.path.join(_manifest_dir(path), f"v{version}.json")
-        d = os.path.join(path, "data", f"v{version}")
-        if os.path.isdir(d) and not os.path.exists(mdir):
-            import shutil
-
-            shutil.rmtree(d)
-    rel = _claim_version(path, version)  # loses loudly, never clobbers
+    observed = latest_version(path)
     if target_files:
         df = df.coalesce(target_files)
-    # mode MUST be append, not overwrite: Spark's overwrite deletes the
-    # target directory before recreating it, which would momentarily
-    # remove the exclusive-mkdir claim marker — a racing writer could
-    # re-claim the same version in that window and both would write the
-    # same dir. Appending into the freshly-claimed EMPTY dir writes the
-    # identical file-set while the claim stays on disk for its whole life.
     writer = df.write.mode("append")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(os.path.join(path, rel))
-    dirs = [rel]
-    if mode == "append" and parent is not None:
-        dirs = _read_manifest(path, parent)["dirs"] + dirs
-    # the manifest carries the commit's schema: an EMPTY commit writes no
-    # parquet files (a partitioned empty write leaves only _SUCCESS), so
-    # the schema must survive in metadata for readers — empty delta
-    # batches are routine in an incremental pipeline and must not make a
-    # version unreadable
-    manifest = {
-        "version": version,
-        "parent": parent,
-        "op": mode,
-        "dirs": dirs,
-        "schema": df.schema.json(),
-    }
-    if txn is not None:
-        manifest["txn"] = {"app": txn[0], "id": int(txn[1])}
-    _publish(path, manifest)
-    return version
+
+    def build(parent: int | None, rel: str) -> list:
+        if mode == "overwrite":
+            if parent != observed:
+                raise SnapshotConflictError(
+                    f"overwrite at {path} conflicts with v{parent}, which "
+                    "landed after it started: it would discard rows it never saw"
+                )
+            return [rel]
+        return ([] if parent is None else _read_manifest(path, parent)["dirs"]) + [rel]
+
+    return _commit(
+        path, mode, writer.parquet, build, df.schema.json(), retries, txn
+    )
 
 
 def last_txn_id(path: str, app: str) -> int | None:
@@ -366,7 +293,7 @@ def _dir_partition_values(path: str, rel: str, partition_col: str):
     file could NOT be attributed to a `partition_col=` path segment
     (a flat or differently-partitioned commit). Metadata-only: one
     filesystem walk of the single commit dir, no file opened — this is
-    what lets an optimistic replace_partitions decide from the
+    what lets replace_partitions decide from the
     manifests + directory names alone whether an intervening append
     touched the partitions it is rewriting."""
     prefix = f"{partition_col}="
@@ -390,11 +317,11 @@ def _validate_replace_precondition(
 ) -> None:
     """Raise SnapshotConflictError unless every commit in
     (from_version, to_version] provably left the partitions holding
-    `values` untouched — the serializability check a retried
-    replace_partitions needs before re-publishing on a new parent.
+    `values` untouched — the serializability check replace_partitions
+    needs before publishing on a newer parent than the one it read.
     Appends (and other replaces' NEW dirs) pass iff their hive layout
     shows no files in the replaced partitions; compactions always pass
-    (logically zero-effect, and the retried tombstones prune the
+    (logically zero-effect, and the tombstones prune the
     compacted dirs just as they pruned the originals); overwrites and
     differently-keyed replaces never pass (their row movement cannot be
     attributed partition-wise from metadata)."""
@@ -479,16 +406,15 @@ def replace_partitions(
     values are visible untombstoned). Delta reads refuse a lineage
     containing this op (added dirs no longer equal added rows).
 
-    `retries>0` is the optimistic multi-writer path: the replacement
-    rows are written once, and a lost publish race re-validates that
-    the intervening commits left the replaced partitions untouched
-    (appends elsewhere and compactions are mergeable; a concurrent
+    The replacement rows are written once; the commits that landed
+    after this one started must have left the replaced partitions
+    untouched (appends elsewhere and compactions are mergeable; an
     append INTO a replaced partition, an overwrite, or an overlapping
-    replace raises — retrying would silently tombstone the other
-    writer's rows, the one thing optimistic concurrency must never
-    do)."""
-    parent = latest_version(path)
-    if parent is None:
+    replace raises — publishing anyway would silently tombstone the
+    other writer's rows, the one thing optimistic concurrency must
+    never do). `retries` is how many lost link(2) races are retried."""
+    observed = latest_version(path)
+    if observed is None:
         raise FileNotFoundError(f"no snapshot versions at {path}")
     if not values:
         raise ValueError("replace_partitions needs a non-empty values list")
@@ -497,61 +423,31 @@ def replace_partitions(
             "replace_partitions cannot replace the null partition "
             "(__HIVE_DEFAULT_PARTITION__): tombstones are value-keyed"
         )
-
-    def _tombstoned_dirs(at_parent: int) -> list:
-        dirs = []
-        for d in _read_manifest(path, at_parent)["dirs"]:
-            ex = _dir_excludes(d)
-            ex[partition_col] = sorted(set(ex.get(partition_col, [])) | set(values))
-            dirs.append({"path": _dir_rel(d), "exclude": ex})
-        return dirs
-
     if target_files:
         df = df.repartition(target_files, partition_col)
 
-    if retries:
-        observed = parent  # df was computed against this state
-        rel = _claim_unique_dir(path)
-        df.write.mode("append").partitionBy(partition_col).parquet(
-            os.path.join(path, rel)
-        )
-        schema_json = df.schema.json()
+    def build(parent: int, rel: str) -> list:
+        # df was computed against `observed`
+        if parent != observed:
+            _validate_replace_precondition(
+                path, observed, parent, partition_col, values
+            )
+        dirs = []
+        for d in _read_manifest(path, parent)["dirs"]:
+            ex = _dir_excludes(d)
+            ex[partition_col] = sorted(set(ex.get(partition_col, [])) | set(values))
+            dirs.append({"path": _dir_rel(d), "exclude": ex})
+        return dirs + [rel]
 
-        def build(cur_parent: int | None):
-            assert cur_parent is not None  # versions only grow
-            if cur_parent != observed:
-                _validate_replace_precondition(
-                    path, observed, cur_parent, partition_col, values
-                )
-            return {
-                "version": cur_parent + 1,
-                "parent": cur_parent,
-                "op": "replace",
-                "dirs": _tombstoned_dirs(cur_parent) + [rel],
-                "replaced": {partition_col: sorted(values)},
-                "schema": schema_json,
-            }
-
-        return _publish_with_retry(path, build, retries)
-
-    version = parent + 1
-    rel = _claim_version(path, version)  # loses loudly, never clobbers
-    # append into the claimed EMPTY dir (see commit_snapshot)
-    df.write.mode("append").partitionBy(partition_col).parquet(
-        os.path.join(path, rel)
-    )
-    _publish(
+    return _commit(
         path,
-        {
-            "version": version,
-            "parent": parent,
-            "op": "replace",
-            "dirs": _tombstoned_dirs(parent) + [rel],
-            "replaced": {partition_col: sorted(values)},
-            "schema": df.schema.json(),
-        },
+        "replace",
+        df.write.mode("append").partitionBy(partition_col).parquet,
+        build,
+        df.schema.json(),
+        retries,
+        extra={"replaced": {partition_col: sorted(values)}},
     )
-    return version
 
 
 def read_snapshot(
@@ -712,19 +608,19 @@ def compact_snapshot(
     column becomes a plain data column) — legal but almost never what a
     pruned-read table wants.
 
-    `retries>0` is the optimistic multi-writer path (the scheduled-
-    compaction side of the ingest-vs-compaction pair): the compacted
-    rewrite of the fileset OBSERVED at entry is written once, and a
-    lost publish race merges rather than discards — the retried
-    manifest is [this compacted dir] + every dir the intervening
-    APPENDS added, so the ingest's rows survive the compaction that
-    raced them and both writers make progress. Anything but appends in
-    between (another compact, a replace, an overwrite) raises: their
-    row movement makes the already-written rewrite stale."""
-    parent = latest_version(path)
-    if parent is None:
+    The compacted rewrite of the file-set OBSERVED at entry is written
+    once. Appends that land meanwhile (the ingest side of the
+    ingest-vs-compaction pair) merge rather than conflict: the manifest
+    is [this compacted dir] + every dir they added, so the ingest's rows
+    survive the compaction that raced them and both writers make
+    progress. Anything but appends in between (another compact, a
+    replace, an overwrite) raises: their row movement makes the
+    already-written rewrite stale. `retries` is how many lost link(2)
+    races are retried."""
+    observed = latest_version(path)
+    if observed is None:
         raise FileNotFoundError(f"no snapshot versions at {path}")
-    current = read_snapshot(spark, path, parent)
+    current = read_snapshot(spark, path, observed)
     if partition_by:
         writer = (
             current.repartition(target_files, *partition_by)
@@ -733,57 +629,27 @@ def compact_snapshot(
         )
     else:
         writer = current.coalesce(target_files).write.mode("append")
+    observed_rels = {_dir_rel(d) for d in _read_manifest(path, observed)["dirs"]}
 
-    if retries:
-        observed = parent
-        observed_rels = {
-            _dir_rel(d) for d in _read_manifest(path, observed)["dirs"]
-        }
-        rel = _claim_unique_dir(path)
-        writer.parquet(os.path.join(path, rel))
-        schema_json = current.schema.json()
+    def build(parent: int, rel: str) -> list:
+        for v in range(observed + 1, parent + 1):
+            m = _read_manifest(path, v)
+            if m["op"] != "append":
+                raise SnapshotConflictError(
+                    f"compaction at {path} conflicts with concurrent "
+                    f"op={m['op']!r} at v{v}: the rewrite it already "
+                    "wrote no longer reflects the table"
+                )
+        appended = [
+            d
+            for d in _read_manifest(path, parent)["dirs"]
+            if _dir_rel(d) not in observed_rels
+        ]
+        return [rel] + appended
 
-        def build(cur_parent: int | None):
-            assert cur_parent is not None  # versions only grow
-            for v in range(observed + 1, cur_parent + 1):
-                m = _read_manifest(path, v)
-                if m["op"] != "append":
-                    raise SnapshotConflictError(
-                        f"compaction at {path} conflicts with concurrent "
-                        f"op={m['op']!r} at v{v}: the rewrite it already "
-                        "wrote no longer reflects the table"
-                    )
-            appended = [
-                d
-                for d in _read_manifest(path, cur_parent)["dirs"]
-                if _dir_rel(d) not in observed_rels
-            ]
-            return {
-                "version": cur_parent + 1,
-                "parent": cur_parent,
-                "op": "compact",
-                "dirs": [rel] + appended,
-                "schema": schema_json,
-            }
-
-        return _publish_with_retry(path, build, retries)
-
-    version = parent + 1
-    rel = _claim_version(path, version)  # loses loudly, never clobbers
-    # append, not overwrite, for the same reason as commit_snapshot: the
-    # claimed dir must never be deleted or the claim evaporates mid-write
-    writer.parquet(os.path.join(path, rel))
-    _publish(
-        path,
-        {
-            "version": version,
-            "parent": parent,
-            "op": "compact",
-            "dirs": [rel],
-            "schema": current.schema.json(),
-        },
+    return _commit(
+        path, "compact", writer.parquet, build, current.schema.json(), retries
     )
-    return version
 
 
 def vacuum_snapshots(path: str, keep_from: int) -> list[str]:
@@ -798,10 +664,10 @@ def vacuum_snapshots(path: str, keep_from: int) -> list[str]:
     actually become unreferenced and reclaimable — the same
     interplay Delta's VACUUM has with OPTIMIZE. Manifests are removed
     first, then unreferenced data dirs, so a crash mid-vacuum can only
-    leave orphaned (never dangling) data. Returns the deleted data
-    dirs (relative paths)."""
-    import shutil
-
+    leave orphaned (never dangling) data. A crashed writer's dir is
+    unreferenced too and is deleted here — as is the dir of a writer
+    still mid-commit, so run vacuum when no writer is. Returns the
+    deleted data dirs (relative paths)."""
     latest = latest_version(path)
     if latest is None or keep_from > latest:
         raise ValueError(f"keep_from={keep_from} exceeds latest version {latest}")

@@ -184,6 +184,24 @@ def freshness_newer_than_partition(spark: SparkSession, sf_dir: str) -> DataFram
     ).orderBy("user_id")
 
 
+def _shelf_life_reader(spark: SparkSession, sf_dir: str) -> FreshTableReader:
+    """The A7 freshener over ``events_versioned``: one registry record
+    attaching DoubleLatestValueProducer to ``value:versions`` under a
+    ShelfLife(5 d) policy, read through a FreshTableReader keyed on
+    user_id."""
+    vt = versioned_events(spark, sf_dir)
+    reg = FreshenerRegistry()
+    reg.store(
+        TableLayout(vt.schema),
+        "events_versioned",
+        "value:versions",
+        "kiji_scoring_spark.lib.DoubleLatestValueProducer",
+        "kiji_scoring_spark.policies.ShelfLife",
+        ShelfLife(5 * DAY_MS).serialize(),
+    )
+    return FreshTableReader(spark, "events_versioned", vt, reg, key_col="user_id")
+
+
 @query(
     "fresh_batch_scoring",
     f"""
@@ -206,19 +224,7 @@ def fresh_batch_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     (DoubleLatestValueProducer) → freshen pass → versioned write — then a
     most-recent read of the result. The oracle recomputes the same with a
     window+CASE. (InternalFreshKijiTableReader.java:504-619 semantics.)"""
-    vt = versioned_events(spark, sf_dir)
-    reg = FreshenerRegistry()
-    reg.store(
-        TableLayout(vt.schema),
-        "events_versioned",
-        "value:versions",
-        "kiji_scoring_spark.lib.DoubleLatestValueProducer",
-        "kiji_scoring_spark.policies.ShelfLife",
-        ShelfLife(5 * DAY_MS).serialize(),
-    )
-    reader = FreshTableReader(
-        spark, "events_versioned", vt, reg, key_col="user_id"
-    )
+    reader = _shelf_life_reader(spark, sf_dir)
     fresh_df = reader.scan(AS_OF_MS)
     return fresh_df.select(
         "user_id",
@@ -388,17 +394,7 @@ def fresh_a9_kv_masked_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fresh_bulk_get_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 through the fresh reader: bulkGet of 8 entities with freshening
     (InternalFreshKijiTableReader.java:767-806 → semi-join + freshen)."""
-    vt = versioned_events(spark, sf_dir)
-    reg = FreshenerRegistry()
-    reg.store(
-        TableLayout(vt.schema),
-        "events_versioned",
-        "value:versions",
-        "kiji_scoring_spark.lib.DoubleLatestValueProducer",
-        "kiji_scoring_spark.policies.ShelfLife",
-        ShelfLife(5 * DAY_MS).serialize(),
-    )
-    reader = FreshTableReader(spark, "events_versioned", vt, reg, key_col="user_id")
+    reader = _shelf_life_reader(spark, sf_dir)
     got = reader.bulk_get([1, 2, 3, 5, 8, 13, 21, 34], AS_OF_MS)
     return got.select(
         "user_id", model.most_recent_value("value_versions").alias("score")
@@ -468,17 +464,7 @@ def fresh_scoring_snapshot_pipeline(spark: SparkSession, sf_dir: str) -> DataFra
     from .operators.snapshots import commit_snapshot, latest_version, read_snapshot
     from .state import state_path
 
-    vt = versioned_events(spark, sf_dir)
-    reg = FreshenerRegistry()
-    reg.store(
-        TableLayout(vt.schema),
-        "events_versioned",
-        "value:versions",
-        "kiji_scoring_spark.lib.DoubleLatestValueProducer",
-        "kiji_scoring_spark.policies.ShelfLife",
-        ShelfLife(5 * DAY_MS).serialize(),
-    )
-    reader = FreshTableReader(spark, "events_versioned", vt, reg, key_col="user_id")
+    reader = _shelf_life_reader(spark, sf_dir)
 
     path = state_path(sf_dir, "fresh_score_snapshots")
     if latest_version(path) is None:
@@ -938,11 +924,7 @@ def streaming_drift_rescoring_ingest(spark: SparkSession, sf_dir: str) -> DataFr
     tests/test_snapshots.py::test_optimistic_txn_replay_noop_composes_with_retry)."""
     import os
 
-    from .operators.snapshots import (
-        commit_snapshot,
-        last_txn_id,
-        read_snapshot,
-    )
+    from .operators.snapshots import commit_snapshot, read_snapshot
     from .streaming.replay import replay_stream, run_available_now, run_scratch
 
     q = pq.corpus(load_table(spark, sf_dir, "embeddings"))
@@ -967,9 +949,6 @@ def streaming_drift_rescoring_ingest(spark: SparkSession, sf_dir: str) -> DataFr
     rescored_dir = os.path.join(run_base, "rescored")
 
     def freshen(batch_df: DataFrame, batch_id: int) -> None:
-        done = last_txn_id(rescored_dir, "drift_freshen")
-        if done is not None and batch_id <= done:
-            return  # at-least-once replay of a committed batch: no-op
         # d comes out of a one-element explode: Catalyst never pushes a
         # filter on a generator's output below the Generate. A filter on
         # a projected d is pushed into the LUT cross join's condition,

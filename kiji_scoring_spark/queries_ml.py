@@ -1564,7 +1564,6 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.snapshots import (
         commit_snapshot,
         compact_snapshot,
-        last_txn_id,
         read_snapshot,
     )
 
@@ -1600,22 +1599,12 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # at-least-once replay EXACTLY-ONCE — a retried batch_id finds
         # itself already committed and no-ops instead of appending
         # duplicate code rows (Delta's txn/appId pattern).
-        # reclaim_crashed: this foreachBatch is the table's ONLY
-        # writer, so a claimed-but-unpublished version dir can only be
-        # this writer's own crashed prior attempt — the retry deletes
-        # it and recommits the same version instead of wedging on
-        # SnapshotConflictError (pinned by
-        # tests/test_snapshots.py::test_single_writer_retry_reclaims_crashed_claim).
-        done = last_txn_id(codes_dir, "ann_ingest")
-        if done is not None and batch_id <= done:
-            return
         commit_snapshot(
             pq.encode(batch_df, cb, seeds),
             codes_dir,
             mode="append",
             partition_by=["cell"],
             txn=("ann_ingest", batch_id),
-            reclaim_crashed=True,
         )
 
     run_available_now(

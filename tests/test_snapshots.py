@@ -22,6 +22,36 @@ def rows(df):
     return sorted((r.k, r.v) for r in df.collect())
 
 
+def dirs_of(table_path, version):
+    """The data dirs (relative paths) composing `version`."""
+    return [sn._dir_rel(d) for d in sn._read_manifest(table_path, version)["dirs"]]
+
+
+def data_dirs(table_path):
+    """Every data dir on disk, referenced or not (relative paths)."""
+    return {
+        os.path.join("data", n) for n in os.listdir(os.path.join(table_path, "data"))
+    }
+
+
+def _inject_after_claim(monkeypatch, interloper):
+    """Run `interloper` (a real commit) once, right after the next
+    writer creates its data dir: the commit lands while that writer
+    writes, before it builds its manifest."""
+    orig = sn._claim_unique_dir
+    state = {"fired": False}
+
+    def wrapper(path):
+        rel = orig(path)
+        if not state["fired"]:
+            state["fired"] = True
+            interloper()
+        return rel
+
+    monkeypatch.setattr(sn, "_claim_unique_dir", wrapper)
+    return state
+
+
 def test_append_preserves_old_versions(spark, table_path):
     d1 = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
     d2 = spark.createDataFrame([(3, "c")], ["k", "v"])
@@ -49,7 +79,7 @@ def test_torn_manifest_is_invisible(spark, table_path):
     d1 = spark.createDataFrame([(1, "a")], ["k", "v"])
     sn.commit_snapshot(d1, table_path, mode="overwrite")
     # simulate a crashed publisher: data dir exists, manifest only .tmp
-    os.makedirs(os.path.join(table_path, "data", "v2"), exist_ok=True)
+    sn._claim_unique_dir(table_path)
     with open(
         os.path.join(table_path, "_manifests", "v2.json.tmp"), "w"
     ) as f:
@@ -131,13 +161,10 @@ def test_vacuum_after_compaction_reclaims_old_dirs(spark, table_path):
             table_path,
             mode="append" if i else "overwrite",
         )
+    appended = dirs_of(table_path, 3)
     v4 = sn.compact_snapshot(spark, table_path, target_files=1)
     removed = sn.vacuum_snapshots(table_path, keep_from=v4)
-    assert sorted(removed) == [
-        os.path.join("data", "v1"),
-        os.path.join("data", "v2"),
-        os.path.join("data", "v3"),
-    ]
+    assert len(appended) == 3 and sorted(removed) == sorted(appended)
     assert rows(sn.read_snapshot(spark, table_path, v4)) == [
         (0, "0"),
         (1, "1"),
@@ -204,25 +231,23 @@ def test_partitioned_snapshot_read_prunes(spark, sf_dir):
     assert "event_type=purchase" in plan or "isnotnull(event_type" in plan
 
 
-def test_racing_commits_exactly_one_wins(spark, table_path):
-    """Round-6 single-writer gate: two committers that both observed the
-    same parent version race to version 2. The version claim (exclusive
-    mkdir of the data dir) arbitrates BEFORE any data is written, so
-    exactly one wins, the loser raises SnapshotConflictError, and the
-    winner's published data is untouched by the loser."""
+def test_racing_commits_exactly_one_wins(spark, table_path, monkeypatch):
+    """Two retries=0 committers both build on parent v1 before either
+    publishes. link(2) arbitrates: exactly one publishes v2, the loser
+    raises SnapshotConflictError, the winner's data is untouched, and
+    the loser deleted its own data dir, so only referenced dirs remain
+    under data/."""
     import threading
-    from unittest import mock
 
     sn.commit_snapshot(
         spark.createDataFrame([(1, "a")], ["k", "v"]), table_path, mode="overwrite"
     )
     barrier = threading.Barrier(2, timeout=30)
-    real_latest = sn.latest_version
+    real_publish = sn._publish
 
-    def racy_latest(path):
-        v = real_latest(path)
-        barrier.wait()  # both writers observe parent=1 before either claims
-        return v
+    def racy_publish(path, manifest):
+        barrier.wait()  # both writers built v2 before either links it
+        return real_publish(path, manifest)
 
     results: dict[str, object] = {}
 
@@ -233,10 +258,10 @@ def test_racing_commits_exactly_one_wins(spark, table_path):
         except sn.SnapshotConflictError as e:
             results[tag] = e
 
-    with mock.patch.object(sn, "latest_version", racy_latest):
-        t1 = threading.Thread(target=writer, args=("w1", (2, "b")))
-        t2 = threading.Thread(target=writer, args=("w2", (3, "c")))
-        t1.start(); t2.start(); t1.join(); t2.join()
+    monkeypatch.setattr(sn, "_publish", racy_publish)
+    t1 = threading.Thread(target=writer, args=("w1", (2, "b")))
+    t2 = threading.Thread(target=writer, args=("w2", (3, "c")))
+    t1.start(); t2.start(); t1.join(); t2.join()
 
     outcomes = sorted(results.values(), key=lambda r: isinstance(r, Exception))
     assert outcomes[0] == 2, f"expected one winner at v2, got {results}"
@@ -245,30 +270,97 @@ def test_racing_commits_exactly_one_wins(spark, table_path):
     assert sn.latest_version(table_path) == 2
     got = rows(sn.read_snapshot(spark, table_path, 2))
     assert got in ([(1, "a"), (2, "b")], [(1, "a"), (3, "c")])
+    assert data_dirs(table_path) == set(dirs_of(table_path, 2))
 
 
-def test_crashed_claim_blocks_then_vacuum_reclaims(spark, table_path):
-    """A writer that claimed a version and died leaves an orphan data dir:
-    the next committer fails LOUDLY (no silent clobber), and
-    vacuum_snapshots reclaims the unreferenced dir, unblocking commits."""
+def test_crashed_writer_blocks_nothing_then_vacuum_reclaims(spark, table_path):
+    """A writer that died after writing part of its data leaves a data
+    dir no manifest references: the next commit lands anyway (no
+    version is claimed), readers never see the dir, and
+    vacuum_snapshots reclaims it."""
     sn.commit_snapshot(
         spark.createDataFrame([(1, "a")], ["k", "v"]), table_path, mode="overwrite"
     )
-    sn._claim_version(table_path, 2)  # crashed writer: claim, no publish
-    with pytest.raises(sn.SnapshotConflictError):
-        sn.commit_snapshot(
-            spark.createDataFrame([(2, "b")], ["k", "v"]), table_path, mode="append"
-        )
-    assert sn.vacuum_snapshots(table_path, keep_from=1) == [os.path.join("data", "v2")]
+    orphan = sn._claim_unique_dir(table_path)  # crashed writer: no publish
+    with open(os.path.join(table_path, orphan, "part-torn.parquet"), "wb") as f:
+        f.write(b"torn")
     assert sn.commit_snapshot(
         spark.createDataFrame([(2, "b")], ["k", "v"]), table_path, mode="append"
     ) == 2
     assert rows(sn.read_snapshot(spark, table_path, 2)) == [(1, "a"), (2, "b")]
+    assert sn.vacuum_snapshots(table_path, keep_from=1) == [orphan]
+    assert data_dirs(table_path) == set(dirs_of(table_path, 2))
+    assert rows(sn.read_snapshot(spark, table_path, 2)) == [(1, "a"), (2, "b")]
+
+
+def test_commit_rejects_unknown_mode(spark, table_path):
+    """A misspelt mode raises (even under python -O) instead of falling
+    through to an overwrite that drops every earlier row."""
+    d = spark.createDataFrame([(1, "a")], ["k", "v"])
+    sn.commit_snapshot(d, table_path, mode="overwrite")
+    with pytest.raises(ValueError, match="'apend'"):
+        sn.commit_snapshot(d, table_path, mode="apend")
+    assert sn.latest_version(table_path) == 1
+    assert data_dirs(table_path) == set(dirs_of(table_path, 1))
+
+
+def test_overlapping_appends_both_land(spark, table_path, monkeypatch):
+    """An append depends on no parent version: one that started at v1
+    while another append landed v2 before it published lands as v3 on
+    top of it, even with retries=0."""
+    sn.commit_snapshot(
+        spark.createDataFrame([(1, "a")], ["k", "v"]), table_path, mode="overwrite"
+    )
+    state = _inject_after_claim(
+        monkeypatch,
+        lambda: sn.commit_snapshot(
+            spark.createDataFrame([(2, "b")], ["k", "v"]), table_path, mode="append"
+        ),
+    )
+    v = sn.commit_snapshot(
+        spark.createDataFrame([(3, "c")], ["k", "v"]), table_path, mode="append"
+    )
+    assert state["fired"] and v == 3
+    assert sn._read_manifest(table_path, 3)["parent"] == 2
+    assert rows(sn.read_snapshot(spark, table_path, 3)) == [
+        (1, "a"),
+        (2, "b"),
+        (3, "c"),
+    ]
+
+
+@pytest.mark.parametrize("retries", [0, 2])
+def test_overwrite_refuses_commit_landed_since_start(
+    spark, table_path, monkeypatch, retries
+):
+    """An overwrite that a commit overtook between its start and its
+    publish raises whatever its retry budget: publishing would silently
+    drop rows it never saw. Its data dir is deleted, the overtaking
+    commit stands."""
+    sn.commit_snapshot(
+        spark.createDataFrame([(1, "a")], ["k", "v"]), table_path, mode="overwrite"
+    )
+    state = _inject_after_claim(
+        monkeypatch,
+        lambda: sn.commit_snapshot(
+            spark.createDataFrame([(2, "b")], ["k", "v"]), table_path, mode="append"
+        ),
+    )
+    with pytest.raises(sn.SnapshotConflictError, match="overwrite"):
+        sn.commit_snapshot(
+            spark.createDataFrame([(9, "z")], ["k", "v"]),
+            table_path,
+            mode="overwrite",
+            retries=retries,
+        )
+    assert state["fired"] and sn.latest_version(table_path) == 2
+    assert rows(sn.read_snapshot(spark, table_path)) == [(1, "a"), (2, "b")]
+    assert data_dirs(table_path) == set(dirs_of(table_path, 2))
 
 
 def test_publish_refuses_to_replace_manifest(table_path):
-    """Belt-and-braces: even bypassing the claim, link(2)-based publish
-    cannot replace an already-published manifest."""
+    """link(2)-based publish cannot replace an already-published
+    manifest, and a refused publish leaves no temp file behind."""
     sn._publish(table_path, {"version": 7, "parent": None, "op": "t", "dirs": []})
     with pytest.raises(sn.SnapshotConflictError):
         sn._publish(table_path, {"version": 7, "parent": None, "op": "t", "dirs": []})
@@ -277,39 +369,6 @@ def test_publish_refuses_to_replace_manifest(table_path):
     # no temp litter left behind by the refused publish
     assert [n for n in os.listdir(os.path.join(table_path, "_manifests"))
             if ".tmp" in n] == []
-
-
-def test_commit_never_deletes_claim_dir(spark, table_path, monkeypatch):
-    """r7 (advice): commits used df.write.mode('overwrite'), and Spark's
-    overwrite DELETES the target dir before recreating it — momentarily
-    removing the exclusive-mkdir claim marker, so a racing writer could
-    re-claim the version mid-write. Pin the fix: the directory created by
-    _claim_version must be the SAME inode after the data lands, for plain
-    commits, partitioned commits, and compaction."""
-    inodes = {}
-    orig = sn._claim_version
-
-    def spy(path, version):
-        rel = orig(path, version)
-        inodes[version] = os.stat(os.path.join(path, rel)).st_ino
-        return rel
-
-    monkeypatch.setattr(sn, "_claim_version", spy)
-    d = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
-    v1 = sn.commit_snapshot(d, table_path, mode="overwrite")
-    v2 = sn.commit_snapshot(d, table_path, mode="append", partition_by=["v"])
-    v3 = sn.compact_snapshot(spark, table_path, target_files=1)
-    for v in (v1, v2, v3):
-        assert (
-            os.stat(os.path.join(table_path, "data", f"v{v}")).st_ino == inodes[v]
-        ), f"claim dir for v{v} was deleted and recreated during the write"
-    # and the data written through the claim is intact
-    assert rows(sn.read_snapshot(spark, table_path, v3)) == [
-        (1, "a"),
-        (1, "a"),
-        (2, "b"),
-        (2, "b"),
-    ]
 
 
 def test_read_delta_is_only_the_appended_rows(spark, table_path):
@@ -388,7 +447,7 @@ def test_read_delta_over_partitioned_commits(spark, table_path):
 
 
 def test_partitioned_compaction_keeps_layout_and_shrinks_files(spark, table_path):
-    """compact_snapshot(partition_by=...) (r14): the rewrite must (a)
+    """compact_snapshot(partition_by=...): the rewrite must (a)
     preserve row content, (b) actually reduce the file count the append
     lineage accumulated, and (c) keep the hive layout — the compacted
     dir has cell=<v> partition directories and a reader's partition
@@ -436,12 +495,13 @@ def _mk_partitioned(spark, table_path, n=30):
 
 
 def test_replace_partitions_deletes_without_touching_others(spark, table_path):
-    """replace_partitions (r14): a delete rewrites ONLY the affected
+    """replace_partitions: a delete rewrites ONLY the affected
     partition's survivors; the new version never returns killed rows,
     the old version still does (time travel), and the untouched
     partitions' files are physically unmodified."""
     _mk_partitioned(spark, table_path)
-    untouched = os.path.join(table_path, "data", "v1", "cell=0")
+    (v1_dir,) = dirs_of(table_path, 1)
+    untouched = os.path.join(table_path, v1_dir, "cell=0")
     files_before = sorted(os.listdir(untouched))
     # kill k in (1, 4) — both live in cell=1; survivors of cell 1 re-commit
     survivors = (
@@ -489,9 +549,10 @@ def test_replace_lineage_refuses_delta_and_reclaims_after_compact(spark, table_p
     with pytest.raises(ValueError, match="append-only"):
         sn.read_delta(spark, table_path, 1, 2)
     sn.compact_snapshot(spark, table_path, 2, partition_by=["cell"])
+    (v1_dir,) = dirs_of(table_path, 1)
     removed = sn.vacuum_snapshots(table_path, keep_from=3)
-    assert os.path.join("data", "v1") in removed
-    assert not os.path.exists(os.path.join(table_path, "data", "v1"))
+    assert v1_dir in removed
+    assert not os.path.exists(os.path.join(table_path, v1_dir))
     got = sorted(r.k for r in sn.read_snapshot(spark, table_path).collect())
     assert got == sorted(k for k in range(30) if k != 0)
 
@@ -506,6 +567,7 @@ def test_replace_excluded_partitions_are_pruned_not_filtered(spark, table_path):
         .select("k", "cell")
     )
     sn.replace_partitions(survivors, table_path, "cell", [1])
+    (v1_dir,) = dirs_of(table_path, 1)
     plan = (
         sn.read_snapshot(spark, table_path, 2)
         ._jdf.queryExecution()
@@ -515,7 +577,7 @@ def test_replace_excluded_partitions_are_pruned_not_filtered(spark, table_path):
     v1_scans = [
         line
         for line in plan.splitlines()
-        if "FileScan" in line and "data/v1" in line
+        if "FileScan" in line and v1_dir in line
     ]
     assert v1_scans, plan
     (scan,) = v1_scans
@@ -525,7 +587,7 @@ def test_replace_excluded_partitions_are_pruned_not_filtered(spark, table_path):
 
 
 def test_txn_watermark_makes_replay_idempotent(spark, table_path):
-    """commit_snapshot txn (r14): an at-least-once writer tags commits
+    """commit_snapshot txn: an at-least-once writer tags commits
     with (app, monotonic id); last_txn_id gives the replay guard. The
     guard pattern must also survive a foreign app's interleaved commits
     and a plain untagged commit."""
@@ -554,7 +616,7 @@ def test_txn_watermark_makes_replay_idempotent(spark, table_path):
 
 
 def test_read_snapshot_explicit_schema_types_partition_column(spark, table_path):
-    """read_snapshot(schema=...) (r14): a declared LONG hive partition
+    """read_snapshot(schema=...): a declared LONG hive partition
     column reads back LONG (no path-string int inference, no
     reconciling cast), and empty commits stay readable."""
     df = spark.createDataFrame([(i, i % 3) for i in range(9)], ["k", "cell"])
@@ -576,38 +638,14 @@ def test_read_snapshot_explicit_schema_types_partition_column(spark, table_path)
     )
 
 
-def test_single_writer_retry_reclaims_crashed_claim(spark, table_path):
-    """reclaim_crashed (r14): a mid-write crash leaves a claimed data
-    dir with no manifest; the single-writer retry must delete the
-    orphan and recommit the SAME version instead of wedging on
-    SnapshotConflictError — while the default (no reclaim) stays loud
-    for genuinely racing writers."""
-    d = spark.createDataFrame([(1, "a")], ["k", "v"])
-    sn.commit_snapshot(d, table_path, mode="overwrite")
-    # simulate the crash window: v2 claimed + partial data, no manifest
-    orphan = os.path.join(table_path, "data", "v2")
-    os.makedirs(orphan)
-    with open(os.path.join(orphan, "part-junk.parquet"), "wb") as f:
-        f.write(b"torn")
-    with pytest.raises(sn.SnapshotConflictError):
-        sn.commit_snapshot(d, table_path, mode="append")
-    v = sn.commit_snapshot(d, table_path, mode="append", reclaim_crashed=True)
-    assert v == 2
-    assert sn.read_snapshot(spark, table_path, 2).count() == 2
-    # a PUBLISHED version is never reclaimed, even with the flag
-    with pytest.raises(sn.SnapshotConflictError):
-        os.mkdir(os.path.join(table_path, "data", "v3"))
-        sn.commit_snapshot(d, table_path, mode="append", reclaim_crashed=False)
-    os.rmdir(os.path.join(table_path, "data", "v3"))
-
-
 # ---------------------------------------------------------------------------
-# Optimistic concurrency (r14 verdict #3): retries>0 writes data once into a
-# collision-free dir and retries only the manifest publish, re-validating the
-# op's precondition against whatever landed in between. The injector forces
-# the race deterministically: the first _publish attempt triggers a real
-# interloper commit, so the writer under test ALWAYS loses once and must
-# resolve on retry.
+# Optimistic concurrency, so that two legitimate writers (streaming ingest and
+# scheduled compaction) can share one table: data is written once into a
+# collision-free dir and only the manifest publish retries, re-validating the
+# op's rule against whatever landed in between. The injector forces the race
+# deterministically: the first _publish attempt triggers a real interloper
+# commit, so the writer under test ALWAYS loses once and must resolve on
+# retry.
 # ---------------------------------------------------------------------------
 
 
@@ -628,8 +666,7 @@ def _inject_before_first_publish(monkeypatch, interloper):
 def test_optimistic_append_resolves_lost_race(spark, table_path, monkeypatch):
     """An append has no precondition on its parent: after losing the
     publish race it must re-commit on the new parent, and BOTH writers'
-    rows land — the both-make-progress property the single-writer claim
-    cannot give."""
+    rows land."""
     sn.commit_snapshot(
         spark.createDataFrame([(1, "a")], ["k", "v"]), table_path, mode="overwrite"
     )
@@ -659,7 +696,7 @@ def test_optimistic_append_resolves_lost_race(spark, table_path, monkeypatch):
 def test_optimistic_ingest_vs_compaction_both_progress(
     spark, table_path, monkeypatch
 ):
-    """The production pair (r14 verdict #3): a streaming txn-append
+    """The production pair: a streaming txn-append
     lands BETWEEN scheduled compaction's rewrite and its publish. The
     retried compaction must MERGE — its manifest is [compacted dir] +
     the ingest's dir — so the ingest's rows survive the compaction that
@@ -768,9 +805,9 @@ def test_optimistic_compaction_refuses_non_append_conflict(
     _inject_before_first_publish(monkeypatch, overwriter)
     with pytest.raises(sn.SnapshotConflictError, match="op='overwrite'"):
         sn.compact_snapshot(spark, table_path, target_files=1, retries=3)
-    # the loser's rewrite dir is unreferenced; vacuum reclaims it
-    orphans = sn.vacuum_snapshots(table_path, keep_from=1)
-    assert len(orphans) == 1 and os.path.basename(orphans[0]).startswith("c")
+    # the loser deleted its rewrite dir: nothing is left for vacuum
+    assert data_dirs(table_path) == set(dirs_of(table_path, 1) + dirs_of(table_path, 2))
+    assert sn.vacuum_snapshots(table_path, keep_from=1) == []
     assert rows(sn.read_snapshot(spark, table_path)) == [(9, "z")]
 
 
@@ -816,8 +853,8 @@ def test_optimistic_replace_refuses_touched_partition(
     """A concurrent append INTO a partition being replaced is the one
     thing the retry must never absorb: retrying would tombstone the
     other writer's just-committed rows. It raises instead, and the
-    table keeps both honest states (the interloper's append is the
-    latest version; the loser's replacement dir is vacuumable)."""
+    table keeps the interloper's append as the latest version, and the
+    loser's replacement dir is deleted."""
     sn.commit_snapshot(
         spark.createDataFrame([(1, 1, "a"), (2, 2, "b")], ["k", "p", "v"]),
         table_path,
@@ -847,6 +884,7 @@ def test_optimistic_replace_refuses_touched_partition(
         for r in sn.read_snapshot(spark, table_path).collect()
     )
     assert got == [(1, 1, "a"), (2, 2, "b"), (6, 1, "f")]
+    assert data_dirs(table_path) == set(dirs_of(table_path, 2))
 
 
 def test_optimistic_replace_refuses_unattributable_append(
@@ -903,19 +941,19 @@ def test_optimistic_txn_replay_noop_composes_with_retry(
     assert sn.latest_version(table_path) == 2
     assert rows(sn.read_snapshot(spark, table_path, 2)) == [(1, "a"), (2, "b")]
     # the duplicate's data dir was cleaned up, not left for vacuum
-    data_dirs = os.listdir(os.path.join(table_path, "data"))
-    assert sorted(data_dirs) == ["v1", "v2"]
+    assert data_dirs(table_path) == set(dirs_of(table_path, 2))
     # and a LATER duplicate no-ops before writing anything at all
     assert (
         sn.commit_snapshot(batch, table_path, mode="append", txn=("app", 5), retries=2)
         == 2
     )
-    assert sorted(os.listdir(os.path.join(table_path, "data"))) == ["v1", "v2"]
+    assert data_dirs(table_path) == set(dirs_of(table_path, 2))
 
 
 def test_optimistic_retries_exhausted_raises(spark, table_path, monkeypatch):
     """A writer storm past the retry budget degrades loudly, never into
-    a livelock: every attempt loses, the final conflict re-raises."""
+    a livelock: every attempt loses, the final conflict re-raises, and
+    the loser's data dir is deleted."""
     sn.commit_snapshot(
         spark.createDataFrame([(1, "a")], ["k", "v"]), table_path, mode="overwrite"
     )
@@ -942,12 +980,8 @@ def test_optimistic_retries_exhausted_raises(spark, table_path, monkeypatch):
             txn=("app", 1),
             retries=1,
         )
-
-
-def test_retries_and_reclaim_crashed_are_mutually_exclusive(spark, table_path):
-    d = spark.createDataFrame([(1, "a")], ["k", "v"])
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        sn.commit_snapshot(d, table_path, retries=1, reclaim_crashed=True)
+    latest = sn.latest_version(table_path)
+    assert data_dirs(table_path) == set(dirs_of(table_path, latest))
 
 
 def test_optimistic_threaded_writers_both_land(spark, table_path):
