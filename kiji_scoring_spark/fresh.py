@@ -11,7 +11,7 @@ timeout with stale fallback.
 Batch redefinition (SURVEY §4.3.1): freshening a table is ONE declarative
 pass —
 
-    stale   = rows where NOT policy.is_fresh(attached_col, as_of)
+    stale   = rows where policy.is_fresh(attached_col, as_of) is not TRUE
     scored  = producer over the stale rows (expression / pandas / MLlib)
     result  = table with attached_col := with_put(attached_col, as_of,
               score) on stale rows, untouched elsewhere
@@ -24,10 +24,16 @@ cancelled and the ORIGINAL (stale) table is returned — the exact analog of
 producer didn't reach keep their stale values (partial freshening,
 ``:703-708``).
 
-Scale: the stale filter is a pushed-down predicate; expression producers
-stay in codegen; pandas producers move only the stale partition through
-Arrow; the merge is a projection (when/otherwise), not a join — the table
-is scanned once, and nothing shuffles unless the producer itself needs to.
+Scale: an expression producer stays in codegen, and its merge is one
+projection (when/otherwise) over one scan. A pandas or MLlib capsule splits
+the table on the stale predicate: the stale half is scored in place (a
+scalar iterator ``pandas_udf`` through Arrow, or ``transform``), the fresh
+half gets a NULL score, and the two halves are unioned under the same merge
+projection. Each row is scored on its own, as the reference's producer
+writes into the row it was handed (``impl/KijiFreshProducerContext.java:
+102-106``), so duplicate or NULL keys change nothing; the plan has no join
+and no exchange, and reads the table once per half. Nothing shuffles unless
+the producer itself needs to.
 
 Compile once per capsule generation (A13): the reference builds a capsule's
 policy and producer once (``makeCapsule``) and reuses them on every read
@@ -53,7 +59,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
 
 from . import model
 from .policies import FreshnessPolicy
@@ -83,7 +88,7 @@ DEFAULT_TIMEOUT_MS = 10_000
 
 #: reserved column carrying a freshen call's clock (bigint ms)
 AS_OF_COL = "__as_of__"
-#: a pandas or MLlib producer's score, joined back by key
+#: a pandas or MLlib producer's score, NULL on the fresh half
 SCORE_COL = "__score__"
 
 
@@ -91,7 +96,7 @@ def _drain_job_group(sc, group: str, timeout_s: float = 15.0) -> bool:
     """Block until every task of ``group``'s jobs has actually TERMINATED
     (not merely been told to die), bounded by ``timeout_s``.
 
-    Why this exists (r16, root-caused from a real failure): cancelJobGroup
+    Why this exists (root-caused from a real failure): cancelJobGroup
     is asynchronous — it sets the kill flag and returns while the killed
     tasks' Python workers are still being destroyed by PythonRunner's
     monitor thread (up to ``spark.python.task.killTimeout`` = 2 s later).
@@ -146,12 +151,11 @@ class CompiledCapsule:
     table: DataFrame
     #: the merged KV stores (policy stores mask producer stores)
     stores: list
-    #: NOT policy.is_fresh: the rows the producer scores
+    #: NOT coalesce(policy.is_fresh, false): the rows a pandas or MLlib
+    #: producer scores. A NULL verdict is stale, as in the merge
     stale: Column
     #: the table's columns in order, the attached one merged
     projection: list[Column]
-    #: pandas producers: the columns sent through Arrow
-    request: list[str]
     #: the stores' lookups into their literal maps, folded by the first
     #: freshen (``_freshen_column``); None until then. Two first freshens
     #: that race both fold, and either result serves
@@ -380,20 +384,12 @@ class FreshTableReader:
         else:
             requested = {c: self._versions_expr(layout, c, map_qual) for c in policy_req}
             fresh = cap.policy.is_fresh_over(requested, as_of)
-        stale = ~fresh
+        stale = ~F.coalesce(fresh, F.lit(False))
 
         producer = cap.producer
-        request: list[str] = []
         if isinstance(producer, (PandasProducer, MLlibProducer)):
-            # scored per call over the stale partition, joined back by key
+            # scored per call over the stale half (_freshen_column)
             score = F.col(SCORE_COL)
-            if isinstance(producer, PandasProducer):
-                request = list(
-                    dict.fromkeys(
-                        [self.key_col]
-                        + [flat_name(c) for c in producer.data_request]
-                    )
-                )
         else:
             # Expression producer: stays fully in codegen; the score is
             # built over typed NULLs named like the store lookups
@@ -410,12 +406,12 @@ class FreshTableReader:
         projection = [
             merged.alias(target) if c == target else F.col(c) for c in table.columns
         ]
-        return CompiledCapsule(table, stores, stale, projection, request)
+        return CompiledCapsule(table, stores, stale, projection)
 
     def _freshen_column(self, df: DataFrame, cap: Freshener, keep_clock: bool) -> DataFrame:
         """One capsule's per-call work over a table that carries
         ``__as_of__``: the store lookups, a pandas or MLlib producer's
-        scoring of the stale partition, and one select of the compiled
+        scoring of the stale half, and one select of the compiled
         Columns. That select restores the table's columns in order; with
         ``keep_clock`` it also keeps ``__as_of__`` for the next capsule.
         The capsule's first call folds its stores; a call cancelled while
@@ -425,28 +421,12 @@ class FreshTableReader:
             compiled.lookups = [c for side in compiled.stores for c in fold_store(side)]
         df = attach_stores(df, compiled.lookups)
         producer = cap.producer
-        if isinstance(producer, PandasProducer):
-            # Python path: score ONLY the stale partition through Arrow,
-            # then merge back by key. No broadcast hint: with AlwaysFreshen
-            # (or a cold table) the stale side is the WHOLE table, and a
-            # forced broadcast of an unbounded side is a driver OOM at
-            # scale — AQE picks broadcast at runtime when the scored side
-            # really is small.
-            scored_in = df.filter(compiled.stale).select(*compiled.request)
-            # the schema of THIS call's input: a written-back table reads
-            # its columns as nullable
-            out_schema = StructType(
-                list(scored_in.schema.fields) + [StructField(SCORE_COL, DoubleType())]
-            )
-            scored = scored_in.mapInPandas(
-                producer.make_map_fn(SCORE_COL), schema=out_schema
-            ).select(self.key_col, SCORE_COL)
-            df = df.join(scored, on=self.key_col, how="left")
-        elif isinstance(producer, MLlibProducer):
-            scored = producer.transform(df.filter(compiled.stale)).select(
-                self.key_col, F.col(producer.prediction_col).alias(SCORE_COL)
-            )
-            df = df.join(scored, on=self.key_col, how="left")
+        if isinstance(producer, (PandasProducer, MLlibProducer)):
+            # score the stale half in place; the fresh half's NULL score
+            # makes the merge keep its old value
+            scored = producer.score_rows(df.filter(compiled.stale), self.key_col, SCORE_COL)
+            unscored = df.filter(~compiled.stale).select("*", F.lit(None).alias(SCORE_COL))
+            df = scored.unionByName(unscored)
         if keep_clock:
             return df.select(*compiled.projection, AS_OF_COL)
         return df.select(*compiled.projection)
@@ -540,21 +520,20 @@ class FreshTableReader:
 
             def run(cap=cap, i=i, group=group):
                 try:
-                    # interruptOnCancel stays FALSE (r15): thread-interrupting
-                    # a pandas stage kills its Arrow workers mid-protocol, and
+                    # interruptOnCancel stays FALSE: thread-interrupting a
+                    # pandas stage kills its Arrow workers mid-protocol, and
                     # a reuse pool then hands the poisoned worker to a later
-                    # pandas stage (CancelledKeyException in PythonRunner —
-                    # reproduced r-early; the old mitigation disabled worker
-                    # reuse engine-wide, ~25-35% on Arrow-heavy paths). With
-                    # the plain cancel, PythonRunner's monitor thread sees the
-                    # task-killed flag and DESTROYS the in-flight worker
-                    # instead of pooling it. That alone proved insufficient
-                    # (r16): the destruction is ASYNC, so the caller must not
-                    # start new jobs until the cancelled group drains — see
-                    # _drain_job_group at the cancel site below. Cancellation
-                    # promptness is pinned by test_timeout_returns_stale's
-                    # wall-clock bound; pool health by
-                    # test_timeout_storm_then_arrow_stage.
+                    # pandas stage (CancelledKeyException in PythonRunner);
+                    # disabling worker reuse instead costs ~25-35% on
+                    # Arrow-heavy paths. With the plain cancel, PythonRunner's
+                    # monitor thread sees the task-killed flag and DESTROYS
+                    # the in-flight worker instead of pooling it. That alone
+                    # is not enough: the destruction is ASYNC, so the caller
+                    # must not start new jobs until the cancelled group
+                    # drains — see _drain_job_group at the cancel site
+                    # below. Cancellation promptness is pinned by
+                    # test_timeout_returns_stale's wall-clock bound; pool
+                    # health by test_timeout_storm_then_arrow_stage.
                     sc.setJobGroup(group, f"freshen {cap.column}")
                     out = self._freshen(current, [cap], as_of_ms)
                     result["df"], result["path"] = self._materialize(
@@ -569,7 +548,7 @@ class FreshTableReader:
             if t.is_alive():
                 sc.cancelJobGroup(group)
                 t.join(5.0)
-                # drain barrier (r16): cancelJobGroup is async — wait for
+                # drain barrier: cancelJobGroup is async — wait for
                 # the killed tasks to actually terminate before handing
                 # control back, or the caller's next Python-worker stage
                 # races the monitor thread's worker destruction (the

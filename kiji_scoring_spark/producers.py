@@ -9,13 +9,18 @@ computes a value, and writes it to the column the freshener is ATTACHED to
 - ``ExpressionProducer`` — scoring logic as a Catalyst Column (JVM-side,
   codegen; the fast path and the right choice whenever the model is
   expressible as arithmetic/CASE).
-- ``PandasProducer``     — arbitrary Python over Arrow batches via
-  ``mapInPandas`` (vectorized; the ~10-100× faster alternative to
-  row-at-a-time UDFs). ``setup``/``cleanup`` become per-batch-iterator
-  init/teardown, matching the reference's producer lifecycle
-  (``KijiProducer`` setup/produce/cleanup).
+- ``PandasProducer``     — arbitrary Python over Arrow batches via a
+  scalar iterator ``pandas_udf`` (vectorized; the ~10-100× faster
+  alternative to row-at-a-time UDFs). ``setup``/``cleanup`` become
+  per-partition init/teardown, matching the reference's producer
+  lifecycle (``KijiProducer`` setup/produce/cleanup).
 - ``MLlibProducer``      — an MLlib ``Transformer``/``PipelineModel``
   (BASELINE.json's "MLlib batch scoring" approach).
+
+The pandas and MLlib flavors score rows in place (``score_rows``): each row
+gets its own score as a new column, so no row's score depends on another
+row, as the reference's producer writes into the row it was handed
+(``impl/KijiFreshProducerContext.java:102-106``).
 
 KV side-inputs (A9): small key→value stores exposed to the producer and
 the policy; policy stores mask producer stores with the same name
@@ -36,6 +41,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, StructField
+
+from .registry import flat_name
 
 #: most rows a KV store may hold. A store is folded into literal maps on
 #: the driver, with py4j calls per entry, and a map lookup scans its keys: on
@@ -85,8 +92,10 @@ class PandasProducer(Producer):
     """Producer running arbitrary Python per Arrow batch.
 
     ``batch_fn(pdf: pd.DataFrame) -> pd.Series`` computes the score for a
-    batch; applied via ``mapInPandas`` by the freshen pass so Python cost
-    is amortized over Arrow batches, never per row.
+    batch of rows; ``pdf`` holds the table's key column and the data
+    request. ``score_rows`` runs it as a scalar iterator ``pandas_udf``,
+    so Python cost is amortized over Arrow batches, never per row, and
+    ``setup``/``cleanup`` run once per partition.
     """
 
     def __init__(
@@ -105,28 +114,29 @@ class PandasProducer(Producer):
         self.output_column = output_column
         self.required_stores = required_stores or {}
 
-    def make_map_fn(self, score_col: str):
-        """Build the mapInPandas function: per-partition setup/cleanup
-        around per-batch scoring (the iterator-UDF lifecycle pattern)."""
+    def score_rows(self, df: DataFrame, key_col: str, score_col: str) -> DataFrame:
+        """``df`` with ``score_col`` appended: ``batch_fn`` over
+        ``struct(key_col, *data_request)``. A returned Series aligns to
+        the batch by index."""
         batch_fn, setup, cleanup = self._batch_fn, self._setup, self._cleanup
 
-        def map_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
             state = setup() if setup else None
             try:
                 for pdf in batches:
-                    out = pdf.copy()
-                    out[score_col] = batch_fn(pdf)
-                    yield out
+                    yield pd.Series(batch_fn(pdf), index=pdf.index)
             finally:
                 if cleanup:
                     cleanup(state)
 
-        return map_fn
+        request = dict.fromkeys([key_col, *map(flat_name, self.data_request)])
+        udf = F.pandas_udf(score, "double")
+        return df.select("*", udf(F.struct(*request)).alias(score_col))
 
 
 class MLlibProducer(Producer):
     """Producer wrapping an MLlib Transformer/PipelineModel; the freshen
-    pass calls ``transform`` on the stale partition only."""
+    pass transforms the stale rows only."""
 
     def __init__(
         self,
@@ -142,8 +152,13 @@ class MLlibProducer(Producer):
         self.output_column = output_column
         self.required_stores = required_stores or {}
 
-    def transform(self, df: DataFrame) -> DataFrame:
-        return self.transformer.transform(df)
+    def score_rows(self, df: DataFrame, key_col: str, score_col: str) -> DataFrame:
+        """``df`` with ``score_col`` appended: the transformer's
+        prediction column. ``key_col`` is unused: the transformer reads
+        what it needs."""
+        return self.transformer.transform(df).select(
+            *df.columns, F.col(self.prediction_col).alias(score_col)
+        )
 
 
 def merge_stores(

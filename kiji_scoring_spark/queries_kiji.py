@@ -401,10 +401,12 @@ def fresh_bulk_get_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id")
 
 
-#: second scoring cycle, one day after the first — users whose newest
-#: event falls in the (AS_OF-5d, AS_OF-4d] band cross the shelf-life
-#: boundary between the two cycles.
-AS_OF2_MS = AS_OF_MS + DAY_MS
+#: second scoring cycle, 5.5 days after the first — users whose newest
+#: event falls in the [AS_OF-5d, AS_OF+0.5d) band are fresh in the first
+#: cycle and stale in the second. Every user's newest event lies between
+#: 01-28 and 01-30 (sf0.001 and sf0.01), so the band splits them: 5 of 15
+#: users flip at sf0.001, 40 of 150 at sf0.01.
+AS_OF2_MS = AS_OF_MS + 11 * DAY_MS // 2
 
 
 @query(
@@ -440,14 +442,13 @@ AS_OF2_MS = AS_OF_MS + DAY_MS
     "kiji", "freshness", "scoring", "snapshot", "diff",
 )
 def fresh_scoring_snapshot_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 200th registry query, and the round-5 capstone: the
-    reference's core operator (A7 conditional score-and-writeback)
-    composed with the round-5 lakehouse machinery, end to end —
+    """The reference's core operator (A7 conditional score-and-writeback)
+    composed with the snapshot machinery, end to end —
 
     1. the FULL engine stack (registry record → ShelfLife(5d) policy →
        DoubleLatestValueProducer → freshen scan) scores every user at
        clock T, and the scored table is committed as snapshot v1;
-    2. the SAME stack re-runs at clock T+1d — users whose newest event
+    2. the SAME stack re-runs at clock T+5.5d — users whose newest event
        crossed the shelf-life boundary in between flip from fresh to
        stale and get rescored — and is committed as snapshot v2;
     3. the two PUBLISHED versions are compared with the
@@ -460,21 +461,25 @@ def fresh_scoring_snapshot_pipeline(spark: SparkSession, sf_dir: str) -> DataFra
     be audited or rolled back, with reconciliation that reads a few
     buckets instead of the table. The oracle restates both cycles as
     window SQL and diffs them directly."""
+    import shutil
+
     from .operators.maintenance import checksum_diff
-    from .operators.snapshots import commit_snapshot, latest_version, read_snapshot
+    from .operators.snapshots import commit_snapshot, read_snapshot
     from .state import state_path
 
     reader = _shelf_life_reader(spark, sf_dir)
 
+    # every run commits both cycles into an empty dir: cycles an earlier
+    # run committed under another clock must not be read as these
     path = state_path(sf_dir, "fresh_score_snapshots")
-    if latest_version(path) is None:
-        for as_of in (AS_OF_MS, AS_OF2_MS):
-            scored = reader.scan(as_of).select(
-                "user_id",
-                model.most_recent_ts("value_versions").alias("score_ts"),
-                model.most_recent_value("value_versions").alias("score"),
-            )
-            commit_snapshot(scored, path, mode="overwrite")
+    shutil.rmtree(path, ignore_errors=True)
+    for as_of in (AS_OF_MS, AS_OF2_MS):
+        scored = reader.scan(as_of).select(
+            "user_id",
+            model.most_recent_ts("value_versions").alias("score_ts"),
+            model.most_recent_value("value_versions").alias("score"),
+        )
+        commit_snapshot(scored, path, mode="overwrite")
 
     def view(version: int) -> DataFrame:
         return read_snapshot(spark, path, version)

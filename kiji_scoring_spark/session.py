@@ -39,7 +39,7 @@ _DEFAULT_CONF: dict[str, str] = {
     "spark.sql.sources.partitionColumnTypeInference.enabled": "false",
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-    # Python-worker reuse ON (r15 — back to the Spark default): the
+    # Python-worker reuse ON (the Spark default): the
     # poisoned-pool hazard that disabled it (a thread-INTERRUPTED freshen
     # killed Arrow workers mid-protocol and the pool handed them to later
     # pandas stages — CancelledKeyException) was scoped to

@@ -14,6 +14,16 @@ def pytest_configure(config):
     )
 
 
+@pytest.fixture(scope="session", autouse=True)
+def _purged_derived_state():
+    """Drop the derived state earlier runs left for SF_DIR, so the
+    snapshot-committing queries commit in this run instead of reading
+    what an older build of the engine committed."""
+    from kiji_scoring_spark.state import purge_derived_state
+
+    purge_derived_state(SF_DIR)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from kiji_scoring_spark.session import get_spark

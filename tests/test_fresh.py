@@ -18,8 +18,8 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from kiji_scoring_spark import model
 from kiji_scoring_spark.fresh import FreshTableReader
-from kiji_scoring_spark.policies import AlwaysFreshen, NeverFreshen, ShelfLife
-from kiji_scoring_spark.producers import ExpressionProducer, PandasProducer
+from kiji_scoring_spark.policies import AlwaysFreshen, FreshnessPolicy, NeverFreshen, ShelfLife
+from kiji_scoring_spark.producers import ExpressionProducer, MLlibProducer, PandasProducer
 from kiji_scoring_spark.registry import FreshenerRegistry, TableLayout
 
 DAY_MS = 86_400_000
@@ -574,7 +574,6 @@ def test_policy_store_drives_pandas_producer_with_masking(spark):
     from pyspark.sql.types import DoubleType
 
     from kiji_scoring_spark.fresh import Freshener
-    from kiji_scoring_spark.policies import FreshnessPolicy
 
     schema = StructType(
         [
@@ -995,3 +994,70 @@ def test_registry_attach_mid_stream_applies_next_batch(spark, tmp_path):
     # batch 2: the SAME entity that kept its seed in batch 0 is now
     # rescored; the genuinely fresh entity still keeps its seed
     assert results[2] == {2: (NOW_MS, drift), 1: (t0, -1.0)}
+
+
+class NullUnlessThirty(FreshnessPolicy):
+    """Fresh when the newest visits value is 30; otherwise no verdict
+    (NULL), which every producer kind must treat as stale."""
+
+    def is_fresh(self, versions, as_of_ms):
+        return F.when(model.most_recent_value(versions) == 30, F.lit(True))
+
+
+def plus_one_producer(kind):
+    """An "add 1 to the newest visits" producer of the given kind."""
+    from pyspark.ml.feature import SQLTransformer
+
+    if kind == "expression":
+        return ExpressionProducer(
+            lambda df: model.most_recent_value("info_visits") + 1,
+            data_request=["info:visits"],
+        )
+    if kind == "pandas":
+        return PandasProducer(
+            batch_fn=lambda pdf: pdf["info_visits"].map(lambda v: v[0]["value"] + 1),
+            data_request=["info:visits"],
+        )
+    return MLlibProducer(
+        SQLTransformer(
+            statement="SELECT *, try_element_at(info_visits, 1).value + 1 "
+            "AS prediction FROM __THIS__"
+        )
+    )
+
+
+@pytest.mark.parametrize("kind", ["expression", "pandas", "mllib"])
+@pytest.mark.parametrize(
+    "policy, kept",
+    [(AlwaysFreshen(), set()), (NullUnlessThirty(), {30.0})],
+    ids=["always", "null-verdict"],
+)
+def test_every_producer_kind_freshens_each_row_in_place(spark, kind, policy, kept):
+    """Each row is scored on its own, whatever the producer kind: a NULL
+    key is rescored, a duplicated key is neither cross-scored nor fanned
+    out, and a NULL policy verdict counts as stale. The reference's
+    producer writes into the row it was handed
+    (impl/KijiFreshProducerContext.java:102-106)."""
+    from pyspark.sql.types import DoubleType
+
+    from kiji_scoring_spark.fresh import Freshener
+
+    schema = StructType(
+        [
+            StructField("entity_id", StringType(), True),
+            StructField("info_visits", model.versions_type(DoubleType())),
+        ]
+    )
+    rows = [("foo", 10.0), ("dup", 20.0), ("dup", 30.0), (None, 40.0)]
+    df = spark.createDataFrame([(k, [(1, v)]) for k, v in rows], schema)
+    reader = FreshTableReader(spark, "t", df, FreshenerRegistry())
+    reader._capsules = {
+        "info:visits": Freshener("info:visits", policy, plus_one_producer(kind))
+    }
+    got = reader.scan(NOW_MS).select(
+        "entity_id",
+        model.most_recent_value("info_visits").alias("v"),
+        model.most_recent_ts("info_visits").alias("ts"),
+    ).collect()
+    want = [(k, v, 1) if v in kept else (k, v + 1, NOW_MS) for k, v in rows]
+    assert sorted(map(tuple, got), key=repr) == sorted(want, key=repr)

@@ -107,3 +107,10 @@ def test_rows_only_query_runs(spark, sf_dir, name):
     df = QUERIES[name].fn(spark, sf_dir)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
+
+
+def test_snapshot_pipeline_diff_has_rows(spark, sf_dir):
+    """The two scoring cycles of ``fresh_scoring_snapshot_pipeline`` must
+    differ on some user; an empty diff on both engines would make its
+    parity test compare nothing."""
+    assert QUERIES["fresh_scoring_snapshot_pipeline"].fn(spark, sf_dir).count() >= 1

@@ -97,42 +97,79 @@ def test_declared_arrow_stages_are_arrow(spark, sf_dir, name):
     ), f"{name}: expected an Arrow-batched pandas stage"
 
 
-def test_pandas_freshen_no_forced_broadcast(spark):
-    """The scored-stale-rows merge join must NOT carry a broadcast hint:
-    with AlwaysFreshen (or any cold table) the stale side is the WHOLE
-    table, and a forced broadcast of an unbounded relation is a driver OOM
-    at 100 TB. AQE may still choose broadcast at runtime when the side is
-    actually small — the gate is on the hint, i.e. the optimized logical
-    plan (round-2 fix of fresh.py's pandas path)."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
+def _row_scoring_capsule(kind: str, policy):
+    """A capsule on info:visits whose producer scores rows in Python
+    (pandas) or through an MLlib transformer."""
+    from pyspark.ml.feature import SQLTransformer
+
+    from kiji_scoring_spark.fresh import Freshener
+    from kiji_scoring_spark.producers import MLlibProducer, PandasProducer
+
+    if kind == "pandas":
+        producer = PandasProducer(
+            batch_fn=lambda pdf: pdf["info_visits"].map(lambda v: 1.0),
+            data_request=["info:visits"],
+            output_column="info:visits",
+        )
+    else:
+        producer = MLlibProducer(
+            SQLTransformer(statement="SELECT *, 1.0D AS prediction FROM __THIS__")
+        )
+    return {"info:visits": Freshener("info:visits", policy, producer)}
+
+
+def _visits_table(spark, path=None):
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
     from kiji_scoring_spark import model
-    from kiji_scoring_spark.fresh import Freshener, FreshTableReader
-    from kiji_scoring_spark.policies import AlwaysFreshen
-    from kiji_scoring_spark.producers import PandasProducer
-    from kiji_scoring_spark.registry import FreshenerRegistry
 
     schema = StructType(
         [
-            StructField("entity_id", StringType(), False),
-            StructField("info_visits", model.versions_type(LongType())),
+            StructField("entity_id", LongType(), False),
+            StructField("info_visits", model.versions_type(DoubleType())),
         ]
     )
-    df = spark.createDataFrame([("foo", [(1, 10)])], schema)
-    producer = PandasProducer(
-        batch_fn=lambda pdf: pdf["info_visits"].map(lambda v: 1.0),
-        data_request=["info:visits"],
-        output_column="info:visits",
-    )
+    df = spark.createDataFrame([(k, [(1, float(k))]) for k in range(20)], schema)
+    if path is None:
+        return df
+    df.write.parquet(path)
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize("kind", ["pandas", "mllib"])
+def test_row_scoring_freshen_plans_no_join(spark, kind):
+    """A pandas or MLlib capsule scores its stale rows in place and
+    unions them with the fresh ones: the optimized plan holds no join, so
+    no key can fan rows out and no side of unbounded size is shuffled or
+    broadcast."""
+    from kiji_scoring_spark.fresh import FreshTableReader
+    from kiji_scoring_spark.policies import ShelfLife
+    from kiji_scoring_spark.registry import FreshenerRegistry
+
+    reader = FreshTableReader(spark, "t", _visits_table(spark), FreshenerRegistry())
+    reader._capsules = _row_scoring_capsule(kind, ShelfLife(10))
+    optimized = reader.freshen(1_000_000)._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in optimized, optimized
+
+
+def test_pandas_point_read_pushes_key_into_both_scans(spark, tmp_path):
+    """A get through a pandas capsule reads the table once per half (stale
+    and fresh), and the key reaches the parquet reader in both scans."""
+    from kiji_scoring_spark.fresh import FreshTableReader
+    from kiji_scoring_spark.policies import ShelfLife
+    from kiji_scoring_spark.registry import FreshenerRegistry
+
+    df = _visits_table(spark, str(tmp_path / "t.parquet"))
     reader = FreshTableReader(spark, "t", df, FreshenerRegistry())
-    reader._capsules = {"info:visits": Freshener("info:visits", AlwaysFreshen(), producer)}
-    fresh_df = reader.freshen(1_000_000)
-    optimized = fresh_df._jdf.queryExecution().optimizedPlan().toString()
-    # a forced F.broadcast survives into the optimized plan as a join hint:
-    # `Join ..., rightHint=(strategy=broadcast)`
-    assert "strategy=broadcast" not in optimized, (
-        "freshen pandas path forces a broadcast of the scored stale side"
-    )
+    reader._capsules = _row_scoring_capsule("pandas", ShelfLife(10))
+    got = reader.get(7, 1_000_000)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    scans = plan.split("PushedFilters: [")[1:]
+    assert len(scans) == 2, plan
+    assert all("EqualTo(entity_id,7)" in s.split("]")[0] for s in scans), plan
+    for op in ("Join", "Exchange"):
+        assert op not in plan, f"point read plans a {op}:\n{plan}"
+    assert [r["info_visits"][0]["value"] for r in got.collect()] == [1.0]
 
 
 def _jobs_in_group(sc, group: str, fn):
