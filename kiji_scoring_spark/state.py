@@ -1,12 +1,13 @@
-"""Per-dataset derived-state tagging and purge (shared, r11).
+"""Per-dataset derived-state tagging and purge, shared by every module
+that persists state keyed to a dataset dir.
 
 Several registry queries persist derived state keyed to the dataset dir
 (ddsketch/HLL/bitmap shards under ``kiji_scoring_spark_state``,
 binaryFile materializations under ``kiji_scoring_spark_binfiles``,
 session-lifetime bucketed tables under ``kss_bucketed_*``) and
 legitimately REUSE it across runs, because real datasets are immutable.
-A dir REBUILT in place breaks that assumption — the r10 stale-state
-failure class. Two rules follow, both enforced here:
+A dir REBUILT in place breaks that assumption: its queries would serve
+state derived from the old data. Two rules follow, both enforced here:
 
 1. every per-dataset cache tags by the FULL path (``state_tag``), so two
    dataset dirs sharing a basename can never collide;
@@ -25,19 +26,19 @@ import tempfile
 def state_tag(sf_dir: str) -> str:
     """Canonical per-dataset cache tag: the normalized full path, '/'→'_'.
 
-    The path is canonicalized first (ADVICE r11): alias spellings of the
+    The path is canonicalized first: alias spellings of the
     same dataset dir — ``/tmp//sf100``, ``/tmp/./sf100``, a relative
     path — must map to ONE tag, or ``purge_derived_state`` called with
-    one spelling misses derived state created under another (re-opening
-    the r10 stale-state class). ``abspath`` + ``normpath`` only, NOT
+    one spelling misses derived state created under another, which then
+    goes stale. ``abspath`` + ``normpath`` only, NOT
     ``realpath``: symlink resolution would silently retag every dataset
     reached through a symlinked mount. For the already-canonical
     absolute paths every caller passes today, the tag is byte-identical
     to the pre-canonical tagging, so existing scratch dirs
     stay valid (no cache-tag migration). Never tag by basename — two
     tier dirs named alike (e.g. ``/tmp/a/sf10`` and ``/tmp/b/sf10``)
-    must not share derived state (ADVICE r10, queries_sources.py
-    bucketed tables).
+    must not share derived state (queries_sources.py's bucketed tables
+    would otherwise read each other).
     """
     return os.path.normpath(os.path.abspath(sf_dir)).strip("/").replace("/", "_")
 
@@ -71,8 +72,8 @@ def stream_scratch_root() -> str:
 
 #: Extra per-dataset purge hooks, registered by modules that own derived
 #: state this module cannot see (e.g. streaming.replay's replay dirs and
-#: its in-memory ``_REPLAY_BUILT`` gate — ADVICE r11: an in-process rebuild
-#: would otherwise serve stale replays). Each hook takes (sf_dir, tag).
+#: its in-memory ``_REPLAY_BUILT`` gate, without which an in-process rebuild
+#: would serve stale replays). Each hook takes (sf_dir, tag).
 #: Only modules actually imported in-process register — which is exactly
 #: the set whose in-memory caches can be stale.
 _PURGE_HOOKS: list = []

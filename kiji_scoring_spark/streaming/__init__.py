@@ -41,7 +41,7 @@ from pyspark.sql.types import (
 #: (~547 years) in microseconds. Spark initializes every watermark to
 #: epoch 0, so rows whose EVENT TIME is at or before 1970-01-01 are late
 #: data from the very first batch and get dropped on input — an inherent
-#: engine boundary (tsedge regime, r6). Shifting event time by a constant
+#: engine boundary (the tsedge regime). Shifting event time by a constant
 #: at ingest and reversing it at emit is semantics-preserving: watermark
 #: delays, join time-ranges, and window lengths are all RELATIVE, so
 #: every eviction/lateness decision shifts with the data — but the

@@ -33,10 +33,10 @@ from ..state import state_tag, stream_scratch_root
 from . import read_events_stream
 
 #: replay dirs materialized THIS SESSION, keyed (prefix, full-path tag) —
-#: the session-lifetime amortization gate (the bucketed-table pattern,
-#: r10): replay files are a pure deterministic function of the dataset,
-#: so within one session the warm run builds and every later run replays
-#: the same bytes. Deliberately in-memory, NOT an on-disk marker: a fresh
+#: the session-lifetime amortization gate (the same pattern as the
+#: bucketed tables): replay files are a pure deterministic function of
+#: the dataset, so within one session the warm run builds and every later
+#: run replays the same bytes. Deliberately in-memory, NOT an on-disk marker: a fresh
 #: session always rebuilds, so a dataset rebuilt under the same path can
 #: never be served a stale replay.
 _REPLAY_BUILT: set = set()
@@ -56,7 +56,7 @@ _REPLAY_PREFIXES = (
 
 
 def _purge_replay_state(sf_dir: str, tag: str) -> None:
-    """purge_derived_state hook (ADVICE r11): an in-process dataset
+    """purge_derived_state hook: an in-process dataset
     rebuild must invalidate both the on-disk replay dirs AND the
     in-memory ``_REPLAY_BUILT`` gate, or the next replay run would serve
     micro-batches derived from the pre-rebuild data."""
@@ -80,9 +80,9 @@ def _replay_files(prefix: str, sf_dir: str, parts) -> str:
     deterministic, which is what lets real StreamingQueries sit under
     the exact-value oracle gate.
 
-    Amortized to session lifetime (r11): ~0.9 s of the ~2-4 s per replay
-    run was re-writing identical replay files; repeated executions — the
-    bench's warm+timed runs, a re-submitted job — now pay the write once
+    Amortized to session lifetime: re-writing identical replay files
+    would cost ~0.9 s of the ~2-4 s per replay run; repeated executions —
+    the bench's warm+timed runs, a re-submitted job — pay the write once
     per session. Tagged by the full dataset path (state_tag), not the
     basename, so same-named dataset dirs never share replays."""
     assert prefix in _REPLAY_PREFIXES, f"unregistered replay prefix {prefix!r}"
@@ -91,8 +91,8 @@ def _replay_files(prefix: str, sf_dir: str, parts) -> str:
     stream_dir = os.path.join(base, "stream")
     key = (prefix, tag)
     if key in _REPLAY_BUILT:
-        # Validate EVERY expected batch file, not just the dir (ADVICE
-        # r11): a /tmp cleaner or a concurrent session rmtree-ing the
+        # Validate EVERY expected batch file, not just the dir: a /tmp
+        # cleaner or a concurrent session rmtree-ing the
         # shared base mid-run can leave a partial dir that would replay
         # fewer batches and fail the exact-value gate confusingly.
         if all(
@@ -161,7 +161,7 @@ def run_available_now(
     windows / distinct keys), not to data volume like a batch shuffle:
     here a few hundred open windows across 32 state stores is pure
     per-batch store open/commit overhead (measured 2.6s → 1.5s at sf0.1
-    with 8; a further ~0.4s/query at 2, r11 — these replays hold ≤50
+    with 8; a further ~0.4s/query at 2 — these replays hold ≤50
     keys, so even 2 stores are mostly empty; size UP with key count on a
     real stream). The session conf is restored afterwards, also when the
     query fails; batch queries are unaffected (AQE coalesces their

@@ -74,9 +74,10 @@ def test_zero_frame_file_decodes_to_silence(spark):
 
 def test_resize_stage_real_resample_contract(spark):
     """resize_images is the one multimodal stage no registry query uses:
-    pin its contract here so it can't rot. As of r7 it is a REAL pixel
-    path: decode PNG -> nearest-neighbor resample -> re-encode PNG; NULL
-    payloads pass through as NULL rows (missing asset != decode error)."""
+    pin its contract here so it can't rot. It is a REAL pixel path:
+    decode PNG -> nearest-neighbor resample -> re-encode PNG; a NULL
+    payload passes through as an all-NULL row (missing asset != decode
+    error), its width and height included."""
     import numpy as np
 
     # 2x2 grayscale checkerboard -> upsample 4x4: each pixel becomes 2x2
@@ -90,7 +91,7 @@ def test_resize_stage_real_resample_contract(spark):
     assert (w, h, ch) == (4, 4, 1)
     expect = np.kron(np.array([[0, 255], [255, 0]]), np.ones((2, 2))).astype(np.uint8)
     assert (px.reshape(4, 4) == expect).all()
-    assert out[2].payload is None
+    assert (out[2].payload, out[2].width, out[2].height) == (None, None, None)
     assert (out[1].width, out[1].height) == (4, 4)
 
 
@@ -135,3 +136,24 @@ def test_non_mono16_wav_raises_explicitly(spark):
     empty = spark.createDataFrame([(1, bytearray(b""))], ["media_id", "payload"])
     with pytest.raises(Exception, match="EOFError|unexpected end"):
         empty_result = mm.extract_audio_features(empty).collect()  # noqa: F841
+
+
+def test_zero_frame_rate_raises_wave_error(spark):
+    """The stdlib reader accepts a fmt chunk whose frame rate is 0; the
+    decoder must refuse it with the documented ``wave.Error``, not fail
+    with a ZeroDivisionError in the duration."""
+    import struct
+
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(16_000)
+        w.writeframes(b"\x01\x00\x02\x00")
+    raw = bytearray(buf.getvalue())
+    raw[24:28] = struct.pack("<I", 0)  # the fmt chunk's sample rate
+    with wave.open(io.BytesIO(bytes(raw)), "rb") as r:
+        assert r.getframerate() == 0  # the stdlib accepts it
+    media = spark.createDataFrame([(1, raw)], "media_id long, payload binary")
+    with pytest.raises(Exception, match="frame rate must be positive, got 0"):
+        mm.extract_audio_features(media).collect()

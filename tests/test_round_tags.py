@@ -10,7 +10,10 @@ import re
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "kiji_scoring_spark"
 
 #: the kiji core modules the guard reads
-CORE = ("fresh.py", "producers.py", "policies.py", "registry.py", "model.py", "lib.py", "session.py")
+CORE = (
+    "fresh.py", "producers.py", "policies.py", "registry.py", "model.py", "lib.py", "session.py",
+    "state.py", "streaming/__init__.py", "streaming/replay.py", "operators/multimodal.py",
+)
 
 #: ``r3`` to ``r16``, ``r-early`` and "round N"; ``r0``-``r2`` stay free,
 #: as SQL aliases elsewhere use them
