@@ -90,6 +90,24 @@ _FORCE_RECHECK: frozenset[str] = frozenset(
         "fresh_scoring_snapshot_pipeline",
         "streaming_drift_rescoring_ingest",
         "ann_ivf_cell_rebalance_stats",
+        #
+        # Every query's persisted derived state is now reused or rebuilt
+        # by one rule (state.derived), under one cache root; the queries
+        # whose state code changed and that are not listed above:
+        "incremental_agg_partial_merge",
+        "sketch_hll_shard_union",
+        "bitmap_exact_distinct_shards",
+        "sketch_quantile_shard_merge",
+        "sketch_topk_shard_merge",
+        "sketch_bottomk_sample_shards",
+        "sketch_theta_set_ops",
+        "csv_scan_nation_counts",
+        "json_scan_supplier_acctbal",
+        "orc_scan_part_brand_stats",
+        "xml_scan_customer_segments",
+        "parquet_sink_roundtrip",
+        "dpp_partitioned_orders_join",
+        "binaryfile_scan_doc_lengths",
     }
 )
 

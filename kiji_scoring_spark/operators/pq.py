@@ -26,12 +26,10 @@ decorators run, whatever order the package imports them in.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..state import state_path
+from ..state import derived
 
 #: embedding width of the corpus (64 at every scale of the test data)
 EMBED_DIM = 64
@@ -372,10 +370,12 @@ def codes_table(
     a partitioned dir with no data files, as an empty scan."""
     ivf = seeds is not None
     name = "ivfpq_codes_embeddings.parquet" if ivf else "pq_codes_embeddings.parquet"
-    path = state_path(sf_dir, name)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        writer = encode(q, cb, seeds).write.mode("overwrite")
+
+    def build(path: str) -> None:
+        writer = encode(q, cb, seeds).write
         (writer.partitionBy("cell") if ivf else writer).parquet(path)
+
+    path = derived(sf_dir, name, build)
     return spark.read.schema(CODES_SCHEMA if ivf else _PQ_CODES_SCHEMA).parquet(path)
 
 

@@ -1,5 +1,5 @@
 """Graph traversal and incremental-state operators (SURVEY §2.C/§2.G
-deepening, round 5): the four shapes a 100 TB pipeline leans on once the
+deepening): the four shapes a 100 TB pipeline leans on once the
 relational surface is in place —
 
 - bounded multi-hop BFS over a derived co-occurrence graph (entity
@@ -25,8 +25,6 @@ deterministic ORDER BY.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,7 +33,7 @@ from .operators.graph import bfs_hops, triangle_count
 from .operators.maintenance import apply_changes, checksum_diff
 from .queries import query
 from .sources import load_table
-from .state import state_path
+from .state import derived
 
 
 @query(
@@ -162,11 +160,11 @@ def incremental_agg_partial_merge(spark: SparkSession, sf_dir: str) -> DataFrame
             F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("total_dec"),
         )
 
-    path = state_path(sf_dir, "orders_agg_state.parquet")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        partials(o.filter(F.col("o_orderkey") % 10 < 8)).write.mode(
-            "overwrite"
-        ).parquet(path)
+    path = derived(
+        sf_dir,
+        "orders_agg_state.parquet",
+        partials(o.filter(F.col("o_orderkey") % 10 < 8)).write.parquet,
+    )
     state = spark.read.parquet(path)
     delta = partials(o.filter(F.col("o_orderkey") % 10 >= 8))
 
@@ -277,11 +275,11 @@ def sketch_hll_shard_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by tests/test_graph.py.
     """
     ev = load_table(spark, sf_dir, "events")
-    path = state_path(sf_dir, "hll_user_shards.parquet")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        sk.hll_build(ev.select("event_type", "user_id"), "user_id").write.mode(
-            "overwrite"
-        ).parquet(path)
+    path = derived(
+        sf_dir,
+        "hll_user_shards.parquet",
+        sk.hll_build(ev.select("event_type", "user_id"), "user_id").write.parquet,
+    )
     shards = spark.read.parquet(path)
 
     n_shards = shards.agg(F.count(F.lit(1)).alias("n_shards"))
@@ -373,15 +371,12 @@ def bitmap_exact_distinct_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     the raw events again after the one build pass.
     """
     ev = load_table(spark, sf_dir, "events")
-    path = state_path(sf_dir, "bitmap_user_shards.parquet")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        ev.select(
-            "event_type",
-            F.bitmap_bucket_number("user_id").alias("bkt"),
-            F.bitmap_bit_position("user_id").alias("pos"),
-        ).groupBy("event_type", "bkt").agg(
-            F.bitmap_construct_agg("pos").alias("bm")
-        ).write.mode("overwrite").parquet(path)
+    bitmaps = ev.select(
+        "event_type",
+        F.bitmap_bucket_number("user_id").alias("bkt"),
+        F.bitmap_bit_position("user_id").alias("pos"),
+    ).groupBy("event_type", "bkt").agg(F.bitmap_construct_agg("pos").alias("bm"))
+    path = derived(sf_dir, "bitmap_user_shards.parquet", bitmaps.write.parquet)
     shards = spark.read.parquet(path)
 
     per_type = shards.groupBy("event_type").agg(
@@ -476,11 +471,13 @@ def sketch_quantile_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_totalprice").isNotNull()
     )
-    path = state_path(sf_dir, "ddsketch_totalprice_shards.parquet")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    path = derived(
+        sf_dir,
+        "ddsketch_totalprice_shards.parquet",
         sk.dd_build(
             orders.select("o_orderpriority", "o_totalprice"), "o_totalprice"
-        ).write.mode("overwrite").parquet(path)
+        ).write.parquet,
+    )
     shards = spark.read.parquet(path)
 
     totals = shards.agg(
@@ -656,9 +653,7 @@ def sketch_topk_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _mg_item(load_table(spark, sf_dir, "lineitem"))
 
-    path = state_path(sf_dir, "mg_topk_lineitem_shards.parquet")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        sk.mg_build(src).write.mode("overwrite").parquet(path)
+    path = derived(sf_dir, "mg_topk_lineitem_shards.parquet", sk.mg_build(src).write.parquet)
     summary = sk.mg_merge(spark.read.parquet(path))
 
     # exact reference side: global counts (one groupBy), totals, top-3 by
@@ -791,9 +786,7 @@ def sketch_bottomk_sample_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.col("l_orderkey"), F.lit(8)).alias("shard"),
     )
 
-    path = state_path(sf_dir, "kmv_partkey_shards.parquet")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        sk.kmv_build(src).write.mode("overwrite").parquet(path)
+    path = derived(sf_dir, "kmv_partkey_shards.parquet", sk.kmv_build(src).write.parquet)
     sample = sk.kmv_summary(sk.kmv_merge(spark.read.parquet(path)))
 
     totals = src.agg(
@@ -936,9 +929,9 @@ def sketch_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("o_orderpriority") == "5-LOW", 1).otherwise(0).alias("in_b"),
     )
 
-    path = state_path(sf_dir, "theta_custkey_samples.parquet")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        sk.theta_build(src).write.mode("overwrite").parquet(path)
+    path = derived(
+        sf_dir, "theta_custkey_samples.parquet", sk.theta_build(src).write.parquet
+    )
     samples = spark.read.parquet(path)
     sampa = samples.filter(F.col("pop") == "a").select("key", "h")
     sampb = samples.filter(F.col("pop") == "b").select("key", "h")
@@ -1094,13 +1087,15 @@ def snapshot_time_travel_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes both versions from the raw table via the same
     deterministic 80/20 key split.
     """
-    from .operators.snapshots import commit_snapshot, latest_version, read_snapshot
+    from .operators.snapshots import commit_snapshot, read_snapshot
 
     o = load_table(spark, sf_dir, "orders")
-    path = state_path(sf_dir, "orders_snapshots")
-    if latest_version(path) is None:
+
+    def build(path: str) -> None:
         commit_snapshot(o.filter(F.col("o_orderkey") % 10 < 8), path, mode="overwrite")
         commit_snapshot(o.filter(F.col("o_orderkey") % 10 >= 8), path, mode="append")
+
+    path = derived(sf_dir, "orders_snapshots", build, versions=2)
 
     def stats(version: int) -> DataFrame:
         return read_snapshot(spark, path, version).agg(
@@ -1136,18 +1131,13 @@ def snapshot_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     change with zero logical effect. File counts and v1 immutability
     are pinned by tests/test_snapshots.py; at 100 TB this maintenance
     pass is what keeps scan-side file-open/footer costs bounded."""
-    from .operators.snapshots import (
-        commit_snapshot,
-        compact_snapshot,
-        latest_version,
-        read_snapshot,
-    )
+    from .operators.snapshots import commit_snapshot, compact_snapshot, read_snapshot
 
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp_ntz")
     )
-    path = state_path(sf_dir, "lineitem_snapshots")
-    if latest_version(path) is None:
+
+    def build(path: str) -> None:
         commit_snapshot(
             li.select("l_returnflag", "l_extendedprice").repartition(16),
             path,
@@ -1155,6 +1145,7 @@ def snapshot_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         compact_snapshot(spark, path, target_files=2)
 
+    path = derived(sf_dir, "lineitem_snapshots", build, versions=2)
     back = read_snapshot(spark, path)  # latest = compacted v2
     return (
         back.groupBy("l_returnflag")
@@ -1202,7 +1193,7 @@ def snapshot_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     "cdc", "snapshot", "diff", "incremental",
 )
 def snapshot_cdc_upsert_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The round-5 state machinery composed end-to-end, the way a
+    """The incremental-state machinery composed end-to-end, the way a
     continuously-scored 100 TB table actually runs: (1) changelog batch
     1 (event ids with seq % 3 != 0) is collapsed into state v1 WITH
     TOMBSTONES KEPT and committed as snapshot version 1; (2) batch 2 is
@@ -1224,7 +1215,7 @@ def snapshot_cdc_upsert_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq still reports as 'U' — lineage-faithful, matching the oracle's
     predicate exactly.
     """
-    from .operators.snapshots import commit_snapshot, latest_version, read_snapshot
+    from .operators.snapshots import commit_snapshot, read_snapshot
 
     ev = load_table(spark, sf_dir, "events")
     ch = ev.select(
@@ -1233,17 +1224,19 @@ def snapshot_cdc_upsert_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_type") == "error").alias("is_del"),
         "value",
     )
-    path = state_path(sf_dir, "cdc_state_snapshots")
-    if latest_version(path) is None:
-        v1_state = apply_changes(
-            ch.filter(F.col("seq") % 3 != 0),
+
+    def fold(changes: DataFrame) -> DataFrame:
+        return apply_changes(
+            changes,
             keys=["user_id"],
             seq="seq",
             is_delete=F.col("is_del"),
             payload=["value"],
             keep_tombstones=True,
         ).select("user_id", F.col("last_seq").alias("seq"), "is_deleted", "value")
-        commit_snapshot(v1_state, path, mode="overwrite")
+
+    def build(path: str) -> None:
+        commit_snapshot(fold(ch.filter(F.col("seq") % 3 != 0)), path, mode="overwrite")
         # incremental fold: persisted v1 state re-enters as a changelog
         # alongside batch 2 — batch 1's raw changelog is never re-read
         prior = read_snapshot(spark, path, 1).select(
@@ -1252,15 +1245,13 @@ def snapshot_cdc_upsert_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("is_deleted").alias("is_del"),
             "value",
         )
-        v2_state = apply_changes(
-            prior.unionByName(ch.filter(F.col("seq") % 3 == 0)),
-            keys=["user_id"],
-            seq="seq",
-            is_delete=F.col("is_del"),
-            payload=["value"],
-            keep_tombstones=True,
-        ).select("user_id", F.col("last_seq").alias("seq"), "is_deleted", "value")
-        commit_snapshot(v2_state, path, mode="overwrite")
+        commit_snapshot(
+            fold(prior.unionByName(ch.filter(F.col("seq") % 3 == 0))),
+            path,
+            mode="overwrite",
+        )
+
+    path = derived(sf_dir, "cdc_state_snapshots", build, versions=2)
 
     def view(version: int) -> DataFrame:
         return (
@@ -1378,11 +1369,11 @@ def snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     safe subset plain parquet honors — renames/drops need a real table
     format's column-id mapping, which operators/snapshots.py documents
     as out of scope."""
-    from .operators.snapshots import commit_snapshot, latest_version, read_snapshot
+    from .operators.snapshots import commit_snapshot, read_snapshot
 
     o = load_table(spark, sf_dir, "orders")
-    path = state_path(sf_dir, "orders_evolving_snapshots")
-    if latest_version(path) is None:
+
+    def build(path: str) -> None:
         commit_snapshot(
             o.filter(F.col("o_orderkey") % 10 < 8).select("o_orderkey", "o_totalprice"),
             path,
@@ -1395,7 +1386,10 @@ def snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             path,
             mode="append",
         )
-    back = read_snapshot(spark, path)
+
+    back = read_snapshot(
+        spark, derived(sf_dir, "orders_evolving_snapshots", build, versions=2)
+    )
     return (
         back.groupBy(F.coalesce(F.col("o_orderpriority"), F.lit("NONE")).alias("pri"))
         .agg(
@@ -1441,7 +1435,7 @@ def snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
               JOIN deg ON deg.node = ce.src, n
       GROUP BY ce.dst, n.n
     ),
-    r3 AS (
+    r_last AS (
       SELECT ce.dst AS node,
         CAST((15::BIGINT * 1000000000) // (100 * n.n)
              + SUM((85 * r2.r) // (100 * deg.d)) AS BIGINT) AS r
@@ -1449,7 +1443,7 @@ def snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
               JOIN deg ON deg.node = ce.src, n
       GROUP BY ce.dst, n.n
     )
-    SELECT node, r AS rank_fp FROM r3
+    SELECT node, r AS rank_fp FROM r_last
     ORDER BY rank_fp DESC, node
     LIMIT 20
     """,
@@ -1487,7 +1481,7 @@ def graph_pagerank_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # deg and the one-row n are referenced by EVERY iteration's plan;
     # lazy localCheckpoint executes each once instead of re-shuffling
-    # the degree aggregation per iteration (r15)
+    # the degree aggregation per iteration
     deg = ce.groupBy("src").agg(F.count(F.lit(1)).alias("d")).localCheckpoint(
         eager=False
     )
@@ -1547,13 +1541,13 @@ def snapshot_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase partitions); the oracle recomputes from the raw table,
     proving the partitioned write→append→filtered-read cycle loses
     nothing."""
-    from .operators.snapshots import commit_snapshot, latest_version, read_snapshot
+    from .operators.snapshots import commit_snapshot, read_snapshot
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    path = state_path(sf_dir, "events_parted_snapshots")
-    if latest_version(path) is None:
+
+    def build(path: str) -> None:
         commit_snapshot(
             ev.filter(F.col("event_id") % 10 < 8),
             path,
@@ -1566,6 +1560,8 @@ def snapshot_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             mode="append",
             partition_by=["event_type"],
         )
+
+    path = derived(sf_dir, "events_parted_snapshots", build, versions=2)
     back = read_snapshot(spark, path).filter(F.col("event_type") == "purchase")
     return (
         back.groupBy(F.month("ts").alias("mth"))

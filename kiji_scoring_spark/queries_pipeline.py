@@ -14,7 +14,7 @@ from .operators import multimodal as mm
 from .operators import pq
 from .queries import query
 from .sources import load_table
-from .state import state_path
+from .state import derived
 
 # ---------------------------------------------------------------------------
 # Deduplication
@@ -1640,18 +1640,14 @@ def similarity_ivfpq_pruned_adc_topk(spark: SparkSession, sf_dir: str) -> DataFr
 
 
 def _ann_snap_build_base(spark, path, q, cb, seeds) -> None:
-    """Build the snapshot-versioned IVF-PQ lineage FROM SCRATCH: v1..v3
-    append the three pmod(vec_id,3) ingest tranches' codes (encode runs
-    once; the tranche filters slice one lazily-checkpointed frame), v4
-    is the partition-preserving compaction. Shared by the time-travel
-    probe and the delete rewrite so the lineage shape can't diverge.
-    Callers own the rebuild guard; anything less than a complete base
-    is a crashed prior build and is purged first."""
-    import shutil
-
+    """Build the snapshot-versioned IVF-PQ lineage into an empty
+    ``path``: v1..v3 append the three pmod(vec_id,3) ingest tranches'
+    codes (encode runs once; the tranche filters slice one
+    lazily-checkpointed frame), v4 is the partition-preserving
+    compaction. Shared by the time-travel probe and the delete rewrite
+    so the lineage shape can't diverge."""
     from .operators.snapshots import commit_snapshot, compact_snapshot
 
-    shutil.rmtree(path, ignore_errors=True)
     enc = pq.encode(q, cb, seeds).localCheckpoint(eager=False)
     for r in range(3):
         commit_snapshot(
@@ -1734,18 +1730,17 @@ def ann_index_time_travel_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     readable until vacuum. Reference parity: the metatable's versioned
     derived artifacts (KijiFreshnessManager.java:235-239) with real
     table-format semantics."""
-    import os
-    from .operators.snapshots import latest_version
-
     q = pq.corpus(load_table(spark, sf_dir, "embeddings"))
     cb = pq.codebook(q)
     seeds = pq.cell_seeds(q)
 
-    path = state_path(sf_dir, "ivfpq_codes_snap")
-    if (latest_version(path) or 0) < 4:
-        # a complete lineage is v1..v3 appends + v4 compact; anything
-        # less is a crashed prior build — rebuild deterministically
-        _ann_snap_build_base(spark, path, q, cb, seeds)
+    # a complete lineage is v1..v3 appends + v4 compact
+    path = derived(
+        sf_dir,
+        "ivfpq_codes_snap",
+        lambda p: _ann_snap_build_base(spark, p, q, cb, seeds),
+        versions=4,
+    )
 
     def codes_at(version: int) -> DataFrame:
         return _ann_snap_codes_at(spark, path, version)
@@ -1835,28 +1830,20 @@ def ann_index_delete_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     (KijiFreshnessPolicy.java:56-66 deciding, producers rewriting),
     here applied to a derived index artifact with table-format
     history."""
-    from .operators.snapshots import (
-        commit_snapshot,
-        latest_version,
-        replace_partitions,
-    )
+    from .operators.snapshots import commit_snapshot, replace_partitions
 
     q = pq.corpus(load_table(spark, sf_dir, "embeddings"))
     cb = pq.codebook(q)
     seeds = pq.cell_seeds(q)
 
-    path = state_path(sf_dir, "ivfpq_codes_snap_del")
-
-    def codes_at(version: int) -> DataFrame:
-        return _ann_snap_codes_at(spark, path, version)
-
-    if (latest_version(path) or 0) < 5:
+    def build(path: str) -> None:
         # complete lineage: v1..v3 tranche appends + v4 compact (the
         # shared base), then v5 delete
         _ann_snap_build_base(spark, path, q, cb, seeds)
+        live = _ann_snap_codes_at(spark, path, 4)
         # kill = the live index's top-3: 3 rows cross the driver, once
         kills = (
-            pq.search(q, cb, codes_at(4), seeds)
+            pq.search(q, cb, live, seeds)
             .filter(F.col("rn") <= 3)
             .select("neighbor_id", "cell")
             .collect()
@@ -1864,22 +1851,20 @@ def ann_index_delete_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         if kills:
             killed_ids = sorted(int(r.neighbor_id) for r in kills)
             cells = sorted({int(r.cell) for r in kills})
-            survivors = (
-                codes_at(4)
-                .filter(F.col("cell").isin(cells))
-                .filter(~F.col("vec_id").isin(killed_ids))
+            survivors = live.filter(F.col("cell").isin(cells)).filter(
+                ~F.col("vec_id").isin(killed_ids)
             )
             replace_partitions(survivors, path, "cell", cells)
         else:
             # degenerate corpus (empty regime / too few vectors to
             # probe): nothing to retire — v5 is an explicit empty
             # append so the lineage shape (probe-at-v5) is invariant
-            commit_snapshot(
-                codes_at(4).limit(0),
-                path,
-                mode="append",
-                partition_by=["cell"],
-            )
+            commit_snapshot(live.limit(0), path, mode="append", partition_by=["cell"])
+
+    path = derived(sf_dir, "ivfpq_codes_snap_del", build, versions=5)
+
+    def codes_at(version: int) -> DataFrame:
+        return _ann_snap_codes_at(spark, path, version)
 
     # the probe/cb/seed frames are shared across the two phases, as in
     # ann_index_time_travel_probe. Each RANKED top is consumed twice
@@ -2219,15 +2204,12 @@ def ann_ivf_cell_rebalance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scheduled maintenance the reference runs as RereadTask timers
     (InternalFreshKijiTableReader.java:211-221), applied to a derived
     index artifact."""
-    import shutil
+    from .operators.snapshots import commit_snapshot
 
-    from .operators.snapshots import commit_snapshot, latest_version
-
-    path = state_path(sf_dir, "ivfpq_codes_rebalance")
-    if (latest_version(path) or 0) < 3:
+    def build(path: str) -> None:
         # the whole encode preamble (quantize, codebook, seeds, the skew
         # clones, their checkpoint analysis — about a second of driver
-        # build) is only needed when the lineage must be BUILT;
+        # build) runs only when the lineage is built;
         # the steady-state probe reads versions 2 and 3 from the
         # snapshot table alone
         q = pq.corpus(load_table(spark, sf_dir, "embeddings"))
@@ -2250,7 +2232,6 @@ def ann_ivf_cell_rebalance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         allv = q.unionByName(clone_q).localCheckpoint(eager=False)
-        shutil.rmtree(path, ignore_errors=True)
         enc = pq.encode(allv, cb, seeds).localCheckpoint(eager=False)
         commit_snapshot(
             enc.filter(F.col("vec_id") < _IVF_CLONE_OFFSET),
@@ -2274,6 +2255,7 @@ def ann_ivf_cell_rebalance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 partition_by=["cell"],
             )
 
+    path = derived(sf_dir, "ivfpq_codes_rebalance", build, versions=3)
     pre = _ivf_cell_stats(_ann_snap_codes_at(spark, path, 2))
     post = _ivf_cell_stats(_ann_snap_codes_at(spark, path, 3))
     return (

@@ -12,7 +12,7 @@ nulls) fails the hash match.
 Scale notes: CSV/JSON scans split by ``spark.sql.files.maxPartitionBytes``
 like parquet but carry no column pruning or predicate pushdown — the
 engine treats them as ingest formats; queries beyond ingest should land
-data in parquet first (``sources.write_parquet``).
+data in parquet first.
 """
 
 from __future__ import annotations
@@ -26,28 +26,20 @@ from pyspark.sql import functions as F
 
 from .queries import query
 from .sources import load_table, read_csv, read_json, read_orc, read_xml
-from .state import state_tag
-
-_FORMAT_CACHE = os.path.join(tempfile.gettempdir(), "kiji_scoring_spark_formats")
+from .state import derived, state_tag
 
 
 def _materialized(spark: SparkSession, sf_dir: str, name: str, fmt: str) -> DataFrame:
     """Write-once copy of a testdata table in ``fmt``, read back with the
     parquet schema (so column types survive the text round-trip)."""
     src = load_table(spark, sf_dir, name)
-    tag = state_tag(sf_dir)
-    path = os.path.join(_FORMAT_CACHE, tag, f"{name}.{fmt}")
-    done = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(done):
-        writer = src.write.mode("overwrite")
-        if fmt == "csv":
-            writer.option("header", "true").csv(path)
-        elif fmt == "orc":
-            writer.orc(path)
-        elif fmt == "xml":
-            writer.format("xml").options(rootTag="rows", rowTag="row").save(path)
-        else:
-            writer.json(path)
+    if fmt == "csv":
+        write = src.write.option("header", "true").csv
+    elif fmt == "xml":
+        write = src.write.format("xml").options(rootTag="rows", rowTag="row").save
+    else:
+        write = getattr(src.write, fmt)
+    path = derived(sf_dir, f"{name}.{fmt}", write)
     if fmt == "csv":
         return read_csv(spark, path, src.schema, header="true")
     if fmt == "orc":
@@ -262,27 +254,16 @@ def parquet_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated. The oracle aggregates the ORIGINAL table; matching hashes
     prove the write→read cycle loses nothing (types, partition-column
     restoration, row coverage)."""
-    from .sources import write_parquet
-
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp_ntz")
     )
-    tag = state_tag(sf_dir)
-    path = os.path.join(_FORMAT_CACHE, tag, "lineitem_sink.parquet")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        write_parquet(
-            li.select("l_returnflag", "l_extendedprice", "l_shipdate"),
-            path,
-            partition_by=["l_returnflag"],
-        )
-    _sink_schema = "l_returnflag string, l_extendedprice double, l_shipdate timestamp_ntz"
-    try:
-        back = spark.read.parquet(path)
-    except Exception:
-        # empty source -> no parquet files at all; restore declared schema
-        back = spark.createDataFrame([], _sink_schema)
-    if "l_returnflag" not in back.columns:
-        back = spark.createDataFrame([], _sink_schema)
+    sink = li.select("l_returnflag", "l_extendedprice", "l_shipdate")
+    path = derived(
+        sf_dir, "lineitem_sink.parquet", sink.write.partitionBy("l_returnflag").parquet
+    )
+    # the declared schema reads an empty source's write, a dir holding no
+    # data files, as an empty scan
+    back = spark.read.schema(sink.schema).parquet(path)
     return (
         back.groupBy("l_returnflag")
         .agg(
@@ -319,21 +300,11 @@ def dpp_partitioned_orders_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the equivalent static filter — value parity proves
     pruning lost no rows."""
     o = load_table(spark, sf_dir, "orders")
-    tag = state_tag(sf_dir)
-    path = os.path.join(_FORMAT_CACHE, tag, "orders_by_priority.parquet")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        from .sources import write_parquet
-
-        write_parquet(o, path, partition_by=["o_orderpriority"])
-    try:
-        fact = spark.read.parquet(path)
-    except Exception:
-        # an EMPTY source wrote no parquet files at all (partitioned
-        # writers emit only _SUCCESS); restore the declared schema so
-        # the join/aggregate still answers (zero rows)
-        fact = spark.createDataFrame([], o.schema)
-    if "o_orderpriority" not in fact.columns:
-        fact = spark.createDataFrame([], o.schema)
+    path = derived(
+        sf_dir, "orders_by_priority.parquet", o.write.partitionBy("o_orderpriority").parquet
+    )
+    # declared schema: an empty source's write holds no data files
+    fact = spark.read.schema(o.schema).parquet(path)
     dim = (
         load_table(spark, sf_dir, "orders")
         .select("o_orderpriority")
@@ -510,23 +481,22 @@ def bucketed_join_colocated_revenue(spark: SparkSession, sf_dir: str) -> DataFra
     joined every night. Bucket count 8 here; at 100 TB size buckets to
     ~1 GB of post-compression data each.
 
-    The amortization is REAL within a session (r10): the write runs only
-    if the table is not already in the session catalog, so repeated
+    The amortization is real within a session: the write runs only if
+    the table is not already in the session catalog, so repeated
     executions — a nightly job rejoining the same bucketed fact tables,
     or the bench's warm+timed runs — pay the one-time shuffle once and
     then measure the shuffle-free join. Gated on the CATALOG (in-memory,
-    dies with the session), deliberately NOT on the on-disk _SUCCESS
-    marker: a fresh session always rewrites, so a dataset rebuilt under
-    the same path (the regime-rebuild stale-state class, REGIMES.md r10)
-    can never be served stale buckets."""
+    dies with the session), deliberately not on an on-disk completion
+    marker (``state.derived``): a fresh session always rewrites, so a
+    dataset rebuilt under the same path (the regime-rebuild stale-state
+    class, REGIMES.md) can never be served stale buckets."""
     # Tag by the FULL path like every other per-dataset cache (state_tag),
     # not the basename: with the session-lifetime catalog gate, two
     # dataset dirs sharing a basename within one session must not serve
-    # each other's bucketed tables (r10 ADVICE). Dots must be stripped
-    # for the catalog identifier, which re-narrows the key space
-    # ('/x/sf0.1' vs '/x/sf0_1' would collide) — so a short stable hash
-    # of the RAW tag is appended to keep the identifier collision-free
-    # (r11 ADVICE).
+    # each other's bucketed tables. Dots must be stripped for the catalog
+    # identifier, which re-narrows the key space ('/x/sf0.1' vs
+    # '/x/sf0_1' would collide) — so a short stable hash of the RAW tag
+    # is appended to keep the identifier collision-free.
     raw_tag = state_tag(sf_dir)
     tag = "{}_{}".format(
         raw_tag.replace(".", "_"),
@@ -583,7 +553,7 @@ def bucketed_join_colocated_revenue(spark: SparkSession, sf_dir: str) -> DataFra
     "sources", "avro", "nested",
 )
 def avro_nested_cell_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NESTED Avro-record cell round-trip (round-5): the reference stores
+    """NESTED Avro-record cell round-trip: the reference stores
     arbitrary Avro records per cell (``KijiFreshnessPolicy.avdl:29-41`` —
     nested records, collections, logical types), not just flat
     primitives. Pack each order into a cell with a nested record (decimal

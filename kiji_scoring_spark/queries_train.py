@@ -11,9 +11,6 @@ deterministic orderings.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -23,7 +20,7 @@ from .operators.dedup import _shingles_of_words
 from .queries import query
 from .queries_pipeline import _minhash_oracle_sql
 from .sources import load_table
-from .state import state_path, state_tag
+from .state import derived
 
 #: DuckDB mirror of operators.dedup shingling (3-word shingles)
 _SHINGLE_SQL = (
@@ -414,9 +411,6 @@ def dedup_keep_best_per_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BINARY_CACHE = os.path.join(tempfile.gettempdir(), "kiji_scoring_spark_binfiles")
-
-
 @query(
     "binaryfile_scan_doc_lengths",
     """
@@ -433,23 +427,17 @@ def binaryfile_scan_doc_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     enter a multimodal corpus. The partition directory yields the doc_id;
     the payload byte length must equal the text's UTF-8 byte length + the
     writer's trailing newline, proving the bytes survived the round trip
-    (byte length, not char count — the unicode regime split them, r6).
+    (byte length, not char count — multi-byte text tells them apart).
 
     Scale: binaryFile scans parallelize per file and never split one blob
     across tasks; partition discovery prunes on doc_id like any
     partitioned source. Bounded here to 100 files so the one-time
     materialization cost is constant across scale factors."""
     d = load_table(spark, sf_dir, "documents")
-    tag = state_tag(sf_dir)
-    path = os.path.join(_BINARY_CACHE, tag, "docs_txt")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            d.filter((F.col("doc_id") < 100) & F.col("text").isNotNull())
-            .select("doc_id", "text")
-            .write.mode("overwrite")
-            .partitionBy("doc_id")
-            .text(path)
-        )
+    docs = d.filter((F.col("doc_id") < 100) & F.col("text").isNotNull()).select(
+        "doc_id", "text"
+    )
+    path = derived(sf_dir, "docs_txt", docs.write.partitionBy("doc_id").text)
     back = spark.read.format("binaryFile").load(path)
     if "doc_id" not in back.columns:
         # an EMPTY corpus wrote no partition dirs, so partition discovery
@@ -816,8 +804,8 @@ def quality_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("tok", F.lower("tok"))
     freqs = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     total = freqs.agg(F.sum("cnt").alias("total"))
-    # DETERMINISTIC float summation (r9, hardened after the fragmented
-    # regime caught the same class in stats_summary_profile): a raw
+    # DETERMINISTIC float summation (the fragmented regime is what
+    # exposes a scan-order sum, as it did in stats_summary_profile): a raw
     # AVG(-log2 p) sums floats in scan order, which varies with file
     # layout/partitioning. The counts are packed into a SORTED array and
     # the sum runs as a left fold both engines execute identically
@@ -1144,7 +1132,7 @@ def _bpe_learn(spark: SparkSession, sf_dir: str):
     for k in range(1, _BPE_MERGES + 1):
         st = state.withColumn("syms", F.split("s", "[|]"))
         # checkpoint the one-row argmax: it feeds BOTH the merge table
-        # and the fold, and must compute once per round. LAZY (r15):
+        # and the fold, and must compute once per round. LAZY:
         # eager ran a dedicated job per round just to hold one row; lazy
         # materializes inside the state checkpoint's job instead — same
         # once-per-round execution, 6 fewer sequential job launches
@@ -1277,7 +1265,7 @@ def text_bpe_tokenize_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "contamination_delta_theta_overlap",
     f"""
-    -- Incremental corpus-diff contamination (r12 verdict stretch): the
+    -- Incremental corpus-diff contamination (snapshot diff x theta set-ops): the
     -- DELTA between two corpus snapshot versions is checked for
     -- benchmark overlap from bottom-K=64 theta samples of its distinct
     -- shingles vs a PERSISTED eval-set sample — built independently,
@@ -1358,8 +1346,8 @@ def text_bpe_tokenize_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def contamination_delta_theta_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Did THIS ingest batch leak benchmarks? — the per-arrival question
-    a 100 TB pipeline asks, answered in O(K) from sketches (r12 verdict
-    stretch: snapshot diff x theta set-ops). The training corpus lives
+    a 100 TB pipeline asks, answered in O(K) from sketches (snapshot
+    diff x theta set-ops). The training corpus lives
     as a versioned snapshot table; a new ingest lands as an APPEND
     commit; ``read_delta`` reads ONLY the appended files (file-level —
     no anti-join, no scan of the base corpus, however large it has
@@ -1383,13 +1371,12 @@ def contamination_delta_theta_overlap(spark: SparkSession, sf_dir: str) -> DataF
     (KijiFreshnessManager.java:235-239, mMetaTable.putValue) with the
     snapshot machinery; per-ingest decontamination is the capability
     HBase-era kiji delegated to offline MapReduce joins."""
-    from .operators.snapshots import commit_snapshot, latest_version, read_delta
+    from .operators.snapshots import commit_snapshot, read_delta
 
     d = load_table(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") >= 25).select("doc_id", "text")
 
-    snap = state_path(sf_dir, "documents_corpus_snapshots")
-    if latest_version(snap) is None:
+    def ingest(snap: str) -> None:
         # v1 = the standing corpus; v2 = the new ingest batch (append)
         commit_snapshot(
             corpus.filter(F.pmod(F.col("doc_id"), F.lit(10)) < 8),
@@ -1399,6 +1386,8 @@ def contamination_delta_theta_overlap(spark: SparkSession, sf_dir: str) -> DataF
         commit_snapshot(
             corpus.filter(F.pmod(F.col("doc_id"), F.lit(10)) >= 8), snap
         )
+
+    snap = derived(sf_dir, "documents_corpus_snapshots", ingest, versions=2)
     delta = read_delta(spark, snap, 1, 2)
 
     def shingle_set(docs: DataFrame) -> DataFrame:
@@ -1416,9 +1405,7 @@ def contamination_delta_theta_overlap(spark: SparkSession, sf_dir: str) -> DataF
     b_set = shingle_set(d.filter(F.col("doc_id") < 25))
     # eval sample: persisted ONCE per dataset, before/independent of any
     # ingest — the serving path never rebuilds it
-    epath = state_path(sf_dir, "eval_shingle_theta.parquet")
-    if not os.path.exists(os.path.join(epath, "_SUCCESS")):
-        sk.kmv_build(b_set, "s").write.mode("overwrite").parquet(epath)
+    epath = derived(sf_dir, "eval_shingle_theta.parquet", sk.kmv_build(b_set, "s").write.parquet)
     sampb = spark.read.parquet(epath)
     sampa = sk.kmv_build(a_set, "s")
 

@@ -164,16 +164,3 @@ def read_xml(spark: SparkSession, path: str, schema, row_tag: str = "row", **opt
         .schema(schema)
         .load(path)
     )
-
-
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """Parquet sink (scored-table writeback target, SURVEY §2.A A8)."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)

@@ -1,26 +1,42 @@
-"""Per-dataset derived-state tagging and purge, shared by every module
-that persists state keyed to a dataset dir.
+"""Per-dataset derived state: where it lives, when it is reused, and
+how it is purged.
 
-Several registry queries persist derived state keyed to the dataset dir
-(ddsketch/HLL/bitmap shards under ``kiji_scoring_spark_state``,
-binaryFile materializations under ``kiji_scoring_spark_binfiles``,
-session-lifetime bucketed tables under ``kss_bucketed_*``) and
-legitimately REUSE it across runs, because real datasets are immutable.
-A dir REBUILT in place breaks that assumption: its queries would serve
-state derived from the old data. Two rules follow, both enforced here:
+Several registry queries persist state derived from a dataset dir
+(sketch shards, partial aggregates, codes tables, format copies,
+snapshot lineages) and reuse it across runs, because a dataset is
+immutable. All of it lives under one root, ``kiji_scoring_spark_state``
+in the tempdir read when a path is built, one subdir per dataset
+(``state_tag``), and goes through ``derived``, which holds the one reuse
+rule: state is served only when complete, and anything else is removed
+and rebuilt before it is read. A plain Spark write is complete when it
+has its ``_SUCCESS`` marker; a snapshot lineage is complete when its
+latest version is the one its build ends at. So a build that crashed,
+or stopped after its first commit, is rebuilt by the next call instead
+of being served as if it were whole.
+
+A dir rebuilt in place breaks the immutability assumption, so:
 
 1. every per-dataset cache tags by the FULL path (``state_tag``), so two
    dataset dirs sharing a basename can never collide;
 2. every script that rewrites data under an existing path calls
    ``purge_derived_state`` on it (build_regimes.py and build_sf1.py do).
+
+Two kinds of state follow a session rule instead, on purpose, because
+their reuse is tied to in-process state a file marker cannot see: the
+streaming replay files, gated by ``streaming.replay._REPLAY_BUILT``, and
+the bucketed catalog tables (``kss_bucketed_*``), gated by the session
+catalog. A new session always rewrites both, so neither can outlive the
+data it was derived from.
 """
 
 from __future__ import annotations
 
-import glob
 import os
 import shutil
 import tempfile
+from typing import Callable
+
+from .operators.snapshots import latest_version
 
 
 def state_tag(sf_dir: str) -> str:
@@ -43,15 +59,44 @@ def state_tag(sf_dir: str) -> str:
     return os.path.normpath(os.path.abspath(sf_dir)).strip("/").replace("/", "_")
 
 
-#: persisted-state scratch root, one subdir per dataset dir so sf0.001
-#: pytest runs and the sf0.01 driver never share state files.
-_STATE_CACHE = os.path.join(tempfile.gettempdir(), "kiji_scoring_spark_state")
+def _state_root() -> str:
+    """The scratch root of all persisted derived state, read from the
+    tempdir each call so ``state_path`` and ``purge_derived_state``
+    agree however the tempdir changed after import."""
+    return os.path.join(tempfile.gettempdir(), "kiji_scoring_spark_state")
 
 
 def state_path(sf_dir: str, name: str) -> str:
     """Where a registry query persists its derived state ``name`` for
     the dataset at ``sf_dir``; ``purge_derived_state`` removes it."""
-    return os.path.join(_STATE_CACHE, state_tag(sf_dir), name)
+    return os.path.join(_state_root(), state_tag(sf_dir), name)
+
+
+def derived(
+    sf_dir: str,
+    name: str,
+    build: Callable[[str], object],
+    versions: int | None = None,
+) -> str:
+    """``state_path(sf_dir, name)``, built first unless complete.
+
+    ``build(path)`` writes the state: a Spark writer such as
+    ``df.write.parquet``, or a function committing a snapshot lineage.
+    With ``versions`` None the state is a plain Spark write, complete
+    once it has ``_SUCCESS``; otherwise it is a lineage, complete when
+    its latest version is ``versions``. Incomplete state is removed
+    before ``build`` runs, so the build never sees a crashed
+    predecessor's files, and a build that raises leaves state the next
+    call rebuilds."""
+    path = state_path(sf_dir, name)
+    if versions is None:
+        complete = os.path.exists(os.path.join(path, "_SUCCESS"))
+    else:
+        complete = latest_version(path) == versions
+    if not complete:
+        shutil.rmtree(path, ignore_errors=True)
+        build(path)
+    return path
 
 
 def stream_scratch_root() -> str:
@@ -86,22 +131,16 @@ def register_purge_hook(fn) -> None:
 
 
 def purge_derived_state(sf_dir: str) -> None:
-    """Drop every persisted-state scratch dir keyed to ``sf_dir``.
-
-    Covers all ``kiji_scoring_spark_*`` scratch roots, the
-    session-lifetime bucketed-table dirs (``kss_bucketed_<tag>``), and
-    any registered module hooks (replay dirs + their in-memory gates).
-    Call after rewriting data under an existing path; harmless when
-    nothing exists.
+    """Drop every persisted-state scratch dir keyed to ``sf_dir``: its
+    subdir of the state root, the session-lifetime bucketed-table dir
+    (``kss_bucketed_<tag>``), and whatever the registered module hooks
+    own (replay dirs and their in-memory gates). Call after rewriting
+    data under an existing path; harmless when nothing exists.
     """
     tag = state_tag(sf_dir)
-    tmp = tempfile.gettempdir()
-    for root in glob.glob(os.path.join(tmp, "kiji_scoring_spark_*")):
-        victim = os.path.join(root, tag)
-        if os.path.isdir(victim):
-            shutil.rmtree(victim, ignore_errors=True)
-    bucketed = os.path.join(tmp, f"kss_bucketed_{tag}")
-    if os.path.isdir(bucketed):
-        shutil.rmtree(bucketed, ignore_errors=True)
+    shutil.rmtree(os.path.join(_state_root(), tag), ignore_errors=True)
+    shutil.rmtree(
+        os.path.join(tempfile.gettempdir(), f"kss_bucketed_{tag}"), ignore_errors=True
+    )
     for hook in _PURGE_HOOKS:
         hook(sf_dir, tag)

@@ -1,6 +1,7 @@
-"""The guard that keeps round tags out of the kiji core: a comment or
-docstring says why the code is this way now, and the history of how it
-got there lives in git and CHANGES.md."""
+"""The guard that keeps round tags out of the kiji core and the modules
+that persist derived state: a comment or docstring says why the code is
+this way now, and the history of how it got there lives in git and
+CHANGES.md."""
 
 from __future__ import annotations
 
@@ -13,6 +14,8 @@ PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "kiji_scoring_spark"
 CORE = (
     "fresh.py", "producers.py", "policies.py", "registry.py", "model.py", "lib.py", "session.py",
     "state.py", "streaming/__init__.py", "streaming/replay.py", "operators/multimodal.py",
+    "operators/pq.py", "operators/snapshots.py",
+    "queries_graph.py", "queries_sources.py", "queries_train.py",
 )
 
 #: ``r3`` to ``r16``, ``r-early`` and "round N"; ``r0``-``r2`` stay free,

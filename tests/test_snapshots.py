@@ -1027,3 +1027,52 @@ def test_optimistic_threaded_writers_both_land(spark, table_path):
         (2, "b"),
         (3, "c"),
     ]
+
+
+class _Crash(RuntimeError):
+    """A build stopped between two commits."""
+
+
+#: lineage-committing queries whose build commits twice, with the
+#: derived-state name each commits under
+HALF_BUILT = {
+    "snapshot_partitioned_prune": "events_parted_snapshots",
+    "snapshot_schema_evolution": "orders_evolving_snapshots",
+    "snapshot_time_travel_orders": "orders_snapshots",
+    "snapshot_cdc_upsert_history": "cdc_state_snapshots",
+    "contamination_delta_theta_overlap": "documents_corpus_snapshots",
+}
+
+
+@pytest.mark.parametrize("name", sorted(HALF_BUILT))
+def test_half_built_lineage_is_rebuilt(spark, sf_dir, monkeypatch, name):
+    """A lineage whose build stopped after its first commit is not
+    complete state: the next run rebuilds it and answers as the oracle
+    does, instead of serving v1 as if it were the whole lineage."""
+    import pandas as pd
+
+    from kiji_scoring_spark.queries import QUERIES
+    from kiji_scoring_spark.state import state_path
+    from test_oracle_parity import duck_con, normalize
+
+    spec = QUERIES[name]
+    path = state_path(sf_dir, HALF_BUILT[name])
+    shutil.rmtree(path, ignore_errors=True)
+    commit = sn.commit_snapshot
+    done = []
+
+    def commit_once(*args, **kwargs):
+        if done:
+            raise _Crash(name)
+        done.append(commit(*args, **kwargs))
+
+    with monkeypatch.context() as m:
+        m.setattr(sn, "commit_snapshot", commit_once)
+        with pytest.raises(_Crash):
+            spec.fn(spark, sf_dir)
+    assert sn.latest_version(path) == 1
+
+    got = normalize(spec.fn(spark, sf_dir).toPandas())
+    want = normalize(duck_con(sf_dir).execute(spec.oracle).fetchdf())
+    assert sn.latest_version(path) == 2
+    pd.testing.assert_frame_equal(got, want, check_dtype=True, check_exact=True)
