@@ -34,7 +34,7 @@ from .registry import (
 def _layout_from_parquet(path: str) -> TableLayout:
     """Table layout from the parquet footer only (no SparkSession). A
     table may be one file or a DIRECTORY of part files (the fragmented /
-    real-lake layout — r9); a directory's schema is the NAME-UNION of
+    real-lake layout); a directory's schema is the NAME-UNION of
     every part's footer, because a lake table carries schema evolution:
     a column added after the first parts were written exists only in
     later footers, and a first-part-only read would hide it from the
@@ -42,7 +42,7 @@ def _layout_from_parquet(path: str) -> TableLayout:
     contract as sources.load_table's mergeSchema).
 
     Hive-partitioned directories (``col=value`` subdirectories — the
-    partitioned-lake layout, r9) nest their part files arbitrarily deep,
+    partitioned-lake layout) nest their part files arbitrarily deep,
     and the partition columns live in the PATH, not in any footer: the
     walk recurses, and every distinct ``key=`` component on the way to a
     part file is appended as a STRING column — exactly the column set

@@ -25,15 +25,17 @@ producer didn't reach keep their stale values (partial freshening,
 ``:703-708``).
 
 Scale: an expression producer stays in codegen, and its merge is one
-projection (when/otherwise) over one scan. A pandas or MLlib capsule splits
-the table on the stale predicate: the stale half is scored in place (a
-scalar iterator ``pandas_udf`` through Arrow, or ``transform``), the fresh
-half gets a NULL score, and the two halves are unioned under the same merge
-projection. Each row is scored on its own, as the reference's producer
-writes into the row it was handed (``impl/KijiFreshProducerContext.java:
-102-106``), so duplicate or NULL keys change nothing; the plan has no join
-and no exchange, and reads the table once per half. Nothing shuffles unless
-the producer itself needs to.
+projection (when/otherwise) over one scan. A pandas capsule also keeps one
+scan and the input's partitioning: its scalar iterator ``pandas_udf`` takes
+the stale predicate as an argument and hands ``batch_fn`` only the stale
+rows of each Arrow batch, so every other row scores NULL. An MLlib capsule
+splits the table on the stale predicate, transforms the stale half and
+unions it with the fresh half, whose score is NULL, so the transformer
+never sees a fresh row. Either way the merge projection is the same. Each
+row is scored on its own, as the reference's producer writes into the row
+it was handed (``impl/KijiFreshProducerContext.java:102-106``), so
+duplicate or NULL keys change nothing; the plan has no join and no
+exchange. Nothing shuffles unless the producer itself needs to.
 
 Compile once per capsule generation (A13): the reference builds a capsule's
 policy and producer once (``makeCapsule``) and reuses them on every read
@@ -88,7 +90,7 @@ DEFAULT_TIMEOUT_MS = 10_000
 
 #: reserved column carrying a freshen call's clock (bigint ms)
 AS_OF_COL = "__as_of__"
-#: a pandas or MLlib producer's score, NULL on the fresh half
+#: a pandas or MLlib producer's score, NULL on the fresh rows
 SCORE_COL = "__score__"
 
 
@@ -388,7 +390,7 @@ class FreshTableReader:
 
         producer = cap.producer
         if isinstance(producer, (PandasProducer, MLlibProducer)):
-            # scored per call over the stale half (_freshen_column)
+            # scored per call over the stale rows (_freshen_column)
             score = F.col(SCORE_COL)
         else:
             # Expression producer: stays fully in codegen; the score is
@@ -411,7 +413,7 @@ class FreshTableReader:
     def _freshen_column(self, df: DataFrame, cap: Freshener, keep_clock: bool) -> DataFrame:
         """One capsule's per-call work over a table that carries
         ``__as_of__``: the store lookups, a pandas or MLlib producer's
-        scoring of the stale half, and one select of the compiled
+        scoring of the stale rows, and one select of the compiled
         Columns. That select restores the table's columns in order; with
         ``keep_clock`` it also keeps ``__as_of__`` for the next capsule.
         The capsule's first call folds its stores; a call cancelled while
@@ -422,11 +424,9 @@ class FreshTableReader:
         df = attach_stores(df, compiled.lookups)
         producer = cap.producer
         if isinstance(producer, (PandasProducer, MLlibProducer)):
-            # score the stale half in place; the fresh half's NULL score
+            # score the stale rows in place; a fresh row's NULL score
             # makes the merge keep its old value
-            scored = producer.score_rows(df.filter(compiled.stale), self.key_col, SCORE_COL)
-            unscored = df.filter(~compiled.stale).select("*", F.lit(None).alias(SCORE_COL))
-            df = scored.unionByName(unscored)
+            df = producer.score_rows(df, self.key_col, compiled.stale, SCORE_COL)
         if keep_clock:
             return df.select(*compiled.projection, AS_OF_COL)
         return df.select(*compiled.projection)
@@ -457,12 +457,13 @@ class FreshTableReader:
         materialization at 100 TB (a cached table evicts under memory
         pressure and silently recomputes; a parquet write is durable, is
         the writeback the reference performs anyway, and downstream reads
-        get stats/pruning on the scored data)."""
+        get stats/pruning on the scored data). The write is read back with
+        the schema it was written with, so no job infers it."""
         import os
 
         path = os.path.join(self._scored_root(), tag)
         df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path), path
+        return self.spark.read.schema(df.schema).parquet(path), path
 
     def _scored_root(self) -> str:
         if self.scored_path is None:
@@ -480,22 +481,26 @@ class FreshTableReader:
         """A10 batch semantics: materialize the freshened table within a
         wall-clock budget. Returns (table, fully_fresh?).
 
-        Columns freshen one capsule at a time, each materialized to the
-        scored-table location (the A8 writeback). On budget expiry the
-        in-flight job group is cancelled and:
+        The capsules run in units, each one ``_freshen`` plan materialized
+        to the scored-table location by one write (the A8 writeback) under
+        its own job group. On budget expiry the in-flight group is
+        cancelled and drained, and the table of every unit that FINISHED is
+        returned:
 
         - ``allow_partial=False`` (reference default,
-          ``FreshKijiTableReaderBuilder.java:63-67``): the ORIGINAL stale
-          table is returned — the stale fallback of
+          ``FreshKijiTableReaderBuilder.java:63-67``): one unit holds every
+          capsule, so the table is read and written once, and a timeout
+          returns the ORIGINAL stale table — the stale fallback of
           ``InternalFreshKijiTableReader.java:686-724``.
-        - ``allow_partial=True``: the table with every capsule that
-          FINISHED inside the budget is returned — the partially-fresh
-          branch (``:703-708``). Per-column granularity matches the
-          reference, whose freshness futures are per attached column.
+        - ``allow_partial=True``: one unit per capsule, so the table has
+          every capsule that finished inside the budget — the
+          partially-fresh branch (``:703-708``). Per-column granularity
+          matches the reference, whose freshness futures are per attached
+          column.
 
-        Each per-column write supersedes the previous one, which is deleted
-        as soon as the next column materializes — only the newest write
-        (the one the returned DataFrame reads) survives, so repeated calls
+        Each unit's write supersedes the previous one, which is deleted as
+        soon as the next unit materializes — only the newest write (the
+        one the returned DataFrame reads) survives, so repeated calls
         don't accumulate table copies. Callers who want a DURABLE scored
         table should pass ``scored_path`` at construction; the lazily
         created default lives under the system temp dir and has temp-dir
@@ -507,18 +512,22 @@ class FreshTableReader:
         import shutil
 
         sc = self.spark.sparkContext
-        caps = self._resolve_capsules()
+        caps = [cap for _, cap in sorted(self._resolve_capsules().items())]
+        if partial:
+            units = [[cap] for cap in caps]
+        else:
+            units = [caps] if caps else []
         current = self.df
         prev_path: str | None = None
-        for i, (column, cap) in enumerate(sorted(caps.items())):
+        for i, unit in enumerate(units):
             remaining = deadline - time.monotonic()
             if remaining <= 0:
-                return (current, False) if partial else (self.df, False)
+                return current, False
             group = f"freshen-{self.table_name}-{as_of_ms}-{i}"
             result: dict[str, object] = {}
             error: list[BaseException] = []
 
-            def run(cap=cap, i=i, group=group):
+            def run(unit=unit, i=i, group=group):
                 try:
                     # interruptOnCancel stays FALSE: thread-interrupting a
                     # pandas stage kills its Arrow workers mid-protocol, and
@@ -534,10 +543,10 @@ class FreshTableReader:
                     # below. Cancellation promptness is pinned by
                     # test_timeout_returns_stale's wall-clock bound; pool
                     # health by test_timeout_storm_then_arrow_stage.
-                    sc.setJobGroup(group, f"freshen {cap.column}")
-                    out = self._freshen(current, [cap], as_of_ms)
+                    sc.setJobGroup(group, "freshen " + ", ".join(c.column for c in unit))
+                    out = self._freshen(current, unit, as_of_ms)
                     result["df"], result["path"] = self._materialize(
-                        out, f"as_of={as_of_ms}/col={i}"
+                        out, f"as_of={as_of_ms}/unit={i}"
                     )
                 except BaseException as e:  # noqa: BLE001 — cancelled jobs raise
                     error.append(e)
@@ -556,12 +565,12 @@ class FreshTableReader:
                 # completions spam "non-existent accumulator" ERRORs
                 # after the cancelled plan is GC'd.
                 _drain_job_group(sc, group)
-                return (current, False) if partial else (self.df, False)
+                return current, False
             if error:
                 raise error[0]
             current = result["df"]
             # the new write is self-contained, so the superseded previous
-            # column's write (never the one `current` reads) can go now
+            # unit's write (never the one `current` reads) can go now
             if prev_path is not None:
                 shutil.rmtree(prev_path, ignore_errors=True)
             prev_path = result["path"]

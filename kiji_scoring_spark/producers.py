@@ -17,10 +17,13 @@ computes a value, and writes it to the column the freshener is ATTACHED to
 - ``MLlibProducer``      — an MLlib ``Transformer``/``PipelineModel``
   (BASELINE.json's "MLlib batch scoring" approach).
 
-The pandas and MLlib flavors score rows in place (``score_rows``): each row
-gets its own score as a new column, so no row's score depends on another
-row, as the reference's producer writes into the row it was handed
-(``impl/KijiFreshProducerContext.java:102-106``).
+The pandas and MLlib flavors score rows in place (``score_rows``): each stale
+row gets its own score as a new column and every other row a NULL one, so no
+row's score depends on another row, as the reference's producer writes into
+the row it was handed (``impl/KijiFreshProducerContext.java:102-106``). A
+pandas producer reads the table once and hands ``batch_fn`` only the stale
+rows of each Arrow batch; an MLlib producer splits the table on the stale
+predicate and transforms the stale half alone.
 
 KV side-inputs (A9): small key→value stores exposed to the producer and
 the policy; policy stores mask producer stores with the same name
@@ -93,8 +96,12 @@ class PandasProducer(Producer):
 
     ``batch_fn(pdf: pd.DataFrame) -> pd.Series`` computes the score for a
     batch of rows; ``pdf`` holds the table's key column and the data
-    request. ``score_rows`` runs it as a scalar iterator ``pandas_udf``,
-    so Python cost is amortized over Arrow batches, never per row, and
+    request. ``score_rows`` runs it as a scalar iterator ``pandas_udf``
+    over every row, so the table is scanned once and keeps its
+    partitioning. The UDF also receives the capsule's stale predicate as
+    its own argument: ``batch_fn`` sees only the stale rows of each batch,
+    a batch with none is skipped, and every other row scores NULL. Python
+    cost is amortized over Arrow batches, never per row, and
     ``setup``/``cleanup`` run once per partition.
     """
 
@@ -114,24 +121,33 @@ class PandasProducer(Producer):
         self.output_column = output_column
         self.required_stores = required_stores or {}
 
-    def score_rows(self, df: DataFrame, key_col: str, score_col: str) -> DataFrame:
+    def score_rows(
+        self, df: DataFrame, key_col: str, stale: Column, score_col: str
+    ) -> DataFrame:
         """``df`` with ``score_col`` appended: ``batch_fn`` over
-        ``struct(key_col, *data_request)``. A returned Series aligns to
-        the batch by index."""
+        ``struct(key_col, *data_request)`` of the rows where ``stale`` is
+        true, NULL elsewhere. ``batch_fn`` gets those rows indexed from 0,
+        and a returned Series aligns to them by index."""
         batch_fn, setup, cleanup = self._batch_fn, self._setup, self._cleanup
 
-        def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
+        def score(batches: Iterator[tuple[pd.DataFrame, pd.Series]]) -> Iterator[pd.Series]:
             state = setup() if setup else None
             try:
-                for pdf in batches:
-                    yield pd.Series(batch_fn(pdf), index=pdf.index)
+                for pdf, mask in batches:
+                    picked = mask.to_numpy(dtype=bool)
+                    if not picked.any():
+                        yield pd.Series(None, index=pdf.index, dtype="float64")
+                        continue
+                    rows = pdf[picked].reset_index(drop=True)
+                    got = pd.Series(batch_fn(rows), index=rows.index).to_numpy()
+                    yield pd.Series(got, index=pdf.index[picked]).reindex(pdf.index)
             finally:
                 if cleanup:
                     cleanup(state)
 
         request = dict.fromkeys([key_col, *map(flat_name, self.data_request)])
         udf = F.pandas_udf(score, "double")
-        return df.select("*", udf(F.struct(*request)).alias(score_col))
+        return df.select("*", udf(F.struct(*request), stale).alias(score_col))
 
 
 class MLlibProducer(Producer):
@@ -152,13 +168,20 @@ class MLlibProducer(Producer):
         self.output_column = output_column
         self.required_stores = required_stores or {}
 
-    def score_rows(self, df: DataFrame, key_col: str, score_col: str) -> DataFrame:
+    def score_rows(
+        self, df: DataFrame, key_col: str, stale: Column, score_col: str
+    ) -> DataFrame:
         """``df`` with ``score_col`` appended: the transformer's
-        prediction column. ``key_col`` is unused: the transformer reads
-        what it needs."""
-        return self.transformer.transform(df).select(
+        prediction on the rows where ``stale`` is true, NULL elsewhere.
+        The table is split on ``stale`` and the halves are unioned, so the
+        transformer never sees a fresh row: scoring every row would waste
+        work when few are stale, and a transformer can raise on rows it
+        never saw. ``key_col`` is unused: the transformer reads what it
+        needs."""
+        scored = self.transformer.transform(df.filter(stale)).select(
             *df.columns, F.col(self.prediction_col).alias(score_col)
         )
+        return scored.unionByName(df.filter(~stale).select("*", F.lit(None).alias(score_col)))
 
 
 def merge_stores(

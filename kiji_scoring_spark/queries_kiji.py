@@ -72,8 +72,8 @@ def versioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         -- the cell model's newest-cell contract EXACTLY: millisecond-
         -- truncated ts, event_id as the tie-break (versioned_events sorts
         -- cells by (ms, eid)). Bare "ORDER BY ts DESC" is ambiguous the
-        -- moment two events share a timestamp — the ts-edge regime's
-        -- epoch-0 sentinel rows made every such user nondeterministic (r6)
+        -- moment two events share a timestamp, as the ts-edge regime's
+        -- epoch-0 sentinel rows do for every such user
         ROW_NUMBER() OVER (PARTITION BY user_id
                            ORDER BY {_EPOCH_MS} DESC, event_id DESC) AS rn,
         COUNT(*) OVER (PARTITION BY user_id) AS n_versions
@@ -121,9 +121,8 @@ def versioned_time_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             # full SUM semantics over the cell array: NULL payloads are
             # SKIPPED by the fold (coalesce — acc + NULL would poison it),
             # but a row whose every cell is NULL must yield NULL, not the
-            # fold seed 0 (round-6 fix: the key-level null regime built a
-            # user with all-NULL values and SQL SUM returned NULL where
-            # the fold returned 0.0)
+            # fold seed 0, as SQL SUM does (the key-level null regime
+            # builds such a user)
             F.when(
                 F.exists(F.col("vr"), lambda x: x["value"].isNotNull()),
                 F.aggregate(

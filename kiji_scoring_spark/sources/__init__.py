@@ -63,10 +63,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     schema from a catalog instead of listing footers; for catalog-less
     directory scans this is the correctness default.
 
-    The MERGED SCHEMA is cached per (application, dataset, table) —
-    r16, guide §6: the footer-merge is a distributed job (~85 ms per
-    call, profiled at nearly half of several queries' total driver
-    build time), and it is pure metadata over an immutable dataset —
+    The MERGED SCHEMA is cached per (application, dataset, table): the
+    footer-merge is a distributed job (~85 ms per call, profiled at
+    nearly half of several queries' total driver build time), and it is
+    pure metadata over an immutable dataset —
     exactly what a catalog pins at scale. Every call still creates a
     FRESH scan plan (no DataFrame-object sharing: self-joins keep
     distinct attribute ids). A dataset rebuilt in place invalidates the

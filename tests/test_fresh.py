@@ -1061,3 +1061,138 @@ def test_every_producer_kind_freshens_each_row_in_place(spark, kind, policy, kep
     ).collect()
     want = [(k, v, 1) if v in kept else (k, v + 1, NOW_MS) for k, v in rows]
     assert sorted(map(tuple, got), key=repr) == sorted(want, key=repr)
+
+
+def stale_every_other_partition(spark):
+    """40 rows in 4 partitions of 10 contiguous ids. At NOW_MS under a
+    one-day ShelfLife, ids 10-19 are stale, ids 20-29 are stale when even,
+    and ids 0-9 and 30-39 are fresh."""
+    from pyspark.sql.types import DoubleType
+
+    ts = (
+        F.when((F.col("id") >= 10) & (F.col("id") < 20), F.lit(1))
+        .when((F.col("id") >= 20) & (F.col("id") < 30) & (F.col("id") % 2 == 0), F.lit(1))
+        .otherwise(F.lit(NOW_MS))
+        .cast("long")
+    )
+    cell = F.struct(ts.alias("ts"), F.col("id").cast(DoubleType()).alias("value"))
+    return spark.range(0, 40, 1, 4).select(
+        F.col("id").alias("entity_id"),
+        F.array(cell).cast(model.versions_type(DoubleType())).alias("info_visits"),
+    )
+
+
+STALE_IDS = set(range(10, 20)) | set(range(20, 30, 2))
+
+
+def test_pandas_batch_fn_sees_only_stale_rows(spark, tmp_path):
+    """``batch_fn`` is handed the stale rows of each Arrow batch and
+    nothing else: a partition with no stale row never calls it, and
+    ``setup``/``cleanup`` still run once per partition. Each Python call
+    leaves a file behind, so the calls can be counted on the driver."""
+    import json
+    import os
+    import uuid
+
+    from kiji_scoring_spark.fresh import Freshener
+
+    log = str(tmp_path)
+
+    def record(kind, payload):
+        with open(os.path.join(log, f"{kind}-{uuid.uuid4().hex}"), "w") as f:
+            json.dump(payload, f)
+
+    def batch_fn(pdf):
+        record("batch", [int(k) for k in pdf["entity_id"]])
+        return pdf["info_visits"].map(lambda v: v[0]["value"] + 100)
+
+    def setup():
+        token = uuid.uuid4().hex
+        record("setup", token)
+        return token
+
+    producer = PandasProducer(
+        batch_fn=batch_fn, data_request=["info:visits"], setup=setup,
+        cleanup=lambda token: record("cleanup", token),
+    )
+    reader = FreshTableReader(
+        spark, "t", stale_every_other_partition(spark), FreshenerRegistry()
+    )
+    reader._capsules = {"info:visits": Freshener("info:visits", ShelfLife(DAY_MS), producer)}
+    got = {
+        r["entity_id"]: r["v"]
+        for r in reader.scan(NOW_MS)
+        .select("entity_id", model.most_recent_value("info_visits").alias("v"))
+        .collect()
+    }
+    assert got == {k: k + 100.0 if k in STALE_IDS else float(k) for k in range(40)}
+
+    calls = {}
+    for name in os.listdir(log):
+        with open(os.path.join(log, name)) as f:
+            calls.setdefault(name.split("-")[0], []).append(json.load(f))
+    # one call for the all-stale partition and one for the mixed one
+    assert sorted(calls["batch"]) == [list(range(10, 20)), list(range(20, 30, 2))]
+    assert len(calls["setup"]) == 4
+    assert sorted(calls["cleanup"]) == sorted(calls["setup"])
+
+
+def three_kind_reader(spark, allow_partial):
+    """An expression, a pandas and an MLlib capsule on three columns of a
+    table whose cells are all stale."""
+    from pyspark.ml.feature import SQLTransformer
+    from pyspark.sql.types import DoubleType
+
+    from kiji_scoring_spark.fresh import Freshener
+
+    cols = ("a_versions", "b_versions", "c_versions")
+    df = spark.range(0, 30, 1, 3).select(
+        F.col("id").alias("entity_id"),
+        *[
+            F.array(F.struct(F.lit(1).cast("long").alias("ts"),
+                             F.col("id").cast(DoubleType()).alias("value")))
+            .cast(model.versions_type(DoubleType())).alias(c)
+            for c in cols
+        ],
+    )
+    reader = FreshTableReader(spark, "three_kinds", df, FreshenerRegistry(),
+                              allow_partial=allow_partial)
+    reader._capsules = {
+        "a:versions": Freshener("a:versions", AlwaysFreshen(), ExpressionProducer(
+            lambda df: model.most_recent_value("a_versions") + 1, data_request=["a:versions"],
+        )),
+        "b:versions": Freshener("b:versions", AlwaysFreshen(), PandasProducer(
+            batch_fn=lambda pdf: pdf["b_versions"].map(lambda v: v[0]["value"] + 2),
+            data_request=["b:versions"],
+        )),
+        "c:versions": Freshener("c:versions", AlwaysFreshen(), MLlibProducer(SQLTransformer(
+            statement="SELECT *, try_element_at(c_versions, 1).value + 3 "
+            "AS prediction FROM __THIS__"
+        ))),
+    }
+    return reader
+
+
+@pytest.mark.parametrize("allow_partial, jobs", [(False, [1, 0, 0]), (True, [1, 1, 1])],
+                         ids=["whole", "partial"])
+def test_freshen_with_timeout_writes_once_unless_partial(spark, allow_partial, jobs):
+    """Without ``allow_partial`` every capsule is one plan and one write
+    job, under one job group; with it each capsule is its own write job,
+    so a finished capsule can be returned on its own. The rows are the
+    same either way."""
+    reader = three_kind_reader(spark, allow_partial)
+    as_of = NOW_MS + (7 if allow_partial else 3)
+    out, fresh = reader.freshen_with_timeout(as_of, timeout_ms=120_000)
+    assert fresh is True
+    tracker = spark.sparkContext.statusTracker()
+    assert [
+        len(tracker.getJobIdsForGroup(f"freshen-three_kinds-{as_of}-{i}")) for i in range(3)
+    ] == jobs
+    got = out.select(
+        "entity_id",
+        *[model.most_recent_value(f"{c}_versions").alias(c) for c in "abc"],
+        *[model.most_recent_ts(f"{c}_versions").alias(f"{c}_ts") for c in "abc"],
+    ).collect()
+    assert sorted(map(tuple, got)) == [
+        (k, k + 1.0, k + 2.0, k + 3.0, as_of, as_of, as_of) for k in range(30)
+    ]

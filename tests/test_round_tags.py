@@ -16,6 +16,7 @@ CORE = (
     "state.py", "streaming/__init__.py", "streaming/replay.py", "operators/multimodal.py",
     "operators/pq.py", "operators/snapshots.py",
     "queries_graph.py", "queries_sources.py", "queries_train.py",
+    "queries_kiji.py", "cli.py", "sources/__init__.py",
 )
 
 #: ``r3`` to ``r16``, ``r-early`` and "round N"; ``r0``-``r2`` stay free,
